@@ -47,10 +47,12 @@ class Engine(
 
   /** One CDC sync tick over every source table. Returns rows synced.
     * When the conventional IVF index exists and the cycle landed rows,
-    * the index is refreshed (atomic version swap, [[refreshIvfIndex]]) so
-    * the default `/query` route's staleness is bounded by the poll
-    * cadence instead of growing forever (set `autoRefreshIvf = false` to
-    * manage rebuilds manually). */
+    * the index is refreshed ([[refreshIvfIndex]]: the cycle's new vectors
+    * are appended to a linked copy of the live version, which then
+    * replaces it by one pointer flip; a full retrain only once appends
+    * would reach half the trained base) so the default `/query` route's
+    * staleness is bounded by the poll cadence instead of growing forever
+    * (set `autoRefreshIvf = false` to manage refreshes manually). */
   def runSyncCycle(): Map[String, Long] = {
     val synced = Cdc.syncCycle(spark, sourceDir, stateDir, sinkDir, changeCol,
       chunkSize = chunkSize, layout = layout, commitLock = commitLock)
@@ -202,32 +204,57 @@ class Engine(
       k: Int = 16,
       iters: Int = 3,
       namespace: String = Cdc.DefaultNamespace,
-      sampleFraction: Double = 1.0): Unit = {
+      sampleFraction: Double = 1.0): Unit =
+    graft.operators.IvfIndex.build(sinkVectors(namespace, None), "id", "embedding",
+      indexDir, k, iters, sampleFraction)
+
+  /** (id, embedding) of the namespace's non-null vectors: the given
+    * manifest entries, or the live snapshot when None. */
+  private def sinkVectors(namespace: String, entries: Option[Seq[Cdc.SinkEntry]]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val ns = Cdc.readVectorSink(spark, sinkDir, Some(namespace))
+    entries.fold(Cdc.readVectorSink(spark, sinkDir, Some(namespace)))(Cdc.readEntries(spark, sinkDir, _))
       .where(col("embedding").isNotNull)
       .select(col("id"), col("embedding"))
-    graft.operators.IvfIndex.build(ns, "id", "embedding", indexDir, k, iters, sampleFraction)
   }
 
-  /** (Re)build the conventional index from the CURRENT sink snapshot and
-    * publish it atomically: build into the next `vNNNNNN` version dir —
-    * queries keep serving the live version throughout — then flip the
-    * `current` pointer and GC every version but the new and previous one
-    * (an in-flight query one flip behind still materializes its scan;
-    * the same one-behind retention every store here uses). Build
-    * parameters persist beside the data so an [[autoRefreshIvf]] refresh
-    * reuses the live version's k/iters/sample rather than resetting to
-    * defaults. */
+  /** Bring the conventional index up to the CURRENT sink snapshot and
+    * publish it atomically as the next `vNNNNNN` version — queries keep
+    * serving the live version throughout — then flip the `current`
+    * pointer and GC every version but the new and previous one (an
+    * in-flight query one flip behind still materializes its scan; the
+    * same one-behind retention every store here uses).
+    *
+    * Append-then-flip: when the live version has staleness bookkeeping
+    * and records the sink generation roots it indexed, the next version
+    * is that version hard-linked (parquet data and centroid files; the
+    * `_`-prefixed sidecars, which writers replace or truncate, are
+    * copied) plus the namespace's new vectors, routed to the unchanged
+    * centroids by [[graft.operators.IvfIndex.append]]'s staging path.
+    * New vectors are the sink rows of manifest entries under roots the
+    * live version had not indexed (roots are immutable, so older entries
+    * are indexed already), anti-joined against the live version's ids —
+    * a rewritten bucket's re-emitted ids are never appended twice. The
+    * refresh retrains in full instead when there is no live version, the
+    * live one predates bookkeeping or root tracking, or the append would
+    * bring the appended fraction to `IvfIndex.DefaultRebuildFraction`
+    * (0.5, the measured recall bar) — which resets it to 0. Per-cluster
+    * staleness stays advisory ([[ivfStatus]], `/ivf/status`).
+    *
+    * Build parameters and the indexed root set persist in
+    * `_build.properties`, so a refresh reuses the live version's
+    * k/iters/sample rather than resetting to defaults; the root set and
+    * the rows indexed come from one manifest read. */
   def refreshIvfIndex(
       namespace: String = Cdc.DefaultNamespace,
       k: Int = 16,
       iters: Int = 3,
       sampleFraction: Double = 1.0): Unit = {
+    import graft.operators.IvfIndex
     val container = new java.io.File(ivfIndexDir(namespace))
     container.mkdirs()
+    val live = liveIvfDir(namespace)
     // inherit the live version's persisted build params unless overridden
-    val params = liveIvfDir(namespace)
+    val params = live
       .map(d => new java.io.File(d, "_build.properties")).filter(_.isFile)
       .map { f =>
         val src = scala.io.Source.fromFile(f)
@@ -244,10 +271,41 @@ class Engine(
       .sortBy(_.getName)
     val next = new java.io.File(container,
       f"v${versions.lastOption.map(_.getName.stripPrefix("v").toInt).getOrElse(0) + 1}%06d")
-    buildIvfIndex(next.getPath, kEff, itersEff, namespace, sampleEff)
+    // ONE manifest read: the rows indexed and the roots recorded both come
+    // from it (None: a pre-manifest sink — full builds, no root tracking)
+    val entries = Cdc.readManifest(sinkDir).map(_.filter(_.namespace == namespace))
+    val appended = for {
+      dir <- live
+      indexedRoots <- params.get("roots").map(_.split(',').filter(_.nonEmpty).toSet)
+      es <- entries
+      if !IvfIndex.appendedFraction(dir).isNaN
+    } yield {
+      Engine.linkTree(new java.io.File(dir, "data"), new java.io.File(next, "data"))
+      Engine.linkTree(new java.io.File(dir, "centroids"), new java.io.File(next, "centroids"))
+      val fresh = es.filterNot(e => indexedRoots(e.root))
+      fresh.isEmpty || {
+        // the sink's id type, declared: no schema-inference job for a
+        // version no query has read yet
+        val indexed = spark.read
+          .schema(org.apache.spark.sql.types.StructType(Seq(Cdc.vectorSinkSchema("id"))))
+          .parquet(s"$dir/data").select("id")
+        val staged = IvfIndex.stageAppend(
+          sinkVectors(namespace, Some(fresh)).join(indexed, Seq("id"), "left_anti"),
+          "id", "embedding", next.getPath)
+        staged.fractionAfter < IvfIndex.DefaultRebuildFraction && {
+          IvfIndex.commitAppend(staged); true
+        }
+      }
+    }
+    if (!appended.contains(true)) {
+      Engine.deleteRecursively(next)
+      IvfIndex.build(sinkVectors(namespace, entries), "id", "embedding", next.getPath,
+        kEff, itersEff, sampleEff)
+    }
+    val roots = entries.fold("")(es => s"roots=${es.map(_.root).distinct.sorted.mkString(",")}\n")
     val pw = new java.io.FileWriter(new java.io.File(next, "_build.properties"))
-    try pw.write(s"k=$kEff\niters=$itersEff\nsampleFraction=$sampleEff\n") finally pw.close()
-    val prevLive = liveIvfDir(namespace).map(p => new java.io.File(p).getName)
+    try pw.write(s"k=$kEff\niters=$itersEff\nsampleFraction=$sampleEff\n$roots") finally pw.close()
+    val prevLive = live.map(p => new java.io.File(p).getName)
     val tmp = java.nio.file.Paths.get(container.getPath, "current_tmp")
     java.nio.file.Files.writeString(tmp, next.getName)
     java.nio.file.Files.move(tmp, new java.io.File(container, "current").toPath,
@@ -322,6 +380,20 @@ object Engine {
       appendedFraction: Double,
       staleClusters: Seq[graft.operators.IvfIndex.ClusterStaleness],
       advice: String)
+
+  /** Mirror `from` into `to`: hard links for immutable files (parquet
+    * parts and their checksums), copies for `_`-prefixed ones (`_SUCCESS`,
+    * count sidecars, and their checksums), which writers truncate or
+    * replace — a link would let that reach the source version. */
+  private[graft] def linkTree(from: java.io.File, to: java.io.File): Unit = {
+    to.mkdirs()
+    Option(from.listFiles()).toSeq.flatten.foreach { f =>
+      val t = new java.io.File(to, f.getName)
+      if (f.isDirectory) linkTree(f, t)
+      else if (f.getName.stripPrefix(".").startsWith("_")) java.nio.file.Files.copy(f.toPath, t.toPath)
+      else java.nio.file.Files.createLink(t.toPath, f.toPath)
+    }
+  }
 
   private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

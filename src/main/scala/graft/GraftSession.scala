@@ -20,7 +20,11 @@ object GraftSession {
   def warehouseDir: String =
     new java.io.File(sys.props("java.io.tmpdir"), "graft_warehouse").getAbsolutePath
 
-  def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession.Builder =
+  /** Session width: `SPARK_GRAFT_CPUS` when set, else the cores this JVM
+    * may use — never a fixed width that oversubscribes a small host. */
+  def builder(
+      cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+        Runtime.getRuntime.availableProcessors.toString)): SparkSession.Builder =
     SparkSession
       .builder()
       .withExtensions(new graft.plans.GraftExtensions)

@@ -2,7 +2,7 @@ package graft
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import java.net.InetSocketAddress
+import java.net.{InetAddress, InetSocketAddress}
 import java.nio.charset.StandardCharsets
 
 /** Minimal HTTP surface over a running [[Engine]] — the literal analog of
@@ -31,8 +31,10 @@ import java.nio.charset.StandardCharsets
   *    the approximation and its freshness — observable to the caller:
   *    the IVF path serves the snapshot of its last refresh, which the
   *    poll loop re-publishes each cycle that lands rows
-  *    (`Engine.autoRefreshIvf`), so its staleness is bounded by the poll
-  *    cadence.
+  *    (`Engine.autoRefreshIvf`: the cycle's new vectors are appended to a
+  *    linked copy of the live version and published by one pointer flip,
+  *    with a full retrain once appends would reach half the trained
+  *    base), so its staleness is bounded by the poll cadence.
   *
   * Responses are row objects from `Dataset.toJSON`; every route's row
   * count is bounded by construction (≤ bucket count, ≤ table count, ≤ k),
@@ -89,11 +91,12 @@ final class ServeHttp(engine: Engine) {
     * still answers while it is in flight. */
   @volatile private[graft] var onQueryStart: () => Unit = () => ()
 
-  /** Start listening; `port` 0 binds an ephemeral port. Returns the bound
-    * port. */
-  def start(port: Int): Int = {
+  /** Start listening on `host` (loopback unless the operator opts in to
+    * another address); `port` 0 binds an ephemeral port. Returns the
+    * bound port. */
+  def start(port: Int, host: InetAddress = InetAddress.getLoopbackAddress): Int = {
     require(server == null, "already started")
-    val s = HttpServer.create(new InetSocketAddress(port), 0)
+    val s = HttpServer.create(new InetSocketAddress(host, port), 0)
     s.createContext("/health", (ex: HttpExchange) => respond(ex) { _ =>
       s"""{"healthy":${engine.healthy},"consecutive_failures":${engine.consecutiveFailures}}"""
     })
@@ -162,6 +165,9 @@ final class ServeHttp(engine: Engine) {
     }
     s"""{"served_by":"$servedBy","rows":$rows}"""
   }
+
+  /** The bound socket address while started. */
+  def address: Option[InetSocketAddress] = Option(server).map(_.getAddress)
 
   def stop(): Unit = {
     val s = server

@@ -18,7 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   [--query <text>]     after polling, print top-k for this text query
   *   [--k <n>]            result count, default 10
   *   [--nprobe <n>]       >0 = ANN bucket pruning; 0 = exact scan (default)
-  *   [--http <port>]      serve /health /stats /watermarks /query while polling (0 = ephemeral)
+  *   [--http [host:]port] serve /health /stats /watermarks /query while polling
+  *                        (0 = ephemeral; loopback unless a host is given)
   * }}}
   */
 object ServeMain {
@@ -32,11 +33,12 @@ object ServeMain {
       query: Option[String] = None,
       k: Int = 10,
       nprobe: Int = 0,
-      httpPort: Option[Int] = None)
+      httpPort: Option[Int] = None,
+      httpHost: Option[String] = None)
 
   def parse(args: Array[String]): Config = {
     require(args.length >= 3,
-      "usage: ServeMain <sourceDir> <stateDir> <sinkDir> [--interval s] [--cycles n] [--query text] [--k n] [--nprobe n] [--http port]")
+      "usage: ServeMain <sourceDir> <stateDir> <sinkDir> [--interval s] [--cycles n] [--query text] [--k n] [--nprobe n] [--http [host:]port]")
     var cfg = Config(args(0), args(1), args(2))
     var i = 3
     while (i < args.length) {
@@ -46,7 +48,12 @@ object ServeMain {
         case "--query"    => cfg = cfg.copy(query = Some(args(i + 1))); i += 2
         case "--k"        => cfg = cfg.copy(k = args(i + 1).toInt); i += 2
         case "--nprobe"   => cfg = cfg.copy(nprobe = args(i + 1).toInt); i += 2
-        case "--http"     => cfg = cfg.copy(httpPort = Some(args(i + 1).toInt)); i += 2
+        case "--http" =>
+          val v = args(i + 1)
+          val colon = v.lastIndexOf(':')
+          cfg = cfg.copy(httpPort = Some(v.substring(colon + 1).toInt),
+            httpHost = if (colon < 0) None else Some(v.substring(0, colon)))
+          i += 2
         case other => throw new IllegalArgumentException(s"unknown flag: $other")
       }
     }
@@ -67,8 +74,8 @@ object ServeMain {
     // server when the poll loop returns; unbounded runs serve until kill.
     val http = cfg.httpPort.map { p =>
       val api = new ServeHttp(engine)
-      val port = api.start(p)
-      println(s"[serve] http listening on port $port (/health /stats /watermarks /query)")
+      cfg.httpHost.fold(api.start(p))(h => api.start(p, java.net.InetAddress.getByName(h)))
+      println(s"[serve] http listening on ${api.address.get} (/health /stats /watermarks /query)")
       api
     }
     try {

@@ -704,8 +704,11 @@ object Cdc {
     * partition columns), unioned. The listing touches ONLY the named
     * bucket directories — manifest-driven driver-side pruning, the same
     * file-skipping a table format's metadata gives — and the union width
-    * is bounded by [[MaxLiveRoots]]. */
-  private def readEntries(spark: SparkSession, sinkDir: String, entries: Seq[SinkEntry]): DataFrame =
+    * is bounded by [[MaxLiveRoots]]. With [[readManifest]], a caller can
+    * scan exactly the entries it resolved and know which generation roots
+    * that scan covered (the IVF refresh records them to narrow its next
+    * read to newer roots). */
+  private[graft] def readEntries(spark: SparkSession, sinkDir: String, entries: Seq[SinkEntry]): DataFrame =
     if (entries.isEmpty) emptySink(spark)
     else entries.groupBy(_.root).toSeq.sortBy(_._1).map { case (root, es) =>
       spark.read

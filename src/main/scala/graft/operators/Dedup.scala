@@ -66,12 +66,12 @@ object Dedup {
   /** Driver-memory cap on the guard's oversized-list collect (r19,
     * VERDICT r18 #4): beyond this many oversized buckets the list is NOT
     * materialized on the driver — the re-keying join consumes the
-    * distributed aggregate directly (the pre-r18 shape), so a pathological
-    * flood of millions of distinct oversized keys degrades to the old
-    * broadcast-relation envelope instead of first building a driver-side
-    * Row array on top of it. 65536 key rows ≈ 1.5 MB — far above anything
-    * a real corpus produces (each entry already represents > maxBucket
-    * member rows), far below driver-OOM territory. */
+    * distributed aggregate directly, with no broadcast hint, so a
+    * pathological flood of millions of distinct oversized keys plans as an
+    * ordinary (shuffle-capable) join instead of building a driver-side Row
+    * array or broadcast relation. 65536 key rows ≈ 1.5 MB — far above
+    * anything a real corpus produces (each entry already represents >
+    * maxBucket member rows), far below driver-OOM territory. */
   private[graft] val MaxCollectedOversized = 65536
 
   private[graft] def subSplitOversizedBuckets(
@@ -104,14 +104,15 @@ object Dedup {
     if (osRows.isEmpty) return blocked.withColumn(key, xxhash64(col(key)))
     val nsplit = ceil(col("_bsz") / lit(maxBucket))
     def rekeyed(oversized: DataFrame): DataFrame =
-      blocked.join(broadcast(oversized), Seq(key), "left_outer")
+      blocked.join(oversized, Seq(key), "left_outer")
         .withColumn(key,
           when(col("_bsz").isNull, xxhash64(col(key)))
             .otherwise(xxhash64(col(key), pmod(xxhash64(col(idCol), col(key)), nsplit))))
         .drop("_bsz")
     if (osRows.length > capOversized) {
-      // flood fallback: same join, distributed build side (re-aggregated by
-      // the broadcast build instead of re-shipped from the driver)
+      // flood fallback: same join against the distributed aggregate, with
+      // no broadcast hint — a flood's key list may be too large for any
+      // driver-built relation, so the planner is free to pick a shuffle join
       System.err.println(
         s"[dedup] WARN $tag: more than $capOversized oversized bucket(s) " +
           s"(> $maxBucket members each) — sub-splitting via the distributed list " +
@@ -128,8 +129,8 @@ object Dedup {
         s"$nsub secondary-hash sub-buckets — within-sub-bucket " +
         "pairs are still examined (partial recall, ≈1/nsplit per bucket key); " +
         "exact-dedup the corpus first if these are byte-identical floods")
-    rekeyed(blocked.sparkSession.createDataFrame(
-      java.util.Arrays.asList(osRows: _*), oversizedDf.schema))
+    rekeyed(broadcast(blocked.sparkSession.createDataFrame(
+      java.util.Arrays.asList(osRows: _*), oversizedDf.schema)))
   }
 
   /** Exact dedup by content hash: keeps the row with the minimal `idCol`
@@ -441,7 +442,7 @@ object Dedup {
       }
       if (changed > 0)
         System.err.println(
-          s"[dedup] WARN dedupClusters exited unconverged after $maxIter passes ($changed labels still moving)")
+          s"[dedup] WARN dedupClusters exited unconverged after $i passes ($changed labels still moving)")
       // rebound to the CALLER's session: downstream consumers plan at the
       // width they chose; the loop's narrowing stays inside the loop
       Materialize.rebind(labels, ids.sparkSession)

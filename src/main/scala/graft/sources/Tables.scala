@@ -74,37 +74,45 @@ object Tables {
 
   /** Recursive (relpath, length, mtime-nanos) signature of a LOCAL file
     * tree, or None when `java.io.File` cannot see the path — a non-local
-    * URI (hdfs://, s3a://) or a vanished file (r19, ADVICE r18): for
+    * URI (hdfs://, s3a://) or a vanished file (r19, ADVICE r18) — or
+    * cannot read a file's nanosecond mtime: for
     * those the caller must bypass the cache entirely, never cache under a
     * degenerate bare-path key that would serve a stale schema across CDC
     * drift forever. The mtime is `Files.getLastModifiedTime` at NANOS
     * (not `File.lastModified`'s milliseconds) and the file COUNT rides
     * the prefix, closing the same-millisecond same-length rewrite hole
     * (VERDICT r18 #2) down to filesystem timestamp granularity. */
-  private def fileSignature(f: java.io.File): Option[String] = {
+  private[graft] def fileSignature(
+      f: java.io.File,
+      mtimeNanos: java.io.File => Long = x => java.nio.file.Files
+        .getLastModifiedTime(x.toPath).to(java.util.concurrent.TimeUnit.NANOSECONDS))
+      : Option[String] = {
     if (!f.exists()) return None
     val sb = new StringBuilder(f.getPath)
     var n = 0
-    def walk(x: java.io.File, rel: String): Unit =
-      if (x.isFile) {
-        val mtNanos = try java.nio.file.Files
-          .getLastModifiedTime(x.toPath).to(java.util.concurrent.TimeUnit.NANOSECONDS)
-        catch { case _: java.io.IOException => x.lastModified * 1000000L }
-        n += 1
-        sb.append('|').append(rel).append(':').append(x.length())
-          .append(':').append(mtNanos); ()
-      }
+    // a file whose nanosecond mtime cannot be read makes the whole tree
+    // unsignable: a millisecond fallback would reopen the same-millisecond
+    // rewrite hole, so such a path bypasses the cache instead
+    def walk(x: java.io.File, rel: String): Boolean =
+      if (x.isFile)
+        try {
+          val mt = mtimeNanos(x)
+          n += 1
+          sb.append('|').append(rel).append(':').append(x.length()).append(':').append(mt)
+          true
+        } catch { case _: java.io.IOException => false }
       else Option(x.listFiles()).toSeq.flatten.sortBy(_.getName)
-        .foreach(c => walk(c, rel + "/" + c.getName))
-    walk(f, "")
-    Some(sb.insert(f.getPath.length, "#" + n).result())
+        .forall(c => walk(c, rel + "/" + c.getName))
+    if (walk(f, "")) Some(sb.insert(f.getPath.length, "#" + n).result()) else None
   }
 
   /** Cache-or-infer: serve the cached schema only when the CURRENT
     * signature matches the stored one; otherwise (changed files, or an
     * unsignable non-local path) run `infer` — and store the result only
-    * when a signature exists to invalidate it later. */
-  private def cachedSchema(
+    * when a signature exists to invalidate it later, and only when the
+    * tree still carries that signature after inference: a rewrite during
+    * `infer` would otherwise pair the old signature with the new schema. */
+  private[graft] def cachedSchema(
       f: java.io.File,
       infer: () => org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
     fileSignature(f) match {
@@ -114,7 +122,7 @@ object Tables {
           case (`sig`, schema) => schema
           case _ =>
             val schema = infer()
-            schemaCache.put(f.getPath, (sig, schema))
+            if (fileSignature(f).contains(sig)) schemaCache.put(f.getPath, (sig, schema))
             schema
         }
     }

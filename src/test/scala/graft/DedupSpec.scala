@@ -469,4 +469,36 @@ class DedupSpec extends AnyFunSuite {
     assert(rows(Some(80L)) == rows(None),
       "bound-based skip must be row-identical to the counted guard")
   }
+
+  test("flood fallback re-keys through an unhinted join; the driver path keeps its broadcast") {
+    // a flood's oversized-key list may be far too large for a driver-built
+    // relation: past the collect cap the join must carry no broadcast hint,
+    // so the planner can choose a shuffle join
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val blocked = spark.range(0, 250).selectExpr("id as doc_id", "CAST(7 AS LONG) as bkey")
+      .unionByName(spark.range(300, 330).selectExpr("id as doc_id", "CAST(8 AS LONG) as bkey"))
+    def hints(capOversized: Int) = Dedup.subSplitOversizedBuckets(
+      blocked, "bkey", "doc_id", maxBucket = 100, tag = "spec",
+      blockedRowsBound = None, capOversized = capOversized)
+      .queryExecution.optimizedPlan.collect { case j: Join =>
+        Seq(j.hint.leftHint, j.hint.rightHint).flatten.flatMap(_.strategy).map(_.toString)
+      }.flatten
+    assert(hints(0).isEmpty, s"flood fallback must not hint a broadcast: ${hints(0)}")
+    assert(hints(Dedup.MaxCollectedOversized).exists(_.toUpperCase.contains("BROADCAST")),
+      "the driver-collected list is small by construction and stays broadcast")
+  }
+
+  test("unconverged CC warning reports the passes actually run") {
+    // a 64-node path cannot converge in one fused round; maxIter = 1 still
+    // runs that round's two passes, and the warning must say 2, not 1
+    val ids = spark.range(64).toDF("doc_id")
+    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val buf = new java.io.ByteArrayOutputStream()
+    val saved = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    try Dedup.dedupClusters(ids, "doc_id", pairs, maxIter = 1)
+    finally System.setErr(saved)
+    val warn = buf.toString("UTF-8").linesIterator.find(_.contains("exited unconverged"))
+    assert(warn.exists(_.contains("after 2 passes")), s"warning: $warn")
+  }
 }

@@ -81,4 +81,29 @@ class SchemaCacheSpec extends AnyFunSuite {
       "an unsignable path must bypass the cache, not cache under a bare-path key")
     assert(Tables.schemaCacheSignature(s"${tmpdir()}/does_not_exist.parquet").isEmpty)
   }
+
+  test("a file whose nanosecond mtime cannot be read makes the tree unsignable") {
+    // no millisecond fallback: such a tree bypasses the cache rather than
+    // reopening the same-millisecond rewrite hole
+    val p = s"${tmpdir()}/t.parquet"
+    spark.range(3).selectExpr("id as a").write.mode("overwrite").parquet(p)
+    val f = new java.io.File(p)
+    assert(Tables.fileSignature(f).isDefined)
+    assert(Tables.fileSignature(f, _ => throw new java.io.IOException("no mtime")).isEmpty)
+  }
+
+  test("a rewrite during inference is not cached under the pre-rewrite signature") {
+    val p = s"${tmpdir()}/t.parquet"
+    spark.range(3).selectExpr("id as a").write.mode("overwrite").parquet(p)
+    val inferred = Tables.cachedSchema(new java.io.File(p), () => {
+      val schema = spark.read.parquet(p).schema
+      spark.range(3).selectExpr("id as a", "id as b").write.mode("overwrite").parquet(p)
+      schema
+    })
+    assert(inferred.fieldNames.toSeq == Seq("a"))
+    assert(Tables.schemaCacheSignature(p).isEmpty,
+      "a schema inferred across a rewrite must not be stored")
+    assert(Tables.cachedParquet(spark, p).schema.fieldNames.toSeq == Seq("a", "b"),
+      "the next read re-infers the rewritten tree")
+  }
 }

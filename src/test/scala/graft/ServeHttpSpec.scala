@@ -184,6 +184,67 @@ class ServeHttpSpec extends AnyFunSuite {
     } finally api.stop()
   }
 
+  test("auto-refresh cycles append to the live index: ids once, centroids unchanged, " +
+      "/ivf/status reports the appended fraction") {
+    import graft.operators.{Cdc, IvfIndex}
+    val scratch = Files.createTempDirectory("graft_http_ivfappend").toString
+    val src = s"$scratch/src"
+    new java.io.File(src).mkdirs()
+    def land(from: Int, to: Int, day: Int): Unit =
+      (from to to).map(i => (i.toLong, Timestamp.valueOf(f"2024-01-$day%02d 00:${i % 60}%02d:00"),
+        s"delta-$i")).toDF("event_id", "ts", "payload")
+        .write.mode("append").parquet(s"$src/events.parquet")
+    land(1, 60, 1)
+    // one row per chunk: 60 vectors, so the 5 appended stay under the
+    // 0.5 rebuild bar
+    val engine = new Engine(spark, src, s"$scratch/state", s"$scratch/sink", chunkSize = 1)
+    engine.initializeIndex()
+    engine.runSyncCycle()
+    engine.refreshIvfIndex(k = 4, iters = 2)
+    val cents = IvfIndex.centroidEntries(spark, engine.liveIvfDir().get)
+      .map { case (id, c) => (id, c.toSeq) }
+
+    land(61, 63, 2)
+    engine.runSyncCycle()
+    land(64, 65, 3)
+    engine.runSyncCycle()
+
+    val live = engine.liveIvfDir().get
+    val ids = spark.read.parquet(s"$live/data").select("id").as[String].collect().toSeq
+    val sinkIds = Cdc.readVectorSink(spark, s"$scratch/sink", Some(Cdc.DefaultNamespace))
+      .select("id").as[String].collect().toSet
+    assert(ids.size == ids.toSet.size && ids.toSet == sinkIds,
+      s"index ids must be the sink's, each once: ${ids.size} vs ${sinkIds.size}")
+    assert(IvfIndex.centroidEntries(spark, live).map { case (id, c) => (id, c.toSeq) } == cents,
+      "appending cycles keep the trained centroids")
+
+    val api = new ServeHttp(engine)
+    val port = api.start(0)
+    try {
+      val (code, body) = get(s"http://127.0.0.1:$port/ivf/status")
+      assert(code == 200 && body.contains("\"centroids\":4"), body)
+      val frac = "\"appended_fraction\":([0-9.]+)".r.findFirstMatchIn(body).map(_.group(1).toDouble)
+      assert(frac.exists(_ > 0.0), s"appended rows must show in the staleness clock: $body")
+    } finally api.stop()
+  }
+
+  test("the HTTP server binds loopback unless another address is asked for") {
+    val scratch = Files.createTempDirectory("graft_http_bind").toString
+    val engine = new Engine(spark, s"$scratch/src", s"$scratch/state", s"$scratch/sink")
+    val api = new ServeHttp(engine)
+    val port = api.start(0)
+    try {
+      assert(api.address.exists(_.getAddress.isLoopbackAddress), s"bound ${api.address}")
+      val (code, _) = get(s"http://127.0.0.1:$port/health")
+      assert(code == 200)
+    } finally api.stop()
+    assert(api.address.isEmpty)
+    val any = new java.net.InetSocketAddress(0).getAddress
+    val port2 = api.start(0, any)
+    try assert(api.address.exists(a => a.getAddress.isAnyLocalAddress && a.getPort == port2))
+    finally api.stop()
+  }
+
   test("store-reading routes take no lock: all respond while a commit holds Engine.commitLock") {
     val scratch = Files.createTempDirectory("graft_http_lockfree").toString
     val src = s"$scratch/src"

@@ -25,6 +25,9 @@ class ServeSpec extends AnyFunSuite {
     val cfg = ServeMain.parse(Array("/s", "/st", "/sk",
       "--interval", "0", "--cycles", "2", "--query", "hello world", "--k", "3", "--nprobe", "2"))
     assert(cfg == ServeMain.Config("/s", "/st", "/sk", 0, 2, Some("hello world"), 3, 2))
+    assert(ServeMain.parse(Array("/s", "/st", "/sk", "--http", "8080")).httpHost.isEmpty)
+    val opted = ServeMain.parse(Array("/s", "/st", "/sk", "--http", "0.0.0.0:8080"))
+    assert(opted.httpHost.contains("0.0.0.0") && opted.httpPort.contains(8080))
     assertThrows[IllegalArgumentException](ServeMain.parse(Array("/s", "/st", "/sk", "--bogus")))
     assertThrows[IllegalArgumentException](ServeMain.parse(Array("/s")))
   }

@@ -222,6 +222,106 @@ class SimilaritySpec extends AnyFunSuite {
     assert(appended.head._1 == 200L, "the appended vector itself must rank first")
   }
 
+  /** An engine over a sink holding docs `d#<i>` for `ids`, upserted
+    * directly (no source): each upsert lands in a new generation root. */
+  private def docEngine(tag: String, ids: Range) = {
+    import graft.operators.Cdc
+    val scratch = java.nio.file.Files.createTempDirectory(tag).toString
+    val sink = s"$scratch/sink"
+    Cdc.initVectorSink(spark, sink)
+    upsertDocs(sink, ids)
+    (new Engine(spark, s"$scratch/src", s"$scratch/state", sink), sink)
+  }
+  private def upsertDocs(sink: String, ids: Seq[Int]): Unit = {
+    import graft.functions.Embeddings
+    graft.operators.Cdc.upsertVectors(spark, sink, ids.map(i =>
+      (s"d#$i", Embeddings.embed(s"alpha beta doc number $i"), "t", s"text $i"))
+      .toDF("id", "embedding", "source", "text"))
+  }
+  private def indexIds(dir: String): Seq[String] =
+    spark.read.parquet(s"$dir/data").select("id").as[String].collect().toSeq
+  private def sinkIds(sink: String): Set[String] =
+    graft.operators.Cdc.readVectorSink(spark, sink, Some(graft.operators.Cdc.DefaultNamespace))
+      .select("id").as[String].collect().toSet
+
+  test("Engine.refreshIvfIndex appends new roots' vectors to a linked copy of the live " +
+      "version: ids once, centroids unchanged, re-emitted ids add nothing, the " +
+      "previous version answers as before") {
+    import graft.functions.Embeddings
+    import graft.operators.IvfIndex
+    val (engine, sink) = docEngine("graft_ivf_refresh", 1 to 40)
+    engine.refreshIvfIndex(k = 4, iters = 2)
+    val v1 = engine.liveIvfDir().get
+    val cents1 = IvfIndex.centroidEntries(spark, v1).map { case (id, c) => (id, c.toSeq) }
+    val probe = Embeddings.embed("alpha beta doc number 17")
+    def answer(dir: String) = IvfIndex.search(spark, dir, probe, 10, nprobe = 4)
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    val before = answer(v1)
+
+    upsertDocs(sink, 41 to 46)
+    engine.refreshIvfIndex()
+    val v2 = engine.liveIvfDir().get
+    assert(v2 != v1)
+    val ids2 = indexIds(v2)
+    assert(ids2.size == ids2.toSet.size && ids2.toSet == sinkIds(sink), "each sink id once")
+    assert(IvfIndex.centroidEntries(spark, v2).map { case (id, c) => (id, c.toSeq) } == cents1,
+      "an append keeps the centroid matrix")
+    assert(math.abs(IvfIndex.appendedFraction(v2) - 6.0 / 40) < 1e-9)
+    // the base files are shared with the previous version, not rewritten
+    val v1Part = new java.io.File(v1, "data").listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).find(_.getName.endsWith(".parquet")).get
+    val v2Part = new java.io.File(v2, s"data/${v1Part.getParentFile.getName}/${v1Part.getName}")
+    assert(java.nio.file.Files.isSameFile(v1Part.toPath, v2Part.toPath), "data files are linked")
+    // one-behind retention: the previous version answers exactly as before
+    assert(answer(v1) == before)
+
+    // a commit that re-emits indexed ids (its root rewrites their buckets)
+    // must add none of them again; only the one new id lands
+    upsertDocs(sink, (1 to 10) :+ 47)
+    engine.refreshIvfIndex()
+    val ids3 = indexIds(engine.liveIvfDir().get)
+    assert(ids3.size == 47 && ids3.toSet == sinkIds(sink), s"re-emitted ids duplicated: ${ids3.size}")
+  }
+
+  test("Engine.refreshIvfIndex: an unflipped half-built version is ignored by readers and " +
+      "GC'd; crossing the 0.5 appended fraction retrains in full") {
+    import graft.functions.Embeddings
+    import graft.operators.IvfIndex
+    val (engine, sink) = docEngine("graft_ivf_refresh_crash", 1 to 20)
+    engine.refreshIvfIndex(k = 4, iters = 2)
+    val v1 = new java.io.File(engine.liveIvfDir().get)
+
+    // a refresh that crashed before its flip: a complete next version
+    // holding an id the sink never had
+    val v2 = new java.io.File(v1.getParentFile, "v000002")
+    Engine.linkTree(new java.io.File(v1, "data"), new java.io.File(v2, "data"))
+    Engine.linkTree(new java.io.File(v1, "centroids"), new java.io.File(v2, "centroids"))
+    val junk = Embeddings.embed("zebra junk marker")
+    IvfIndex.append(Seq(("junk#1", junk)).toDF("id", "embedding"), "id", "embedding", v2.getPath)
+    assert(engine.liveIvfDir().contains(v1.getPath))
+    val seen = engine.searchIvf(engine.ivfIndexDir(), "zebra junk marker", k = 30, nprobe = 4)
+      .collect().map(_.getString(0))
+    assert(!seen.contains("junk#1"), "readers must not see an unflipped version")
+    assert(indexIds(v1.getPath).size == 20, "the live version is untouched")
+
+    upsertDocs(sink, 21 to 23)
+    engine.refreshIvfIndex()
+    val v3 = engine.liveIvfDir().get
+    assert(new java.io.File(v3).getName == "v000003")
+    assert(!v2.exists(), "the next refresh GCs the half-built version")
+    assert(indexIds(v3).sorted == sinkIds(sink).toSeq.sorted)
+    assert(math.abs(IvfIndex.appendedFraction(v3) - 3.0 / 20) < 1e-9)
+
+    // 3 + 8 appended rows would reach 0.55 of the 20-row base: full retrain
+    upsertDocs(sink, 24 to 31)
+    engine.refreshIvfIndex()
+    val v4 = engine.liveIvfDir().get
+    assert(IvfIndex.appendedFraction(v4) == 0.0, "a full rebuild resets the appended fraction")
+    assert(indexIds(v4).sorted == sinkIds(sink).toSeq.sorted)
+    assert(IvfIndex.centroidEntries(spark, v4).size == 4, "the rebuild keeps the live k")
+    assert(new java.io.File(v3).exists() && !v1.exists(), "one-behind retention")
+  }
+
   test("IvfIndex.repair (r17): splits only the clusters that absorbed appends, " +
       "untouched dirs stay byte-identical, exactness and routing survive " +
       "retired cluster ids, the staleness clock covers the repaired mass") {
