@@ -1,7 +1,8 @@
 package graft
 
 import graft.functions.Embeddings
-import graft.operators.{Cdc, SimilaritySearch}
+import graft.operators.{Cdc, ParquetWatermarkStore, SimilaritySearch}
+import graft.sources.DirSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** User-facing facade — everything the reference's process does, as one
@@ -54,8 +55,9 @@ class Engine(
     * staleness is bounded by the poll cadence instead of growing forever
     * (set `autoRefreshIvf = false` to manage refreshes manually). */
   def runSyncCycle(): Map[String, Long] = {
-    val synced = Cdc.syncCycle(spark, sourceDir, stateDir, sinkDir, changeCol,
-      chunkSize = chunkSize, layout = layout, commitLock = commitLock)
+    val synced = Cdc.requireSynced(Cdc.syncCycleOutcomesOn(spark, DirSource(sourceDir),
+      ParquetWatermarkStore(stateDir), sinkDir, changeCol, chunkSize = chunkSize,
+      layout = layout, commitLock = commitLock))
     if (autoRefreshIvf && synced.valuesIterator.sum > 0 && hasIvfIndex()) refreshIvfIndex()
     synced
   }

@@ -2,8 +2,8 @@ package graft
 
 import graft.functions.{Embeddings, JsonRows, PortableHash, TextOps, VectorOps}
 import graft.multimodal.Multimodal
-import graft.operators.{Cdc, Chunker, Dedup, IvfIndex, Materialize, RankStats, SimilaritySearch}
-import graft.sources.Tables
+import graft.operators.{Cdc, Chunker, Dedup, IvfIndex, Materialize, ParquetWatermarkStore, RankStats, SimilaritySearch}
+import graft.sources.{DirSource, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -949,12 +949,13 @@ object SparkEntry {
     // and read pruning without fragmenting into one-row parquet files (the
     // default 64-bucket layout is sized for a far larger sink)
     val layout = Cdc.SinkLayout(buckets = 8, simBits = Cdc.SimBits)
-    Cdc.syncCycle(s, dir, s"$scratch/state", s"$scratch/sink",
-      deterministicChunks = true, layout = layout)
-    // SAME layout as cycle 1: cycle 2 is a no-op delta today, but a call
-    // that CAN write must never write under a mismatched bucket layout
-    Cdc.syncCycle(s, dir, s"$scratch/state", s"$scratch/sink",
-      deterministicChunks = true, layout = layout)
+    // SAME layout in both cycles: cycle 2 is a no-op delta today, but a
+    // call that CAN write must never write under a mismatched bucket layout
+    def cycle(): Unit = Cdc.requireSynced(Cdc.syncCycleOutcomesOn(s, DirSource(dir),
+      ParquetWatermarkStore(s"$scratch/state"), s"$scratch/sink",
+      deterministicChunks = true, layout = layout))
+    cycle()
+    cycle()
     Cdc.readVectorSink(s, s"$scratch/sink").select(col("id"), col("source"), col("text"))
       .orderBy(col("id"))
   }

@@ -1069,7 +1069,7 @@ object Cdc {
   final case class TableSynced(rows: Long) extends TableOutcome { def isFailure = false }
   final case class TableFailed(error: Throwable) extends TableOutcome { def isFailure = true }
 
-  /** Raised by [[syncCycle]] when any table failed — a total or partial
+  /** Raised by [[requireSynced]] when any table failed — a total or partial
     * failure must never be indistinguishable from "no new data" (VERDICT
     * r8: a swallowed per-table ClassCastException produced an empty sink
     * that a rows-only check and the bench both read as fast success). */
@@ -1079,71 +1079,47 @@ object Cdc {
         failures.toSeq.sortBy(_._1)
           .map { case (t, e) => s"$t: ${e.getMessage}" }.mkString("; "))
 
-  /** One full sync cycle over every table in `sourceDir` except the
-    * watermark state table (`controller/controller.py:17-35`), returning a
-    * per-table outcome (T6 isolation made LOUD: failures are isolated —
-    * every table is still attempted, successes commit — but they are
-    * returned, not swallowed).
+  /** Rows synced per table, or [[CdcCycleException]] naming every failed
+    * table. The cycle has attempted every table by then: successes keep
+    * their committed sink + watermark, and a retry is idempotent via
+    * content-hash ids. */
+  def requireSynced(outcomes: Map[String, TableOutcome]): Map[String, Long] = {
+    val failures = outcomes.collect { case (t, TableFailed(e)) => t -> e }
+    if (failures.nonEmpty) throw new CdcCycleException(failures)
+    outcomes.collect { case (t, TableSynced(n)) => t -> n }
+  }
+
+  /** One full sync cycle over every table of `source` except the watermark
+    * state table (`controller/controller.py:17-35`), returning a per-table
+    * outcome (T6 isolation made LOUD: failures are isolated — every table
+    * is still attempted, successes commit — but they are returned, not
+    * swallowed; [[requireSynced]] turns them into an exception).
     *
-    * Tables run CONCURRENTLY (the reference loops serially on one
-    * connection, `controller/controller.py:25-27`): per-table compute —
-    * footer/metadata load, delta count/max, chunk+embed materialization —
-    * overlaps freely, while the sink upsert + watermark commit serialize
-    * under a per-cycle mutex, because both are read-modify-write protocols
-    * on shared state (the sink manifest; the watermark version pointer).
-    * Optimistic-parallel compute with a serialized commit tail is the same
-    * shape every table format (Delta/Iceberg) uses for concurrent writers;
-    * cycle latency becomes max-of-tables' compute + sum of (small) commits
-    * instead of sum of everything. */
-  def syncCycleOutcomes(
-      spark: SparkSession,
-      sourceDir: String,
-      stateDir: String,
-      sinkDir: String,
-      changeCol: String = "ts",
-      orderCol: String = "event_id",
-      chunkSize: Int = Chunker.DefaultChunkSize,
-      deterministicChunks: Boolean = false,
-      namespace: String = DefaultNamespace,
-      layout: SinkLayout = DefaultLayout,
-      parallelism: Int = 8,
-      commitLock: AnyRef = new Object): Map[String, TableOutcome] =
-    syncCycleOutcomesFrom(spark, graft.sources.DirSource(sourceDir), stateDir,
-      sinkDir, changeCol, orderCol, chunkSize, deterministicChunks, namespace,
-      layout, parallelism, commitLock)
-
-  /** Source-generic form of [[syncCycleOutcomes]] (r15): the cycle over
-    * any [[graft.sources.CdcSource]] binding — a parquet directory
-    * ([[graft.sources.DirSource]], the wrapper above) or a LIVE database
-    * over JDBC ([[graft.sources.JdbcSource]]), which is the reference's
-    * literal deployment topology: poll MySQL, strict-`>` delta pushed
-    * into the database WHERE, chunk → embed → upsert → watermark commit
-    * (`controller/controller.py:17-35`, `service_layer/service.py:48-80`;
-    * JdbcCdcSpec runs this end-to-end against embedded Derby). The
-    * watermark-table exclusion compares case-insensitively: JDBC catalogs
-    * (Derby, default MySQL on some platforms) fold unquoted identifiers. */
-  def syncCycleOutcomesFrom(
-      spark: SparkSession,
-      source: graft.sources.CdcSource,
-      stateDir: String,
-      sinkDir: String,
-      changeCol: String = "ts",
-      orderCol: String = "event_id",
-      chunkSize: Int = Chunker.DefaultChunkSize,
-      deterministicChunks: Boolean = false,
-      namespace: String = DefaultNamespace,
-      layout: SinkLayout = DefaultLayout,
-      parallelism: Int = 8,
-      commitLock: AnyRef = new Object): Map[String, TableOutcome] =
-    syncCycleOutcomesOn(spark, source, ParquetWatermarkStore(stateDir), sinkDir,
-      changeCol, orderCol, chunkSize, deterministicChunks, namespace, layout,
-      parallelism, commitLock)
-
-  /** Store-generic core of the cycle (VERDICT r15 task 2): watermark state
-    * lives behind a [[WatermarkStore]] binding — the default versioned
-    * parquet store beside the sink ([[ParquetWatermarkStore]], the
-    * wrappers above) or IN a live database ([[JdbcWatermarkStore]]), which
-    * is where the reference keeps it (`service_layer/service.py:35-46`). */
+    * The source is any [[graft.sources.CdcSource]] binding: a parquet
+    * directory ([[graft.sources.DirSource]]) or a LIVE database over JDBC
+    * ([[graft.sources.JdbcSource]]), which is the reference's literal
+    * deployment topology — poll MySQL, strict-`>` delta pushed into the
+    * database WHERE, chunk → embed → upsert → watermark commit
+    * (`service_layer/service.py:48-80`; JdbcCdcSpec runs this end-to-end
+    * against embedded Derby). The watermark-table exclusion compares
+    * case-insensitively: JDBC catalogs (Derby, default MySQL on some
+    * platforms) fold unquoted identifiers. Watermark state lives behind a
+    * [[WatermarkStore]] binding: the versioned parquet store beside the
+    * sink ([[ParquetWatermarkStore]]) or IN a live database
+    * ([[JdbcWatermarkStore]]), which is where the reference keeps it
+    * (`service_layer/service.py:35-46`).
+    *
+    * Tables run CONCURRENTLY on up to `parallelism` workers (the reference
+    * loops serially on one connection, `controller/controller.py:25-27`):
+    * per-table compute — footer/metadata load, delta count/max,
+    * chunk+embed materialization — overlaps freely, while the sink upsert
+    * + watermark commit serialize under `commitLock`, because both are
+    * read-modify-write protocols on shared state (the sink manifest; the
+    * watermark version pointer). Optimistic-parallel compute with a
+    * serialized commit tail is the same shape every table format
+    * (Delta/Iceberg) uses for concurrent writers; cycle latency becomes
+    * max-of-tables' compute + sum of (small) commits instead of sum of
+    * everything. */
   def syncCycleOutcomesOn(
       spark: SparkSession,
       source: graft.sources.CdcSource,
@@ -1176,9 +1152,8 @@ object Cdc {
       val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
       val futures = tables.map { t =>
         t -> scala.concurrent.Future {
-          try TableSynced(syncTableOn(spark, source, store, sinkDir, t,
-            changeCol, orderCol, chunkSize, deterministicChunks, namespace,
-            Some(wms.get(t)), commitLock))
+          try TableSynced(syncTableOn(spark, source, store, sinkDir, t, wms.get(t),
+            changeCol, orderCol, chunkSize, deterministicChunks, namespace, commitLock))
           catch {
             // T6: isolate, but NEVER swallow. NonFatal only — a fatal
             // Error (OOM, NoClassDefFoundError) must escape the future
@@ -1204,72 +1179,9 @@ object Cdc {
     } finally { pool.shutdown(); () }
   }
 
-  /** Legacy row-count surface over [[syncCycleOutcomes]] — now loud: any
-    * per-table failure raises [[CdcCycleException]] AFTER every table has
-    * been attempted (successes keep their committed sink + watermark; a
-    * retry is idempotent via content-hash ids). */
-  def syncCycle(
-      spark: SparkSession,
-      sourceDir: String,
-      stateDir: String,
-      sinkDir: String,
-      changeCol: String = "ts",
-      orderCol: String = "event_id",
-      chunkSize: Int = Chunker.DefaultChunkSize,
-      deterministicChunks: Boolean = false,
-      namespace: String = DefaultNamespace,
-      layout: SinkLayout = DefaultLayout,
-      commitLock: AnyRef = new Object): Map[String, Long] =
-    syncCycleFrom(spark, graft.sources.DirSource(sourceDir), stateDir, sinkDir,
-      changeCol, orderCol, chunkSize, deterministicChunks, namespace, layout,
-      commitLock)
-
-  /** [[syncCycle]] over any [[graft.sources.CdcSource]] (see
-    * [[syncCycleOutcomesFrom]]). */
-  def syncCycleFrom(
-      spark: SparkSession,
-      source: graft.sources.CdcSource,
-      stateDir: String,
-      sinkDir: String,
-      changeCol: String = "ts",
-      orderCol: String = "event_id",
-      chunkSize: Int = Chunker.DefaultChunkSize,
-      deterministicChunks: Boolean = false,
-      namespace: String = DefaultNamespace,
-      layout: SinkLayout = DefaultLayout,
-      commitLock: AnyRef = new Object): Map[String, Long] = {
-    val outcomes = syncCycleOutcomesFrom(spark, source, stateDir, sinkDir,
-      changeCol, orderCol, chunkSize, deterministicChunks, namespace, layout,
-      commitLock = commitLock)
-    val failures = outcomes.collect { case (t, TableFailed(e)) => t -> e }
-    if (failures.nonEmpty) throw new CdcCycleException(failures)
-    outcomes.collect { case (t, TableSynced(n)) => t -> n }
-  }
-
-  /** [[syncCycleFrom]] with watermark state behind any [[WatermarkStore]]
-    * binding (see [[syncCycleOutcomesOn]]) — e.g. [[JdbcWatermarkStore]]
-    * to keep state in the source database like the reference. */
-  def syncCycleOn(
-      spark: SparkSession,
-      source: graft.sources.CdcSource,
-      store: WatermarkStore,
-      sinkDir: String,
-      changeCol: String = "ts",
-      orderCol: String = "event_id",
-      chunkSize: Int = Chunker.DefaultChunkSize,
-      deterministicChunks: Boolean = false,
-      namespace: String = DefaultNamespace,
-      layout: SinkLayout = DefaultLayout,
-      commitLock: AnyRef = new Object): Map[String, Long] = {
-    val outcomes = syncCycleOutcomesOn(spark, source, store, sinkDir,
-      changeCol, orderCol, chunkSize, deterministicChunks, namespace, layout,
-      commitLock = commitLock)
-    val failures = outcomes.collect { case (t, TableFailed(e)) => t -> e }
-    if (failures.nonEmpty) throw new CdcCycleException(failures)
-    outcomes.collect { case (t, TableSynced(n)) => t -> n }
-  }
-
-  /** Sync one table: delta → chunk → embed → upsert → commit watermark.
+  /** Sync one table past its stored watermark `wm`: delta → chunk → embed
+    * → upsert → commit watermark. The cycle reads the store once for all
+    * tables; a standalone caller passes `store.get(tableName)`.
     *
     * Chunk boundaries default to `Chunker.chunkScalable` — partition-local,
     * no global ordering pass — because the reference's own boundaries are
@@ -1286,25 +1198,7 @@ object Cdc {
     * numbering: key-derived blocks + broadcast offsets — see
     * Chunker.chunkDeterministic), restoring strict retry idempotency for
     * pipelines that need it, at the cost of one extra ordering pass per
-    * cycle. */
-  def syncTable(
-      spark: SparkSession,
-      sourceDir: String,
-      stateDir: String,
-      sinkDir: String,
-      tableName: String,
-      changeCol: String,
-      orderCol: String,
-      chunkSize: Int,
-      deterministicChunks: Boolean = false,
-      namespace: String = DefaultNamespace,
-      knownWatermark: Option[Option[Timestamp]] = None,
-      commitLock: AnyRef = new Object): Long =
-    syncTableFrom(spark, graft.sources.DirSource(sourceDir), stateDir, sinkDir,
-      tableName, changeCol, orderCol, chunkSize, deterministicChunks, namespace,
-      knownWatermark, commitLock)
-
-  /** [[syncTable]] over any [[graft.sources.CdcSource]] (r15).
+    * cycle.
     *
     * Mid-stream SCHEMA EVOLUTION semantics (VERDICT r14 #5, pinned by
     * CdcSpec): the pipeline is schema-generic like the reference's
@@ -1340,41 +1234,19 @@ object Cdc {
     *  - an in-place TYPE change of the watermark/order column itself, or
     *    a NON-widening value-type rewrite (int→string), is out of
     *    contract, as it is for the reference — the read fails loudly. */
-  def syncTableFrom(
-      spark: SparkSession,
-      source: graft.sources.CdcSource,
-      stateDir: String,
-      sinkDir: String,
-      tableName: String,
-      changeCol: String,
-      orderCol: String,
-      chunkSize: Int,
-      deterministicChunks: Boolean = false,
-      namespace: String = DefaultNamespace,
-      knownWatermark: Option[Option[Timestamp]] = None,
-      commitLock: AnyRef = new Object): Long =
-    syncTableOn(spark, source, ParquetWatermarkStore(stateDir), sinkDir,
-      tableName, changeCol, orderCol, chunkSize, deterministicChunks,
-      namespace, knownWatermark, commitLock)
-
-  /** [[syncTableFrom]] with watermark state behind any [[WatermarkStore]]
-    * binding (see [[syncCycleOutcomesOn]]). */
   def syncTableOn(
       spark: SparkSession,
       source: graft.sources.CdcSource,
       store: WatermarkStore,
       sinkDir: String,
       tableName: String,
+      wm: Option[Timestamp],
       changeCol: String,
       orderCol: String,
       chunkSize: Int,
       deterministicChunks: Boolean = false,
       namespace: String = DefaultNamespace,
-      knownWatermark: Option[Option[Timestamp]] = None,
       commitLock: AnyRef = new Object): Long = {
-    // outer None = "look it up" (standalone call); Some(wm) = the cycle
-    // already read the store once for all tables
-    val wm = knownWatermark.getOrElse(store.get(tableName))
     // Fleet quiet-table fast path (VERDICT r15 task 5): a mostly-quiet
     // fleet tick's floor is per-table RELATION SETUP + one count/max
     // aggregate job (~20-30 ms each, FleetProbe) — but "is there anything
@@ -1446,32 +1318,51 @@ object Cdc {
       Cdc.boundedDeltaScan(
         if (s2 eq spark) src else source.table(s2, tableName),
         changeCol, wm, newWm)
-    locally {
-      val chunks =
-        if (deterministicChunks)
-          Chunker.chunkRowsAsJson(delta, col(effOrderCol), tableName, chunkSize)
-        else {
-          val json = delta.withColumn("_json", graft.functions.JsonRows.toJsonCol(delta))
-          Chunker.chunkScalable(json, col("_json"), tableName, chunkSize)
-        }
-      val vectors = chunks.select(
-        col("id"),
-        Embeddings.embedCol(col("text")).as("embedding"),
-        col("source"),
-        col("text"))
-      // stage chunk+embed OUTSIDE the commit lock, so concurrent tables
-      // overlap their compute and only serialize the sink RMW + watermark
-      // commit (writer-writer serialization only — readers are
-      // MVCC-snapshot-isolated and take no lock). The staging write IS the
-      // materialization; see stageUpsert for why a file, never a cache.
-      val staged = stageUpsert(s2, sinkDir, vectors, namespace)
-      commitLock.synchronized {
-        // commit deletes the staging, success or not
-        staged.foreach(commitStagedUpsert(s2, sinkDir, _))
-        // S7 commit AFTER the sink write — reference order, T3.
-        store.update(tableName, newWm)
+    indexDelta(s2, delta, tableName, deterministicChunks, effOrderCol, chunkSize,
+      sinkDir, namespace, store, newWm, commitLock)
+    n
+  }
+
+  /** The per-batch tail both CDC paths share — [[syncTableOn]] and
+    * [[graft.streaming.CdcStream]]'s `foreachBatch`: chunk `delta` (on
+    * `orderCol` when `deterministicChunks`) → embed → stage the upsert →
+    * under `commitLock`, commit the staged rows, then advance the
+    * watermark to `newWm`.
+    *
+    * Staging runs OUTSIDE the lock, so concurrent tables overlap their
+    * compute and only serialize the sink RMW + watermark commit
+    * (writer-writer serialization only — readers are MVCC-snapshot-isolated
+    * and take no lock). The staging write IS the materialization; see
+    * stageUpsert for why a file, never a cache. */
+  private[graft] def indexDelta(
+      spark: SparkSession,
+      delta: DataFrame,
+      tableName: String,
+      deterministicChunks: Boolean,
+      orderCol: String,
+      chunkSize: Int,
+      sinkDir: String,
+      namespace: String,
+      store: WatermarkStore,
+      newWm: Timestamp,
+      commitLock: AnyRef): Unit = {
+    val chunks =
+      if (deterministicChunks) Chunker.chunkRowsAsJson(delta, col(orderCol), tableName, chunkSize)
+      else {
+        val json = delta.withColumn("_json", graft.functions.JsonRows.toJsonCol(delta))
+        Chunker.chunkScalable(json, col("_json"), tableName, chunkSize)
       }
-      n
+    val vectors = chunks.select(
+      col("id"),
+      Embeddings.embedCol(col("text")).as("embedding"),
+      col("source"),
+      col("text"))
+    val staged = stageUpsert(spark, sinkDir, vectors, namespace)
+    commitLock.synchronized {
+      // commit deletes the staging, success or not
+      staged.foreach(commitStagedUpsert(spark, sinkDir, _))
+      // S7 commit AFTER the sink write — reference order, T3.
+      store.update(tableName, newWm)
     }
   }
 

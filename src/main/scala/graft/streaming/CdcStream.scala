@@ -1,11 +1,12 @@
 package graft.streaming
 
-import graft.functions.Embeddings
-import graft.operators.{Cdc, Chunker}
+import graft.operators.{Cdc, Chunker, ParquetWatermarkStore, WatermarkStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import java.sql.Timestamp
 
 /** Structured-Streaming form of the CDC pipeline.
   *
@@ -24,9 +25,11 @@ import org.apache.spark.sql.types.StructType
 object CdcStream {
 
   /** Build the streaming pipeline over a file-source directory of parquet
-    * drops (the MySQL-poll stand-in). Each micro-batch runs chunk→embed→
-    * upsert and advances the watermark — `foreachBatch` is the engine's
-    * `fetch_and_index_data` (`service_layer/service.py:48-80`). */
+    * drops (the MySQL-poll stand-in). Each micro-batch runs the polling
+    * cycle's own tail ([[Cdc.indexDelta]]: chunk→embed→upsert, then the
+    * watermark advance) with deterministic chunks on `orderCol` —
+    * `foreachBatch` is the engine's `fetch_and_index_data`
+    * (`service_layer/service.py:48-80`). */
   def pipeline(
       spark: SparkSession,
       inputDir: String,
@@ -41,35 +44,37 @@ object CdcStream {
       onAfterUpsert: () => Unit = () => ()): DataStreamWriter[org.apache.spark.sql.Row] = {
 
     val stream = spark.readStream.schema(schema).parquet(inputDir)
+    val store = ParquetWatermarkStore(stateDir)
+    // T3 window, streaming form: the shared tail commits the sink, then
+    // the watermark through this store — so `onAfterUpsert` runs in the
+    // gap between the two. A crash HERE (sink written, watermark not
+    // committed, micro-batch not committed) makes the restarted query
+    // re-run the whole batch — content-hash ids turn that re-run into an
+    // idempotent overwrite (crash-injection-tested in StreamingSpec)
+    val hooked = new WatermarkStore {
+      def get(t: String): Option[Timestamp] = store.get(t)
+      def readAll(): Map[String, Timestamp] = store.readAll()
+      def update(t: String, ts: Timestamp, onBeforeCommit: () => Unit): Unit = {
+        onAfterUpsert()
+        store.update(t, ts, onBeforeCommit)
+      }
+    }
 
     stream.writeStream
       .trigger(Trigger.ProcessingTime(triggerInterval))
       .option("checkpointLocation", s"$stateDir/_checkpoint_$tableName")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) { // P6 empty-delta skip
-          val spark2 = batch.sparkSession
-          val wm = Cdc.getWatermark(spark2, stateDir, tableName)
           // Strict-> parity vs the explicit store: the checkpoint already
           // dedups files, the filter reproduces T2 semantics for rows.
-          val delta = Cdc.deltaScan(batch, changeCol, wm).cache()
+          val delta = Cdc.deltaScan(batch, changeCol, store.get(tableName)).cache()
           try {
             val agg = delta.agg(count(lit(1)), max(col(changeCol))).collect()(0)
-            if (agg.getLong(0) > 0L) {
-              val chunks = Chunker.chunkRowsAsJson(delta, col(orderCol), tableName, chunkSize)
-              val vectors = chunks.select(
-                col("id"),
-                Embeddings.embedCol(col("text")).as("embedding"),
-                col("source"),
-                col("text"))
-              Cdc.upsertVectors(spark2, sinkDir, vectors)
-              // T3 window, streaming form: a crash HERE (sink written,
-              // watermark not committed, micro-batch not committed) makes
-              // the restarted query re-run the whole batch — content-hash
-              // ids turn that re-run into an idempotent overwrite
-              // (crash-injection-tested in StreamingSpec)
-              onAfterUpsert()
-              Cdc.updateWatermark(spark2, stateDir, tableName, Cdc.asTimestamp(agg.get(1)))
-            }
+            if (agg.getLong(0) > 0L)
+              // a query's micro-batches run one at a time: no lock to share
+              Cdc.indexDelta(batch.sparkSession, delta, tableName, deterministicChunks = true,
+                orderCol, chunkSize, sinkDir, Cdc.DefaultNamespace, hooked,
+                Cdc.asTimestamp(agg.get(1)), commitLock = new Object)
           } finally { delta.unpersist(); () }
         }
       }

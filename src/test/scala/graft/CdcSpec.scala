@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Cdc
+import graft.operators.{Cdc, ParquetWatermarkStore, WatermarkStore}
+import graft.sources.DirSource
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +16,13 @@ class CdcSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** One cycle over a parquet directory: rows per table, or the cycle's
+    * failures raised ([[Cdc.requireSynced]]). */
+  private def sync(src: String, state: String, sink: String,
+      deterministicChunks: Boolean = false): Map[String, Long] =
+    Cdc.requireSynced(Cdc.syncCycleOutcomesOn(spark, DirSource(src),
+      ParquetWatermarkStore(state), sink, deterministicChunks = deterministicChunks))
 
   test("strict-> delta excludes rows equal to the watermark (T2 parity)") {
     val df = Seq(
@@ -66,13 +74,13 @@ class CdcSpec extends AnyFunSuite {
     // cycle 1: (event_id, ts, payload)
     Seq((1L, ts("2024-01-01 00:00:00"), "a"), (2L, ts("2024-01-02 00:00:00"), "b"))
       .toDF("event_id", "ts", "payload").write.parquet(s"$src/events.parquet")
-    Cdc.syncCycle(spark, src, s"$scratch/state", s"$scratch/sink")
+    sync(src, s"$scratch/state", s"$scratch/sink")
     // cycle 2: the table gained a column (ALTER TABLE analog) — new rows
     // carry it as appended wider-schema files, old files stay untouched
     Seq((3L, ts("2024-01-03 00:00:00"), "c", "eu"))
       .toDF("event_id", "ts", "payload", "region")
       .write.mode("append").parquet(s"$src/events.parquet")
-    Cdc.syncCycle(spark, src, s"$scratch/state", s"$scratch/sink")
+    sync(src, s"$scratch/state", s"$scratch/sink")
     val texts = Cdc.readVectorSink(spark, s"$scratch/sink")
       .select("text").as[String].collect()
     // the delta row serializes WITH the new column (the reference's
@@ -89,7 +97,7 @@ class CdcSpec extends AnyFunSuite {
     new java.io.File(src).mkdirs()
     (1 to 250).map(i => (i.toLong, ts(f"2024-01-01 00:${i % 60}%02d:${i % 60}%02d"), s"u$i"))
       .toDF("event_id", "ts", "payload").write.parquet(s"$src/events.parquet")
-    val n = Cdc.syncCycle(spark, src, s"$scratch/state", s"$scratch/sink")
+    val n = sync(src, s"$scratch/state", s"$scratch/sink")
     assert(n("events") == 250)
     val sink = Cdc.readVectorSink(spark, s"$scratch/sink")
     assert(sink.count() >= 3) // >= ceil(250/100); partition-local boundaries may add chunks
@@ -330,17 +338,17 @@ class CdcSpec extends AnyFunSuite {
     new java.io.File(src).mkdirs()
     Seq((1L, ts("2024-01-01 00:00:00"), "a"), (2L, ts("2024-01-02 00:00:00"), "b"))
       .toDF("event_id", "ts", "payload").write.parquet(s"$src/events.parquet")
-    Cdc.syncCycle(spark, src, s"$scratch/state", s"$scratch/sink")
+    sync(src, s"$scratch/state", s"$scratch/sink")
     Cdc.shardWatermarkStore(s"$scratch/state", 4)
     // watermark survives the migration and keeps gating the delta
     Seq((3L, ts("2024-01-03 00:00:00"), "c"))
       .toDF("event_id", "ts", "payload").write.mode("append").parquet(s"$src/events.parquet")
-    val n = Cdc.syncCycle(spark, src, s"$scratch/state", s"$scratch/sink")
+    val n = sync(src, s"$scratch/state", s"$scratch/sink")
     assert(n("events") == 1, s"post-migration cycle must sink exactly the delta: $n")
     assert(Cdc.getWatermark(spark, s"$scratch/state", "events")
       .contains(ts("2024-01-03 00:00:00")))
     // idempotency unchanged: a third cycle is an empty-delta no-op
-    assert(Cdc.syncCycle(spark, src, s"$scratch/state", s"$scratch/sink")("events") == 0)
+    assert(sync(src, s"$scratch/state", s"$scratch/sink")("events") == 0)
   }
 
   test("vector upsert: same id overwrites (Pinecone semantics, service.py:160-166)") {
@@ -628,7 +636,7 @@ class CdcSpec extends AnyFunSuite {
       .toDF("event_id", "ts", "payload")
     batch1.write.parquet(s"$src/events.parquet")
     // deterministic mode: exact chunk counts are what this test asserts
-    val r1 = Cdc.syncCycle(spark, src, state, sink, deterministicChunks = true)
+    val r1 = sync(src, state, sink, deterministicChunks = true)
     assert(r1("events") == 150)
     val wm1 = Cdc.getWatermark(spark, state, "events").get
     val n1 = Cdc.readVectorSink(spark, sink).count()
@@ -638,18 +646,18 @@ class CdcSpec extends AnyFunSuite {
     val batch2 = (151 to 180).map(i => (i.toLong, ts("2024-01-02 00:00:00"), s"u$i"))
       .toDF("event_id", "ts", "payload")
     batch1.union(batch2).write.mode("overwrite").parquet(s"$src/events.parquet")
-    val r2 = Cdc.syncCycle(spark, src, state, sink, deterministicChunks = true)
+    val r2 = sync(src, state, sink, deterministicChunks = true)
     assert(r2("events") == 30) // only the delta
     assert(Cdc.getWatermark(spark, state, "events").get.after(wm1))
 
     // third run: empty delta → skip, watermark unchanged (P6)
     val wm2 = Cdc.getWatermark(spark, state, "events").get
-    val r3 = Cdc.syncCycle(spark, src, state, sink)
+    val r3 = sync(src, state, sink)
     assert(r3("events") == 0)
     assert(Cdc.getWatermark(spark, state, "events").get == wm2)
   }
 
-  test("a failed table is isolated AND loud: outcomes name it, syncCycle throws (T6)") {
+  test("a failed table is isolated AND loud: outcomes name it, requireSynced throws (T6)") {
     val scratch = Files.createTempDirectory("graft_cdc_fail").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
@@ -660,19 +668,57 @@ class CdcSpec extends AnyFunSuite {
       "this is not a parquet file".getBytes)
 
     // outcome surface: failure isolated per table, healthy table commits
-    val outcomes = Cdc.syncCycleOutcomes(spark, src, s"$scratch/state", s"$scratch/sink")
+    val outcomes = Cdc.syncCycleOutcomesOn(spark, DirSource(src),
+      ParquetWatermarkStore(s"$scratch/state"), s"$scratch/sink")
     assert(outcomes("events") == Cdc.TableSynced(2L))
     assert(outcomes("broken").isFailure)
     assert(Cdc.readVectorSink(spark, s"$scratch/sink").count() > 0)
     assert(Cdc.getWatermark(spark, s"$scratch/state", "events").isDefined)
 
-    // legacy surface: a partial failure must raise, not masquerade as
+    // rows surface: a partial failure must raise, not masquerade as
     // "no new data" (VERDICT r8: empty sink read as fast success)
     val e = intercept[Cdc.CdcCycleException] {
-      Cdc.syncCycle(spark, src, s"$scratch/state2", s"$scratch/sink2")
+      sync(src, s"$scratch/state2", s"$scratch/sink2")
     }
     assert(e.failures.keySet == Set("broken"))
     assert(e.getMessage.contains("broken"))
+  }
+
+  test("crash between the sink commit and the watermark commit (polling path): " +
+      "the table fails, the sink holds its rows, a re-run converges (T3)") {
+    val scratch = Files.createTempDirectory("graft_cdc_gap").toString
+    val (src, state, sink) = (s"$scratch/src", s"$scratch/state", s"$scratch/sink")
+    new java.io.File(src).mkdirs()
+    (1 to 120).map(i => (i.toLong, ts(f"2024-01-01 01:${i % 60}%02d:00"), s"p$i"))
+      .toDF("event_id", "ts", "payload").write.parquet(s"$src/events.parquet")
+    val parquet = ParquetWatermarkStore(state)
+    // the parquet store, except that its first commit crashes
+    val crashing = new WatermarkStore {
+      private val crashed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      def get(t: String): Option[Timestamp] = parquet.get(t)
+      def readAll(): Map[String, Timestamp] = parquet.readAll()
+      def update(t: String, at: Timestamp, onBeforeCommit: () => Unit): Unit =
+        if (crashed.compareAndSet(false, true))
+          throw new RuntimeException("injected crash before watermark commit")
+        else parquet.update(t, at, onBeforeCommit)
+    }
+    val out = Cdc.syncCycleOutcomesOn(spark, DirSource(src), crashing, sink,
+      deterministicChunks = true)
+    out("events") match {
+      case Cdc.TableFailed(e) => assert(e.getMessage.contains("injected crash"))
+      case other => fail(s"the crashed commit must fail the table: $other")
+    }
+    // the crash window state: sink committed, watermark NOT advanced
+    val first = Cdc.readVectorSink(spark, sink).select("id").as[String].collect()
+    assert(first.length == 2) // ceil(120/100)
+    assert(parquet.get("events").isEmpty)
+
+    // re-run: the whole delta again, overwriting the same ids
+    assert(sync(src, state, sink, deterministicChunks = true) == Map("events" -> 120L))
+    val ids = Cdc.readVectorSink(spark, sink).select("id").as[String].collect()
+    assert(ids.length == ids.distinct.length, s"duplicate ids after the re-run: ${ids.toSeq}")
+    assert(ids.toSet == first.toSet)
+    assert(parquet.get("events").contains(ts("2024-01-01 01:59:00")))
   }
 
   test("concurrent cycle matches the serial result (commit-lock correctness)") {
@@ -684,7 +730,7 @@ class CdcSpec extends AnyFunSuite {
       (1 to 120).map(i => (i.toLong + k * 1000, ts(f"2024-01-01 0$k:${i % 60}%02d:00"), s"t$k-u$i"))
         .toDF("event_id", "ts", "payload").write.parquet(s"$src/tab$k.parquet")
     }
-    val r = Cdc.syncCycle(spark, src, s"$scratch/state", s"$scratch/sink")
+    val r = sync(src, s"$scratch/state", s"$scratch/sink")
     assert(r == (0 until 4).map(k => s"tab$k" -> 120L).toMap)
     val sink = Cdc.readVectorSink(spark, s"$scratch/sink")
     // every table's chunks present, ids unique (no lost update under the
@@ -733,7 +779,7 @@ class CdcSpec extends AnyFunSuite {
     // cycle 1: rows 1-2 under schema (event_id, ts, payload)
     Seq((1L, ts("2024-01-01 00:00:00"), "a"), (2L, ts("2024-01-02 00:00:00"), "b"))
       .toDF("event_id", "ts", "payload").write.parquet(s"$src/events.parquet")
-    Cdc.syncCycle(spark, src, state, sink)
+    sync(src, state, sink)
     val v1 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     // ALTER analog + an UPDATE of row 2: the updated row's ts is bumped
@@ -742,7 +788,7 @@ class CdcSpec extends AnyFunSuite {
     Seq((2L, ts("2024-01-03 00:00:00"), "b", "eu"))
       .toDF("event_id", "ts", "payload", "region")
       .write.mode("append").parquet(s"$src/events.parquet")
-    Cdc.syncCycle(spark, src, state, sink)
+    sync(src, state, sink)
     val v2 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     // the re-emitted row serializes WITH the new field under a NEW
@@ -757,7 +803,7 @@ class CdcSpec extends AnyFunSuite {
     // convergence: with no further source changes the cycle is a no-op —
     // same ids, same text, watermark parked (idempotent thereafter)
     val wm2 = Cdc.getWatermark(spark, state, "events")
-    Cdc.syncCycle(spark, src, state, sink)
+    sync(src, state, sink)
     val v3 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(v3 == v2, "a quiet cycle must be a no-op after evolution")
@@ -848,7 +894,7 @@ class CdcSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     Seq((1L, ts("2024-01-01 00:00:00"), "a"), (2L, ts("2024-01-02 00:00:00"), "b"))
       .toDF("event_id", "ts", "payload").write.parquet(s"$src/events.parquet")
-    Cdc.syncCycle(spark, src, state, sink) // first sync: full path
+    sync(src, state, sink) // first sync: full path
     val wmAfter = Cdc.getWatermark(spark, state, "events")
     assert(wmAfter.contains(ts("2024-01-02 00:00:00")))
     var jobs = 0
@@ -860,10 +906,11 @@ class CdcSpec extends AnyFunSuite {
     try {
       CcProbe.drainListenerBus(spark)
       jobs = 0
-      // quiet table (footer max == watermark): syncTable must answer from
+      // quiet table (footer max == watermark): syncTableOn must answer from
       // driver-side footer stats — no relation, no aggregate, no job
-      val n = Cdc.syncTable(spark, src, state, sink, "events",
-        "ts", "event_id", chunkSize = 99)
+      val store = ParquetWatermarkStore(state)
+      val n = Cdc.syncTableOn(spark, DirSource(src), store, sink, "events",
+        store.get("events"), "ts", "event_id", chunkSize = 99)
       CcProbe.drainListenerBus(spark)
       assert(n == 0L)
       assert(jobs == 0, s"quiet sync must schedule no Spark job, saw $jobs")
@@ -874,8 +921,9 @@ class CdcSpec extends AnyFunSuite {
       Seq((3L, ts("2024-01-03 00:00:00"), "c"))
         .toDF("event_id", "ts", "payload").write.mode("append").parquet(s"$src/events.parquet")
     } finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
-    val n2 = Cdc.syncTable(spark, src, state, sink, "events",
-      "ts", "event_id", chunkSize = 99)
+    val store = ParquetWatermarkStore(state)
+    val n2 = Cdc.syncTableOn(spark, DirSource(src), store, sink, "events",
+      store.get("events"), "ts", "event_id", chunkSize = 99)
     assert(n2 == 1L, "active table must not be skipped by the fast path")
     assert(Cdc.getWatermark(spark, state, "events").contains(ts("2024-01-03 00:00:00")))
   }
@@ -887,7 +935,7 @@ class CdcSpec extends AnyFunSuite {
     new java.io.File(src).mkdirs()
     Seq((1L, ts("2024-01-01 00:00:00"), "a", "eu"))
       .toDF("event_id", "ts", "payload", "region").write.parquet(s"$src/events.parquet")
-    Cdc.syncCycle(spark, src, state, sink)
+    sync(src, state, sink)
     val v1 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(v1.values.exists(_.contains("\"region\":\"eu\"")))
@@ -896,7 +944,7 @@ class CdcSpec extends AnyFunSuite {
     // keeps the union schema and null-fills, unlike a database drop)
     Seq((2L, ts("2024-01-02 00:00:00"), "b"))
       .toDF("event_id", "ts", "payload").write.mode("append").parquet(s"$src/events.parquet")
-    Cdc.syncCycle(spark, src, state, sink)
+    sync(src, state, sink)
     val v2 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     val fresh = v2.keySet -- v1.keySet
@@ -905,7 +953,7 @@ class CdcSpec extends AnyFunSuite {
       s"post-drop row must serialize the dropped field as null (F1 null retention): $v2")
     assert(v1.keySet.subsetOf(v2.keySet), "pre-drop chunks are never rewritten")
     // convergence: a quiet third cycle is a byte-stable no-op
-    Cdc.syncCycle(spark, src, state, sink)
+    sync(src, state, sink)
     val v3 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(v3 == v2)
@@ -919,7 +967,7 @@ class CdcSpec extends AnyFunSuite {
     // cycle 1: qty is INT
     Seq((1L, ts("2024-01-01 00:00:00"), 10, "a"))
       .toDF("event_id", "ts", "qty", "payload").write.parquet(s"$src/events.parquet")
-    Cdc.syncCycle(spark, src, state, sink)
+    sync(src, state, sink)
     val v1 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(v1.values.exists(_.contains("\"qty\":10")))
@@ -928,7 +976,7 @@ class CdcSpec extends AnyFunSuite {
     // union fallback in Tables.table end-to-end through the cycle.
     Seq((2L, ts("2024-01-02 00:00:00"), 3000000000L, "b"))
       .toDF("event_id", "ts", "qty", "payload").write.mode("append").parquet(s"$src/events.parquet")
-    Cdc.syncCycle(spark, src, state, sink)
+    sync(src, state, sink)
     val v2 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     val fresh = v2.keySet -- v1.keySet
@@ -938,7 +986,7 @@ class CdcSpec extends AnyFunSuite {
     assert(v1.keySet.subsetOf(v2.keySet), "pre-widen chunks are never rewritten")
     // old rows re-read under the widened schema serialize the SAME text
     // (10 as long prints \"10\") — convergence: quiet cycle is a no-op
-    Cdc.syncCycle(spark, src, state, sink)
+    sync(src, state, sink)
     val v3 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(v3 == v2)

@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.Cdc
-import graft.sources.JdbcSource
+import graft.operators.{Cdc, ParquetWatermarkStore, WatermarkStore}
+import graft.sources.{CdcSource, JdbcSource}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.Files
@@ -14,7 +14,7 @@ import java.sql.{DriverManager, Timestamp}
   * (`controller/controller.py:17-35`, `service_layer/service.py:48-80`).
   * Every leg was already covered piecewise (JdbcSpec: partitioned reads,
   * pushdown, dialect pins; CdcSpec: the cycle over parquet); this spec
-  * runs `Cdc.syncCycleFrom` itself against embedded Derby — the only
+  * runs `Cdc.syncCycleOutcomesOn` itself against embedded Derby — the only
   * in-container stand-in for MySQL, reached through the exact same Spark
   * JDBC source + `DatabaseMetaData` code paths a `jdbc:mysql` URL takes. */
 class JdbcCdcSpec extends AnyFunSuite {
@@ -22,6 +22,11 @@ class JdbcCdcSpec extends AnyFunSuite {
 
   private val url = "jdbc:derby:memory:graftcdccycle;create=true"
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** One poll: rows per table, or the cycle's failures raised. */
+  private def poll(source: CdcSource, store: WatermarkStore, sink: String,
+      chunkSize: Int): Map[String, Long] =
+    Cdc.requireSynced(Cdc.syncCycleOutcomesOn(spark, source, store, sink, chunkSize = chunkSize))
 
   private def exec(sqls: String*): Unit = {
     val c = DriverManager.getConnection(url)
@@ -61,7 +66,7 @@ class JdbcCdcSpec extends AnyFunSuite {
     assert(source.primaryKey("EVENTS_SRC").contains("EVENT_ID"), "cached lookup agrees")
 
     // --- poll 1: no watermark → full scan, sink written, watermark committed
-    val n1 = Cdc.syncCycleFrom(spark, source, state, sink, chunkSize = 3)
+    val n1 = poll(source, ParquetWatermarkStore(state), sink, chunkSize = 3)
     assert(n1 == Map("EVENTS_SRC" -> 6L))
     assert(Cdc.getWatermark(spark, state, "EVENTS_SRC").contains(ts("2024-01-01 00:06:00")))
     val texts1 = Cdc.readVectorSink(spark, sink)
@@ -78,14 +83,14 @@ class JdbcCdcSpec extends AnyFunSuite {
 
     // the cycle's delta plan pushes the strict-> predicate INTO the
     // database (the reference's WHERE-in-SQL-string, service.py:52-54):
-    // same construction syncTableFrom uses, asserted on the executed plan
+    // same construction syncTableOn uses, asserted on the executed plan
     val delta = Cdc.deltaScan(source.table(spark, "EVENTS_SRC"), "ts",
       Cdc.getWatermark(spark, state, "EVENTS_SRC"))
     val plan = delta.queryExecution.executedPlan.toString.toLowerCase
     assert(plan.contains("pushedfilters"), s"no pushdown marker:\n$plan")
     assert(plan.contains("greaterthan(ts,"), s"strict-> not pushed to the database:\n$plan")
 
-    val n2 = Cdc.syncCycleFrom(spark, source, state, sink, chunkSize = 3)
+    val n2 = poll(source, ParquetWatermarkStore(state), sink, chunkSize = 3)
     assert(n2 == Map("EVENTS_SRC" -> 2L), "tie row must be excluded by strict->")
     assert(Cdc.getWatermark(spark, state, "EVENTS_SRC").contains(ts("2024-01-01 00:08:00")))
     val texts2 = Cdc.readVectorSink(spark, sink).select("text")
@@ -96,7 +101,7 @@ class JdbcCdcSpec extends AnyFunSuite {
 
     // --- poll 3: empty delta → P6 skip (no advance, sink byte-stable)
     val sinkRowsBefore = texts2.sorted.toSeq
-    val n3 = Cdc.syncCycleFrom(spark, source, state, sink, chunkSize = 3)
+    val n3 = poll(source, ParquetWatermarkStore(state), sink, chunkSize = 3)
     assert(n3 == Map("EVENTS_SRC" -> 0L))
     assert(Cdc.getWatermark(spark, state, "EVENTS_SRC").contains(ts("2024-01-01 00:08:00")))
     assert(Cdc.readVectorSink(spark, sink).select("text")
@@ -113,8 +118,8 @@ class JdbcCdcSpec extends AnyFunSuite {
     // the catalog sees all three; WATERMARK is excluded (controller.py:23-24
     // — folded upper by Derby, hence the case-insensitive anti-filter)
     assert(source.listTables().toSet == Set("EVENTS_SRC", "DIMS_STATIC", "WATERMARK"))
-    val outcomes = Cdc.syncCycleOutcomesFrom(spark, source,
-      s"$scratch/state", s"$scratch/sink", chunkSize = 3)
+    val outcomes = Cdc.syncCycleOutcomesOn(spark, source,
+      ParquetWatermarkStore(s"$scratch/state"), s"$scratch/sink", chunkSize = 3)
     assert(outcomes.keySet == Set("EVENTS_SRC", "DIMS_STATIC"))
     assert(outcomes("DIMS_STATIC") == Cdc.TableSynced(0L), "tables without the change column are skipped, not failed")
     // no PK on dims_static: the live metadata lookup answers None
@@ -149,7 +154,7 @@ class JdbcCdcSpec extends AnyFunSuite {
     val source = JdbcSource(u2, schemaPattern = Some("APP"))
     val store = graft.operators.JdbcWatermarkStore(u2)
 
-    val n1 = Cdc.syncCycleOn(spark, source, store, sink, chunkSize = 2)
+    val n1 = poll(source, store, sink, chunkSize = 2)
     assert(n1 == Map("EVENTS_SRC" -> 4L))
     assert(store.get("EVENTS_SRC").contains(ts("2024-01-01 00:04:00")))
     // the watermark table now EXISTS in the source catalog — the cycle's
@@ -159,7 +164,7 @@ class JdbcCdcSpec extends AnyFunSuite {
     insert2(
       (5L, ts("2024-01-01 00:04:00"), "tie-5"), // AT the watermark: strict-> skips
       (6L, ts("2024-01-01 00:05:00"), "beta-6"))
-    val n2 = Cdc.syncCycleOn(spark, source, store, sink, chunkSize = 2)
+    val n2 = poll(source, store, sink, chunkSize = 2)
     assert(n2 == Map("EVENTS_SRC" -> 1L), "tie row must be excluded by strict->")
     assert(store.get("EVENTS_SRC").contains(ts("2024-01-01 00:05:00")))
     val texts = Cdc.readVectorSink(spark, sink).select("text")
@@ -311,7 +316,7 @@ class JdbcCdcSpec extends AnyFunSuite {
     val scratch = Files.createTempDirectory("graft_jdbc_drop").toString
     val (state, sink) = (s"$scratch/state", s"$scratch/sink")
     val source = JdbcSource(u3, schemaPattern = Some("APP"))
-    Cdc.syncCycleFrom(spark, source, state, sink, chunkSize = 2)
+    poll(source, ParquetWatermarkStore(state), sink, chunkSize = 2)
     val v1 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(v1.values.exists(_.contains("\"REGION\":\"eu\"")), s"pre-drop field missing: $v1")
@@ -319,7 +324,7 @@ class JdbcCdcSpec extends AnyFunSuite {
     exec3(
       "ALTER TABLE events_src DROP COLUMN region",
       "INSERT INTO events_src VALUES (2, TIMESTAMP('2024-01-01 00:02:00'), 'b')")
-    Cdc.syncCycleFrom(spark, source, state, sink, chunkSize = 2)
+    poll(source, ParquetWatermarkStore(state), sink, chunkSize = 2)
     val v2 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     val fresh = v2.keySet -- v1.keySet
@@ -328,7 +333,7 @@ class JdbcCdcSpec extends AnyFunSuite {
       s"dropped column must vanish from new serializations: $v2")
     assert(v1.keySet.subsetOf(v2.keySet), "pre-drop chunks persist untouched")
     // quiet third poll: byte-stable no-op
-    Cdc.syncCycleFrom(spark, source, state, sink, chunkSize = 2)
+    poll(source, ParquetWatermarkStore(state), sink, chunkSize = 2)
     val v3 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(v3 == v2)

@@ -1,7 +1,7 @@
 package graft
 
-import graft.operators.Cdc
-import graft.sources.Tables
+import graft.operators.{Cdc, ParquetWatermarkStore}
+import graft.sources.{DirSource, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -99,7 +99,8 @@ class NtzSpec extends AnyFunSuite {
     val scratch = Files.createTempDirectory("graft_ntz_cycle").toString
     val src = s"$scratch/src"
     writeNtzEvents(src)
-    val synced = Cdc.syncCycle(spark, src, s"$scratch/state", s"$scratch/sink")
+    val synced = Cdc.requireSynced(Cdc.syncCycleOutcomesOn(spark, DirSource(src),
+      ParquetWatermarkStore(s"$scratch/state"), s"$scratch/sink"))
     assert(synced == Map("events" -> 4L), s"cycle outcome: $synced")
     assert(Cdc.readVectorSink(spark, s"$scratch/sink").count() > 0)
     assert(Cdc.getWatermark(spark, s"$scratch/state", "events").contains(ts("2024-01-01 02:00:00")))
@@ -125,7 +126,8 @@ class NtzSpec extends AnyFunSuite {
       val sink = Files.createTempDirectory("graft_ntz_stats_sink").toString
       Cdc.seedWatermarkStore(state, Map(
         "events" -> Timestamp.from(java.time.Instant.parse("2024-01-01T02:00:00Z"))))
-      val synced = Cdc.syncCycle(spark, scratch, state, sink)
+      val synced = Cdc.requireSynced(Cdc.syncCycleOutcomesOn(spark, DirSource(scratch),
+        ParquetWatermarkStore(state), sink))
       assert(synced == Map("events" -> 4L),
         s"an NTZ table with real deltas must not be skipped quiet: $synced")
     } finally spark.conf.set("spark.sql.session.timeZone", prior)

@@ -1,6 +1,7 @@
 package graft
 
-import graft.operators.Cdc
+import graft.operators.{Cdc, ParquetWatermarkStore}
+import graft.sources.DirSource
 import graft.streaming.CdcStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -95,6 +96,41 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows.getLong(0) == 2, s"re-run duplicated chunks: ${rows.getLong(0)}")
     assert(rows.getLong(0) == rows.getLong(1), "duplicate ids in sink after reprocess")
     assert(Cdc.getWatermark(spark, state, "events").contains(ts("2024-01-01 01:59:00")))
+  }
+
+  test("the stream and the polling cycle share one tail: one drop yields the same " +
+    "(id, source, text) rows and the same watermark on both paths") {
+    val scratch = Files.createTempDirectory("graft_stream_parity").toString
+    val in = s"$scratch/in"; val src = s"$scratch/src"
+    new java.io.File(in).mkdirs()
+    // rows arrive out of key order (97 permutes 1..250 mod 251), so chunks
+    // cut in arrival order would differ from chunks cut on `event_id`
+    val drop = (1 to 250).map(_ * 97 % 251)
+      .map(i => (i.toLong, ts(f"2024-01-01 0${i % 3}:${i % 60}%02d:00"), s"p$i"))
+      .toDF("event_id", "ts", "payload")
+    writeDrop(drop, in, "drop1")
+    // the polling path reads the same file as table `events`
+    new java.io.File(s"$src/events.parquet").mkdirs()
+    Files.copy(new java.io.File(s"$in/drop1.parquet").toPath,
+      new java.io.File(s"$src/events.parquet/drop1.parquet").toPath)
+
+    Cdc.initVectorSink(spark, s"$scratch/stream_sink")
+    CdcStream.runOnce(CdcStream.pipeline(spark, in, drop.schema, s"$scratch/stream_state",
+      s"$scratch/stream_sink", "events", orderCol = "event_id"))
+    val polled = Cdc.syncCycleOutcomesOn(spark, DirSource(src),
+      ParquetWatermarkStore(s"$scratch/poll_state"), s"$scratch/poll_sink",
+      orderCol = "event_id", deterministicChunks = true)
+    assert(polled == Map("events" -> Cdc.TableSynced(250L)))
+
+    def rows(sink: String): Set[(String, String, String)] =
+      Cdc.readVectorSink(spark, sink).select("id", "source", "text").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+    val streamed = rows(s"$scratch/stream_sink")
+    assert(streamed.size == 3) // ceil(250/100)
+    assert(streamed == rows(s"$scratch/poll_sink"))
+    val wm = Cdc.getWatermark(spark, s"$scratch/stream_state", "events")
+    assert(wm.contains(ts("2024-01-01 02:59:00")))
+    assert(Cdc.getWatermark(spark, s"$scratch/poll_state", "events") == wm)
   }
 
   test("multi-batch ProcessingTime stream: live drops sequence through micro-batches " +
