@@ -110,6 +110,13 @@ class Engine(
     * point of a vector index at scale: Pinecone never scans the full
     * namespace per query, and neither does this.
     *
+    * The namespace relation and the sink's layout are resolved once per
+    * manifest pointer flip, not per call ([[sinkSnapshot]]): a call reads
+    * the pointer, stats the manifest it names, and runs one Spark job —
+    * the top-k — while the pointer is unchanged. The first call after a
+    * commit lists the new snapshot (a Spark job of its own above 32 live
+    * bucket directories). No lock is taken (see [[commitLock]]).
+    *
     * The default `nprobe = 0` is an EXACT full-namespace scan (recall 1,
     * cost O(namespace)) — approximation is opt-in, not silent. Passing
     * `nprobe > 0` prunes to that many multi-probe sign buckets (recall < 1
@@ -123,19 +130,16 @@ class Engine(
       nprobe: Int = 0): DataFrame = {
     import org.apache.spark.sql.functions.col
     val probe = Embeddings.embed(query)
-    // manifest-pruned snapshot read: only this namespace's directories
-    // are even listed, and no lock is taken (see commitLock scaladoc)
-    val ns = Cdc.readVectorSink(spark, sinkDir, Some(namespace))
+    val snap = sinkSnapshot(namespace)
     val pruned =
-      if (nprobe <= 0) ns
+      if (nprobe <= 0) snap.vectors
       else {
-        val simBits = Cdc.readLayout(sinkDir).simBits // the sink's own layout
-        val buckets =
-          (SimilaritySearch.multiProbeBuckets(probe, simBits, nprobe).map(_.toInt) :+ -1).distinct
+        val buckets = (SimilaritySearch.multiProbeBuckets(probe, snap.layout.simBits, nprobe)
+          .map(_.toInt) :+ -1).distinct
         // isNull: rows from a pre-simb sink read back with simb = NULL,
         // which `isin` never matches (three-valued logic) — without this
         // an ANN search over a legacy sink silently returns nothing
-        ns.where(col("simb").isin(buckets: _*) || col("simb").isNull)
+        snap.vectors.where(col("simb").isin(buckets: _*) || col("simb").isNull)
       }
     SimilaritySearch.topK(pruned, "id", "embedding",
       org.apache.spark.sql.functions.lit(probe).cast("array<float>"), k)
@@ -144,20 +148,38 @@ class Engine(
   /** Batch form of [[searchSimilar]]: top-k for EVERY query string in one
     * distributed plan (no driver-side loop over queries). The tiny probe
     * side broadcasts; candidates are restricted to each probe's sign
-    * bucket via the bucketed kNN join. Returns (query, rank, id, score). */
+    * bucket via the bucketed kNN join. Returns (query, rank, id, score).
+    * Reads the same per-flip snapshot as [[searchSimilar]]. */
   def searchSimilarBatch(
       queries: Seq[String],
       k: Int = 10,
       namespace: String = Cdc.DefaultNamespace): DataFrame = {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val simBits = Cdc.readLayout(sinkDir).simBits
+    val snap = sinkSnapshot(namespace)
     val probes = queries.map(q => (q, Embeddings.embed(q))).toDF("query", "probe_emb")
-    val ns = Cdc.readVectorSink(spark, sinkDir, Some(namespace))
-    SimilaritySearch.knnJoin(ns, probes, "id", "embedding", "query", "probe_emb",
-      k, bits = simBits, broadcastProbes = true)
+    SimilaritySearch.knnJoin(snap.vectors, probes, "id", "embedding", "query", "probe_emb",
+      k, bits = snap.layout.simBits, broadcastProbes = true)
       .select(col("probe_id").as("query"), col("rank"), col("index_id").as("id"), col("score"))
   }
+
+  private val sinkSnapshots = new Engine.Snapshots[Cdc.ManifestStamp, Engine.SinkSnapshot]
+
+  /** The namespace's sink relation and layout at the live manifest:
+    * resolved when the manifest's [[Cdc.ManifestStamp]] differs from the
+    * one held, else the held one. Generation roots are immutable and GC
+    * keeps the current and previous manifests' roots, so a held relation
+    * is exactly as safe as a fresh [[Cdc.readVectorSink]]. Filled only
+    * here, on the query path — never by a cycle or a refresh. A legacy
+    * sink without a manifest has no stamp and resolves per call. */
+  private def sinkSnapshot(namespace: String): Engine.SinkSnapshot =
+    Cdc.manifestStamp(sinkDir) match {
+      case Some(stamp) => sinkSnapshots(namespace, stamp)(Engine.SinkSnapshot(
+        Cdc.readManifestVersion(spark, sinkDir, stamp.name, Some(namespace)),
+        Cdc.readLayout(sinkDir)))
+      case None => Engine.SinkSnapshot(
+        Cdc.readVectorSink(spark, sinkDir, Some(namespace)), Cdc.readLayout(sinkDir))
+    }
 
   /** Conventional location for a namespace's persisted IVF index: an
     * underscore-prefixed sibling INSIDE the sink directory, so the index
@@ -178,18 +200,8 @@ class Engine(
     * the pointed version when the pointer exists (stale/crashed pointers
     * resolve to None rather than a broken read), else the legacy
     * unversioned layout if complete. */
-  def liveIvfDir(namespace: String = Cdc.DefaultNamespace): Option[String] = {
-    val container = new java.io.File(ivfIndexDir(namespace))
-    def complete(d: java.io.File) =
-      new java.io.File(d, "data/_SUCCESS").isFile &&
-        new java.io.File(d, "centroids/_SUCCESS").isFile
-    val ptr = new java.io.File(container, "current")
-    if (ptr.isFile) {
-      val v = new java.io.File(container, java.nio.file.Files.readString(ptr.toPath).trim)
-      if (complete(v)) Some(v.getPath) else None
-    } else if (complete(container)) Some(container.getPath)
-    else None
-  }
+  def liveIvfDir(namespace: String = Cdc.DefaultNamespace): Option[String] =
+    Some(Engine.ivfVersion(ivfIndexDir(namespace))).filter(Engine.completeIvf).map(_.getPath)
 
   /** True when a complete index exists for the namespace. */
   def hasIvfIndex(namespace: String = Cdc.DefaultNamespace): Boolean =
@@ -321,14 +333,43 @@ class Engine(
 
   /** Text query against a persisted IVF index: `indexDir` may be a direct
     * build ([[buildIvfIndex]]) or a versioned container
-    * ([[refreshIvfIndex]]) — a `current` pointer, when present, resolves
-    * to the live version at call time. */
-  def searchIvf(indexDir: String, query: String, k: Int = 10, nprobe: Int = 2): DataFrame = {
+    * ([[refreshIvfIndex]]). A container's `current` pointer resolves to the
+    * live version, whose centroids and data listing are loaded once per
+    * pointer flip ([[ivfSnapshot]]); a call then reads the pointer and
+    * runs one Spark job. A direct build is loaded per call. Throws
+    * `IllegalArgumentException` when no complete index is there. */
+  def searchIvf(indexDir: String, query: String, k: Int = 10, nprobe: Int = 2): DataFrame =
+    graft.operators.IvfIndex.search(
+      ivfSnapshot(indexDir).getOrElse(
+        throw new IllegalArgumentException(s"no complete IVF index at $indexDir")),
+      Embeddings.embed(query), k, nprobe)
+
+  /** [[searchIvf]] over the namespace's conventional index, or None when
+    * it has no complete live version — one pointer read decides both,
+    * so the `/query` route needs no separate [[hasIvfIndex]] call. */
+  private[graft] def searchLiveIvf(
+      query: String, k: Int, namespace: String = Cdc.DefaultNamespace): Option[DataFrame] =
+    ivfSnapshot(ivfIndexDir(namespace)).map(s =>
+      graft.operators.IvfIndex.search(s, Embeddings.embed(query), k, 2))
+
+  private val ivfSnapshots = new Engine.Snapshots[Engine.IvfStamp, graft.operators.IvfIndex.Snapshot]
+
+  /** The live IVF snapshot of `indexDir`. With a `current` pointer, the
+    * pointed version's, held until the [[Engine.IvfStamp]] changes — the
+    * pointer's content and stat, plus the stat of the version's
+    * `centroids` directory, which an in-place `IvfIndex` append, repair or
+    * rebuild replaces or writes into. Without one (a direct build or a
+    * pre-versioning container), loaded per call. None when the index is
+    * incomplete ([[liveIvfDir]]'s rule). Filled only on the query path. */
+  private def ivfSnapshot(indexDir: String): Option[graft.operators.IvfIndex.Snapshot] = {
     val ptr = new java.io.File(indexDir, "current")
-    val resolved =
-      if (ptr.isFile) new java.io.File(indexDir, java.nio.file.Files.readString(ptr.toPath).trim).getPath
-      else indexDir
-    graft.operators.IvfIndex.search(spark, resolved, Embeddings.embed(query), k, nprobe)
+    val dir = Engine.ivfVersion(indexDir)
+    def load() = graft.operators.IvfIndex.snapshot(
+      spark, dir.getPath, Some(Cdc.vectorSinkSchema("id").dataType))
+    if (!Engine.completeIvf(dir)) None
+    else if (!ptr.isFile) Some(load())
+    else Some(ivfSnapshots(indexDir, Engine.IvfStamp(dir.getName, Engine.stat(ptr),
+      Engine.stat(new java.io.File(dir, "centroids"))))(load()))
   }
 
   /** Maintenance inputs of the namespace's live IVF index (VERDICT r17
@@ -382,6 +423,53 @@ object Engine {
       appendedFraction: Double,
       staleClusters: Seq[graft.operators.IvfIndex.ClusterStaleness],
       advice: String)
+
+  /** A namespace's sink relation and the sink's layout at one manifest. */
+  private final case class SinkSnapshot(vectors: DataFrame, layout: Cdc.SinkLayout)
+
+  /** A file's modification time and size. */
+  private final case class Stat(modified: java.nio.file.attribute.FileTime, size: Long)
+
+  private def stat(f: java.io.File): Stat = {
+    val a = java.nio.file.Files.readAttributes(f.toPath,
+      classOf[java.nio.file.attribute.BasicFileAttributes])
+    Stat(a.lastModifiedTime(), a.size())
+  }
+
+  /** Identity of a live IVF version: the name `current` holds, the
+    * pointer's stat, and the stat of the version's centroid directory. */
+  private final case class IvfStamp(version: String, pointer: Stat, centroids: Stat)
+
+  /** The version an IVF index directory serves: the one its `current`
+    * pointer names, or the directory itself when it has no pointer (a
+    * direct build or a pre-versioning container). */
+  private def ivfVersion(indexDir: String): java.io.File = {
+    val ptr = new java.io.File(indexDir, "current")
+    if (ptr.isFile) new java.io.File(indexDir, java.nio.file.Files.readString(ptr.toPath).trim)
+    else new java.io.File(indexDir)
+  }
+
+  /** An IVF index directory whose data and centroids both committed. */
+  private def completeIvf(d: java.io.File): Boolean =
+    new java.io.File(d, "data/_SUCCESS").isFile && new java.io.File(d, "centroids/_SUCCESS").isFile
+
+  /** One held value per name (a namespace, or an index directory),
+    * replaced when the caller's key for it changes. No size or age bound:
+    * the engine holds one entry per namespace and store. Concurrent misses
+    * may both load; the last one stored wins, and any reader whose key
+    * differs loads again, so a held value is never served for another
+    * key. */
+  private final class Snapshots[K, V] {
+    private val held = new java.util.concurrent.ConcurrentHashMap[String, (K, V)]()
+    def apply(name: String, key: K)(load: => V): V =
+      Option(held.get(name)) match {
+        case Some((k, v)) if k == key => v
+        case _ =>
+          val v = load
+          held.put(name, (key, v))
+          v
+      }
+  }
 
   /** Mirror `from` into `to`: hard links for immutable files (parquet
     * parts and their checksums), copies for `_`-prefixed ones (`_SUCCESS`,

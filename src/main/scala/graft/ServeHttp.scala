@@ -55,7 +55,16 @@ import java.nio.charset.StandardCharsets
   * publishes by atomic pointer flip with one-behind GC retention, so each
   * request resolves a consistent committed snapshot without blocking — or
   * being blocked by — a concurrent commit (ServeHttpSpec overlaps the
-  * two, and overlaps a pinned-slow `/query` with `/health`). */
+  * two, and overlaps a pinned-slow `/query` with `/health`).
+  *
+  * `/query` resolves its snapshot once per pointer flip, not per request:
+  * the engine holds each namespace's sink relation (with its file listing)
+  * and layout until the manifest pointer flips, and the live IVF
+  * version's centroids and data listing until the IVF pointer flips
+  * (`Engine.searchSimilar`, `Engine.searchIvf`). A request reads one
+  * pointer and runs one Spark job on every route; `mode=ivf`/`auto` reads
+  * the IVF pointer once to decide the route and to serve it. `k` must be
+  * at least 1 (400 otherwise). */
 final class ServeHttp(engine: Engine) {
 
   @volatile private var server: HttpServer = null
@@ -146,20 +155,23 @@ final class ServeHttp(engine: Engine) {
     val q = params.getOrElse("q",
       throw new IllegalArgumentException("missing required param: q"))
     val k = params.get("k").map(_.toInt).getOrElse(10)
+    // Dataset.limit rejects k < 1 with an analysis error, not an
+    // IllegalArgumentException: without this check the caller got a 500
+    if (k < 1) throw new IllegalArgumentException(s"k must be at least 1, got $k")
     val mode = params.getOrElse("mode", "auto")
+    def exact = ("exact", rowsJson(engine.searchSimilar(q, k, nprobe = 0)))
     val (servedBy, rows) = params.get("nprobe").map(_.toInt) match {
       case Some(nprobe) =>
         (if (nprobe <= 0) "exact" else "simb",
           rowsJson(engine.searchSimilar(q, k, nprobe = nprobe)))
       case None => mode match {
-        case "exact" => ("exact", rowsJson(engine.searchSimilar(q, k, nprobe = 0)))
-        case "ivf" =>
-          if (!engine.hasIvfIndex())
+        case "exact" => exact
+        case "ivf" | "auto" => engine.searchLiveIvf(q, k) match {
+          case Some(df) => ("ivf", rowsJson(df))
+          case None if mode == "ivf" =>
             throw new IllegalArgumentException("mode=ivf but no IVF index exists")
-          ("ivf", rowsJson(engine.searchIvf(engine.ivfIndexDir(), q, k)))
-        case "auto" =>
-          if (engine.hasIvfIndex()) ("ivf", rowsJson(engine.searchIvf(engine.ivfIndexDir(), q, k)))
-          else ("exact", rowsJson(engine.searchSimilar(q, k, nprobe = 0)))
+          case None => exact
+        }
         case other => throw new IllegalArgumentException(s"unknown mode: $other")
       }
     }

@@ -616,20 +616,42 @@ object Cdc {
       .flatMap(f => scala.util.Try(f.getName.stripPrefix(ManifestPrefix).toLong).toOption.map(_ -> f))
       .sortBy(_._1)
 
+  /** The pointed manifest file's name; None when the sink predates the
+    * manifest (legacy direct-root layout) or does not exist. */
+  private def pointedManifest(sinkDir: String): Option[String] = {
+    val ptr = manifestPointer(sinkDir)
+    if (!ptr.exists()) None else Some(java.nio.file.Files.readString(ptr.toPath).trim)
+  }
+
   /** The pointed manifest's entries; None when the sink predates the
     * manifest (legacy direct-root layout) or does not exist. */
-  private[graft] def readManifest(sinkDir: String): Option[Seq[SinkEntry]] = {
-    val ptr = manifestPointer(sinkDir)
-    if (!ptr.exists()) None
-    else {
-      val name = java.nio.file.Files.readString(ptr.toPath).trim
-      val src = scala.io.Source.fromFile(new java.io.File(sinkDir, name))
-      try Some(src.getLines().filter(l => l.nonEmpty && !l.startsWith("#")).toVector.map { l =>
-        val Array(root, ns, b) = l.split("\t", 3)
-        SinkEntry(root, ns, b.toInt)
-      }) finally src.close()
-    }
+  private[graft] def readManifest(sinkDir: String): Option[Seq[SinkEntry]] =
+    pointedManifest(sinkDir).map(manifestEntries(sinkDir, _))
+
+  /** The entries of one published manifest file (immutable once named). */
+  private def manifestEntries(sinkDir: String, name: String): Seq[SinkEntry] = {
+    val src = scala.io.Source.fromFile(new java.io.File(sinkDir, name))
+    try src.getLines().filter(l => l.nonEmpty && !l.startsWith("#")).toVector.map { l =>
+      val Array(root, ns, b) = l.split("\t", 3)
+      SinkEntry(root, ns, b.toInt)
+    } finally src.close()
   }
+
+  /** Identity of the live snapshot: the pointed manifest's name plus that
+    * file's mtime and size. The name alone changes at every commit; the
+    * stat tells apart two sinks that reuse a name (a sink deleted and
+    * rebuilt, or restored from a copy and committed again). */
+  private[graft] final case class ManifestStamp(
+      name: String, modified: java.nio.file.attribute.FileTime, size: Long)
+
+  /** The live manifest's [[ManifestStamp]]: one pointer read and one stat,
+    * no Spark work; None for a legacy or absent sink. */
+  private[graft] def manifestStamp(sinkDir: String): Option[ManifestStamp] =
+    pointedManifest(sinkDir).map { name =>
+      val attrs = java.nio.file.Files.readAttributes(new java.io.File(sinkDir, name).toPath,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      ManifestStamp(name, attrs.lastModifiedTime(), attrs.size())
+    }
 
   /** Publish `entries` as the new live manifest: write an immutable
     * numbered file, then one atomic pointer rename. Crash before the
@@ -738,15 +760,23 @@ object Cdc {
     * driver-side before any listing happens — at scale, a one-namespace
     * query never lists the other namespaces' directories.
     *
+    * Every call resolves afresh: one pointer read, one manifest read and
+    * one listing, which is a Spark job of its own once the namespace's
+    * live entries pass Spark's 32-path parallel-listing threshold. The
+    * engine's query path (`Engine.searchSimilar`) therefore keeps the
+    * relation this returns per namespace and resolves it again only
+    * when the pointer flips ([[manifestStamp]] changes); a derived plan
+    * reuses the file index built here, so a held relation gives the same
+    * one-behind guarantee as a fresh one.
+    *
     * Legacy fallback: a sink with data but no manifest (pre-r13 layout)
     * reads the `vectors` root directly, same bytes, same schema. */
   def readVectorSink(
       spark: SparkSession,
       sinkDir: String,
       namespace: Option[String] = None): DataFrame =
-    readManifest(sinkDir) match {
-      case Some(entries) =>
-        readEntries(spark, sinkDir, namespace.fold(entries)(ns => entries.filter(_.namespace == ns)))
+    pointedManifest(sinkDir) match {
+      case Some(name) => readManifestVersion(spark, sinkDir, name, namespace)
       case None =>
         val path = s"$sinkDir/vectors"
         val df =
@@ -754,6 +784,15 @@ object Cdc {
           else emptySink(spark)
         namespace.fold(df)(ns => df.where(col("namespace") === ns))
     }
+
+  /** [[readVectorSink]] of one published manifest file, named by a
+    * [[ManifestStamp]] taken earlier: the relation is that stamp's
+    * snapshot even when the pointer has flipped since. */
+  private[graft] def readManifestVersion(
+      spark: SparkSession, sinkDir: String, name: String, namespace: Option[String]): DataFrame = {
+    val entries = manifestEntries(sinkDir, name)
+    readEntries(spark, sinkDir, namespace.fold(entries)(ns => entries.filter(_.namespace == ns)))
+  }
 
   /** S9: idempotent key-based upsert, Pinecone semantics ("same id
     * overwrites", `service_layer/service.py:160-166`; namespace isolation,

@@ -380,7 +380,7 @@ object Dedup {
         ids.select(col(idCol).as("id"), col(idCol).as("label")), s2))
       var prevCkpt = labels // superseded checkpoint blocks are freed each round
       var changed = 1L
-      var i = 0 // counts hook+jump PASSES (two per fused round)
+      var i = 0 // counts hook+jump PASSES (two per fused round, at most maxIter)
       // One hook+jump pass: pull the min label across edges, then pointer
       // jump label := label(label) — the jump halves chain depth each pass,
       // so convergence is O(log n) even for path-shaped components (plain
@@ -421,9 +421,19 @@ object Dedup {
         // per-pass loop's exit condition (hook found no smaller neighbor
         // min and jump found no deeper pointer — a fixpoint; pass counts
         // and label trajectories are unchanged, only job boundaries move).
-        val (mid0, hooked1) = hookJump(labels, carryOld = false)
-        val mid = Materialize.roundCache(mid0, narrowed)
-        val (out, hooked2) = hookJump(mid, carryOld = true)
+        // With one pass of budget left (odd maxIter), the round is that
+        // single pass, so the loop never runs more than maxIter passes.
+        val passes = math.min(2, maxIter - i)
+        val (out, roundStorage) =
+          if (passes == 2) {
+            val (mid0, hooked1) = hookJump(labels, carryOld = false)
+            val mid = Materialize.roundCache(mid0, narrowed)
+            val (out2, hooked2) = hookJump(mid, carryOld = true)
+            (out2, Seq(hooked1, mid, hooked2))
+          } else {
+            val (out1, hooked1) = hookJump(labels, carryOld = true)
+            (out1, Seq(hooked1))
+          }
         // The convergence metric rides the SAME job: an observed aggregate
         // on the checkpoint write replaces a separate count job (verified
         // to fire on eager checkpoints — MaterializeSpec).
@@ -433,12 +443,10 @@ object Dedup {
         changed = observedChanged(obs, newLabels)
         // newLabels is materialized — the storage it was built from is dead
         Materialize.free(prevCkpt)
-        Materialize.release(hooked1)
-        Materialize.release(mid)
-        Materialize.release(hooked2)
+        roundStorage.foreach(Materialize.release)
         prevCkpt = newLabels
         labels = newLabels.drop("_old")
-        i += 2
+        i += passes
       }
       if (changed > 0)
         System.err.println(

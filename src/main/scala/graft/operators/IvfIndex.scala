@@ -3,6 +3,7 @@ package graft.operators
 import graft.functions.VectorOps
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, StructField, StructType}
 
 /** Persisted IVF (inverted-file) vector index — the disk layout behind
   * [[SimilaritySearch.ivfTopK]], and the second of the engine's two
@@ -724,38 +725,65 @@ object IvfIndex {
     * positions after a [[repair]] — use this, not [[centroids]], wherever
     * a ranked position must map back to a stored id. The schema is the
     * one [[writeCentroids]] writes, declared: a new version's directory
-    * costs no schema-inference job. */
+    * costs no schema-inference job. The k rows are sorted on the driver
+    * after the collect, so the read is one Spark job (an `orderBy` would
+    * plan a range exchange: a sampling job and a map-stage job more). */
   def centroidEntries(spark: SparkSession, indexDir: String): Seq[(Int, Array[Float])] = {
     import spark.implicits._
     spark.read.schema(CentroidSchema).parquet(s"$indexDir/centroids")
-      .orderBy(col("cluster"))
-      .as[(Int, Array[Float])].collect().toSeq
+      .as[(Int, Array[Float])].collect().toSeq.sortBy(_._1)
   }
 
-  private val CentroidSchema = {
-    import org.apache.spark.sql.types._
+  private val CentroidSchema =
     StructType(Seq(StructField("cluster", IntegerType), StructField("centroid", ArrayType(FloatType))))
-  }
 
   /** The persisted centroid matrix, cluster-id-ordered. */
   def centroids(spark: SparkSession, indexDir: String): Array[Array[Float]] =
     centroidEntries(spark, indexDir).map(_._2).toArray
 
-  /** Top-k by cosine over the `nprobe` clusters nearest the probe. The
-    * cluster restriction is an `isin` on the PARTITION column — directory
-    * pruning at the scan, verified in SimilaritySpec. */
+  /** Top-k by cosine over the `nprobe` clusters nearest the probe: loads
+    * a [[Snapshot]] of `indexDir` and searches it. The cluster restriction
+    * is an `isin` on the PARTITION column — directory pruning at the scan,
+    * verified in SimilaritySpec. */
   def search(
       spark: SparkSession,
       indexDir: String,
       probe: Array[Float],
       k: Int,
-      nprobe: Int = 2): DataFrame = {
+      nprobe: Int = 2): DataFrame =
+    search(snapshot(spark, indexDir), probe, k, nprobe)
+
+  /** One index directory resolved for serving: the centroid entries on the
+    * driver and a relation over `data/` whose file index was listed when
+    * it was created. Searching a snapshot costs one Spark job. A version
+    * that only a pointer flip replaces (the engine's versioned container)
+    * can serve many queries from one snapshot; an index maintained in
+    * place must be loaded again after each [[append]], [[repair]] or
+    * [[rebuildInPlace]]. */
+  private[graft] final case class Snapshot(entries: Seq[(Int, Array[Float])], data: DataFrame) {
+    val matrix: Array[Array[Float]] = entries.map(_._2).toArray
+  }
+
+  /** Load a [[Snapshot]]: centroids first, then the data listing (a
+    * [[repair]] writes its children before it swaps the centroids in, so
+    * every id read here has its directory). `idType` declares the data
+    * schema (no inference job); without it the schema is inferred once
+    * per directory signature. */
+  private[graft] def snapshot(
+      spark: SparkSession, indexDir: String, idType: Option[DataType] = None): Snapshot = {
     val entries = centroidEntries(spark, indexDir)
-    val ranked = SimilaritySearch.rankClusters(
-      entries.map(_._2).toArray, probe, math.max(nprobe, 1))
-    val probeClusters = ranked.map(pos => entries(pos)._1)
-    graft.sources.Tables.cachedParquet(spark, s"$indexDir/data")
-      .where(col("cluster").isin(probeClusters: _*))
+    val path = s"$indexDir/data"
+    val data = idType.fold(graft.sources.Tables.cachedParquet(spark, path))(t =>
+      spark.read.schema(StructType(Seq(StructField("id", t),
+        StructField("embedding", ArrayType(FloatType)), StructField("cluster", IntegerType))))
+        .parquet(path))
+    Snapshot(entries, data)
+  }
+
+  private[graft] def search(snap: Snapshot, probe: Array[Float], k: Int, nprobe: Int): DataFrame = {
+    val ranked = SimilaritySearch.rankClusters(snap.matrix, probe, math.max(nprobe, 1))
+    snap.data
+      .where(col("cluster").isin(ranked.map(pos => snap.entries(pos)._1): _*))
       .select(col("id"),
         round(VectorOps.cosineFast(col("embedding"), lit(probe).cast("array<float>")), 6).as("score"))
       .orderBy(desc("score"), col("id"))

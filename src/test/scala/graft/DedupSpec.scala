@@ -488,17 +488,42 @@ class DedupSpec extends AnyFunSuite {
       "the driver-collected list is small by construction and stays broadcast")
   }
 
-  test("unconverged CC warning reports the passes actually run") {
-    // a 64-node path cannot converge in one fused round; maxIter = 1 still
-    // runs that round's two passes, and the warning must say 2, not 1
+  /** dedupClusters on a 64-node path with a pass budget, plus the
+    * unconverged warning it printed. */
+  private def pathClusters(maxIter: Int): (Map[Long, Long], Option[String]) = {
     val ids = spark.range(64).toDF("doc_id")
     val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val buf = new java.io.ByteArrayOutputStream()
     val saved = System.err
     System.setErr(new java.io.PrintStream(buf, true))
-    try Dedup.dedupClusters(ids, "doc_id", pairs, maxIter = 1)
-    finally System.setErr(saved)
-    val warn = buf.toString("UTF-8").linesIterator.find(_.contains("exited unconverged"))
-    assert(warn.exists(_.contains("after 2 passes")), s"warning: $warn")
+    val labels =
+      try Dedup.dedupClusters(ids, "doc_id", pairs, maxIter = maxIter)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      finally System.setErr(saved)
+    (labels, buf.toString("UTF-8").linesIterator.find(_.contains("exited unconverged")))
+  }
+
+  test("unconverged CC warning reports the passes actually run") {
+    // a 64-node path cannot converge in one pass; maxIter = 1 runs exactly
+    // that pass (the fused two-pass round would overrun the budget), and
+    // the warning says so
+    val (_, warn) = pathClusters(maxIter = 1)
+    assert(warn.exists(_.contains("after 1 passes")), s"warning: $warn")
+  }
+
+  test("an odd maxIter runs exactly maxIter passes: 3 passes equal three single " +
+      "hook+jump passes") {
+    // plain-Scala reference of one pass: hook each node to the least label
+    // among itself and its neighbours, then jump label := label(label)
+    val nbrs = (0L until 64L).map(u => u -> Seq(u - 1, u + 1).filter(v => v >= 0 && v < 64)).toMap
+    def pass(l: Map[Long, Long]): Map[Long, Long] = {
+      val hooked = l.map { case (u, x) => u -> (nbrs(u).map(l) :+ x).min }
+      hooked.map { case (u, x) => u -> math.min(x, hooked(x)) }
+    }
+    val three = Iterator.iterate((0L until 64L).map(u => u -> u).toMap)(pass).drop(3).next()
+    assert(three.values.toSet.size > 1, "the fixture must still be unconverged after 3 passes")
+    val (labels, warn) = pathClusters(maxIter = 3)
+    assert(warn.exists(_.contains("after 3 passes")), s"warning: $warn")
+    assert(labels == three, s"labels after maxIter = 3: $labels, three passes: $three")
   }
 }

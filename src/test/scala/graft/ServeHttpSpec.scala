@@ -367,6 +367,179 @@ class ServeHttpSpec extends AnyFunSuite {
     }
   }
 
+  test("/query rejects k < 1 with a 400") {
+    val scratch = Files.createTempDirectory("graft_http_k").toString
+    val src = s"$scratch/src"
+    land(src, 1 to 20, 1, i => s"pay-$i")
+    val engine = new Engine(spark, src, s"$scratch/state", s"$scratch/sink")
+    engine.initializeIndex()
+    engine.runSyncCycle()
+    val api = new ServeHttp(engine)
+    val port = api.start(0)
+    try {
+      for (k <- Seq(0, -1); route <- Seq("mode=exact", "nprobe=2", "mode=auto")) {
+        val (code, body) = get(s"http://127.0.0.1:$port/query?q=pay-7&k=$k&$route")
+        assert(code == 400 && body.contains("k must be at least 1"), s"k=$k $route: $code $body")
+      }
+    } finally api.stop()
+  }
+
+  test("/query sees each sink commit and each IVF pointer flip on the next request") {
+    val scratch = Files.createTempDirectory("graft_http_visible").toString
+    val (src, sink) = (s"$scratch/src", s"$scratch/sink")
+    val engine = ivfEngine(scratch, 40, autoRefreshIvf = false)
+    val api = new ServeHttp(engine)
+    val port = api.start(0)
+    try {
+      val ids = routeIds(port) _
+      val before = sinkIds(sink)
+      Seq("mode=exact", "nprobe=16", "mode=ivf").foreach(r => assert(ids(r) == before, r))
+      val v1 = engine.liveIvfDir().get
+
+      land(src, 41 to 50, 2, i => s"zebra-$i")
+      engine.runSyncCycle()
+      val after = sinkIds(sink)
+      assert(after.size == before.size + 10)
+      Seq("mode=exact", "nprobe=16").foreach(r => assert(ids(r) == after, s"$r missed the commit"))
+      assert(ids("mode=ivf") == before, "the IVF route serves its own pointer, not the sink's")
+
+      engine.refreshIvfIndex()
+      assert(engine.liveIvfDir().exists(_ != v1), "the refresh must flip current")
+      assert(ids("mode=ivf") == after, "mode=ivf missed the flip of current")
+      assert(ids("mode=auto") == after)
+    } finally api.stop()
+  }
+
+  test("/query answers stay correct when the sink is deleted and copied back under the " +
+      "same pointer names, then committed to again") {
+    val scratch = Files.createTempDirectory("graft_http_restore").toString
+    val (src, state, sink, snap) = (s"$scratch/src", s"$scratch/state", s"$scratch/sink", s"$scratch/snap")
+    val engine = ivfEngine(scratch, 40)
+    Seq(src, state, sink).foreach(d => copyTree(d, d.replace(scratch, snap)))
+    def restore(): Unit = Seq(src, state, sink).foreach { d =>
+      Engine.deleteRecursively(new java.io.File(d))
+      copyTree(d.replace(scratch, snap), d)
+    }
+    val routes = Seq("mode=exact", "nprobe=16", "mode=ivf")
+    val api = new ServeHttp(engine)
+    val port = api.start(0)
+    try {
+      val ids = routeIds(port) _
+      val base = sinkIds(sink)
+      routes.foreach(r => assert(ids(r) == base, r))
+      land(src, 41 to 50, 2, i => s"zebra-$i")
+      engine.runSyncCycle() // commit and IVF auto-refresh
+      val afterA = sinkIds(sink)
+      routes.foreach(r => assert(ids(r) == afterA, r))
+      val (manifestA, ivfA) = (pointer(s"$sink/vectors_manifest.current"), engine.liveIvfDir())
+
+      // a different delta committed onto the restored copy, with no query
+      // in between: the manifest and the IVF version reuse the names the
+      // held snapshots have, and only their stat tells them apart
+      restore()
+      land(src, 41 to 46, 3, i => s"yak-$i")
+      engine.runSyncCycle()
+      assert(pointer(s"$sink/vectors_manifest.current") == manifestA && engine.liveIvfDir() == ivfA,
+        "the fixture must reuse the pointer names")
+      val afterB = sinkIds(sink)
+      assert(afterB.size == base.size + 6 && (afterA -- base).intersect(afterB).isEmpty)
+      routes.foreach(r => assert(ids(r) == afterB, s"$r served a snapshot of the same name"))
+
+      restore()
+      routes.foreach(r => assert(ids(r) == base, s"$r after the restore"))
+    } finally api.stop()
+  }
+
+  test("a query resolved before a commit answers from its snapshot after it") {
+    val scratch = Files.createTempDirectory("graft_http_inflight").toString
+    val (src, sink) = (s"$scratch/src", s"$scratch/sink")
+    val engine = ivfEngine(scratch, 40)
+    def idSet(df: org.apache.spark.sql.DataFrame) = df.select("id").as[String].collect().toSet
+    val before = sinkIds(sink)
+    // resolved (snapshot taken, plan built), not yet run: what a /query
+    // handler holds between its resolve and its collect
+    val exact = engine.searchSimilar("alpha", k = 500)
+    val simb = engine.searchSimilar("alpha", k = 500, nprobe = 16)
+    val ivf = engine.searchIvf(engine.ivfIndexDir(), "alpha", k = 500)
+    land(src, 41 to 50, 2, i => s"zebra-$i")
+    engine.runSyncCycle() // sink commit and IVF flip in between
+    Seq(exact, simb, ivf).foreach(df => assert(idSet(df) == before))
+    val after = sinkIds(sink)
+    assert(after.size == before.size + 10)
+    assert(idSet(engine.searchSimilar("alpha", k = 500)) == after)
+    assert(idSet(engine.searchIvf(engine.ivfIndexDir(), "alpha", k = 500)) == after)
+  }
+
+  test("after one warm-up per route, exact, nprobe=2 and IVF /query requests each run one " +
+      "Spark job over a root spanning more than 32 bucket directories") {
+    import graft.operators.Cdc
+    val scratch = Files.createTempDirectory("graft_http_jobs").toString
+    val sink = s"$scratch/sink"
+    val engine = ivfEngine(scratch, 150, clusters = 4)
+    val entries = Cdc.readManifest(sink).get.filter(_.namespace == Cdc.DefaultNamespace)
+    assert(entries.size > 32 && entries.map(_.root).distinct.size == 1,
+      s"the fixture must put one root over 32 bucket directories: ${entries.size}")
+    val api = new ServeHttp(engine)
+    val port = api.start(0)
+    try {
+      def jobs(route: String): Int = {
+        val ((code, body), n) = TestSpark.jobsDuring(
+          get(s"http://127.0.0.1:$port/query?q=alpha-7&k=10&$route"))
+        assert(code == 200, body)
+        n
+      }
+      // the first request lists the root, above Spark's 32-path threshold
+      // a Spark job of its own
+      assert(jobs("mode=exact") >= 2)
+      val routes = Seq("mode=exact", "nprobe=2", "mode=ivf", "mode=auto")
+      routes.foreach(jobs)
+      routes.foreach(r => assert(jobs(r) == 1, s"$r ran more than one Spark job"))
+    } finally api.stop()
+  }
+
+  /** An engine over `rows` events under `scratch`, one vector per row,
+    * synced once, with a `clusters`-cluster IVF index. With 2 clusters
+    * the default nprobe 2 makes the IVF route an exact scan of the live
+    * version, so every route answers all ids when k exceeds them. */
+  private def ivfEngine(scratch: String, rows: Int, clusters: Int = 2,
+      autoRefreshIvf: Boolean = true): Engine = {
+    land(s"$scratch/src", 1 to rows, 1, i => s"alpha-$i")
+    val engine = new Engine(spark, s"$scratch/src", s"$scratch/state", s"$scratch/sink",
+      chunkSize = 1, autoRefreshIvf = autoRefreshIvf)
+    engine.initializeIndex()
+    engine.runSyncCycle()
+    engine.refreshIvfIndex(k = clusters, iters = 2)
+    engine
+  }
+
+  private def land(src: String, rows: Range, day: Int, text: Int => String): Unit =
+    rows.map(i => (i.toLong, Timestamp.valueOf(f"2024-01-$day%02d 00:${i % 60}%02d:00"), text(i)))
+      .toDF("event_id", "ts", "payload")
+      .write.mode("append").parquet(s"$src/events.parquet")
+
+  private def sinkIds(sink: String): Set[String] =
+    graft.operators.Cdc.readVectorSink(spark, sink, Some(graft.operators.Cdc.DefaultNamespace))
+      .select("id").as[String].collect().toSet
+
+  private def routeIds(port: Int)(route: String): Set[String] = {
+    val (code, body) = get(s"http://127.0.0.1:$port/query?q=alpha&k=500&$route")
+    assert(code == 200, s"$route: $body")
+    idsOf(body)
+  }
+
+  private def pointer(path: String): String = Files.readString(java.nio.file.Paths.get(path)).trim
+
+  /** Copy a tree keeping file times, as a backup restore would. */
+  private def copyTree(from: String, to: String): Unit = {
+    val base = java.nio.file.Paths.get(from)
+    Files.walk(base).forEach { p =>
+      val target = java.nio.file.Paths.get(to).resolve(base.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(target)
+      else Files.copy(p, target, java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
+      ()
+    }
+  }
+
   private def idsOf(json: String): Set[String] =
     "\"id\":\"([^\"]+)\"".r.findAllMatchIn(json).map(_.group(1)).toSet
 }

@@ -598,6 +598,41 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got == exact, s"rebuildInPlace broke exactness: $got vs $exact")
   }
 
+  test("centroid read: one Spark job, entries in cluster-id order after a repair " +
+      "mints non-contiguous ids, whatever order the file holds them in") {
+    import graft.operators.IvfIndex
+    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_centroids").toString
+    IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
+    val anchor = vecs.where(col("vec_id") === 7).collect()(0).getSeq[Float](1).toArray
+    val rnd = new scala.util.Random(11)
+    val heavy = (0 until 100).map { i =>
+      val v = anchor.clone()
+      (0 until v.length).foreach(j => v(j) += (rnd.nextFloat() * 2 - 1) * 0.05f)
+      (700L + i, v)
+    }.toDF("vec_id", "embedding")
+    IvfIndex.append(heavy, "vec_id", "embedding", dir)
+    assert(IvfIndex.repair(spark, dir).clustersSplit >= 1)
+    val stored = IvfIndex.centroidEntries(spark, dir)
+    val ids = stored.map(_._1)
+    assert(ids != ids.indices, s"the repair must leave non-contiguous ids: $ids")
+
+    // rewrite the matrix with its rows in DESCENDING id order (one file, so
+    // a collect without the driver-side sort would return that order)
+    val desc = s"$dir/centroids_desc"
+    stored.reverse.toDF("cluster", "centroid")
+      .coalesce(1).write.parquet(desc)
+    val cdir = new java.io.File(s"$dir/centroids")
+    cdir.listFiles().filter(_.getName.startsWith("part-")).foreach(_.delete())
+    new java.io.File(desc).listFiles().filter(_.getName.startsWith("part-")).foreach(f =>
+      java.nio.file.Files.move(f.toPath, new java.io.File(cdir, f.getName).toPath))
+    assert(spark.read.parquet(s"$dir/centroids").collect().map(_.getInt(0)).toSeq == ids.reverse)
+
+    val (read, jobs) = TestSpark.jobsDuring(IvfIndex.centroidEntries(spark, dir))
+    assert(jobs == 1, s"a centroid read must run one Spark job, ran $jobs")
+    assert(read.map(_._1) == ids.sorted && ids == ids.sorted, s"ids out of order: ${read.map(_._1)}")
+    assert(read.map(_._2.toSeq) == stored.map(_._2.toSeq))
+  }
+
   test("ivfTopK scans only nprobe clusters (candidate restriction is real)") {
     val centroids = SimilaritySearch.ivfTrain(vecs, "vec_id", "embedding", k = 4, iters = 2)
     val probe = vecs.where(col("vec_id") === 0).collect()(0).getSeq[Float](1).toArray

@@ -20,4 +20,23 @@ object TestSpark {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Spark jobs started while `f` runs, with the listener bus drained
+    * before the count is reset and before it is read. */
+  def jobsDuring[A](f: => A): (A, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    session.sparkContext.addSparkListener(listener)
+    try {
+      CcProbe.drainListenerBus(session)
+      jobs.set(0)
+      val a = f
+      CcProbe.drainListenerBus(session)
+      (a, jobs.get)
+    } finally session.sparkContext.removeSparkListener(listener)
+  }
 }
