@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Embeddings
-import graft.operators.{Cdc, ParquetWatermarkStore, SimilaritySearch}
+import graft.operators.{Cdc, ParquetWatermarkStore, SimilaritySearch, StoreUpgrade}
 import graft.sources.DirSource
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -33,8 +33,15 @@ class Engine(
     layout: Cdc.SinkLayout = Cdc.DefaultLayout, // applies only when the sink is created
     autoRefreshIvf: Boolean = true) { // bound IVF staleness to one sync cycle
 
-  /** S8: create the vector sink if absent. */
-  def initializeIndex(): Unit = Cdc.initVectorSink(spark, sinkDir, layout)
+  /** S8: bring every store written by an older build to the current
+    * layout ([[StoreUpgrade]]: the sink, the watermark store and the
+    * conventional IVF indexes), then create the vector sink if absent.
+    * Readers and writers refuse an old layout, naming this call. */
+  def initializeIndex(): Unit = {
+    StoreUpgrade.run(spark, sinkDir, stateDir, (namespace, dir) =>
+      publishIvfVersion(namespace, Some(dir), 16, 3, 1.0, append = false))
+    Cdc.initVectorSink(spark, sinkDir, layout)
+  }
 
   /** Serializes this engine's WRITERS — each table's sink commit +
     * watermark publish runs under it, so concurrent tables' upserts
@@ -122,7 +129,8 @@ class Engine(
     * `nprobe > 0` prunes to that many multi-probe sign buckets (recall < 1
     * by LSH construction, rising with nprobe up to 2^SimBits = a full
     * scan); rows with simb = -1 (null or shorter-than-SimBits embeddings)
-    * are always included so they never become unreachable. */
+    * are always included so they never become unreachable. A sink that
+    * [[initializeIndex]] never created fails. */
   def searchSimilar(
       query: String,
       k: Int = 10,
@@ -136,10 +144,7 @@ class Engine(
       else {
         val buckets = (SimilaritySearch.multiProbeBuckets(probe, snap.layout.simBits, nprobe)
           .map(_.toInt) :+ -1).distinct
-        // isNull: rows from a pre-simb sink read back with simb = NULL,
-        // which `isin` never matches (three-valued logic) — without this
-        // an ANN search over a legacy sink silently returns nothing
-        snap.vectors.where(col("simb").isin(buckets: _*) || col("simb").isNull)
+        snap.vectors.where(col("simb").isin(buckets: _*))
       }
     SimilaritySearch.topK(pruned, "id", "embedding",
       org.apache.spark.sql.functions.lit(probe).cast("array<float>"), k)
@@ -170,16 +175,14 @@ class Engine(
     * one held, else the held one. Generation roots are immutable and GC
     * keeps the current and previous manifests' roots, so a held relation
     * is exactly as safe as a fresh [[Cdc.readVectorSink]]. Filled only
-    * here, on the query path — never by a cycle or a refresh. A legacy
-    * sink without a manifest has no stamp and resolves per call. */
-  private def sinkSnapshot(namespace: String): Engine.SinkSnapshot =
-    Cdc.manifestStamp(sinkDir) match {
-      case Some(stamp) => sinkSnapshots(namespace, stamp)(Engine.SinkSnapshot(
-        Cdc.readManifestVersion(spark, sinkDir, stamp.name, Some(namespace)),
-        Cdc.readLayout(sinkDir)))
-      case None => Engine.SinkSnapshot(
-        Cdc.readVectorSink(spark, sinkDir, Some(namespace)), Cdc.readLayout(sinkDir))
-    }
+    * here, on the query path — never by a cycle or a refresh. */
+  private def sinkSnapshot(namespace: String): Engine.SinkSnapshot = {
+    val stamp = Cdc.manifestStamp(sinkDir).getOrElse(throw new IllegalStateException(
+      s"no vector sink at $sinkDir; Engine.initializeIndex() creates it"))
+    sinkSnapshots(namespace, stamp)(Engine.SinkSnapshot(
+      Cdc.readManifestVersion(spark, sinkDir, stamp.name, Some(namespace)),
+      Cdc.readLayout(sinkDir)))
+  }
 
   /** Conventional location for a namespace's persisted IVF index: an
     * underscore-prefixed sibling INSIDE the sink directory, so the index
@@ -190,18 +193,23 @@ class Engine(
     * behind a `current` pointer): [[refreshIvfIndex]] builds the next
     * version beside the live one and flips the pointer atomically, so a
     * rebuild never races an in-flight query (the r12 in-place rebuild had
-    * a TOCTOU window between the completeness check and the data read).
-    * A pre-versioning index (centroids/data directly here) stays
-    * readable. */
+    * a TOCTOU window between the completeness check and the data read). */
   def ivfIndexDir(namespace: String = Cdc.DefaultNamespace): String =
     s"$sinkDir/_ivf/$namespace"
 
   /** Directory holding a complete, readable index for the namespace:
-    * the pointed version when the pointer exists (stale/crashed pointers
-    * resolve to None rather than a broken read), else the legacy
-    * unversioned layout if complete. */
+    * the pointed version (stale/crashed pointers resolve to None rather
+    * than a broken read); None without a pointer. */
   def liveIvfDir(namespace: String = Cdc.DefaultNamespace): Option[String] =
-    Some(Engine.ivfVersion(ivfIndexDir(namespace))).filter(Engine.completeIvf).map(_.getPath)
+    Some(ivfIndexDir(namespace)).filter(hasIvfPointer)
+      .map(Engine.ivfVersion).filter(Engine.completeIvf).map(_.getPath)
+
+  /** True when the container has a `current` pointer; a container in an
+    * older layout fails ([[StoreUpgrade.requireVersionedIvf]]). */
+  private def hasIvfPointer(container: String): Boolean =
+    new java.io.File(container, "current").isFile || {
+      StoreUpgrade.requireVersionedIvf(container); false
+    }
 
   /** True when a complete index exists for the namespace. */
   def hasIvfIndex(namespace: String = Cdc.DefaultNamespace): Boolean =
@@ -219,55 +227,60 @@ class Engine(
       iters: Int = 3,
       namespace: String = Cdc.DefaultNamespace,
       sampleFraction: Double = 1.0): Unit =
-    graft.operators.IvfIndex.build(sinkVectors(namespace, None), "id", "embedding",
+    graft.operators.IvfIndex.build(sinkVectors(namespaceEntries(namespace)), "id", "embedding",
       indexDir, k, iters, sampleFraction)
 
-  /** (id, embedding) of the namespace's non-null vectors: the given
-    * manifest entries, or the live snapshot when None. */
-  private def sinkVectors(namespace: String, entries: Option[Seq[Cdc.SinkEntry]]): DataFrame = {
+  /** (id, embedding) of the non-null vectors under the given manifest entries. */
+  private def sinkVectors(entries: Seq[Cdc.SinkEntry]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    entries.fold(Cdc.readVectorSink(spark, sinkDir, Some(namespace)))(Cdc.readEntries(spark, sinkDir, _))
+    Cdc.readEntries(spark, sinkDir, entries)
       .where(col("embedding").isNotNull)
       .select(col("id"), col("embedding"))
   }
 
+  private def namespaceEntries(namespace: String): Seq[Cdc.SinkEntry] =
+    Cdc.readManifest(sinkDir).filter(_.namespace == namespace)
+
   /** Bring the conventional index up to the CURRENT sink snapshot and
     * publish it atomically as the next `vNNNNNN` version — queries keep
     * serving the live version throughout — then flip the `current`
-    * pointer and GC every version but the new and previous one (an
-    * in-flight query one flip behind still materializes its scan; the
-    * same one-behind retention every store here uses).
+    * pointer, fsync it and the container (as every store's flip here),
+    * and GC every version but the new and previous one (an in-flight
+    * query one flip behind still materializes its scan).
     *
-    * Append-then-flip: when the live version has staleness bookkeeping
-    * and records the sink generation roots it indexed, the next version
-    * is that version hard-linked (parquet data and centroid files; the
-    * `_`-prefixed sidecars, which writers replace or truncate, are
-    * copied) plus the namespace's new vectors, routed to the unchanged
-    * centroids by [[graft.operators.IvfIndex.append]]'s staging path.
-    * New vectors are the sink rows of manifest entries under roots the
-    * live version had not indexed (roots are immutable, so older entries
-    * are indexed already), anti-joined against the live version's ids —
-    * a rewritten bucket's re-emitted ids are never appended twice. The
-    * refresh retrains in full instead when there is no live version, the
-    * live one predates bookkeeping or root tracking, or the append would
-    * bring the appended fraction to `IvfIndex.DefaultRebuildFraction`
-    * (0.5, the measured recall bar) — which resets it to 0. Per-cluster
-    * staleness stays advisory ([[ivfStatus]], `/ivf/status`).
+    * Append-then-flip: the next version is the live version hard-linked
+    * (parquet data and centroid files; the `_`-prefixed sidecars, which
+    * writers replace or truncate, are copied) plus the namespace's new
+    * vectors, routed to the unchanged centroids by
+    * [[graft.operators.IvfIndex.append]]'s staging path. New vectors are
+    * the sink rows of manifest entries under roots the live version had
+    * not indexed (roots are immutable, so older entries are indexed
+    * already), anti-joined against the live version's ids — a rewritten
+    * bucket's re-emitted ids are never appended twice. The refresh
+    * retrains in full instead when there is no live version, or when the
+    * append would bring the appended fraction to
+    * `IvfIndex.DefaultRebuildFraction` (0.5, the measured recall bar) —
+    * which resets it to 0. Per-cluster staleness stays advisory
+    * ([[ivfStatus]], `/ivf/status`).
     *
-    * Build parameters and the indexed root set persist in
-    * `_build.properties`, so a refresh reuses the live version's
-    * k/iters/sample rather than resetting to defaults; the root set and
-    * the rows indexed come from one manifest read. */
+    * `k`, `iters` and `sampleFraction` apply only when the namespace has
+    * no live version; otherwise the live version's `_build.properties`
+    * values win. That file also records the indexed root set; the root
+    * set and the rows indexed come from one manifest read. */
   def refreshIvfIndex(
       namespace: String = Cdc.DefaultNamespace,
       k: Int = 16,
       iters: Int = 3,
-      sampleFraction: Double = 1.0): Unit = {
+      sampleFraction: Double = 1.0): Unit =
+    publishIvfVersion(namespace, liveIvfDir(namespace), k, iters, sampleFraction, append = true)
+
+  /** [[refreshIvfIndex]] from `live`'s build parameters; [[StoreUpgrade]]
+    * retrains an old layout with `append = false`. */
+  private def publishIvfVersion(namespace: String, live: Option[String],
+      k: Int, iters: Int, sampleFraction: Double, append: Boolean): Unit = {
     import graft.operators.IvfIndex
     val container = new java.io.File(ivfIndexDir(namespace))
     container.mkdirs()
-    val live = liveIvfDir(namespace)
-    // inherit the live version's persisted build params unless overridden
     val params = live
       .map(d => new java.io.File(d, "_build.properties")).filter(_.isFile)
       .map { f =>
@@ -285,18 +298,15 @@ class Engine(
       .sortBy(_.getName)
     val next = new java.io.File(container,
       f"v${versions.lastOption.map(_.getName.stripPrefix("v").toInt).getOrElse(0) + 1}%06d")
-    // ONE manifest read: the rows indexed and the roots recorded both come
-    // from it (None: a pre-manifest sink — full builds, no root tracking)
-    val entries = Cdc.readManifest(sinkDir).map(_.filter(_.namespace == namespace))
-    val appended = for {
-      dir <- live
-      indexedRoots <- params.get("roots").map(_.split(',').filter(_.nonEmpty).toSet)
-      es <- entries
-      if !IvfIndex.appendedFraction(dir).isNaN
-    } yield {
+    // ONE manifest read: the rows indexed and the roots recorded both come from it
+    val entries = namespaceEntries(namespace)
+    val appended = append && live.exists { dir =>
+      val indexedRoots = params.getOrElse("roots",
+        throw StoreUpgrade.outdated(dir, "no roots= line in _build.properties"))
+        .split(',').filter(_.nonEmpty).toSet
       Engine.linkTree(new java.io.File(dir, "data"), new java.io.File(next, "data"))
       Engine.linkTree(new java.io.File(dir, "centroids"), new java.io.File(next, "centroids"))
-      val fresh = es.filterNot(e => indexedRoots(e.root))
+      val fresh = entries.filterNot(e => indexedRoots(e.root))
       fresh.isEmpty || {
         // the sink's id type, declared: no schema-inference job for a
         // version no query has read yet
@@ -304,31 +314,30 @@ class Engine(
           .schema(org.apache.spark.sql.types.StructType(Seq(Cdc.vectorSinkSchema("id"))))
           .parquet(s"$dir/data").select("id")
         val staged = IvfIndex.stageAppend(
-          sinkVectors(namespace, Some(fresh)).join(indexed, Seq("id"), "left_anti"),
+          sinkVectors(fresh).join(indexed, Seq("id"), "left_anti"),
           "id", "embedding", next.getPath)
         staged.fractionAfter < IvfIndex.DefaultRebuildFraction && {
           IvfIndex.commitAppend(staged); true
         }
       }
     }
-    if (!appended.contains(true)) {
+    if (!appended) {
       Engine.deleteRecursively(next)
-      IvfIndex.build(sinkVectors(namespace, entries), "id", "embedding", next.getPath,
+      IvfIndex.build(sinkVectors(entries), "id", "embedding", next.getPath,
         kEff, itersEff, sampleEff)
     }
-    val roots = entries.fold("")(es => s"roots=${es.map(_.root).distinct.sorted.mkString(",")}\n")
     val pw = new java.io.FileWriter(new java.io.File(next, "_build.properties"))
-    try pw.write(s"k=$kEff\niters=$itersEff\nsampleFraction=$sampleEff\n$roots") finally pw.close()
+    try pw.write(s"k=$kEff\niters=$itersEff\nsampleFraction=$sampleEff\n" +
+      s"roots=${entries.map(_.root).distinct.sorted.mkString(",")}\n") finally pw.close()
     val prevLive = live.map(p => new java.io.File(p).getName)
+    val pointer = new java.io.File(container, "current")
     val tmp = java.nio.file.Paths.get(container.getPath, "current_tmp")
     java.nio.file.Files.writeString(tmp, next.getName)
-    java.nio.file.Files.move(tmp, new java.io.File(container, "current").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    java.nio.file.Files.move(tmp, pointer.toPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    Cdc.fsync(pointer)
+    Cdc.fsync(container)
     val keep = Set(next.getName) ++ prevLive
     versions.filterNot(v => keep(v.getName)).foreach(Engine.deleteRecursively)
-    // legacy unversioned halves are shadowed by the pointer now
-    Engine.deleteRecursively(new java.io.File(container, "data"))
-    Engine.deleteRecursively(new java.io.File(container, "centroids"))
   }
 
   /** Text query against a persisted IVF index: `indexDir` may be a direct
@@ -349,7 +358,7 @@ class Engine(
     * so the `/query` route needs no separate [[hasIvfIndex]] call. */
   private[graft] def searchLiveIvf(
       query: String, k: Int, namespace: String = Cdc.DefaultNamespace): Option[DataFrame] =
-    ivfSnapshot(ivfIndexDir(namespace)).map(s =>
+    Some(ivfIndexDir(namespace)).filter(hasIvfPointer).flatMap(ivfSnapshot).map(s =>
       graft.operators.IvfIndex.search(s, Embeddings.embed(query), k, 2))
 
   private val ivfSnapshots = new Engine.Snapshots[Engine.IvfStamp, graft.operators.IvfIndex.Snapshot]
@@ -358,9 +367,9 @@ class Engine(
     * pointed version's, held until the [[Engine.IvfStamp]] changes — the
     * pointer's content and stat, plus the stat of the version's
     * `centroids` directory, which an in-place `IvfIndex` append, repair or
-    * rebuild replaces or writes into. Without one (a direct build or a
-    * pre-versioning container), loaded per call. None when the index is
-    * incomplete ([[liveIvfDir]]'s rule). Filled only on the query path. */
+    * rebuild replaces or writes into. Without one (a direct build), loaded
+    * per call. None when the index is incomplete ([[liveIvfDir]]'s rule).
+    * Filled only on the query path. */
   private def ivfSnapshot(indexDir: String): Option[graft.operators.IvfIndex.Snapshot] = {
     val ptr = new java.io.File(indexDir, "current")
     val dir = Engine.ivfVersion(indexDir)
@@ -442,15 +451,15 @@ object Engine {
 
   /** The version an IVF index directory serves: the one its `current`
     * pointer names, or the directory itself when it has no pointer (a
-    * direct build or a pre-versioning container). */
-  private def ivfVersion(indexDir: String): java.io.File = {
+    * direct build). */
+  private[graft] def ivfVersion(indexDir: String): java.io.File = {
     val ptr = new java.io.File(indexDir, "current")
     if (ptr.isFile) new java.io.File(indexDir, java.nio.file.Files.readString(ptr.toPath).trim)
     else new java.io.File(indexDir)
   }
 
   /** An IVF index directory whose data and centroids both committed. */
-  private def completeIvf(d: java.io.File): Boolean =
+  private[graft] def completeIvf(d: java.io.File): Boolean =
     new java.io.File(d, "data/_SUCCESS").isFile && new java.io.File(d, "centroids/_SUCCESS").isFile
 
   /** One held value per name (a namespace, or an index directory),

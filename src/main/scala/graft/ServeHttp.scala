@@ -196,7 +196,7 @@ final class ServeHttp(engine: Engine) {
     df.toJSON.collect().mkString("[", ",", "]")
 
   private def ivfStatusJson(st: Engine.IvfStatus): String = {
-    def num(d: Double) = // NaN (no bookkeeping) / Inf (base 0) aren't JSON
+    def num(d: Double) = // NaN (no index) / Inf (base 0) aren't JSON
       if (java.lang.Double.isFinite(d)) f"$d%.4f" else "null"
     val stale = st.staleClusters.map(s =>
       s"""{"cluster":${s.cluster},"base_rows":${s.baseRows},""" +

@@ -175,7 +175,7 @@ object Cdc {
     * rows) rather than a lazy parquet scan: a concurrent
     * [[shardWatermarkStore]] migration deletes the drained single store's
     * version dirs after publishing the marker, and a lazily-materialized
-    * scan that resolved the legacy layout would hit FileNotFound (or an
+    * scan that resolved the unsharded layout would hit FileNotFound (or an
     * empty store) at action time. The eager read goes through the same
     * topology fence as every other read surface, so the returned frame is
     * always one consistent snapshot. Row values are byte-identical to the
@@ -189,9 +189,7 @@ object Cdc {
   }
 
   /** Driver-side read of the whole store (all shards): T rows via
-    * parquet-mr footers — no Spark job, no session needed. Reads both this
-    * writer's INT64-µs timestamps and legacy Spark-written files (INT64
-    * ms/µs/ns, INT96). */
+    * parquet-mr footers — no Spark job, no session needed. */
   def readWatermarkMap(stateDir: String): Map[String, Timestamp] =
     withStableTopology(stateDir) { b =>
       pathsFor(stateDir, b).foldLeft(Map.empty[String, Timestamp])(_ ++ readStoreMap(_))
@@ -199,7 +197,7 @@ object Cdc {
 
   /** Read fence against a concurrent [[shardWatermarkStore]] (ADVICE r15):
     * the migration publishes the `watermark.shards` marker and THEN drains
-    * the single store, so a reader that resolved the legacy topology before
+    * the single store, so a reader that resolved the unsharded topology before
     * the flip can observe an empty/deleted single store and report every
     * watermark absent — which in CdcStream's foreachBatch would silently
     * re-process the full source as if it were the first sync. Mirror of the
@@ -228,12 +226,9 @@ object Cdc {
     liveVersionDir(storePath) match {
       case None => Map.empty
       case Some(dir) =>
-        val files = Option(new java.io.File(dir).listFiles()).toSeq.flatten
-          .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-            !f.getName.startsWith("_") && !f.getName.startsWith("."))
         val conf = new org.apache.hadoop.conf.Configuration()
         val out = scala.collection.mutable.Map[String, Timestamp]()
-        files.foreach { f =>
+        watermarkFiles(dir).foreach { f =>
           val reader = org.apache.parquet.hadoop.ParquetReader
             .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(),
               new org.apache.hadoop.fs.Path(f.getPath))
@@ -241,15 +236,36 @@ object Cdc {
             .build()
           try {
             var g = reader.read()
+            if (g != null && !currentTimestamp(g.getType))
+              throw StoreUpgrade.outdated(f.getPath, "watermark timestamps that are not INT64 µs")
             while (g != null) {
               if (g.getFieldRepetitionCount("last_updated") > 0)
-                out(g.getString("table_name", 0)) = groupTimestamp(g)
+                out(g.getString("table_name", 0)) = microsToTimestamp(g.getLong("last_updated", 0))
               g = reader.read()
             }
           } finally reader.close()
         }
         out.toMap
     }
+
+  /** The parquet data files of one store version directory. */
+  private[operators] def watermarkFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
+        !f.getName.startsWith("_") && !f.getName.startsWith("."))
+
+  /** True when the file's `last_updated` has the type this store's writer
+    * gives it (INT64 µs) — one footer read. */
+  private[operators] def currentWatermarkFile(f: java.io.File): Boolean = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getPath), new org.apache.hadoop.conf.Configuration()))
+    try currentTimestamp(reader.getFooter.getFileMetaData.getSchema) finally reader.close()
+  }
+
+  private def currentTimestamp(schema: org.apache.parquet.schema.GroupType): Boolean =
+    schema.getType("last_updated") ==
+      (watermarkMessageType: org.apache.parquet.schema.GroupType).getType("last_updated")
 
   /** S7: `INSERT … ON DUPLICATE KEY UPDATE` analog
     * (`service_layer/service.py:38-42`): read-modify-write keyed by
@@ -347,7 +363,7 @@ object Cdc {
   // migration ([[shardWatermarkStore]]) recorded in a `watermark.shards`
   // marker file next to the shard stores.
 
-  /** Shard count of the store at `stateDir` (1 = unsharded legacy layout). */
+  /** Shard count of the store at `stateDir` (1 = unsharded). */
   def watermarkShards(stateDir: String): Int = {
     val f = shardMarkerFile(stateDir)
     if (f.exists()) java.nio.file.Files.readString(f.toPath).trim.toInt else 1
@@ -409,7 +425,6 @@ object Cdc {
       Option(new java.io.File(stateDir).listFiles()).toSeq.flatten
         .filter(f => f.getName == s"$WatermarkTable.current" ||
           f.getName.matches(wm + "_v\\d+") ||
-          f.getName == WatermarkTable ||
           orphanShard(f.getName))
         .foreach(deleteRecursively)
     }
@@ -432,10 +447,7 @@ object Cdc {
     if (shards <= 1) s"$stateDir/$WatermarkTable"
     else f"$stateDir/${WatermarkTable}_b${shardOf(tableName, shards)}%04d"
 
-  private def storePaths(stateDir: String): Seq[String] =
-    pathsFor(stateDir, watermarkShards(stateDir))
-
-  private def pathsFor(stateDir: String, b: Int): Seq[String] =
+  private[operators] def pathsFor(stateDir: String, b: Int): Seq[String] =
     if (b <= 1) Seq(s"$stateDir/$WatermarkTable")
     else (0 until b).map(i => f"$stateDir/${WatermarkTable}_b$i%04d")
 
@@ -451,7 +463,7 @@ object Cdc {
     * shards of one store — never serialize; single-JVM scope matches the
     * store's standing single-writer(-process) contract. */
   private val storeLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def storeLock(storePath: String): Object =
+  private[operators] def storeLock(storePath: String): Object =
     storeLocks.computeIfAbsent(
       new java.io.File(storePath).getAbsolutePath, _ => new Object)
 
@@ -473,7 +485,7 @@ object Cdc {
   /** Write the whole (tiny) store as one parquet file in `vdir` —
     * driver-local, no Spark job. Rows are sorted by key for deterministic
     * bytes (same input → same file). */
-  private def writeWatermarkFile(vdir: java.io.File, rows: Map[String, Timestamp]): Unit = {
+  private[operators] def writeWatermarkFile(vdir: java.io.File, rows: Map[String, Timestamp]): Unit = {
     vdir.mkdirs()
     val conf = new org.apache.hadoop.conf.Configuration()
     val out = org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
@@ -488,36 +500,6 @@ object Cdc {
       g.add("last_updated", timestampMicros(ts))
       writer.write(g)
     } finally writer.close()
-  }
-
-  /** Timestamp extraction tolerant of every encoding a store file can
-    * carry: this writer's INT64 µs, Spark-written INT64 (ms/µs/ns per
-    * `spark.sql.parquet.outputTimestampType`), and legacy INT96. */
-  private def groupTimestamp(g: org.apache.parquet.example.data.Group): Timestamp = {
-    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
-    val t = g.getType.getType("last_updated").asPrimitiveType()
-    t.getPrimitiveTypeName match {
-      case PrimitiveType.PrimitiveTypeName.INT64 =>
-        val v = g.getLong("last_updated", 0)
-        val micros = t.getLogicalTypeAnnotation match {
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-              if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MILLIS => v * 1000L
-          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
-              if ts.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS => Math.floorDiv(v, 1000L)
-          case _ => v // MICROS — this writer's and Spark's default
-        }
-        microsToTimestamp(micros)
-      case PrimitiveType.PrimitiveTypeName.INT96 =>
-        // legacy Spark layout: 8-byte little-endian nanos-of-day +
-        // 4-byte little-endian Julian day (epoch day = 2440588)
-        val buf = java.nio.ByteBuffer.wrap(g.getInt96("last_updated", 0).getBytes)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val nanosOfDay = buf.getLong
-        val julianDay = buf.getInt
-        microsToTimestamp((julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L)
-      case other =>
-        throw new IllegalStateException(s"unexpected watermark timestamp physical type: $other")
-    }
   }
 
   private def microsToTimestamp(micros: Long): Timestamp = {
@@ -572,7 +554,7 @@ object Cdc {
   // --- vector sink (S8/S9) ------------------------------------------------
   //
   // MVCC layout (r13): the sink is a set of IMMUTABLE generation roots
-  // (`vectors` = the legacy/first root, `vectors_gNNNNNN` thereafter),
+  // (`vectors_gNNNNNN`; an adopted sink's first root is `vectors`),
   // each holding (namespace, bucket, simb)-partitioned parquet for the
   // buckets written in that generation, behind a MANIFEST that maps every
   // live (namespace, bucket) to the root holding its current content.
@@ -607,7 +589,7 @@ object Cdc {
     * the excess, never the whole sink. */
   private[graft] val MaxLiveRoots = 12
 
-  private def manifestPointer(sinkDir: String) = new java.io.File(s"$sinkDir/vectors_manifest.current")
+  private[operators] def manifestPointer(sinkDir: String) = new java.io.File(s"$sinkDir/vectors_manifest.current")
   private val ManifestPrefix = "vectors_manifest_v"
 
   private def manifestVersionFiles(sinkDir: String): Seq[(Long, java.io.File)] =
@@ -616,17 +598,17 @@ object Cdc {
       .flatMap(f => scala.util.Try(f.getName.stripPrefix(ManifestPrefix).toLong).toOption.map(_ -> f))
       .sortBy(_._1)
 
-  /** The pointed manifest file's name; None when the sink predates the
-    * manifest (legacy direct-root layout) or does not exist. */
+  /** The pointed manifest file's name; None when the sink does not exist.
+    * A sink in an older layout fails ([[StoreUpgrade.requireManifest]]). */
   private def pointedManifest(sinkDir: String): Option[String] = {
     val ptr = manifestPointer(sinkDir)
-    if (!ptr.exists()) None else Some(java.nio.file.Files.readString(ptr.toPath).trim)
+    if (ptr.exists()) Some(java.nio.file.Files.readString(ptr.toPath).trim)
+    else { StoreUpgrade.requireManifest(sinkDir); None }
   }
 
-  /** The pointed manifest's entries; None when the sink predates the
-    * manifest (legacy direct-root layout) or does not exist. */
-  private[graft] def readManifest(sinkDir: String): Option[Seq[SinkEntry]] =
-    pointedManifest(sinkDir).map(manifestEntries(sinkDir, _))
+  /** The pointed manifest's entries; empty when the sink does not exist. */
+  private[graft] def readManifest(sinkDir: String): Seq[SinkEntry] =
+    pointedManifest(sinkDir).fold(Seq.empty[SinkEntry])(manifestEntries(sinkDir, _))
 
   /** The entries of one published manifest file (immutable once named). */
   private def manifestEntries(sinkDir: String, name: String): Seq[SinkEntry] = {
@@ -645,7 +627,7 @@ object Cdc {
       name: String, modified: java.nio.file.attribute.FileTime, size: Long)
 
   /** The live manifest's [[ManifestStamp]]: one pointer read and one stat,
-    * no Spark work; None for a legacy or absent sink. */
+    * no Spark work; None for an absent sink. */
   private[graft] def manifestStamp(sinkDir: String): Option[ManifestStamp] =
     pointedManifest(sinkDir).map { name =>
       val attrs = java.nio.file.Files.readAttributes(new java.io.File(sinkDir, name).toPath,
@@ -659,7 +641,7 @@ object Cdc {
     * orphan must never be mistaken for the previous LIVE manifest by the
     * GC's one-behind retention); crash after leaves the new manifest
     * live. Single writer at a time (the sink's standing contract). */
-  private def publishManifest(sinkDir: String, entries: Seq[SinkEntry]): Unit = {
+  private[operators] def publishManifest(sinkDir: String, entries: Seq[SinkEntry]): Unit = {
     val versions = manifestVersionFiles(sinkDir)
     val pointed: Option[Long] = {
       val ptr = manifestPointer(sinkDir)
@@ -688,26 +670,20 @@ object Cdc {
     fsync(new java.io.File(sinkDir))
   }
 
-  /** Adopt a sink into the manifest layout (no-op once adopted): a legacy
-    * direct-root sink's existing bucket directories become manifest
-    * entries pointing at the `vectors` root, untouched bytes; an absent
-    * sink becomes an empty manifest. Write-path entry point only —
-    * readers never mutate. */
-  private def ensureManifest(sinkDir: String): Unit =
+  /** Create an absent sink (no-op once created): persist `layout` unless a
+    * layout file exists, and publish an empty manifest. Write-path entry
+    * point only — readers never mutate. */
+  private def ensureManifest(sinkDir: String, layout: Option[SinkLayout] = None): Unit =
     if (!manifestPointer(sinkDir).exists()) {
+      StoreUpgrade.requireManifest(sinkDir)
       new java.io.File(sinkDir).mkdirs()
-      val legacyRoot = new java.io.File(s"$sinkDir/vectors")
-      val entries =
-        if (legacyRoot.isDirectory) {
-          requireSimbLayout(sinkDir) // 2-level pre-simb data stays unreadable
-          scanRootEntries(sinkDir, "vectors")
-        } else Seq.empty
-      publishManifest(sinkDir, entries)
+      layout.filterNot(_ => layoutFile(sinkDir).exists()).foreach(writeLayout(sinkDir, _))
+      publishManifest(sinkDir, Seq.empty)
     }
 
   /** The (namespace, bucket) partition dirs physically present under one
     * generation root. */
-  private def scanRootEntries(sinkDir: String, root: String): Seq[SinkEntry] = {
+  private[operators] def scanRootEntries(sinkDir: String, root: String): Seq[SinkEntry] = {
     val rootDir = new java.io.File(sinkDir, root)
     for {
       ns <- Option(rootDir.listFiles()).toSeq.flatten.toSeq
@@ -744,12 +720,7 @@ object Cdc {
     * layout choice and publish an empty manifest. An existing sink keeps
     * its original layout — `layout` only applies to a fresh sink. */
   def initVectorSink(spark: SparkSession, sinkDir: String, layout: SinkLayout = DefaultLayout): Unit =
-    if (!manifestPointer(sinkDir).exists()) {
-      new java.io.File(sinkDir).mkdirs()
-      if (!new java.io.File(s"$sinkDir/vectors").exists() && !layoutFile(sinkDir).exists())
-        writeLayout(sinkDir, layout)
-      ensureManifest(sinkDir)
-    }
+    ensureManifest(sinkDir, Some(layout))
 
   /** Snapshot read of the live sink. Resolves the manifest pointer and
     * the file listing eagerly at DataFrame creation, so the returned
@@ -767,23 +738,12 @@ object Cdc {
     * relation this returns per namespace and resolves it again only
     * when the pointer flips ([[manifestStamp]] changes); a derived plan
     * reuses the file index built here, so a held relation gives the same
-    * one-behind guarantee as a fresh one.
-    *
-    * Legacy fallback: a sink with data but no manifest (pre-r13 layout)
-    * reads the `vectors` root directly, same bytes, same schema. */
+    * one-behind guarantee as a fresh one. An absent sink reads empty. */
   def readVectorSink(
       spark: SparkSession,
       sinkDir: String,
       namespace: Option[String] = None): DataFrame =
-    pointedManifest(sinkDir) match {
-      case Some(name) => readManifestVersion(spark, sinkDir, name, namespace)
-      case None =>
-        val path = s"$sinkDir/vectors"
-        val df =
-          if (new java.io.File(path).exists()) spark.read.schema(vectorSinkSchema).parquet(path)
-          else emptySink(spark)
-        namespace.fold(df)(ns => df.where(col("namespace") === ns))
-    }
+    pointedManifest(sinkDir).fold(emptySink(spark))(readManifestVersion(spark, sinkDir, _, namespace))
 
   /** [[readVectorSink]] of one published manifest file, named by a
     * [[ManifestStamp]] taken earlier: the relation is that stamp's
@@ -919,7 +879,7 @@ object Cdc {
       .parquet(staged.stageDir)
     val buckets = staged.buckets
     try {
-        val manifest = readManifest(sinkDir).getOrElse(Seq.empty)
+        val manifest = readManifest(sinkDir)
         val touched: Set[(String, Int)] = buckets.map(b => (namespace, b)).toSet
         // incremental compaction: fold the oldest roots in whole if this
         // commit would otherwise leave more than MaxLiveRoots roots live
@@ -1070,25 +1030,6 @@ object Cdc {
         deleteRecursively(root)
     }
     versions.dropRight(2).foreach(_._2.delete())
-  }
-
-  /** Fail fast on a pre-`simb` sink layout (two-level namespace/bucket
-    * directories): upserting three-level partitions next to two-level ones
-    * leaves a parquet root Spark partition discovery rejects. Detection is
-    * one short-circuit directory walk. */
-  private def requireSimbLayout(sinkDir: String): Unit = {
-    val root = new java.io.File(s"$sinkDir/vectors")
-    val stale = Option(root.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("namespace="))
-      .flatMap(ns => Option(ns.listFiles()).toSeq.flatten)
-      .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-      .exists(bk => Option(bk.listFiles()).toSeq.flatten
-        .exists(f => f.isFile && f.getName.endsWith(".parquet")))
-    if (stale)
-      throw new IllegalStateException(
-        s"$sinkDir/vectors uses the pre-simb (namespace, bucket) layout; " +
-          "reinitialize the sink (or re-upsert its rows) before writing the " +
-          "(namespace, bucket, simb) layout — mixed partition depths are unreadable")
   }
 
   /** `describe_index_stats` analog (`service_layer/service.py:97`):
@@ -1423,8 +1364,7 @@ object Cdc {
     *      rename is atomic against crashes either way; the fsync makes
     *      the commit durable against power loss too);
     *   3. GC version dirs EXCEPT the just-published one and the one the
-    *      pointer named before this write, plus the legacy unversioned
-    *      dir.
+    *      pointer named before this write.
     *
     * A crash before (2) leaves the pointer on the old version (an orphaned
     * v-dir is GC'd by the next successful write); a crash after (2) leaves
@@ -1436,10 +1376,8 @@ object Cdc {
     * extra write closes that window for readers at most ONE write behind
     * — the realistic case for this store's read-then-advance cycle. A
     * reader lagging two or more writes can still lose its directory
-    * mid-scan and must re-resolve ([[readWatermarks]]); the one-time
-    * legacy-layout upgrade GCs the unversioned dir immediately and has
-    * the same (one-time) caveat. Like the vector sink, the store assumes
-    * a single writer at a time.
+    * mid-scan and must re-resolve ([[readWatermarks]]). Like the vector
+    * sink, the store assumes a single writer at a time.
     *
     * `writeData` populates the fresh version dir — the watermark store's
     * driver-local parquet writer today; the protocol is writer-agnostic
@@ -1460,8 +1398,7 @@ object Cdc {
     val vdir = new java.io.File(parent, f"${base}_v$next%06d")
     // the version the pointer names NOW survives this write's GC (readers
     // one write behind can still materialize their lazy scan — see doc)
-    val prevLive = liveVersionDir(path).map(p => new java.io.File(p).getName)
-      .filter(_.startsWith(base + "_v"))
+    val prevLive = pointedVersion(path).map(p => new java.io.File(p).getName)
     writeData(vdir)
     onBeforeCommit() // crash-injection hook: pointer still names the old state
     val tmp = java.nio.file.Paths.get(path + ".current_tmp")
@@ -1472,32 +1409,33 @@ object Cdc {
     fsync(parent)
     val keep = Set(vdir.getName) ++ prevLive
     versions().filterNot(d => keep(d.getName)).foreach(deleteRecursively)
-    deleteRecursively(f) // legacy unversioned dir, now shadowed by the pointer
   }
 
   /** Durability flush: force file (or directory-entry) state to stable
     * storage. Directory fsync is what makes a rename survive power loss on
     * POSIX; best-effort on filesystems that reject directory channels. */
-  private def fsync(f: java.io.File): Unit =
+  private[graft] def fsync(f: java.io.File): Unit =
     try {
       val ch = java.nio.channels.FileChannel.open(f.toPath,
         java.nio.file.StandardOpenOption.READ)
       try ch.force(true) finally ch.close()
     } catch { case _: Exception => () }
 
-  /** The live directory behind a versioned store ([[atomicOverwrite]]):
-    * the pointed version when a pointer exists, else the legacy
-    * unversioned directory (stores written before versioning), else none. */
-  private[operators] def liveVersionDir(path: String): Option[String] = {
+  /** The live directory behind a versioned store ([[atomicOverwriteWith]]),
+    * or None when the store does not exist. A store in an older layout
+    * fails ([[StoreUpgrade.requireVersionedStore]]). */
+  private[operators] def liveVersionDir(path: String): Option[String] =
+    pointedVersion(path).orElse { StoreUpgrade.requireVersionedStore(path); None }
+
+  /** The version directory the store's pointer names, if it has one. */
+  private[operators] def pointedVersion(path: String): Option[String] = {
     val ptr = new java.io.File(path + ".current")
-    if (ptr.exists()) {
-      val name = java.nio.file.Files.readString(ptr.toPath).trim
-      Some(new java.io.File(new java.io.File(path).getAbsoluteFile.getParentFile, name).getPath)
-    } else if (new java.io.File(path).exists()) Some(path)
-    else None
+    if (!ptr.exists()) None
+    else Some(new java.io.File(new java.io.File(path).getAbsoluteFile.getParentFile,
+      java.nio.file.Files.readString(ptr.toPath).trim).getPath)
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
+  private[operators] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete()
   }

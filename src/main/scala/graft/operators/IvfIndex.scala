@@ -139,8 +139,7 @@ object IvfIndex {
     *    hotspot; advise [[repair]] (the cheap remedy — splits only the
     *    absorbed clusters) as soon as ANY cluster crosses the stale bar.
     * Each advisory fires once per index per process. Returns the
-    * post-append global appended fraction; NaN for a pre-r16 index
-    * without staleness metadata (bookkeeping is then skipped entirely).
+    * post-append global appended fraction.
     *
     * Crash window: staged files are invisible until they move into
     * `data/cluster=N` (the [[repair]] pattern), and the moves commit
@@ -175,7 +174,7 @@ object IvfIndex {
   /** A routed batch written to `stageDir` beside the index, invisible to
     * readers until [[commitAppend]]: its per-cluster row counts (from the
     * staged footers) and the appended fraction the index would reach with
-    * it (NaN without bookkeeping). */
+    * it. */
   private[graft] final case class StagedAppend(
       indexDir: String, stageDir: String, counts: Map[Int, Long], fractionAfter: Double)
 
@@ -188,6 +187,7 @@ object IvfIndex {
     val entries = centroidEntries(spark, indexDir)
     val cents = entries.map(_._2).toArray
     val ids = entries.map(_._1).toArray
+    val (base, appended) = (counts(indexDir, BaseCountsFile), counts(indexDir, AppendedCountsFile))
     val stageDir = s"$indexDir/append_stage"
     newVectors
       .select(col(idCol).as("id"), col(vecCol).as("embedding"))
@@ -197,9 +197,9 @@ object IvfIndex {
         SimilaritySearch.nearestCentroid(col("embedding"), cents) + 1))
       .repartition(col("cluster"))
       .write.mode(SaveMode.Overwrite).partitionBy("cluster").parquet(stageDir)
-    val counts = clusterRowCounts(stageDir).filter(_._2 > 0L)
-    StagedAppend(indexDir, stageDir, counts, baseRowTotal(indexDir).fold(Double.NaN)(b =>
-      appendedFraction(indexDir) + counts.values.sum.toDouble / b))
+    val batch = clusterRowCounts(stageDir).filter(_._2 > 0L)
+    StagedAppend(indexDir, stageDir, batch,
+      fraction(appended.values.sum + batch.values.sum, base.values.sum))
   }
 
   /** Second half of [[append]]: move the staged files into
@@ -238,68 +238,43 @@ object IvfIndex {
   }
 
   /** Appended rows / trained-base rows, from the sidecar counts —
-    * driver-side, TWO small file reads, no footer walk (r18). A pre-r18
-    * index (legacy root-level `base_count`) answers from the footer
-    * recount exactly as r16/r17 did; NaN when the index predates
-    * staleness bookkeeping entirely. */
+    * driver-side, TWO small file reads, no footer walk (r18). */
   def appendedFraction(indexDir: String): Double =
-    baseRowTotal(indexDir).fold(Double.NaN) { base =>
-      val appended =
-        if (new java.io.File(s"$indexDir/centroids/$BaseCountsFile").exists())
-          readCounts(s"$indexDir/centroids/$AppendedCountsFile").getOrElse(Map.empty).values.sum
-        else footerRowCount(s"$indexDir/data") - base // legacy (pre-r18): footer recount
-      appended.toDouble / base
-    }
+    fraction(counts(indexDir, AppendedCountsFile).values.sum, counts(indexDir, BaseCountsFile).values.sum)
 
-  /** Trained-base rows (sidecar, or the legacy root `base_count`); None
-    * when the index predates bookkeeping or its base is empty. */
-  private def baseRowTotal(indexDir: String): Option[Long] =
-    readCounts(s"$indexDir/centroids/$BaseCountsFile").map(_.values.sum)
-      .orElse {
-        val meta = new java.io.File(s"$indexDir/base_count")
-        if (meta.exists()) Some(java.nio.file.Files.readString(meta.toPath).trim.toLong) else None
-      }
-      .filter(_ > 0L)
+  /** Appended / base rows; a base of zero that absorbed any appends is
+    * infinitely stale by definition. */
+  private def fraction(appended: Long, base: Long): Double =
+    if (base <= 0L) (if (appended > 0L) Double.PositiveInfinity else 0.0)
+    else appended.toDouble / base
 
   /** The measured rebuild trigger: true once the appended mass crosses
     * `maxAppendedFraction` of the trained base (see BASELINE.md r16 for
-    * the recall ladder behind the default). Unknown staleness (pre-r16
-    * index) answers false — the operator opted out of bookkeeping. */
+    * the recall ladder behind the default). */
   def shouldRebuild(
       indexDir: String,
-      maxAppendedFraction: Double = DefaultRebuildFraction): Boolean = {
-    val f = appendedFraction(indexDir)
-    !f.isNaN && f >= maxAppendedFraction
-  }
+      maxAppendedFraction: Double = DefaultRebuildFraction): Boolean =
+    appendedFraction(indexDir) >= maxAppendedFraction
 
   /** One cluster's staleness: how much appended mass sits under a centroid
-    * trained on `baseRows` rows. A cluster with no trained base that
-    * absorbed any appends is infinitely stale by definition. */
+    * trained on `baseRows` rows. */
   final case class ClusterStaleness(cluster: Int, baseRows: Long, appendedRows: Long) {
-    def fraction: Double =
-      if (baseRows <= 0L) (if (appendedRows > 0L) Double.PositiveInfinity else 0.0)
-      else appendedRows.toDouble / baseRows
+    def fraction: Double = IvfIndex.fraction(appendedRows, baseRows)
   }
 
   /** The staleness report (VERDICT r17 task 2): every cluster whose
     * appended mass crossed `staleFraction` of its trained base, most
     * stale first — the operator-facing form of [[repair]]'s selection,
     * and the `/ivf/status` payload. Sidecar reads only — no footer walk,
-    * no Spark job. Empty for a healthy index AND for a pre-bookkeeping
-    * index (which opted out — [[appendedFraction]] is NaN there). */
+    * no Spark job. Empty for a healthy index. */
   def staleClusters(
       indexDir: String,
       staleFraction: Double = DefaultRebuildFraction): Seq[ClusterStaleness] = {
-    readCounts(s"$indexDir/centroids/$BaseCountsFile")
-      .orElse(readCounts(s"$indexDir/base_counts")) match {
-      case None => Seq.empty
-      case Some(base) =>
-        val appended = sidecarAppendedCounts(indexDir, base)
-        (base.keySet ++ appended.keySet).toSeq
-          .map(id => ClusterStaleness(id, base.getOrElse(id, 0L), appended.getOrElse(id, 0L)))
-          .filter(s => s.fraction >= staleFraction)
-          .sortBy(s => (-s.fraction, s.cluster))
-    }
+    val (base, appended) = (counts(indexDir, BaseCountsFile), counts(indexDir, AppendedCountsFile))
+    (base.keySet ++ appended.keySet).toSeq
+      .map(id => ClusterStaleness(id, base.getOrElse(id, 0L), appended.getOrElse(id, 0L)))
+      .filter(s => s.fraction >= staleFraction)
+      .sortBy(s => (-s.fraction, s.cluster))
   }
 
   /** What one [[repair]] did — the probe's files-rewritten evidence. */
@@ -347,10 +322,7 @@ object IvfIndex {
     * dirs are deleted. A crash between (2) and (3) leaves unreferenced
     * dirs that the next repair garbage-collects; a crash before (2)
     * leaves the index exactly as it was plus invisible garbage. Readers
-    * never see duplicates.
-    *
-    * Requires per-cluster bookkeeping (an r17+ [[build]]); older indexes
-    * fail loudly — rebuild once to opt in. */
+    * never see duplicates. */
   def repair(
       spark: SparkSession,
       indexDir: String,
@@ -360,12 +332,8 @@ object IvfIndex {
       parallelism: Int = 8): RepairStats = {
     val dataDir = s"$indexDir/data"
     val entries = centroidEntries(spark, indexDir)
-    val baseCounts = readCounts(s"$indexDir/centroids/$BaseCountsFile")
-      .orElse(readCounts(s"$indexDir/base_counts"))
-      .getOrElse(throw new IllegalStateException(
-        s"$indexDir predates per-cluster bookkeeping (no base counts) — " +
-          "IvfIndex.repair needs an r17+ build; rebuild once with IvfIndex.build"))
-    val appendedCounts = sidecarAppendedCounts(indexDir, baseCounts)
+    val baseCounts = counts(indexDir, BaseCountsFile)
+    val appendedCounts = counts(indexDir, AppendedCountsFile)
     val knownIds = entries.map(_._1).toSet
 
     // GC: dirs a prior crash left unreferenced (their ids are unknown to
@@ -559,19 +527,11 @@ object IvfIndex {
   /** Per-cluster (base + appended) from the sidecars — the incremental
     * twin of [[recountClusterRows]], two small file reads. */
   def sidecarClusterRows(indexDir: String): Map[Int, Long] = {
-    val base = readCounts(s"$indexDir/centroids/$BaseCountsFile")
-      .orElse(readCounts(s"$indexDir/base_counts")).getOrElse(Map.empty)
-    val appended = sidecarAppendedCounts(indexDir, base)
+    val (base, appended) = (counts(indexDir, BaseCountsFile), counts(indexDir, AppendedCountsFile))
     (base.keySet ++ appended.keySet).iterator
       .map(id => id -> (base.getOrElse(id, 0L) + appended.getOrElse(id, 0L)))
       .toMap
   }
-
-  /** Total data rows from parquet footers (block row counts) — a
-    * driver-side walk of the cluster directories, no Spark job. Audit /
-    * legacy-migration path only since r18 — never on the append path. */
-  private def footerRowCount(dataDir: String): Long =
-    walkDataFiles(new java.io.File(dataDir)).map(fileRowCount).sum
 
   private def fileRowCount(file: java.io.File): Long = {
     import scala.jdk.CollectionConverters._
@@ -644,14 +604,6 @@ object IvfIndex {
     writeCountsFile(s"$stage/$BaseCountsFile", baseCounts)
     writeCountsFile(s"$stage/$AppendedCountsFile", appendedCounts)
     swapDir(stage, path)
-    // a fresh commit supersedes any legacy (pre-r18) root-level count
-    // files — drop them so no reader can ever consult a stale twin
-    val indexDir = new java.io.File(path).getParentFile
-    if (indexDir != null) {
-      new java.io.File(indexDir, "base_count").delete()
-      new java.io.File(indexDir, "base_counts").delete()
-      ()
-    }
   }
 
   private def writeCountsFile(path: String, counts: Map[Int, Long]): Unit = {
@@ -660,65 +612,32 @@ object IvfIndex {
     ()
   }
 
-  private def readCounts(path: String): Option[Map[Int, Long]] = {
-    val f = new java.io.File(path)
-    if (!f.exists()) None
-    else Some(java.nio.file.Files.readString(f.toPath).linesIterator
+  /** One count sidecar of the index; an index without it (built before
+    * the sidecars existed) fails. */
+  private def counts(indexDir: String, file: String): Map[Int, Long] = {
+    val f = new java.io.File(s"$indexDir/centroids/$file")
+    if (!f.exists()) throw StoreUpgrade.outdated(indexDir, s"no centroids/$file sidecar",
+      "rebuild it with IvfIndex.build, or run Engine.initializeIndex() once to upgrade " +
+        "an engine's own index")
+    java.nio.file.Files.readString(f.toPath).linesIterator
       .filter(_.nonEmpty)
       .map { l => val Array(id, n) = l.split(' '); id.toInt -> n.toLong }
-      .toMap)
+      .toMap
   }
 
-  /** The appended-count sidecar, migrating a legacy (pre-r18) index on
-    * first read: legacy layouts tracked only totals, so the one-time
-    * migration recounts from footers (the old per-call cost, paid once)
-    * and seeds the sidecar beside the legacy files for [[append]] to then
-    * maintain incrementally. */
-  private def sidecarAppendedCounts(
-      indexDir: String, baseCounts: Map[Int, Long]): Map[Int, Long] =
-    readCounts(s"$indexDir/centroids/$AppendedCountsFile").getOrElse {
-      val current = clusterRowCounts(s"$indexDir/data")
-      (baseCounts.keySet ++ current.keySet).iterator
-        .map(id => id -> math.max(0L, current.getOrElse(id, 0L) - baseCounts.getOrElse(id, 0L)))
-        .filter(_._2 != 0L)
-        .toMap
-    }
-
   /** Merge one batch's routed counts into the appended sidecar — O(batch
-    * clusters) work plus one atomic file replace; no index walk (r18).
-    * A bookkeeping-free index (no base counts anywhere) skips the merge:
-    * it opted out, and [[appendedFraction]] stays NaN. */
+    * clusters) work plus one atomic file replace; no index walk (r18). */
   private def mergeAppendedCounts(indexDir: String, batch: Map[Int, Long]): Unit = {
-    val baseOpt = readCounts(s"$indexDir/centroids/$BaseCountsFile")
-      .orElse(readCounts(s"$indexDir/base_counts"))
-    baseOpt match {
-      case None => () // pre-r16 index: no bookkeeping to maintain
-      case Some(base) =>
-        // legacy migration: base counts exist only at the root → copy them
-        // into the centroid dir (identical content, so the copy is safe
-        // outside a swap) and seed appended from a one-time footer recount
-        val baseInDir = new java.io.File(s"$indexDir/centroids/$BaseCountsFile")
-        if (!baseInDir.exists()) writeCountsFile(baseInDir.getPath, base)
-        val prior = sidecarAppendedCounts(indexDir, base)
-        // `prior` may already include this batch (migration recounts AFTER
-        // the data write): only add the batch on top of a sidecar READ,
-        // never on top of a recount
-        val merged =
-          if (new java.io.File(s"$indexDir/centroids/$AppendedCountsFile").exists())
-            (prior.keySet ++ batch.keySet).iterator
-              .map(id => id -> (prior.getOrElse(id, 0L) + batch.getOrElse(id, 0L)))
-              .filter(_._2 != 0L).toMap
-          else prior
-        val tmp = java.nio.file.Paths.get(
-          s"$indexDir/centroids/.${AppendedCountsFile}_tmp")
-        java.nio.file.Files.writeString(tmp,
-          merged.toSeq.sorted.map { case (id, n) => s"$id $n" }.mkString("\n"))
-        java.nio.file.Files.move(tmp,
-          java.nio.file.Paths.get(s"$indexDir/centroids/$AppendedCountsFile"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        ()
-    }
+    val prior = counts(indexDir, AppendedCountsFile)
+    val tmp = s"$indexDir/centroids/.${AppendedCountsFile}_tmp"
+    writeCountsFile(tmp, (prior.keySet ++ batch.keySet).iterator
+      .map(id => id -> (prior.getOrElse(id, 0L) + batch.getOrElse(id, 0L)))
+      .filter(_._2 != 0L).toMap)
+    java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
+      java.nio.file.Paths.get(s"$indexDir/centroids/$AppendedCountsFile"),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    ()
   }
 
   /** The persisted (clusterId, centroid) pairs, id-ordered. Ids are NOT

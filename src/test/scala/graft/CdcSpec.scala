@@ -178,18 +178,65 @@ class CdcSpec extends AnyFunSuite {
     assert(vdirs2.toSet.intersect(vdirs.toSet).size == 1, "only the previously-published dir survives")
   }
 
-  test("watermark store reads a legacy unversioned layout and upgrades it on the next write") {
-    val state = Files.createTempDirectory("graft_wm_legacy").toString
-    // seed the pre-versioning layout: a bare parquet dir at state/watermark
-    Seq(("t1", ts("2024-01-02 00:00:00"))).toDF("table_name", "last_updated")
-      .write.parquet(s"$state/${Cdc.WatermarkTable}")
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-01-02 00:00:00")))
+  /** The error every reader and writer raises on a store in an older layout. */
+  private def refused(f: => Any): Unit = {
+    val e = intercept[IllegalStateException](f)
+    assert(e.getMessage.contains("initializeIndex"), e.getMessage)
+  }
+
+  /** The file's `last_updated` parquet type, from its footer. */
+  private def tsType(f: java.io.File): String = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getPath), new org.apache.hadoop.conf.Configuration()))
+    try (r.getFooter.getFileMetaData.getSchema: org.apache.parquet.schema.GroupType)
+      .getType("last_updated").toString
+    finally r.close()
+  }
+
+  // an unversioned Spark-written INT96 store, then a versioned INT64-ms one
+  test("watermark store: old layouts are refused until initializeIndex republishes them") {
+    val state = Files.createTempDirectory("graft_wm_upgrade").toString
+    val scratch = Files.createTempDirectory("graft_wm_upgrade_sink").toString
+    val wm = Cdc.WatermarkTable
+    val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    // the pre-versioning layout: a bare Spark-written parquet dir at state/watermark
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try Seq(("t1", ts("2024-01-02 00:00:00.123456")), ("t0", null.asInstanceOf[Timestamp]))
+      .toDF("table_name", "last_updated").write.parquet(s"$state/$wm")
+    finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
+    refused(Cdc.getWatermark(spark, state, "t1"))
+    refused(Cdc.readWatermarkMap(state))
+    refused(Cdc.updateWatermark(spark, state, "t2", ts("2024-02-01 00:00:00")))
+    refused(Cdc.shardWatermarkStore(state, 4))
+    val engine = new Engine(spark, s"$scratch/src", state, s"$scratch/sink")
+    engine.initializeIndex()
+    assert(Cdc.readWatermarkMap(state) == Map("t1" -> ts("2024-01-02 00:00:00.123456")))
+    // the bare dir is gone; the pointer names a driver-written µs file
+    assert(!new java.io.File(s"$state/$wm").exists())
+    val live = new java.io.File(state, Files.readString(
+      java.nio.file.Paths.get(s"$state/$wm.current")).trim)
+    assert(live.listFiles().filter(_.getName.endsWith(".parquet"))
+      .forall(f => tsType(f).contains("TIMESTAMP(MICROS")))
+    // a second upgrade publishes no new version
+    val before = new java.io.File(state).listFiles().map(_.getName).toSet
+    engine.initializeIndex()
+    assert(new java.io.File(state).listFiles().map(_.getName).toSet == before)
     Cdc.updateWatermark(spark, state, "t2", ts("2024-02-01 00:00:00"))
-    // both keys live; legacy dir replaced by the pointer + version dir
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-01-02 00:00:00")))
     assert(Cdc.getWatermark(spark, state, "t2").contains(ts("2024-02-01 00:00:00")))
-    assert(!new java.io.File(s"$state/${Cdc.WatermarkTable}").exists())
-    assert(new java.io.File(s"$state/${Cdc.WatermarkTable}.current").exists())
+
+    // a versioned store whose live file Spark wrote as INT64 ms
+    val vdir = s"$state/${wm}_v000099"
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MILLIS")
+    try Seq(("t3", ts("2024-03-01 00:00:00.250"))).toDF("table_name", "last_updated")
+      .coalesce(1).write.parquet(vdir)
+    finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
+    Files.writeString(java.nio.file.Paths.get(s"$state/$wm.current"), s"${wm}_v000099")
+    refused(Cdc.readWatermarkMap(state))
+    refused(Cdc.updateWatermark(spark, state, "t4", ts("2024-04-01 00:00:00")))
+    engine.initializeIndex()
+    assert(Cdc.readWatermarkMap(state) == Map("t3" -> ts("2024-03-01 00:00:00.250")))
+    assert(Files.readString(java.nio.file.Paths.get(s"$state/$wm.current")).trim == s"${wm}_v000100")
   }
 
   test("sharded watermark store: migration preserves the map, commits touch only the owning shard") {
@@ -426,7 +473,7 @@ class CdcSpec extends AnyFunSuite {
     def bucketFiles(bk: Int): Map[String, String] = {
       // locate the bucket through the manifest (MVCC: its generation root
       // is part of its identity — an untouched bucket must not even MOVE)
-      val entry = Cdc.readManifest(sink).get
+      val entry = Cdc.readManifest(sink)
         .find(e => e.namespace == "task1" && e.bucket == bk).get
       def walk(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk) else Seq(f)
@@ -502,7 +549,7 @@ class CdcSpec extends AnyFunSuite {
     ids.drop(10).foreach(id => assert(after(id) == s"v1-$id"))
     // the crashed attempt's orphan generation root was GC-swept by the
     // successful commit (it was never referenced by any manifest)
-    val live = Cdc.readManifest(sink).get.map(_.root).toSet
+    val live = Cdc.readManifest(sink).map(_.root).toSet
     orphanRoots.diff(live).foreach { orphan =>
       assert(!new java.io.File(sink, orphan).exists(), s"orphan root $orphan survived GC")
     }
@@ -532,7 +579,7 @@ class CdcSpec extends AnyFunSuite {
     (1 to n).foreach { i =>
       val b = Seq((s"t#$i", Array(i.toFloat), "t", s"v$i")).toDF("id", "embedding", "source", "text")
       Cdc.upsertVectors(spark, sink, b)
-      val roots = Cdc.readManifest(sink).get.map(_.root).distinct
+      val roots = Cdc.readManifest(sink).map(_.root).distinct
       assert(roots.size <= Cdc.MaxLiveRoots,
         s"commit $i left ${roots.size} live roots: $roots")
     }
@@ -583,8 +630,14 @@ class CdcSpec extends AnyFunSuite {
       .toDF("id", "embedding", "source", "text", "namespace", "bucket")
       .write.partitionBy("namespace", "bucket").parquet(s"$sink/vectors")
     val b = Seq(("a#2", Array(2f), "t", "new")).toDF("id", "embedding", "source", "text")
-    val e = intercept[IllegalStateException] { Cdc.upsertVectors(spark, sink, b) }
+    // writers and readers refuse the manifest-less root ...
+    refused(Cdc.upsertVectors(spark, sink, b))
+    refused(Cdc.readVectorSink(spark, sink))
+    // ... and the upgrade cannot adopt it: it names the pre-simb layout
+    val engine = new Engine(spark, s"$sink/src", s"$sink/state", sink)
+    val e = intercept[IllegalStateException] { engine.initializeIndex() }
     assert(e.getMessage.contains("pre-simb"))
+    refused(Cdc.upsertVectors(spark, sink, b))
   }
 
   test("sink layout is chosen at creation, persisted, and honored by later upserts") {

@@ -476,7 +476,7 @@ class ServeHttpSpec extends AnyFunSuite {
     val scratch = Files.createTempDirectory("graft_http_jobs").toString
     val sink = s"$scratch/sink"
     val engine = ivfEngine(scratch, 150, clusters = 4)
-    val entries = Cdc.readManifest(sink).get.filter(_.namespace == Cdc.DefaultNamespace)
+    val entries = Cdc.readManifest(sink).filter(_.namespace == Cdc.DefaultNamespace)
     assert(entries.size > 32 && entries.map(_.root).distinct.size == 1,
       s"the fixture must put one root over 32 bucket directories: ${entries.size}")
     val api = new ServeHttp(engine)

@@ -437,11 +437,19 @@ class SimilaritySpec extends AnyFunSuite {
       "vec_id", "embedding", dir2, k = 4, iters = 2)
     assert(IvfIndex.appendedFraction(dir2) == 0.0 && !IvfIndex.shouldRebuild(dir2))
 
-    // pre-r16 index without bookkeeping: unknown staleness, never advises
+    // an index without the count sidecars (built before they existed) is
+    // refused by every bookkeeping reader, naming the upgrade step
     new java.io.File(s"$dir/centroids/_base_counts").delete()
     new java.io.File(s"$dir/centroids/_appended_counts").delete()
-    assert(IvfIndex.appendedFraction(dir).isNaN && !IvfIndex.shouldRebuild(dir))
-    assert(IvfIndex.staleClusters(dir).isEmpty)
+    def refused(f: => Any): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains("initializeIndex"), e.getMessage)
+    }
+    refused(IvfIndex.appendedFraction(dir))
+    refused(IvfIndex.shouldRebuild(dir))
+    refused(IvfIndex.staleClusters(dir))
+    refused(IvfIndex.append(batchOf(3, 2000L), "vec_id", "embedding", dir))
+    assert(!new java.io.File(s"$dir/append_stage").exists(), "refused before any write")
   }
 
   test("IVF incremental bookkeeping (r18): sidecar counts equal the footer " +
