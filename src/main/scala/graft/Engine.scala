@@ -260,8 +260,9 @@ class Engine(
     * retrains in full instead when there is no live version, or when the
     * append would bring the appended fraction to
     * `IvfIndex.DefaultRebuildFraction` (0.5, the measured recall bar) —
-    * which resets it to 0. Per-cluster staleness stays advisory
-    * ([[ivfStatus]], `/ivf/status`).
+    * which resets it to 0. This is the only way the engine maintains an
+    * index; per-cluster staleness is reported, not acted on ([[ivfStatus]],
+    * `/ivf/status`).
     *
     * `k`, `iters` and `sampleFraction` apply only when the namespace has
     * no live version; otherwise the live version's `_build.properties`
@@ -322,7 +323,7 @@ class Engine(
       }
     }
     if (!appended) {
-      Engine.deleteRecursively(next)
+      Cdc.deleteRecursively(next)
       IvfIndex.build(sinkVectors(entries), "id", "embedding", next.getPath,
         kEff, itersEff, sampleEff)
     }
@@ -337,7 +338,7 @@ class Engine(
     Cdc.fsync(pointer)
     Cdc.fsync(container)
     val keep = Set(next.getName) ++ prevLive
-    versions.filterNot(v => keep(v.getName)).foreach(Engine.deleteRecursively)
+    versions.filterNot(v => keep(v.getName)).foreach(Cdc.deleteRecursively)
   }
 
   /** Text query against a persisted IVF index: `indexDir` may be a direct
@@ -366,9 +367,9 @@ class Engine(
   /** The live IVF snapshot of `indexDir`. With a `current` pointer, the
     * pointed version's, held until the [[Engine.IvfStamp]] changes — the
     * pointer's content and stat, plus the stat of the version's
-    * `centroids` directory, which an in-place `IvfIndex` append, repair or
-    * rebuild replaces or writes into. Without one (a direct build), loaded
-    * per call. None when the index is incomplete ([[liveIvfDir]]'s rule).
+    * `centroids` directory, which an in-place `IvfIndex.append` writes
+    * into. Without one (a direct build), loaded per call. None when the
+    * index is incomplete ([[liveIvfDir]]'s rule).
     * Filled only on the query path. */
   private def ivfSnapshot(indexDir: String): Option[graft.operators.IvfIndex.Snapshot] = {
     val ptr = new java.io.File(indexDir, "current")
@@ -381,28 +382,17 @@ class Engine(
       Engine.stat(new java.io.File(dir, "centroids"))))(load()))
   }
 
-  /** Maintenance inputs of the namespace's live IVF index (VERDICT r17
-    * task 7): the staleness clock, the per-cluster stale report, and the
-    * [[graft.operators.IvfIndex.maintain]] chooser's pick — previously
-    * stderr prints and return values only; surfaced so a fleet operator
-    * (or the `/ivf/status` route) can act on the advisory instead of
-    * tailing logs. Driver-side file reads plus one bounded centroid
-    * collect — no data scan. */
+  /** Staleness of the namespace's live IVF index: the appended fraction
+    * the refresh retrains at ([[refreshIvfIndex]]) and the per-cluster
+    * stale report, for the `/ivf/status` route. Driver-side file reads
+    * plus one bounded centroid collect — no data scan. */
   def ivfStatus(namespace: String = Cdc.DefaultNamespace): Engine.IvfStatus =
     liveIvfDir(namespace) match {
-      case None =>
-        Engine.IvfStatus(exists = false, None, 0, Double.NaN, Seq.empty, "none")
+      case None => Engine.IvfStatus(exists = false, None, 0, Double.NaN, Seq.empty)
       case Some(dir) =>
         import graft.operators.IvfIndex
-        val k = IvfIndex.centroidEntries(spark, dir).size
-        val frac = IvfIndex.appendedFraction(dir)
-        val stale = IvfIndex.staleClusters(dir)
-        val advice = // exactly IvfIndex.maintain's decision, not applied
-          if (stale.isEmpty) "none"
-          else if (k > 0 &&
-            stale.size.toDouble / k >= IvfIndex.DefaultRebuildClusterShare) "rebuild"
-          else "repair"
-        Engine.IvfStatus(exists = true, Some(dir), k, frac, stale, advice)
+        Engine.IvfStatus(exists = true, Some(dir), IvfIndex.centroidEntries(spark, dir).size,
+          IvfIndex.appendedFraction(dir), IvfIndex.staleClusters(dir))
     }
 
   /** `describe_index_stats` analog (`service_layer/service.py:97`). */
@@ -422,16 +412,13 @@ class Engine(
 
 object Engine {
 
-  /** One namespace's IVF maintenance snapshot ([[Engine.ivfStatus]]):
-    * `advice` is the [[graft.operators.IvfIndex.maintain]] chooser's
-    * pick ("none" / "repair" / "rebuild"), reported, not applied. */
+  /** One namespace's IVF staleness snapshot ([[Engine.ivfStatus]]). */
   final case class IvfStatus(
       exists: Boolean,
       dir: Option[String],
       centroids: Int,
       appendedFraction: Double,
-      staleClusters: Seq[graft.operators.IvfIndex.ClusterStaleness],
-      advice: String)
+      staleClusters: Seq[graft.operators.IvfIndex.ClusterStaleness])
 
   /** A namespace's sink relation and the sink's layout at one manifest. */
   private final case class SinkSnapshot(vectors: DataFrame, layout: Cdc.SinkLayout)
@@ -492,10 +479,5 @@ object Engine {
       else if (f.getName.stripPrefix(".").startsWith("_")) java.nio.file.Files.copy(f.toPath, t.toPath)
       else java.nio.file.Files.createLink(t.toPath, f.toPath)
     }
-  }
-
-  private[graft] def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
   }
 }

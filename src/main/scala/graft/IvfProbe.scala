@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   * centroids describe the CURRENT corpus. This probe measures the
   * adversarial case: appends drawn from a SHIFTED distribution (cluster
   * centers the base never saw), in batches up to 10× the trained base,
-  * with recall@10 vs brute force over base ∪ appends at each point —
-  * then a rebuild at the worst point to show the recovery. The resulting
-  * ladder (BASELINE.md r16) is what the DefaultRebuildFraction advisory
-  * threshold is set from.
+  * with recall@10 vs brute force over base ∪ appends at each point, each
+  * beside a full rebuild over the same corpus. The resulting ladder
+  * (BASELINE.md r16) is what `IvfIndex.DefaultRebuildFraction`, the
+  * appended fraction at which `Engine.refreshIvfIndex` retrains, is set
+  * from.
   *
   * Corpus: deterministic (id-seeded PRNG — reruns are bit-identical).
   * Base: nBase vectors around C unit-sphere-ish centers. Appends: same
@@ -30,10 +31,6 @@ import org.apache.spark.sql.functions._
   *       — r18 (VERDICT r17 task 1): per-batch append wall as the index
   *       grows, with the audit recount timed beside it (= what the r17
   *       O(index-files) bookkeeping paid PER BATCH); append must stay flat
-  *   tools/jvmrun.sh graft.IvfProbe maintain [nBase [dim [k]]]
-  *       — r18 (VERDICT r17 task 4): at both measured drift endpoints,
-  *       run the maintain() chooser and the road it did NOT take on a
-  *       clone; the chooser's pick must be the cheaper wall
   * Prints one JSON line per checkpoint. */
 object IvfProbe {
 
@@ -51,20 +48,12 @@ object IvfProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    args.headOption match {
-      case Some("bookkeeping") =>
-        runBookkeeping(
-          args.lift(1).map(_.toInt).getOrElse(20000),
-          args.lift(2).map(_.toInt).getOrElse(12),
-          args.lift(3).map(_.toInt).getOrElse(1000))
-        return
-      case Some("maintain") =>
-        runMaintain(
-          args.lift(1).map(_.toInt).getOrElse(10000),
-          args.lift(2).map(_.toInt).getOrElse(32),
-          args.lift(3).map(_.toInt).getOrElse(16))
-        return
-      case _ => ()
+    if (args.headOption.contains("bookkeeping")) {
+      runBookkeeping(
+        args.lift(1).map(_.toInt).getOrElse(20000),
+        args.lift(2).map(_.toInt).getOrElse(12),
+        args.lift(3).map(_.toInt).getOrElse(1000))
+      return
     }
     val nBase = args.lift(0).map(_.toInt).getOrElse(10000)
     val dim = args.lift(1).map(_.toInt).getOrElse(32)
@@ -93,9 +82,9 @@ object IvfProbe {
       (0 until 10).map(i => makeVec(baseCenters, 777000L + i, dim, 0.15f)) ++
       (0 until 10).map(i => makeVec(shiftCenters, 888000L + i, dim, 0.45f))
 
-    def recallAt(idxDir: String, nprobe: Int, probeSet: Seq[Array[Float]]): Double = {
+    def recallAt(idxDir: String, nprobe: Int): Double = {
       val all = spark.read.parquet(s"$idxDir/data")
-      val per = probeSet.map { p =>
+      val per = probes.map { p =>
         val brute = all
           .select(col("id"),
             round(graft.functions.VectorOps.cosineFast(
@@ -109,29 +98,22 @@ object IvfProbe {
       per.sum / per.size
     }
 
-    // Recall is compared at equal SCANNED FRACTION, not equal nprobe: a
-    // repaired index's centroid set GROWS (k∝n, the documented scale law),
-    // so nprobe=4 of 102 clusters reads far less of the corpus than 4 of
-    // 16 — fixed-nprobe recall across different k is apples-to-oranges.
-    // Fractions 1/16, 2/16, 4/16 reproduce nprobe 1/2/4 exactly on the
-    // k=16 indexes (the r16 ladder stays comparable).
-    def report(idxDir: String, tag: String,
-        probeSet: Seq[Array[Float]] = probes): Unit = {
+    // Recall at SCANNED FRACTIONS 1/16, 2/16, 4/16 of the clusters:
+    // nprobe 1/2/4 on the k=16 indexes (the r16 ladder).
+    def report(idxDir: String, tag: String): Unit = {
       val kCur = IvfIndex.centroidEntries(spark, idxDir).size
       def np(f: Double) = math.max(1, math.ceil(f * kCur).toInt)
       val (n1, n2, n4) = (np(1.0 / 16), np(2.0 / 16), np(4.0 / 16))
       val frac = IvfIndex.appendedFraction(idxDir)
-      val r1 = recallAt(idxDir, n1, probeSet)
-      val r2 = recallAt(idxDir, n2, probeSet)
-      val r4 = recallAt(idxDir, n4, probeSet)
-      println(f"""{"probe":"ivf_staleness","point":"$tag","centroids":$kCur,"appended_fraction":$frac%.2f,"recall10_frac1":$r1%.3f,"recall10_frac2":$r2%.3f,"recall10_frac4":$r4%.3f,"nprobes":"$n1/$n2/$n4","should_rebuild":${IvfIndex.shouldRebuild(idxDir)}}""")
+      val r1 = recallAt(idxDir, n1)
+      val r2 = recallAt(idxDir, n2)
+      val r4 = recallAt(idxDir, n4)
+      println(f"""{"probe":"ivf_staleness","point":"$tag","centroids":$kCur,"appended_fraction":$frac%.2f,"recall10_frac1":$r1%.3f,"recall10_frac2":$r2%.3f,"recall10_frac4":$r4%.3f,"nprobes":"$n1/$n2/$n4","should_rebuild":${frac >= IvfIndex.DefaultRebuildFraction}}""")
     }
 
     report(dir, "base")
     // shifted appends: to 1x, then 5x, then 10x of the trained base; at
-    // each point compare STALE vs PARTIAL REPAIR (r17, VERDICT r16 task 6
-    // — split only the absorbed clusters, on a clone so the stale ladder
-    // keeps accumulating) vs FULL REBUILD, with files-rewritten counts
+    // each point compare STALE vs FULL REBUILD, with files-rewritten counts
     var appendedTo = 0
     Seq(1, 5, 10).foreach { mult =>
       val target = nBase * mult
@@ -139,14 +121,6 @@ object IvfProbe {
       IvfIndex.append(batch, "vec_id", "embedding", dir)
       appendedTo = target
       report(dir, s"append_${mult}x_stale")
-
-      val repDir = s"$dir-rep$mult"
-      copyDir(dir, repDir)
-      val tRep0 = System.nanoTime()
-      val st = IvfIndex.repair(spark, repDir)
-      val repMs = (System.nanoTime() - tRep0) / 1e6
-      println(f"""{"probe":"ivf_repair","point":"append_${mult}x","clusters_split":${st.clustersSplit},"rows_reclustered":${st.rowsReclustered},"files_written":${st.filesWritten},"files_retired":${st.filesRetired},"centroids":"${st.centroidsBefore}->${st.centroidsAfter}","repair_ms":$repMs%.0f}""")
-      report(repDir, s"append_${mult}x_repaired")
 
       val rebDir = s"$dir-reb$mult"
       val tReb0 = System.nanoTime()
@@ -156,30 +130,6 @@ object IvfProbe {
       println(f"""{"probe":"ivf_rebuild","point":"append_${mult}x","files_written":${countFiles(s"$rebDir/data")},"rebuild_ms":$rebMs%.0f}""")
       report(rebDir, s"append_${mult}x_rebuilt")
     }
-
-    // --- CONCENTRATED drift: the scenario partial repair is FOR. All
-    // appended mass lands near ONE unseen center (a new tenant/topic) —
-    // only the clusters that absorbed it are stale, so repair rewrites
-    // the hot region and leaves the rest of the corpus untouched; the
-    // shifted-everywhere ladder above is its degenerate boundary (every
-    // cluster stale ⇒ repair == rebuild-with-local-centroids).
-    val cdir = java.nio.file.Files.createTempDirectory("graft_ivfprobe_conc").toString + "/idx"
-    IvfIndex.build(gen(0 until nBase, baseCenters, 0.15f), "vec_id", "embedding", cdir,
-      k = k, iters = 3)
-    val hotCenter = Array(center(dim, 5555L))
-    val hotN = nBase / 2 // 50% appended fraction, one region
-    IvfIndex.append(gen(20 * nBase until 20 * nBase + hotN, hotCenter, 0.10f),
-      "vec_id", "embedding", cdir)
-    val concProbes: Seq[Array[Float]] =
-      (0 until 10).map(i => makeVec(baseCenters, 777000L + i, dim, 0.15f)) ++
-      (0 until 10).map(i => makeVec(hotCenter, 999000L + i, dim, 0.10f))
-    report(cdir, "conc_stale", concProbes)
-    val tc0 = System.nanoTime()
-    val cst = IvfIndex.repair(spark, cdir)
-    val concMs = (System.nanoTime() - tc0) / 1e6
-    val totalRows = nBase + hotN
-    println(f"""{"probe":"ivf_repair","point":"concentrated_50pct","clusters_split":${cst.clustersSplit},"rows_reclustered":${cst.rowsReclustered},"rows_total":$totalRows,"rewrite_fraction":${cst.rowsReclustered.toDouble / totalRows}%.2f,"centroids":"${cst.centroidsBefore}->${cst.centroidsAfter}","repair_ms":$concMs%.0f}""")
-    report(cdir, "conc_repaired", concProbes)
     spark.stop()
   }
 
@@ -196,7 +146,6 @@ object IvfProbe {
     val spark = Bench.buildSession()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    import graft.operators.IvfIndex
 
     val baseCenters = Array.tabulate(k)(i => center(dim, 1000L + i))
     def gen(ids: Range): org.apache.spark.sql.DataFrame =
@@ -227,102 +176,10 @@ object IvfProbe {
     spark.stop()
   }
 
-  /** The r18 chooser rows (VERDICT r17 task 4): at each measured drift
-    * endpoint, run [[IvfIndex.maintain]] and force the road not taken on
-    * a byte-identical clone; the chooser's pick must be the cheaper wall.
-    * Concentrated drift (one unseen center) ⇒ repair; corpus-wide drift
-    * (every cluster absorbs shifted mass) ⇒ rebuild. */
-  private def runMaintain(nBase: Int, dim: Int, k: Int): Unit = {
-    val spark = Bench.buildSession()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    import graft.operators.IvfIndex
-
-    val baseCenters = Array.tabulate(k)(i => center(dim, 1000L + i))
-    val shiftCenters = Array.tabulate(3 * k)(i => center(dim, 9000L + i))
-    def gen(ids: Range, centers: Array[Array[Float]], noise: Float): org.apache.spark.sql.DataFrame =
-      spark.range(ids.head, ids.last + 1L).as[Long]
-        .map(id => (id, makeVec(centers, id, dim, noise)))
-        .toDF("vec_id", "embedding")
-        .withColumn("embedding", col("embedding").cast("array<float>"))
-
-    def endpoint(tag: String, appendCenters: Array[Array[Float]], noise: Float,
-        appendN: Int, expect: String): Unit = {
-      val dir = java.nio.file.Files.createTempDirectory(s"graft_ivfmnt_$tag").toString + "/idx"
-      IvfIndex.build(gen(0 until nBase, baseCenters, 0.15f), "vec_id", "embedding", dir,
-        k = k, iters = 3)
-      IvfIndex.append(gen(20 * nBase until 20 * nBase + appendN, appendCenters, noise),
-        "vec_id", "embedding", dir)
-      val clone = s"$dir-alt"
-      copyDir(dir, clone)
-      if (tag == "corpus_wide") { copyDir(dir, s"$dir-ser"); copyDir(dir, s"$dir-par") }
-
-      val t0 = System.nanoTime()
-      val action = IvfIndex.maintain(spark, dir)
-      val chosenMs = (System.nanoTime() - t0) / 1e6
-      val choice = action match {
-        case IvfIndex.MaintainRepaired(_) => "repair"
-        case IvfIndex.MaintainRebuilt(_) => "rebuild"
-        case IvfIndex.MaintainNoOp => "noop"
-      }
-      require(choice == expect, s"$tag: chooser picked $choice, ladder says $expect")
-      // rewrite volume is the scale-relevant quantity (walls at this SF
-      // are fixed-cost-dominated and load-noisy): repair's bill is the
-      // rows it reclusters, rebuild's is the whole corpus
-      val total = nBase.toLong + appendN
-      val rewritten = action match {
-        case IvfIndex.MaintainRepaired(st) => st.rowsReclustered
-        case _ => total
-      }
-      // the road not taken, on the clone
-      val t1 = System.nanoTime()
-      val altRewritten =
-        if (choice == "repair") { IvfIndex.rebuildInPlace(spark, clone); total }
-        else IvfIndex.repair(spark, clone).rowsReclustered
-      val altMs = (System.nanoTime() - t1) / 1e6
-      println(f"""{"probe":"ivf_maintain","point":"$tag","choice":"$choice","chosen_ms":$chosenMs%.0f,"alternative_ms":$altMs%.0f,"chose_cheaper":${chosenMs <= altMs},"rows_rewritten":$rewritten,"alt_rows_rewritten":$altRewritten,"rows_total":$total}""")
-
-      // serial-vs-pooled repair (VERDICT r17 task 3), where the endpoint
-      // makes >= 8 clusters stale: the r17 shape paid per-cluster
-      // Spark-job fixed cost one stale cluster at a time
-      if (tag == "corpus_wide") {
-        val (s1, s8) = (s"$dir-ser", s"$dir-par") // pristine pre-maintain copies
-        val stale = IvfIndex.staleClusters(s1).size
-        val ts = System.nanoTime()
-        IvfIndex.repair(spark, s1, parallelism = 1)
-        val serialMs = (System.nanoTime() - ts) / 1e6
-        val tp = System.nanoTime()
-        IvfIndex.repair(spark, s8, parallelism = 8)
-        val pooledMs = (System.nanoTime() - tp) / 1e6
-        println(f"""{"probe":"ivf_repair_parallel","point":"$tag","stale_clusters":$stale,"serial_ms":$serialMs%.0f,"pooled8_ms":$pooledMs%.0f,"speedup":${serialMs / pooledMs}%.2f}""")
-      }
-    }
-
-    // one unseen hot center absorbing half-the-base appended mass — the
-    // r17 measured scenario, the repair regime
-    endpoint("concentrated", Array(center(dim, 5555L)), 0.10f, nBase / 2, expect = "repair")
-    // same mass shifted across 3k unseen centers: every cluster stale —
-    // the rebuild regime
-    endpoint("corpus_wide", shiftCenters, 0.45f, nBase, expect = "rebuild")
-    spark.stop()
-  }
-
   private def countFiles(dir: String): Int = {
     def walk(f: java.io.File): Int =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(walk).sum
       else if (f.getName.endsWith(".parquet")) 1 else 0
     walk(new java.io.File(dir))
-  }
-
-  private def copyDir(from: String, to: String): Unit = {
-    val src = java.nio.file.Paths.get(from)
-    val dst = java.nio.file.Paths.get(to)
-    java.nio.file.Files.walk(src).forEach { p =>
-      val t = dst.resolve(src.relativize(p))
-      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
-      else java.nio.file.Files.copy(p, t,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      ()
-    }
   }
 }

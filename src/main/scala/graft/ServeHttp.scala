@@ -16,9 +16,9 @@ import java.nio.charset.StandardCharsets
   *    circuit-breaker state the poll loop maintains)
   *  - `GET /stats`      — sink index stats rows (`Engine.indexStats`)
   *  - `GET /watermarks` — per-table CDC watermarks (`Engine.watermarks`)
-  *  - `GET /ivf/status[?namespace=N]` — the IVF maintenance inputs
-  *    (`Engine.ivfStatus`): appended fraction, per-cluster stale report,
-  *    and the `IvfIndex.maintain` chooser's advice
+  *  - `GET /ivf/status[?namespace=N]` — IVF staleness
+  *    (`Engine.ivfStatus`): centroid count, appended fraction and the
+  *    per-cluster stale report
   *  - `GET /query?q=text[&k=10][&mode=auto|ivf|exact][&nprobe=N]` —
   *    `{"served_by":…,"rows":[…]}`. Routing: `mode=auto` (the default)
   *    serves from the persisted IVF index at the engine's conventional
@@ -115,11 +115,11 @@ final class ServeHttp(engine: Engine) {
     s.createContext("/watermarks", (ex: HttpExchange) => respond(ex) { _ =>
       rowsJson(engine.watermarks())
     })
-    // GET /ivf/status[?namespace=N] — the IVF maintenance loop's inputs
-    // (VERDICT r17 task 7): staleness clock, per-cluster stale report,
-    // and the maintain() chooser's advice ("none"/"repair"/"rebuild") —
-    // previously stderr prints only; now actionable by a fleet operator.
-    // Bounded: k centroids and at most k stale rows, no data scan.
+    // GET /ivf/status[?namespace=N] — the live IVF index's staleness:
+    // centroid count, appended fraction (the refresh retrains at 0.5) and
+    // per-cluster stale report; how much of the index is stale reads off
+    // stale_clusters against centroids. Bounded: k centroids and at most
+    // k stale rows, no data scan.
     s.createContext("/ivf/status", (ex: HttpExchange) => respond(ex) { params =>
       ivfStatusJson(engine.ivfStatus(
         params.getOrElse("namespace", graft.operators.Cdc.DefaultNamespace)))
@@ -204,7 +204,7 @@ final class ServeHttp(engine: Engine) {
       .mkString("[", ",", "]")
     s"""{"exists":${st.exists},"dir":${st.dir.fold("null")(escape)},""" +
       s""""centroids":${st.centroids},"appended_fraction":${num(st.appendedFraction)},""" +
-      s""""stale_clusters":$stale,"advice":${escape(st.advice)}}"""
+      s""""stale_clusters":$stale}"""
   }
 
   private def respond(ex: HttpExchange)(body: Map[String, String] => String): Unit = {

@@ -941,7 +941,7 @@ object SparkEntry {
     // its predecessors, so the JVM holds at most one scratch at a time.
     var prev = cdcScratchDirs.poll()
     while (prev != null) {
-      deleteRecursively(new java.io.File(prev)); prev = cdcScratchDirs.poll()
+      Cdc.deleteRecursively(new java.io.File(prev)); prev = cdcScratchDirs.poll()
     }
     cdcScratchDirs.add(scratch)
     // layout tuned to the delta volume (~1k chunks/cycle at sf0.1): 8
@@ -1785,14 +1785,9 @@ object SparkEntry {
       val complete = new java.io.File(p, "data/_SUCCESS").isFile &&
         new java.io.File(p, "centroids/_SUCCESS").isFile
       if (!complete) IvfIndex.build(e, "vec_id", "embedding", p, k = 8, iters = 2)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(new java.io.File(p))))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => Cdc.deleteRecursively(new java.io.File(p))))
       p
     })
-  }
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(); ()
   }
 
   /** q93 scratch dirs pending deletion: drained eagerly by the next q93
@@ -1800,7 +1795,7 @@ object SparkEntry {
   private val cdcScratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
     var d = cdcScratchDirs.poll()
-    while (d != null) { deleteRecursively(new java.io.File(d)); d = cdcScratchDirs.poll() }
+    while (d != null) { Cdc.deleteRecursively(new java.io.File(d)); d = cdcScratchDirs.poll() }
   }))
 
   /** ANN search through a persisted IVF index AFTER incremental append
@@ -1840,7 +1835,7 @@ object SparkEntry {
     ivfAppendBuilt.computeIfAbsent(path, p => {
       val marker = new java.io.File(p, "APPENDED")
       if (!marker.isFile) {
-        deleteRecursively(new java.io.File(p))
+        Cdc.deleteRecursively(new java.io.File(p))
         val maxId = e.agg(max(col("vec_id"))).collect()(0).getLong(0)
         IvfIndex.build(e.where(col("vec_id") <= maxId / 2), "vec_id", "embedding",
           p, k = 8, iters = 2)
@@ -1850,7 +1845,7 @@ object SparkEntry {
           "vec_id", "embedding", p)
         marker.createNewFile()
       }
-      Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(new java.io.File(p))))
+      Runtime.getRuntime.addShutdownHook(new Thread(() => Cdc.deleteRecursively(new java.io.File(p))))
       p
     })
   }

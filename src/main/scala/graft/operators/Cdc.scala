@@ -100,27 +100,31 @@ object Cdc {
 
   private def layoutFile(sinkDir: String) = new java.io.File(s"$sinkDir/vectors_layout.properties")
 
-  /** The sink's persisted layout; [[DefaultLayout]] for sinks created
-    * before layouts were persisted (their data used exactly these
-    * constants, so the default is not a guess — it is their layout). */
+  /** The sink's persisted layout. Every writer that creates a sink
+    * persists one; a sink without the file is in an older layout. */
   def readLayout(sinkDir: String): SinkLayout = {
     val f = layoutFile(sinkDir)
-    if (!f.exists()) DefaultLayout
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try {
-        val kv = src.getLines().flatMap { l =>
-          l.split("=", 2) match { case Array(k, v) => Some(k.trim -> v.trim); case _ => None }
-        }.toMap
-        SinkLayout(kv("buckets").toInt, kv("simbits").toInt)
-      } finally src.close()
-    }
+    if (!f.exists()) throw StoreUpgrade.outdated(sinkDir, s"no ${f.getName}")
+    val src = scala.io.Source.fromFile(f)
+    try {
+      val kv = src.getLines().flatMap { l =>
+        l.split("=", 2) match { case Array(k, v) => Some(k.trim -> v.trim); case _ => None }
+      }.toMap
+      SinkLayout(kv("buckets").toInt, kv("simbits").toInt)
+    } finally src.close()
   }
 
-  private def writeLayout(sinkDir: String, layout: SinkLayout): Unit = {
-    val w = new java.io.FileWriter(layoutFile(sinkDir))
-    try w.write(s"buckets=${layout.buckets}\nsimbits=${layout.simBits}\n") finally w.close()
-  }
+  /** Persist `layout` unless the sink has a layout file: written beside
+    * and renamed over, so a concurrent reader sees no file or a whole one. */
+  private[operators] def ensureLayout(sinkDir: String, layout: SinkLayout): Unit =
+    if (!layoutFile(sinkDir).exists()) {
+      val tmp = java.nio.file.Files.createTempFile(
+        java.nio.file.Paths.get(sinkDir), ".vectors_layout", ".tmp")
+      java.nio.file.Files.writeString(tmp, s"buckets=${layout.buckets}\nsimbits=${layout.simBits}\n")
+      java.nio.file.Files.move(tmp, layoutFile(sinkDir).toPath,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      ()
+    }
 
   /** namespace + bucket + simb are Hive-style partition columns on disk. */
   val vectorSinkSchema: StructType = StructType(Seq(
@@ -673,11 +677,11 @@ object Cdc {
   /** Create an absent sink (no-op once created): persist `layout` unless a
     * layout file exists, and publish an empty manifest. Write-path entry
     * point only — readers never mutate. */
-  private def ensureManifest(sinkDir: String, layout: Option[SinkLayout] = None): Unit =
+  private def ensureManifest(sinkDir: String, layout: SinkLayout = DefaultLayout): Unit =
     if (!manifestPointer(sinkDir).exists()) {
       StoreUpgrade.requireManifest(sinkDir)
       new java.io.File(sinkDir).mkdirs()
-      layout.filterNot(_ => layoutFile(sinkDir).exists()).foreach(writeLayout(sinkDir, _))
+      ensureLayout(sinkDir, layout)
       publishManifest(sinkDir, Seq.empty)
     }
 
@@ -720,7 +724,7 @@ object Cdc {
     * layout choice and publish an empty manifest. An existing sink keeps
     * its original layout — `layout` only applies to a fresh sink. */
   def initVectorSink(spark: SparkSession, sinkDir: String, layout: SinkLayout = DefaultLayout): Unit =
-    ensureManifest(sinkDir, Some(layout))
+    ensureManifest(sinkDir, layout)
 
   /** Snapshot read of the live sink. Resolves the manifest pointer and
     * the file listing eagerly at DataFrame creation, so the returned
@@ -1435,7 +1439,7 @@ object Cdc {
       java.nio.file.Files.readString(ptr.toPath).trim).getPath)
   }
 
-  private[operators] def deleteRecursively(f: java.io.File): Unit = {
+  private[graft] def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete()
   }

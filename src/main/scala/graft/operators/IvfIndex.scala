@@ -24,53 +24,37 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, IntegerType, 
   * the corpus distribution — the right trade when vectors are clustered
   * (real embedding corpora) rather than isotropic.
   *
-  * Cluster ids are arbitrary non-negative ints, NOT positions: a partial
-  * [[repair]] retires split clusters' ids and mints fresh ones, so every
-  * read path maps ranked centroid POSITIONS back to stored ids
+  * Cluster ids are arbitrary non-negative ints, NOT positions: an index
+  * that an older build repaired in place holds non-contiguous ids, so
+  * every read path maps ranked centroid POSITIONS back to stored ids
   * ([[centroidEntries]]) instead of assuming 0..k-1 contiguity.
   *
-  * Metadata layout (r18): the per-cluster trained-base counts
-  * (`_base_counts`) and per-cluster appended counts (`_appended_counts`)
-  * live INSIDE the centroid directory — underscore-prefixed, so Spark's
-  * parquet listing ignores them — and are therefore committed atomically
-  * with the centroid matrix by the same stage-and-rename swap
-  * ([[swapDir]]): a crash can never leave centroids naming clusters the
-  * counts don't know, or vice versa (ADVICE r17 — the r17 layout wrote
-  * the counts as a second, separate commit). Staleness bookkeeping is
-  * INCREMENTAL (VERDICT r17 task 1): [[append]] counts what it just
-  * routed (footer reads of its staged files, O(batch)) and merges it
-  * into the sidecar, so per-batch bookkeeping cost is flat in index size
-  * — the r17 shape re-walked EVERY parquet footer in the index per
-  * append batch, O(index files) driver work that at a 100 TB index
-  * (~800k files) is hours per maintenance call. The footer recount
-  * survives as the audit/recovery path ([[recountClusterRows]];
-  * SimilaritySpec pins sidecar == recount after mixed
-  * append/repair/rebuild sequences). */
+  * Metadata layout: the per-cluster trained-base counts (`_base_counts`)
+  * and per-cluster appended counts (`_appended_counts`) live INSIDE the
+  * centroid directory — underscore-prefixed, so Spark's parquet listing
+  * ignores them — and are committed with the centroid matrix by one
+  * stage-and-rename swap ([[swapDir]]): a crash can never leave centroids
+  * naming clusters the counts don't know, or vice versa. Staleness
+  * bookkeeping is INCREMENTAL: [[append]] counts what it just routed
+  * (footer reads of its staged files, O(batch)) and merges it into the
+  * sidecar, so per-batch bookkeeping cost is flat in index size. The
+  * footer recount survives as the audit path ([[recountClusterRows]];
+  * SimilaritySpec pins sidecar == recount across build, append and the
+  * engine's full retrain).
+  *
+  * The index is maintained one way: `Engine.refreshIvfIndex` appends to a
+  * linked copy of the live version and retrains in full once the appended
+  * fraction would reach [[DefaultRebuildFraction]]. */
 object IvfIndex {
 
-  /** Appended fraction at which [[append]] advises a rebuild — set from
-    * the measured recall-drift ladder (BASELINE.md r16: with appends drawn
-    * from a SHIFTED distribution — the adversarial case — recall@10 at
-    * nprobe=2 degrades as stale centroids under-describe the appended
-    * mass; at-distribution appends barely move it). 0.5 = advise once the
-    * appended mass reaches half the trained base. The same threshold is
-    * the PER-CLUSTER stale bar ([[staleClusters]], [[repair]] selection). */
+  /** Appended fraction at which the engine's refresh retrains in full —
+    * set from the measured recall-drift ladder (BASELINE.md r16: with
+    * appends drawn from a SHIFTED distribution — the adversarial case —
+    * recall@10 at nprobe=2 degrades as stale centroids under-describe the
+    * appended mass; at-distribution appends barely move it). 0.5 = retrain
+    * once the appended mass reaches half the trained base. The same
+    * threshold is the PER-CLUSTER stale bar ([[staleClusters]]). */
   val DefaultRebuildFraction: Double = 0.5
-
-  /** Share of clusters stale at which [[maintain]] prefers a full
-    * [[rebuildInPlace]] over a partial [[repair]] — read off the r17
-    * ladder (BASELINE.md r17): under corpus-wide drift repair degenerates
-    * to a full rewrite with LOCAL centroids (matched rebuild's recall at
-    * 5× shifted mass but rewrote ~100% of rows for it), so once half the
-    * clusters are stale the global retrain is the same write bill with
-    * strictly better centroids. */
-  val DefaultRebuildClusterShare: Double = 0.5
-
-  /** Advisory sink — stderr in production; SimilaritySpec swaps in a
-    * buffer to pin that the concentrated-drift advisory fires exactly
-    * once and names the absorbed cluster (the [[graft.operators.Cdc]]
-    * `onBeforeCommit` test-hook precedent). */
-  private[graft] var onAdvisory: String => Unit = m => System.err.println(m)
 
   /** Train, assign, persist. One pass for training (sampled), one for the
     * partitioned write; the only driver-resident state is k×dim floats. */
@@ -98,9 +82,7 @@ object IvfIndex {
     // re-walk); committed beside the centroid matrix in one directory
     val perCluster = clusterRowCounts(s"$indexDir/data")
     writeCentroids(spark, centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq,
-      s"$indexDir/centroids", perCluster, Map.empty)
-    resetAdvisories(indexDir) // a rebuild over the same dir closes the episode
-    ()
+      s"$indexDir/centroids", perCluster)
   }
 
   /** Incremental maintenance — the Pinecone-upsert analog for the IVF
@@ -122,54 +104,21 @@ object IvfIndex {
     * retrains in full instead once an append would bring the appended
     * fraction to [[DefaultRebuildFraction]] (0.5).
     *
-    * Staleness is BOUNDED, tracked INCREMENTALLY, and advised at two
-    * grains (VERDICT r17 tasks 1-2):
-    *  - bookkeeping: the batch is written to a private staging directory
-    *    and its per-cluster counts come from the staged files' footers —
-    *    O(batch), never a walk of the index and no Spark job — then merge
-    *    into the `_appended_counts` sidecar; per-batch cost is flat in
-    *    index size (IvfProbe `bookkeeping` ladder).
-    *  - GLOBAL advisory: once total appended mass crosses
-    *    [[DefaultRebuildFraction]] of the trained base, advise a rebuild
-    *    (recall at fixed nprobe degrades corpus-wide, BASELINE.md r16).
-    *  - PER-CLUSTER advisory: concentrated drift (all appends near one
-    *    unseen center — BASELINE.md r17's own scenario) makes ONE cluster
-    *    stale at a global fraction of ~0.03, far below the global bar, and
-    *    that absorbed cluster silently degrades into a per-probe scan
-    *    hotspot; advise [[repair]] (the cheap remedy — splits only the
-    *    absorbed clusters) as soon as ANY cluster crosses the stale bar.
-    * Each advisory fires once per index per process. Returns the
-    * post-append global appended fraction.
+    * Bookkeeping: the batch is written to a private staging directory and
+    * its per-cluster counts come from the staged files' footers — O(batch),
+    * never a walk of the index and no Spark job — then merge into the
+    * `_appended_counts` sidecar; per-batch cost is flat in index size
+    * (IvfProbe `bookkeeping` ladder). Returns the post-append global
+    * appended fraction.
     *
     * Crash window: staged files are invisible until they move into
-    * `data/cluster=N` (the [[repair]] pattern), and the moves commit
-    * before the sidecar merge, so a crash between them UNDER-counts
-    * appended rows — staleness is then detected late, never wrongly;
-    * reads are unaffected (they never consult the counts).
-    * [[recountClusterRows]] is the audit that re-derives truth from
-    * footers. */
-  def append(newVectors: DataFrame, idCol: String, vecCol: String, indexDir: String): Double = {
-    val frac = commitAppend(stageAppend(newVectors, idCol, vecCol, indexDir))
-    val key = new java.io.File(indexDir).getAbsolutePath
-    if (frac >= DefaultRebuildFraction && rebuildAdvised.add(key))
-      onAdvisory(
-        f"[ivf] index $indexDir: appended fraction $frac%.2f >= " +
-          f"$DefaultRebuildFraction%.2f of the trained base — recall at fixed " +
-          "nprobe degrades under stale centroids (BASELINE.md r16); rebuild " +
-          "with IvfIndex.build/rebuildInPlace, or let IvfIndex.maintain choose")
-    else {
-      val stale = staleClusters(indexDir)
-      if (stale.nonEmpty && repairAdvised.add(key))
-        onAdvisory(
-          f"[ivf] index $indexDir: cluster ${stale.head.cluster} absorbed " +
-            f"${stale.head.appendedRows} appended rows against a trained base of " +
-            f"${stale.head.baseRows} (${stale.size} stale cluster(s) total at " +
-            f"global appended fraction $frac%.2f) — a concentrated hotspot scans " +
-            "long before the global rebuild bar; repair with IvfIndex.repair " +
-            "(splits only the absorbed clusters), or let IvfIndex.maintain choose")
-    }
-    frac
-  }
+    * `data/cluster=N`, and the moves commit before the sidecar merge, so a
+    * crash between them UNDER-counts appended rows — staleness is then
+    * detected late, never wrongly; reads are unaffected (they never
+    * consult the counts). [[recountClusterRows]] is the audit that
+    * re-derives truth from footers. */
+  def append(newVectors: DataFrame, idCol: String, vecCol: String, indexDir: String): Double =
+    commitAppend(stageAppend(newVectors, idCol, vecCol, indexDir))
 
   /** A routed batch written to `stageDir` beside the index, invisible to
     * readers until [[commitAppend]]: its per-cluster row counts (from the
@@ -192,7 +141,7 @@ object IvfIndex {
     newVectors
       .select(col(idCol).as("id"), col(vecCol).as("embedding"))
       // nearestCentroid answers a POSITION in the matrix; store the ID
-      // (identical for a never-repaired index, where ids are 0..k-1)
+      // (identical for an index whose ids are 0..k-1)
       .withColumn("cluster", element_at(lit(ids),
         SimilaritySearch.nearestCentroid(col("embedding"), cents) + 1))
       .repartition(col("cluster"))
@@ -205,7 +154,7 @@ object IvfIndex {
   /** Second half of [[append]]: move the staged files into
     * `data/cluster=N` (one rename each; part-file names are unique per
     * write job), then merge the staged counts into the appended sidecar.
-    * Emits no advisory — [[append]] does. Returns the appended fraction. */
+    * Returns the appended fraction. */
   private[graft] def commitAppend(staged: StagedAppend): Double = {
     val dataDir = s"${staged.indexDir}/data"
     clusterDirs(staged.stageDir).foreach { case (id, d) =>
@@ -214,27 +163,9 @@ object IvfIndex {
       Option(d.listFiles()).toSeq.flatten.foreach(f =>
         java.nio.file.Files.move(f.toPath, target.resolve(f.getName)))
     }
-    deleteRecursively(new java.io.File(staged.stageDir))
+    Cdc.deleteRecursively(new java.io.File(staged.stageDir))
     mergeAppendedCounts(staged.indexDir, staged.counts)
     appendedFraction(staged.indexDir)
-  }
-  // advise once per index per DRIFT EPISODE — a maintenance loop appending
-  // on a cadence must not spam stderr every batch (same shape as the CDC
-  // store's shard advisory), but a successful repair/rebuild closes the
-  // episode ([[resetAdvisories]]) so the NEXT accumulation advises again
-  // (r18 — the r17 once-per-process key silenced every episode after the
-  // first for the life of the driver). Global-rebuild and
-  // per-cluster-repair advisories are tracked separately (a repaired
-  // index can later cross the global bar).
-  private val rebuildAdvised =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val repairAdvised =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def resetAdvisories(indexDir: String): Unit = {
-    val key = new java.io.File(indexDir).getAbsolutePath
-    rebuildAdvised.remove(key)
-    repairAdvised.remove(key)
-    ()
   }
 
   /** Appended rows / trained-base rows, from the sidecar counts —
@@ -248,279 +179,28 @@ object IvfIndex {
     if (base <= 0L) (if (appended > 0L) Double.PositiveInfinity else 0.0)
     else appended.toDouble / base
 
-  /** The measured rebuild trigger: true once the appended mass crosses
-    * `maxAppendedFraction` of the trained base (see BASELINE.md r16 for
-    * the recall ladder behind the default). */
-  def shouldRebuild(
-      indexDir: String,
-      maxAppendedFraction: Double = DefaultRebuildFraction): Boolean =
-    appendedFraction(indexDir) >= maxAppendedFraction
-
   /** One cluster's staleness: how much appended mass sits under a centroid
     * trained on `baseRows` rows. */
   final case class ClusterStaleness(cluster: Int, baseRows: Long, appendedRows: Long) {
     def fraction: Double = IvfIndex.fraction(appendedRows, baseRows)
   }
 
-  /** The staleness report (VERDICT r17 task 2): every cluster whose
-    * appended mass crossed `staleFraction` of its trained base, most
-    * stale first — the operator-facing form of [[repair]]'s selection,
-    * and the `/ivf/status` payload. Sidecar reads only — no footer walk,
-    * no Spark job. Empty for a healthy index. */
-  def staleClusters(
-      indexDir: String,
-      staleFraction: Double = DefaultRebuildFraction): Seq[ClusterStaleness] = {
+  /** The staleness report: every cluster whose appended mass reached
+    * [[DefaultRebuildFraction]] of its trained base, most stale first —
+    * the `/ivf/status` payload. Sidecar reads only — no footer walk, no
+    * Spark job. Empty for a healthy index. */
+  def staleClusters(indexDir: String): Seq[ClusterStaleness] = {
     val (base, appended) = (counts(indexDir, BaseCountsFile), counts(indexDir, AppendedCountsFile))
     (base.keySet ++ appended.keySet).toSeq
       .map(id => ClusterStaleness(id, base.getOrElse(id, 0L), appended.getOrElse(id, 0L)))
-      .filter(s => s.fraction >= staleFraction)
+      .filter(s => s.fraction >= DefaultRebuildFraction)
       .sortBy(s => (-s.fraction, s.cluster))
-  }
-
-  /** What one [[repair]] did — the probe's files-rewritten evidence. */
-  final case class RepairStats(
-      clustersSplit: Int,
-      rowsReclustered: Long,
-      filesWritten: Int,
-      filesRetired: Int,
-      centroidsBefore: Int,
-      centroidsAfter: Int)
-
-  /** PARTIAL rebuild (VERDICT r16 task 6): split only the clusters that
-    * absorbed appended mass, leaving every untouched cluster directory in
-    * place — the cheap alternative to the one remaining O(corpus)
-    * maintenance step (a full retrain) in the IVF family.
-    *
-    * Selection: a cluster is stale when its appended rows reach
-    * `staleFraction` of its trained base ([[staleClusters]] — sidecar
-    * counts, no footer walk; a cluster with no trained base that absorbed
-    * any appends is stale by definition). Each stale cluster is
-    * re-clustered LOCALLY — deterministic Lloyd over just its rows
-    * ([[SimilaritySearch.ivfTrain]]) into ~currentRows/meanBaseClusterSize
-    * children (min 2, capped) — so repair cost tracks the appended mass,
-    * never the corpus. The centroid set GROWS; split ids are retired,
-    * children take fresh ids.
-    *
-    * Stale clusters are processed CONCURRENTLY on a driver-side pool of
-    * `parallelism` threads (VERDICT r17 task 3 — the serial r17 foreach
-    * paid per-cluster Spark-job fixed cost one at a time; the fix is the
-    * same shape as `Cdc.syncCycleOutcomesOn`' table pool). Each split
-    * writes its children to a PRIVATE staging directory and the driver
-    * moves the finished `cluster=N` dirs into `data/` — concurrent Spark
-    * writers never share an output root (two jobs appending one root race
-    * on the committer's `_temporary`), and a rename per child dir is the
-    * whole serialization cost.
-    *
-    * Crash ordering (single-maintainer, like [[build]]): (1) children are
-    * written under FRESH cluster ids — invisible to readers, who probe
-    * only ids the centroid file knows; (2) the centroid directory —
-    * centroid matrix AND both count sidecars, one directory since r18 —
-    * is replaced via a single stage-and-rename: after this instant
-    * readers see the children, the new counts, and never the retired ids,
-    * and no crash can leave the matrix and the counts disagreeing
-    * (ADVICE r17 — the r17 two-file commit could); (3) retired cluster
-    * dirs are deleted. A crash between (2) and (3) leaves unreferenced
-    * dirs that the next repair garbage-collects; a crash before (2)
-    * leaves the index exactly as it was plus invisible garbage. Readers
-    * never see duplicates. */
-  def repair(
-      spark: SparkSession,
-      indexDir: String,
-      staleFraction: Double = DefaultRebuildFraction,
-      maxChildrenPerSplit: Int = 16,
-      iters: Int = 2,
-      parallelism: Int = 8): RepairStats = {
-    val dataDir = s"$indexDir/data"
-    val entries = centroidEntries(spark, indexDir)
-    val baseCounts = counts(indexDir, BaseCountsFile)
-    val appendedCounts = counts(indexDir, AppendedCountsFile)
-    val knownIds = entries.map(_._1).toSet
-
-    // GC: dirs a prior crash left unreferenced (their ids are unknown to
-    // the centroid file, so no reader ever probed them) + orphaned staging
-    clusterDirs(dataDir).filterNot { case (id, _) => knownIds(id) }
-      .foreach { case (_, d) => deleteRecursively(d) }
-    deleteRecursively(new java.io.File(s"$indexDir/repair_stage"))
-    deleteRecursively(new java.io.File(s"$indexDir/rebuild_stage"))
-
-    val meanBase = {
-      val bs = baseCounts.values.filter(_ > 0L)
-      if (bs.isEmpty) 1L else math.max(1L, bs.sum / bs.size)
-    }
-    val stale = entries.map(_._1).filter { id =>
-      val base = baseCounts.getOrElse(id, 0L)
-      val appended = appendedCounts.getOrElse(id, 0L)
-      if (base <= 0L) appended > 0L
-      else appended.toDouble / base >= staleFraction
-    }
-    if (stale.isEmpty)
-      return RepairStats(0, 0L, 0, 0, entries.size, entries.size)
-
-    val nextId = new java.util.concurrent.atomic.AtomicInteger(entries.map(_._1).max + 1)
-    final case class Split(
-        retiredId: Int,
-        childEntries: Seq[(Int, Array[Float])],
-        rows: Long,
-        filesWritten: Int,
-        filesRetired: Int)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(parallelism, stale.size)))
-    val splits: Seq[Split] =
-      try {
-        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val futures = stale.map { id =>
-          scala.concurrent.Future {
-            val clusterPath = s"$dataDir/cluster=$id"
-            val dfc = spark.read.parquet(clusterPath) // (id, embedding) — the
-            // partition column is not materialized when reading the dir directly
-            // exact row count from THIS cluster's footers — O(split), and
-            // robust to a sidecar that under-counted across a crash
-            val nRows = dataFiles(clusterPath).map(fileRowCount).sum
-            val children = math.min(maxChildrenPerSplit,
-              math.max(2L, (nRows + meanBase - 1) / meanBase)).toInt
-            val childCents = SimilaritySearch.ivfTrain(dfc, "id", "embedding", children, iters)
-            val idBase = nextId.getAndAdd(childCents.length)
-            val childIds = Array.tabulate(childCents.length)(idBase + _)
-            // (1) children under fresh ids, via a PRIVATE staging root —
-            // finished cluster dirs are renamed into data/ (distinct names
-            // by construction, so concurrent splits never collide)
-            val stageRoot = s"$indexDir/repair_stage/split_$id"
-            dfc
-              .withColumn("cluster", element_at(lit(childIds),
-                SimilaritySearch.nearestCentroid(col("embedding"), childCents) + 1))
-              .repartition(col("cluster"))
-              .write.mode(SaveMode.Overwrite).partitionBy("cluster").parquet(stageRoot)
-            var moved = 0
-            childIds.foreach { cid =>
-              val from = new java.io.File(s"$stageRoot/cluster=$cid")
-              if (from.exists()) { // a child Lloyd left empty gets no dir
-                java.nio.file.Files.move(from.toPath,
-                  java.nio.file.Paths.get(s"$dataDir/cluster=$cid"))
-                moved += dataFiles(s"$dataDir/cluster=$cid").size
-              }
-            }
-            Split(id, childIds.zip(childCents).toSeq, nRows, moved,
-              dataFiles(clusterPath).size)
-          }(ec)
-        }
-        futures.map(f =>
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-      } finally { pool.shutdown(); () }
-    deleteRecursively(new java.io.File(s"$indexDir/repair_stage"))
-
-    // children become trained structure: their CURRENT rows are the base,
-    // their appended count zero; untouched clusters keep both counts
-    val staleSet = stale.toSet
-    val newEntries = splits.flatMap(_.childEntries)
-    val newBase = scala.collection.mutable.Map[Int, Long]() ++
-      (baseCounts -- staleSet)
-    val newAppended = scala.collection.mutable.Map[Int, Long]() ++
-      (appendedCounts -- staleSet).filter(_._2 != 0L)
-    newEntries.foreach { case (cid, _) =>
-      newBase(cid) = dataFiles(s"$dataDir/cluster=$cid").map(fileRowCount).sum
-    }
-
-    // (2) commit: matrix + both count sidecars in ONE staged dir, promoted
-    // by a single rename — never a window where they disagree (r18)
-    val finalEntries = entries.filterNot(e => staleSet(e._1)) ++ newEntries
-    writeCentroids(spark, finalEntries, s"$indexDir/centroids",
-      newBase.toMap, newAppended.toMap)
-
-    // (3) retire the split dirs — now invisible to every reader
-    stale.foreach(id => deleteRecursively(new java.io.File(s"$dataDir/cluster=$id")))
-    resetAdvisories(indexDir) // episode closed: the next drift advises anew
-    RepairStats(stale.size, splits.map(_.rows).sum, splits.map(_.filesWritten).sum,
-      splits.map(_.filesRetired).sum, entries.size, finalEntries.size)
-  }
-
-  /** Full retrain of a LIVE index in place — global Lloyd over the whole
-    * current corpus (base ∪ appends), committed with [[repair]]'s crash
-    * machinery: new clusters under fresh ids (invisible until commit),
-    * one atomic centroid-directory swap, then retirement of every old
-    * dir. The remedy for corpus-wide drift, where [[repair]]'s per-cluster
-    * LOCAL retrains rewrite ~everything anyway but keep centroids blind to
-    * cross-cluster structure (BASELINE.md r17's shifted-everywhere ladder).
-    * Serving never pauses: readers resolve the old snapshot until the
-    * swap, the new one after. `k` 0 keeps the current cluster count. */
-  def rebuildInPlace(
-      spark: SparkSession,
-      indexDir: String,
-      k: Int = 0,
-      iters: Int = 3,
-      sampleFraction: Double = 1.0): Int = {
-    val dataDir = s"$indexDir/data"
-    val entries = centroidEntries(spark, indexDir)
-    val kEff = if (k > 0) k else entries.size
-    val all = spark.read.parquet(dataDir).select(col("id"), col("embedding"))
-    val cents = SimilaritySearch.ivfTrain(all, "id", "embedding", kEff, iters, sampleFraction)
-    val firstId = entries.map(_._1).max + 1
-    val ids = Array.tabulate(cents.length)(firstId + _)
-    val stageRoot = s"$indexDir/rebuild_stage"
-    deleteRecursively(new java.io.File(stageRoot))
-    all
-      .withColumn("cluster", element_at(lit(ids),
-        SimilaritySearch.nearestCentroid(col("embedding"), cents) + 1))
-      .repartition(col("cluster"))
-      .write.mode(SaveMode.Overwrite).partitionBy("cluster").parquet(stageRoot)
-    ids.foreach { cid =>
-      val from = new java.io.File(s"$stageRoot/cluster=$cid")
-      if (from.exists())
-        java.nio.file.Files.move(from.toPath,
-          java.nio.file.Paths.get(s"$dataDir/cluster=$cid"))
-    }
-    deleteRecursively(new java.io.File(stageRoot))
-    val newBase = ids.map(cid =>
-      cid -> dataFiles(s"$dataDir/cluster=$cid").map(fileRowCount).sum).toMap
-    // atomic commit: fresh matrix + fresh base counts + zero appended
-    writeCentroids(spark, ids.zip(cents).toSeq, s"$indexDir/centroids",
-      newBase, Map.empty)
-    // retire every pre-rebuild dir (now unreferenced)
-    entries.foreach { case (id, _) =>
-      deleteRecursively(new java.io.File(s"$dataDir/cluster=$id"))
-    }
-    resetAdvisories(indexDir) // episode closed: the next drift advises anew
-    cents.length
-  }
-
-  /** What [[maintain]] decided and did. */
-  sealed trait MaintainAction
-  case object MaintainNoOp extends MaintainAction
-  final case class MaintainRepaired(stats: RepairStats) extends MaintainAction
-  final case class MaintainRebuilt(centroids: Int) extends MaintainAction
-
-  /** The maintenance chooser (VERDICT r17 task 4) — encodes the two
-    * measured drift regimes onto the three tools:
-    *  - no cluster stale            → no-op (append-and-serve);
-    *  - some clusters stale, under
-    *    `rebuildClusterShare` of all → [[repair]] (concentrated drift —
-    *    BASELINE.md r17: 1/16 clusters split, 0.37 of rows rewritten,
-    *    recall held);
-    *  - stale share ≥ the bar       → [[rebuildInPlace]] (corpus-wide
-    *    drift — repair would rewrite ~everything with strictly worse,
-    *    local-only centroids; same ladder).
-    * The default bar is [[DefaultRebuildClusterShare]]. */
-  def maintain(
-      spark: SparkSession,
-      indexDir: String,
-      staleFraction: Double = DefaultRebuildFraction,
-      rebuildClusterShare: Double = DefaultRebuildClusterShare,
-      parallelism: Int = 8): MaintainAction = {
-    val stale = staleClusters(indexDir, staleFraction)
-    if (stale.isEmpty) MaintainNoOp
-    else {
-      val total = centroidEntries(spark, indexDir).size
-      if (total > 0 && stale.size.toDouble / total >= rebuildClusterShare)
-        MaintainRebuilt(rebuildInPlace(spark, indexDir))
-      else
-        MaintainRepaired(repair(spark, indexDir, staleFraction,
-          parallelism = parallelism))
-    }
   }
 
   /** AUDIT path: per-cluster row counts re-derived from every parquet
     * footer — the O(index files) ground truth the incremental sidecars
-    * replaced on the hot path (SimilaritySpec pins
-    * base + appended == this, per cluster, after mixed maintenance). */
+    * replaced on the hot path (SimilaritySpec pins base + appended ==
+    * this, per cluster, on every version the engine publishes). */
   def recountClusterRows(indexDir: String): Map[Int, Long] =
     clusterRowCounts(s"$indexDir/data")
 
@@ -549,9 +229,6 @@ object IvfIndex {
       !f.getName.startsWith(".")) Seq(f)
     else Seq.empty
 
-  private def dataFiles(dir: String): Seq[java.io.File] =
-    walkDataFiles(new java.io.File(dir))
-
   /** (clusterId, dir) for every `cluster=N` child of the data dir. */
   private def clusterDirs(dataDir: String): Seq[(Int, java.io.File)] =
     Option(new java.io.File(dataDir).listFiles()).toSeq.flatten
@@ -564,24 +241,18 @@ object IvfIndex {
       id -> walkDataFiles(d).map(fileRowCount).sum
     }.toMap
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
-
   /** Replace `target` with `stage` via renames: readers see the old set or
     * the new set; the only crash window is a loud missing-dir failure,
     * never a silently partial centroid matrix. */
   private def swapDir(stage: String, target: String): Unit = {
     val (s, t) = (new java.io.File(stage), new java.io.File(target))
     val old = new java.io.File(target + "_old")
-    if (old.exists()) deleteRecursively(old)
+    if (old.exists()) Cdc.deleteRecursively(old)
     if (t.exists() && !t.renameTo(old))
       throw new java.io.IOException(s"could not retire $target")
     if (!s.renameTo(t))
       throw new java.io.IOException(s"could not promote $stage to $target")
-    deleteRecursively(old)
+    Cdc.deleteRecursively(old)
   }
 
   /** Sidecar file names, underscore-prefixed so Spark's parquet listing of
@@ -589,20 +260,19 @@ object IvfIndex {
   private val BaseCountsFile = "_base_counts"
   private val AppendedCountsFile = "_appended_counts"
 
-  /** Stage-and-swap the WHOLE metadata snapshot — centroid matrix plus
-    * both count sidecars — as one directory: the single commit point of
-    * [[build]]/[[repair]]/[[rebuildInPlace]] (ADVICE r17 — metadata files
-    * written as separate commits could disagree across a crash). */
+  /** Stage-and-swap the WHOLE metadata snapshot — centroid matrix, base
+    * counts and an empty appended sidecar — as one directory: the single
+    * commit point of [[build]] (metadata files written as separate commits
+    * could disagree across a crash). */
   private def writeCentroids(spark: SparkSession,
-      entries: Seq[(Int, Array[Float])], path: String,
-      baseCounts: Map[Int, Long], appendedCounts: Map[Int, Long]): Unit = {
+      entries: Seq[(Int, Array[Float])], path: String, baseCounts: Map[Int, Long]): Unit = {
     import spark.implicits._
     val stage = path + "_stage"
     entries.toDF("cluster", "centroid")
       .repartition(1)
       .write.mode(SaveMode.Overwrite).parquet(stage)
     writeCountsFile(s"$stage/$BaseCountsFile", baseCounts)
-    writeCountsFile(s"$stage/$AppendedCountsFile", appendedCounts)
+    writeCountsFile(s"$stage/$AppendedCountsFile", Map.empty)
     swapDir(stage, path)
   }
 
@@ -640,13 +310,13 @@ object IvfIndex {
     ()
   }
 
-  /** The persisted (clusterId, centroid) pairs, id-ordered. Ids are NOT
-    * positions after a [[repair]] — use this, not [[centroids]], wherever
-    * a ranked position must map back to a stored id. The schema is the
-    * one [[writeCentroids]] writes, declared: a new version's directory
-    * costs no schema-inference job. The k rows are sorted on the driver
-    * after the collect, so the read is one Spark job (an `orderBy` would
-    * plan a range exchange: a sampling job and a map-stage job more). */
+  /** The persisted (clusterId, centroid) pairs, id-ordered. Ids need not
+    * be positions (see the object doc) — use this, not [[centroids]],
+    * wherever a ranked position must map back to a stored id. The schema
+    * is the one [[writeCentroids]] writes, declared: a new version's
+    * directory costs no schema-inference job. The k rows are sorted on the
+    * driver after the collect, so the read is one Spark job (an `orderBy`
+    * would plan a range exchange: a sampling job and a map-stage job more). */
   def centroidEntries(spark: SparkSession, indexDir: String): Seq[(Int, Array[Float])] = {
     import spark.implicits._
     spark.read.schema(CentroidSchema).parquet(s"$indexDir/centroids")
@@ -676,18 +346,17 @@ object IvfIndex {
     * driver and a relation over `data/` whose file index was listed when
     * it was created. Searching a snapshot costs one Spark job. A version
     * that only a pointer flip replaces (the engine's versioned container)
-    * can serve many queries from one snapshot; an index maintained in
-    * place must be loaded again after each [[append]], [[repair]] or
-    * [[rebuildInPlace]]. */
+    * can serve many queries from one snapshot; an index appended to in
+    * place must be loaded again after each [[append]]. */
   private[graft] final case class Snapshot(entries: Seq[(Int, Array[Float])], data: DataFrame) {
     val matrix: Array[Array[Float]] = entries.map(_._2).toArray
   }
 
-  /** Load a [[Snapshot]]: centroids first, then the data listing (a
-    * [[repair]] writes its children before it swaps the centroids in, so
-    * every id read here has its directory). `idType` declares the data
-    * schema (no inference job); without it the schema is inferred once
-    * per directory signature. */
+  /** Load a [[Snapshot]]: centroids first, then the data listing (every
+    * writer puts a cluster's directory in place before the centroid file
+    * names it, so every id read here has its directory). `idType`
+    * declares the data schema (no inference job); without it the schema
+    * is inferred once per directory signature. */
   private[graft] def snapshot(
       spark: SparkSession, indexDir: String, idType: Option[DataType] = None): Snapshot = {
     val entries = centroidEntries(spark, indexDir)

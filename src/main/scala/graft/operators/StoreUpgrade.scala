@@ -13,6 +13,8 @@ import org.apache.spark.sql.SparkSession
   *  - sink: a `vectors` root without a manifest pointer is adopted as the
   *    manifest's first generation root, bytes untouched; a pre-`simb` root
   *    (parquet files directly under `bucket=`) cannot be adopted and fails.
+  *    A manifest sink without `vectors_layout.properties` gets the default
+  *    layout's file: those sinks were written with exactly its constants.
   *  - watermark store: a bare directory without a pointer, or a live file
   *    whose timestamps are not INT64 µs (Spark-written INT96 or INT64 ms),
   *    is read with Spark and republished by the store's own commit.
@@ -56,11 +58,13 @@ object StoreUpgrade {
     if (new File(container, "centroids").exists())
       throw outdated(container, "an IVF index without a version pointer")
 
-  private def upgradeSink(sinkDir: String): Unit =
+  private def upgradeSink(sinkDir: String): Unit = {
     if (!Cdc.manifestPointer(sinkDir).exists() && new File(sinkDir, "vectors").isDirectory) {
       requireSimbLayout(sinkDir)
       Cdc.publishManifest(sinkDir, Cdc.scanRootEntries(sinkDir, "vectors"))
     }
+    if (Cdc.manifestPointer(sinkDir).exists()) Cdc.ensureLayout(sinkDir, Cdc.DefaultLayout)
+  }
 
   /** A pre-`simb` root (two-level namespace/bucket directories) cannot be
     * adopted: three-level partitions written beside two-level ones leave a

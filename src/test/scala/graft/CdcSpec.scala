@@ -653,9 +653,14 @@ class CdcSpec extends AnyFunSuite {
     // a second init must NOT re-layout an existing sink
     Cdc.initVectorSink(spark, sink, Cdc.SinkLayout(buckets = 64, simBits = 4))
     assert(Cdc.readLayout(sink) == Cdc.SinkLayout(4, 2))
-    // a sink with no layout file (pre-layout era) reads as the default
+    // a sink an upsert creates without init gets the default layout's file
+    val fresh = Files.createTempDirectory("graft_sink_upsert_layout").toString
+    Cdc.upsertVectors(spark, fresh, b)
+    assert(new java.io.File(s"$fresh/vectors_layout.properties").isFile)
+    assert(Cdc.readLayout(fresh) == Cdc.DefaultLayout)
+    // a directory without the file is in an older layout: refused, naming the upgrade
     val bare = Files.createTempDirectory("graft_sink_nolayout").toString
-    assert(Cdc.readLayout(bare) == Cdc.DefaultLayout)
+    refused(Cdc.readLayout(bare))
   }
 
   test("upsertVectors drops null ids (non-nullable partition contract)") {

@@ -174,6 +174,29 @@ class EngineSpec extends AnyFunSuite {
     assert(after.size == 31 && after("d#1") == "new" && after("d#99") == "text 99")
   }
 
+  test("store upgrade: a manifest sink without a layout file is refused, then given " +
+      "the default layout with its rows unchanged") {
+    import graft.operators.Cdc
+    val scratch = Files.createTempDirectory("graft_upgrade_layout").toString
+    val sink = s"$scratch/sink"
+    Cdc.upsertVectors(spark, sink, docs(1 to 20))
+    val layoutFile = new java.io.File(s"$sink/vectors_layout.properties")
+    assert(layoutFile.delete())
+    val engine = new Engine(spark, s"$scratch/src", s"$scratch/state", sink)
+    refused(Cdc.upsertVectors(spark, sink, docs(Seq(99))))
+    refused(engine.searchSimilar("alpha beta doc number 7", k = 3))
+    assert(!layoutFile.exists(), "refusals write nothing")
+
+    engine.initializeIndex()
+    assert(Cdc.readLayout(sink) == Cdc.DefaultLayout)
+    assert(rowSet(Cdc.readVectorSink(spark, sink)) == rowSet(docs(1 to 20)))
+    assert(engine.searchSimilar("alpha beta doc number 7", k = 1).collect()
+      .map(_.getAs[String]("id")).toSeq == Seq("d#7"))
+    val upgraded = tree(sink)
+    engine.initializeIndex()
+    assert(tree(sink) == upgraded, "a second upgrade must write nothing")
+  }
+
   test("store upgrade: a pointer-less IVF container with root-level base_count and " +
       "base_counts files is refused, then retrained into a version") {
     import graft.operators.{Cdc, IvfIndex}

@@ -257,11 +257,22 @@ class SimilaritySpec extends AnyFunSuite {
     def answer(dir: String) = IvfIndex.search(spark, dir, probe, 10, nprobe = 4)
       .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
     val before = answer(v1)
+    def sidecars(dir: String) = Seq("_base_counts", "_appended_counts")
+      .map(f => java.nio.file.Paths.get(dir, "centroids", f))
+    val v1Sidecars = sidecars(v1).map(p => java.nio.file.Files.readAllBytes(p).toSeq)
 
     upsertDocs(sink, 41 to 46)
     engine.refreshIvfIndex()
     val v2 = engine.liveIvfDir().get
     assert(v2 != v1)
+    // the append wrote v2's sidecars; v1's are byte-identical, and copies
+    // (not links), so no write into v2 can reach them
+    assert(sidecars(v1).map(p => java.nio.file.Files.readAllBytes(p).toSeq) == v1Sidecars,
+      "an append into the next version changed the previous version's counts")
+    sidecars(v1).zip(sidecars(v2)).foreach { case (a, b) =>
+      assert(!java.nio.file.Files.isSameFile(a, b), s"$b is linked to the previous version")
+    }
+    assert(IvfIndex.sidecarClusterRows(v2) == IvfIndex.recountClusterRows(v2))
     val ids2 = indexIds(v2)
     assert(ids2.size == ids2.toSet.size && ids2.toSet == sinkIds(sink), "each sink id once")
     assert(IvfIndex.centroidEntries(spark, v2).map { case (id, c) => (id, c.toSeq) } == cents1,
@@ -290,6 +301,10 @@ class SimilaritySpec extends AnyFunSuite {
     val (engine, sink) = docEngine("graft_ivf_refresh_crash", 1 to 20)
     engine.refreshIvfIndex(k = 4, iters = 2)
     val v1 = new java.io.File(engine.liveIvfDir().get)
+    def sidecarEqualsRecount(v: String): Unit =
+      assert(IvfIndex.sidecarClusterRows(v) == IvfIndex.recountClusterRows(v),
+        s"$v: sidecar diverged from footer truth")
+    sidecarEqualsRecount(v1.getPath) // build
 
     // a refresh that crashed before its flip: a complete next version
     // holding an id the sink never had
@@ -311,95 +326,17 @@ class SimilaritySpec extends AnyFunSuite {
     assert(!v2.exists(), "the next refresh GCs the half-built version")
     assert(indexIds(v3).sorted == sinkIds(sink).toSeq.sorted)
     assert(math.abs(IvfIndex.appendedFraction(v3) - 3.0 / 20) < 1e-9)
+    sidecarEqualsRecount(v3) // append
 
     // 3 + 8 appended rows would reach 0.55 of the 20-row base: full retrain
     upsertDocs(sink, 24 to 31)
     engine.refreshIvfIndex()
     val v4 = engine.liveIvfDir().get
     assert(IvfIndex.appendedFraction(v4) == 0.0, "a full rebuild resets the appended fraction")
+    sidecarEqualsRecount(v4) // full retrain
     assert(indexIds(v4).sorted == sinkIds(sink).toSeq.sorted)
     assert(IvfIndex.centroidEntries(spark, v4).size == 4, "the rebuild keeps the live k")
     assert(new java.io.File(v3).exists() && !v1.exists(), "one-behind retention")
-  }
-
-  test("IvfIndex.repair (r17): splits only the clusters that absorbed appends, " +
-      "untouched dirs stay byte-identical, exactness and routing survive " +
-      "retired cluster ids, the staleness clock covers the repaired mass") {
-    import graft.operators.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_repair").toString
-    IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
-
-    // nothing stale → exact no-op
-    val noop = IvfIndex.repair(spark, dir)
-    assert(noop.clustersSplit == 0 && noop.centroidsAfter == noop.centroidsBefore)
-
-    // heavy TIGHT batch near one base vector: all 200 rows route to one
-    // cluster, which is then far past the per-cluster stale threshold
-    val anchor = vecs.where(col("vec_id") === 7).collect()(0).getSeq[Float](1).toArray
-    val rnd = new scala.util.Random(5)
-    val heavy = (0 until 200).map { i =>
-      val v = anchor.clone()
-      (0 until v.length).foreach(j => v(j) += (rnd.nextFloat() * 2 - 1) * 0.05f)
-      (500L + i, v)
-    }.toDF("vec_id", "embedding")
-    IvfIndex.append(heavy, "vec_id", "embedding", dir)
-
-    def filesByCluster: Map[String, Set[String]] = {
-      val data = new java.io.File(s"$dir/data")
-      Option(data.listFiles()).toSeq.flatten.filter(_.getName.startsWith("cluster=")).map { d =>
-        d.getName -> Option(d.listFiles()).toSeq.flatten
-          .map(_.getName).filter(_.endsWith(".parquet")).toSet
-      }.toMap
-    }
-    val before = filesByCluster
-    val fracBefore = IvfIndex.appendedFraction(dir)
-    assert(fracBefore > IvfIndex.DefaultRebuildFraction)
-
-    val stats = IvfIndex.repair(spark, dir)
-    assert(stats.clustersSplit >= 1, s"absorbed cluster must split: $stats")
-    assert(stats.centroidsAfter > stats.centroidsBefore, s"centroid set must grow: $stats")
-    assert(stats.filesWritten > 0 && stats.filesRetired > 0 && stats.rowsReclustered >= 200L)
-
-    // untouched dirs byte-identical (same file sets); split dirs retired
-    val after = filesByCluster
-    before.foreach { case (c, fs) =>
-      if (after.contains(c)) assert(after(c) == fs, s"untouched $c was rewritten")
-    }
-    assert((before.keySet -- after.keySet).nonEmpty, "split dirs must be retired")
-
-    // no rows lost or duplicated across the split
-    val data = spark.read.parquet(s"$dir/data")
-    val expected = vecs.count() + 200
-    assert(data.count() == expected, "repair lost or duplicated rows")
-    assert(data.select("id").distinct().count() == expected)
-    // repaired mass is trained structure now: the staleness clock resets
-    assert(IvfIndex.appendedFraction(dir) < fracBefore)
-
-    // exactness at nprobe = |clusters| against brute force over base ∪ heavy
-    val all = vecs.unionByName(heavy)
-    val exact = SimilaritySearch.topK(all, "vec_id", "embedding",
-      lit(anchor).cast("array<float>"), 10).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val rep = IvfIndex.search(spark, dir, anchor, k = 10, nprobe = stats.centroidsAfter)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(rep == exact, s"repair broke exactness: $rep vs $exact")
-
-    // a later append still routes correctly through NON-CONTIGUOUS ids
-    // (the split retired an id; positions != ids from here on). The tail
-    // vector is an EXACT anchor clone: append's nearestCentroid and
-    // search's rankClusters then agree on its cluster by construction
-    // (identical scores, identical lowest-position tie-break)
-    val tail = Seq((900L, anchor.clone())).toDF("vec_id", "embedding")
-    IvfIndex.append(tail, "vec_id", "embedding", dir)
-    val found = IvfIndex.search(spark, dir, anchor, k = 3, nprobe = 1)
-      .collect().map(_.getLong(0))
-    assert(found.contains(900L),
-      s"post-repair append must route to the probed child cluster: ${found.mkString(",")}")
-
-    // and a second repair right away is a no-op (children are base now)
-    val again = IvfIndex.repair(spark, dir,
-      staleFraction = IvfIndex.DefaultRebuildFraction)
-    assert(again.clustersSplit == 0, s"repair must converge: $again")
   }
 
   test("IVF staleness bound (r16/r18): appended fraction is tracked incrementally " +
@@ -409,7 +346,6 @@ class SimilaritySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_stale").toString
     IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
     assert(IvfIndex.appendedFraction(dir) == 0.0)
-    assert(!IvfIndex.shouldRebuild(dir))
 
     val baseN = vecs.count()
     val rnd = new scala.util.Random(23)
@@ -417,25 +353,24 @@ class SimilaritySpec extends AnyFunSuite {
       (0 until n).map(i => (idBase + i, Array.fill(16)(rnd.nextFloat() * 2 - 1)))
         .toDF("vec_id", "embedding")
 
-    // below the threshold: no advisory, trigger off
+    // below the threshold the refresh would keep appending
     val f1 = IvfIndex.append(batchOf((baseN / 4).toInt, 300L), "vec_id", "embedding", dir)
     assert(math.abs(f1 - 0.25) < 0.05, s"fraction after 1/4 append: $f1")
-    assert(!IvfIndex.shouldRebuild(dir))
-    // crossing DefaultRebuildFraction: append returns the fraction and the
-    // trigger flips — the recall ladder behind the threshold is IvfProbe /
-    // BASELINE.md r16 (nprobe=1 recall 0.97 -> ~0.81 under shifted mass)
+    assert(IvfIndex.appendedFraction(dir) < IvfIndex.DefaultRebuildFraction)
+    // crossing DefaultRebuildFraction: append returns the fraction the
+    // refresh retrains at — the recall ladder behind the threshold is
+    // IvfProbe / BASELINE.md r16 (nprobe=1 recall 0.97 -> ~0.81 under
+    // shifted mass)
     val f2 = IvfIndex.append(batchOf((baseN / 2).toInt, 600L), "vec_id", "embedding", dir)
     assert(f2 >= IvfIndex.DefaultRebuildFraction, s"fraction after 3/4 appended: $f2")
-    assert(IvfIndex.shouldRebuild(dir))
-    // custom threshold wins
-    assert(!IvfIndex.shouldRebuild(dir, maxAppendedFraction = 2.0))
+    assert(IvfIndex.appendedFraction(dir) == f2)
 
     // rebuild over the full current corpus resets the staleness clock
     val dir2 = java.nio.file.Files.createTempDirectory("graft_ivf_stale2").toString
     IvfIndex.build(spark.read.parquet(s"$dir/data")
       .select(col("id").as("vec_id"), col("embedding")),
       "vec_id", "embedding", dir2, k = 4, iters = 2)
-    assert(IvfIndex.appendedFraction(dir2) == 0.0 && !IvfIndex.shouldRebuild(dir2))
+    assert(IvfIndex.appendedFraction(dir2) == 0.0)
 
     // an index without the count sidecars (built before they existed) is
     // refused by every bookkeeping reader, naming the upgrade step
@@ -446,15 +381,14 @@ class SimilaritySpec extends AnyFunSuite {
       assert(e.getMessage.contains("initializeIndex"), e.getMessage)
     }
     refused(IvfIndex.appendedFraction(dir))
-    refused(IvfIndex.shouldRebuild(dir))
     refused(IvfIndex.staleClusters(dir))
     refused(IvfIndex.append(batchOf(3, 2000L), "vec_id", "embedding", dir))
     assert(!new java.io.File(s"$dir/append_stage").exists(), "refused before any write")
   }
 
   test("IVF incremental bookkeeping (r18): sidecar counts equal the footer " +
-      "recount after mixed append/repair/rebuild, metadata commits as ONE " +
-      "directory with the matrix, and the append path never walks the index") {
+      "recount after concentrated appends and a rebuild over the same directory, " +
+      "metadata commits as ONE directory with the matrix") {
     import graft.operators.IvfIndex
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_sidecar").toString
     IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
@@ -481,129 +415,31 @@ class SimilaritySpec extends AnyFunSuite {
       (idBase + i, v)
     }.toDF("vec_id", "embedding")
 
-    IvfIndex.append(near(1000L, 17, 0.05f), "vec_id", "embedding", dir)
+    // 17 rows near one base vector: ONE cluster absorbs them all — past
+    // its per-cluster stale bar while the GLOBAL fraction stays ~0.33
+    val batch1 = near(1000L, 17, 0.05f)
+    val frac1 = IvfIndex.append(batch1, "vec_id", "embedding", dir)
     sidecarEqualsRecount("post-append-1")
-    IvfIndex.append(near(1100L, 60, 0.05f), "vec_id", "embedding", dir)
+    assert(frac1 < IvfIndex.DefaultRebuildFraction, s"global must stay below the bar: $frac1")
+    val stale = IvfIndex.staleClusters(dir)
+    assert(stale.nonEmpty, "the absorbed cluster must be reported stale")
+    val batch2 = near(1100L, 60, 0.05f)
+    IvfIndex.append(batch2, "vec_id", "embedding", dir)
     sidecarEqualsRecount("post-append-2")
 
-    val st = IvfIndex.repair(spark, dir)
-    assert(st.clustersSplit >= 1, s"concentrated mass must split: $st")
-    sidecarEqualsRecount("post-repair")
-
-    IvfIndex.append(near(1200L, 5, 0.05f), "vec_id", "embedding", dir)
-    sidecarEqualsRecount("post-repair-append")
-
-    val kAfter = IvfIndex.rebuildInPlace(spark, dir)
-    assert(kAfter > 0)
+    // a full retrain over the same directory: the data is overwritten and
+    // the centroid directory swapped; the appended clock resets
+    val corpus = vecs.unionByName(batch1).unionByName(batch2)
+    IvfIndex.build(corpus, "vec_id", "embedding", dir, k = 4, iters = 2)
     sidecarEqualsRecount("post-rebuild")
     assert(IvfIndex.appendedFraction(dir) == 0.0, "rebuild must reset the clock")
+    assert(IvfIndex.staleClusters(dir).isEmpty)
+    assert(!new java.io.File(s"$dir/centroids_old").exists() &&
+      !new java.io.File(s"$dir/centroids_stage").exists(), "the swap leaves no halves behind")
     // no rows lost or duplicated through the whole sequence
     val data = spark.read.parquet(s"$dir/data")
-    val expected = vecs.count() + 17 + 60 + 5
+    val expected = vecs.count() + 17 + 60
     assert(data.count() == expected && data.select("id").distinct().count() == expected)
-  }
-
-  test("per-cluster staleness advisory (r18): concentrated drift below the " +
-      "global rebuild bar advises repair exactly once, naming the absorbed cluster") {
-    import graft.operators.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_adv").toString
-    IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
-
-    // the hook is global and suites may run in parallel: capture only this
-    // index's advisories (another suite's append must not pollute the count)
-    val all = scala.collection.mutable.ArrayBuffer[String]()
-    def msgs = all.synchronized { all.filter(_.contains(dir)).toSeq }
-    val saved = IvfIndex.onAdvisory
-    IvfIndex.onAdvisory = m => { all.synchronized { all += m }; () }
-    try {
-      val anchor = vecs.where(col("vec_id") === 7).collect()(0).getSeq[Float](1).toArray
-      val rnd = new scala.util.Random(41)
-      def near(idBase: Long, n: Int) = (0 until n).map { i =>
-        val v = anchor.clone()
-        (0 until v.length).foreach(j => v(j) += (rnd.nextFloat() * 2 - 1) * 0.03f)
-        (idBase + i, v)
-      }.toDF("vec_id", "embedding")
-
-      // 10 rows, all near one base vector: ONE cluster absorbs everything —
-      // far past its per-cluster bar while the GLOBAL fraction stays ~0.2
-      val frac = IvfIndex.append(near(2000L, 10), "vec_id", "embedding", dir)
-      assert(frac < IvfIndex.DefaultRebuildFraction, s"global must stay below the bar: $frac")
-      val stale = IvfIndex.staleClusters(dir)
-      assert(stale.nonEmpty, "the absorbed cluster must be reported stale")
-      assert(msgs.size == 1, s"exactly one advisory expected, got: $msgs")
-      assert(msgs.head.contains("repair") &&
-        msgs.head.contains(s"cluster ${stale.head.cluster} absorbed"),
-        s"advisory must name the remedy and the absorbed cluster: ${msgs.head}")
-
-      // a second concentrated batch below the global bar: no re-advise
-      // (once per index per EPISODE — the maintenance-loop no-spam rule)
-      IvfIndex.append(near(2100L, 3), "vec_id", "embedding", dir)
-      assert(msgs.size == 1, s"advisory must fire once per episode: $msgs")
-
-      // acting on the advisory closes the episode: after a repair, a NEW
-      // concentrated accumulation must advise again (r18 — the r17
-      // once-per-process key silenced every later episode)
-      val st = IvfIndex.repair(spark, dir)
-      assert(st.clustersSplit >= 1)
-      IvfIndex.append(near(2200L, 30), "vec_id", "embedding", dir)
-      assert(msgs.size == 2 && msgs.last.contains(dir),
-        s"a post-repair drift episode must re-advise: $msgs")
-    } finally IvfIndex.onAdvisory = saved
-  }
-
-  test("IvfIndex.maintain: no-op when healthy, repair on concentrated drift, " +
-      "rebuild on corpus-wide drift — and each branch leaves a consistent index") {
-    import graft.operators.IvfIndex
-    val dirA = java.nio.file.Files.createTempDirectory("graft_ivf_mntA").toString
-    IvfIndex.build(vecs, "vec_id", "embedding", dirA, k = 4, iters = 2)
-    assert(IvfIndex.maintain(spark, dirA) == IvfIndex.MaintainNoOp)
-
-    // concentrated: one cluster stale (share 1/4 < 0.5) → repair branch
-    val anchor = vecs.where(col("vec_id") === 7).collect()(0).getSeq[Float](1).toArray
-    val rnd = new scala.util.Random(43)
-    val conc = (0 until 30).map { i =>
-      val v = anchor.clone()
-      (0 until v.length).foreach(j => v(j) += (rnd.nextFloat() * 2 - 1) * 0.03f)
-      (3000L + i, v)
-    }.toDF("vec_id", "embedding")
-    IvfIndex.append(conc, "vec_id", "embedding", dirA)
-    val staleShare = IvfIndex.staleClusters(dirA).size.toDouble /
-      IvfIndex.centroidEntries(spark, dirA).size
-    assert(staleShare > 0 && staleShare < IvfIndex.DefaultRebuildClusterShare,
-      s"fixture must sit in the repair regime: $staleShare")
-    IvfIndex.maintain(spark, dirA) match {
-      case IvfIndex.MaintainRepaired(st) => assert(st.clustersSplit >= 1)
-      case other => fail(s"expected MaintainRepaired, got $other")
-    }
-    assert(IvfIndex.maintain(spark, dirA) == IvfIndex.MaintainNoOp, "must converge")
-
-    // corpus-wide: appends everywhere (3× the base, at-random) → every
-    // cluster crosses the bar → rebuild branch, which retrains globally
-    val dirB = java.nio.file.Files.createTempDirectory("graft_ivf_mntB").toString
-    IvfIndex.build(vecs, "vec_id", "embedding", dirB, k = 4, iters = 2)
-    val wide = (0 until 150).map(i => (4000L + i, Array.fill(16)(rnd.nextFloat() * 2 - 1)))
-      .toDF("vec_id", "embedding")
-    IvfIndex.append(wide, "vec_id", "embedding", dirB)
-    val totalB = IvfIndex.centroidEntries(spark, dirB).size
-    assert(IvfIndex.staleClusters(dirB).size.toDouble / totalB >=
-      IvfIndex.DefaultRebuildClusterShare, "fixture must sit in the rebuild regime")
-    IvfIndex.maintain(spark, dirB) match {
-      case IvfIndex.MaintainRebuilt(k) => assert(k == totalB, "k=0 keeps the cluster count")
-      case other => fail(s"expected MaintainRebuilt, got $other")
-    }
-    assert(IvfIndex.appendedFraction(dirB) == 0.0)
-    // rebuild preserved every row and search stays exact at nprobe=k
-    val data = spark.read.parquet(s"$dirB/data")
-    val expected = vecs.count() + 150
-    assert(data.count() == expected && data.select("id").distinct().count() == expected)
-    val all = vecs.unionByName(wide)
-    val exact = SimilaritySearch.topK(all, "vec_id", "embedding",
-      lit(anchor).cast("array<float>"), 10).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val got = IvfIndex.search(spark, dirB, anchor, k = 10,
-      nprobe = IvfIndex.centroidEntries(spark, dirB).size)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(got == exact, s"rebuildInPlace broke exactness: $got vs $exact")
   }
 
   test("centroid read: one Spark job, entries in cluster-id order after a repair " +
@@ -611,34 +447,57 @@ class SimilaritySpec extends AnyFunSuite {
     import graft.operators.IvfIndex
     val dir = java.nio.file.Files.createTempDirectory("graft_ivf_centroids").toString
     IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
-    val anchor = vecs.where(col("vec_id") === 7).collect()(0).getSeq[Float](1).toArray
-    val rnd = new scala.util.Random(11)
-    val heavy = (0 until 100).map { i =>
-      val v = anchor.clone()
-      (0 until v.length).foreach(j => v(j) += (rnd.nextFloat() * 2 - 1) * 0.05f)
-      (700L + i, v)
-    }.toDF("vec_id", "embedding")
-    IvfIndex.append(heavy, "vec_id", "embedding", dir)
-    assert(IvfIndex.repair(spark, dir).clustersSplit >= 1)
-    val stored = IvfIndex.centroidEntries(spark, dir)
-    val ids = stored.map(_._1)
-    assert(ids != ids.indices, s"the repair must leave non-contiguous ids: $ids")
+    val built = IvfIndex.centroidEntries(spark, dir)
+    assert(built.map(_._1) == built.indices)
 
-    // rewrite the matrix with its rows in DESCENDING id order (one file, so
-    // a collect without the driver-side sort would return that order)
+    // renumber the index the way an older build's in-place repair left it:
+    // cluster i becomes 3i+5 in the data directories, both count sidecars
+    // and the matrix, whose rows are written in DESCENDING id order (one
+    // file, so a collect without the driver-side sort returns that order)
+    def renumbered(i: Int) = 3 * i + 5
+    val stored = built.map { case (i, c) => (renumbered(i), c) }
+    val ids = stored.map(_._1)
+    built.map(_._1).map(i => (i, java.nio.file.Paths.get(dir, "data", s"cluster=$i")))
+      .filter(d => java.nio.file.Files.isDirectory(d._2)).foreach { case (i, d) =>
+        java.nio.file.Files.move(d, d.resolveSibling(s"cluster=${renumbered(i)}"))
+      }
+    val cdir = new java.io.File(s"$dir/centroids")
+    val baseCounts = java.nio.file.Paths.get(cdir.getPath, "_base_counts")
+    java.nio.file.Files.writeString(baseCounts,
+      java.nio.file.Files.readAllLines(baseCounts).toArray(Array.empty[String]).filter(_.nonEmpty)
+        .map { l => val Array(i, n) = l.split(' '); s"${renumbered(i.toInt)} $n" }.mkString("\n"))
     val desc = s"$dir/centroids_desc"
     stored.reverse.toDF("cluster", "centroid")
       .coalesce(1).write.parquet(desc)
-    val cdir = new java.io.File(s"$dir/centroids")
     cdir.listFiles().filter(_.getName.startsWith("part-")).foreach(_.delete())
     new java.io.File(desc).listFiles().filter(_.getName.startsWith("part-")).foreach(f =>
       java.nio.file.Files.move(f.toPath, new java.io.File(cdir, f.getName).toPath))
     assert(spark.read.parquet(s"$dir/centroids").collect().map(_.getInt(0)).toSeq == ids.reverse)
+    assert(IvfIndex.sidecarClusterRows(dir) == IvfIndex.recountClusterRows(dir))
 
     val (read, jobs) = TestSpark.jobsDuring(IvfIndex.centroidEntries(spark, dir))
     assert(jobs == 1, s"a centroid read must run one Spark job, ran $jobs")
     assert(read.map(_._1) == ids.sorted && ids == ids.sorted, s"ids out of order: ${read.map(_._1)}")
     assert(read.map(_._2.toSeq) == stored.map(_._2.toSeq))
+
+    // an append routes through the NON-CONTIGUOUS ids: the stored id, not
+    // the matrix position, names the directory it lands in. The vector is
+    // an EXACT clone of a base vector, so append's nearestCentroid and
+    // search's rankClusters agree on its cluster by construction
+    val anchor = vecs.where(col("vec_id") === 7).collect()(0).getSeq[Float](1).toArray
+    IvfIndex.append(Seq((900L, anchor.clone())).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", dir)
+    assert(IvfIndex.recountClusterRows(dir).keySet.subsetOf(ids.toSet), "an append minted a cluster id")
+    assert(IvfIndex.sidecarClusterRows(dir) == IvfIndex.recountClusterRows(dir))
+    val found = IvfIndex.search(spark, dir, anchor, k = 3, nprobe = 1).collect().map(_.getLong(0))
+    assert(found.contains(900L), s"the append must land in the probed cluster: ${found.mkString(",")}")
+    // and nprobe = k stays an exact scan of base ∪ appended
+    val all = vecs.unionByName(Seq((900L, anchor.clone())).toDF("vec_id", "embedding"))
+    val exact = SimilaritySearch.topK(all, "vec_id", "embedding",
+      lit(anchor).cast("array<float>"), 10).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val got = IvfIndex.search(spark, dir, anchor, k = 10, nprobe = ids.size)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(got == exact, s"non-contiguous ids broke exactness: $got vs $exact")
   }
 
   test("ivfTopK scans only nprobe clusters (candidate restriction is real)") {
