@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.IvfIndex
+import graft.operators.{Cdc, IvfIndex}
 import org.apache.spark.sql.functions._
 
 /** Dev probe (VERDICT r15 task 6): how fast does IVF recall decay as
@@ -130,6 +130,7 @@ object IvfProbe {
       println(f"""{"probe":"ivf_rebuild","point":"append_${mult}x","files_written":${countFiles(s"$rebDir/data")},"rebuild_ms":$rebMs%.0f}""")
       report(rebDir, s"append_${mult}x_rebuilt")
     }
+    Cdc.deleteRecursively(new java.io.File(dir).getParentFile) // the index and its rebuilds
     spark.stop()
   }
 
@@ -173,6 +174,7 @@ object IvfProbe {
       val files = countFiles(s"$dir/data")
       println(f"""{"probe":"ivf_bookkeeping","batch":$b,"index_rows":${lo + batchN},"index_files":$files,"append_ms":$appendMs%.0f,"audit_recount_ms":$auditMs%.1f}""")
     }
+    Cdc.deleteRecursively(new java.io.File(dir).getParentFile)
     spark.stop()
   }
 

@@ -44,8 +44,8 @@ object ScaleBench {
   val Repeats = 2
 
   /** The ladder session: identical confs for every decade measurement
-    * (and for [[StageProbe]], so stage tables explain ladder numbers,
-    * not some other configuration's). */
+    * (and for `graft.Profile --ladder`, so stage records explain ladder
+    * numbers, not some other configuration's). */
   def session(): SparkSession =
     SparkSession.builder()
       .master("local[32]")

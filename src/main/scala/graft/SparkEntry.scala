@@ -1894,7 +1894,7 @@ object SparkEntry {
     * and the REJECTED width-8 lineitem tier (BASELINE.md r13) showed a
     * byte threshold cannot distinguish cheap numeric rows from CPU-heavy
     * text, so there is no middle tier: wrap fully or not at all. When in
-    * doubt, leave unwrapped and A/B with CcProbe before wrapping. */
+    * doubt, leave unwrapped and A/B with graft.Profile before wrapping. */
   private def onSized(tables: String*)(f: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame = {
     val wrapped: (SparkSession, String) => DataFrame = (s, dir) =>
       f(Materialize.inputSizedSession(

@@ -795,8 +795,8 @@ object Cdc {
 
   /** A prepared upsert batch: the deduped, bucket/simb-annotated rows
     * persisted to a scratch parquet dir UNDER the sink root (invisible to
-    * readers — reads are manifest-driven, and the `_`-prefixed name is
-    * additionally hidden from Spark's file listings). */
+    * readers — reads are manifest-driven, and the root listings match
+    * only `vectors` and `vectors_g*`, never its `stage_` name). */
   final case class StagedUpsert private[operators] (
       stageDir: String, namespace: String, buckets: Seq[Int])
 
@@ -822,7 +822,7 @@ object Cdc {
     // null ids are dropped: a null would land in a default partition the
     // bucket pruning could never overwrite consistently.
     val layout = readLayout(sinkDir)
-    val stageDir = s"$sinkDir/_stage_${java.util.UUID.randomUUID().toString.take(8)}"
+    val stageDir = s"$sinkDir/stage_${java.util.UUID.randomUUID().toString.take(8)}"
     // ONE exchange does both the dedup and the sink layout: rows are
     // shuffled straight to their output partition and deduped THERE.
     // Correct because the partition key is id-determined — bucket is a

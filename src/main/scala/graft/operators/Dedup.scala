@@ -352,16 +352,6 @@ object Dedup {
       .crossJoin(ids.agg(count(lit(1)).as("ni"))).collect()(0)
     val nEdges = sizes.getLong(0)
     val nIds = sizes.getLong(1)
-    // GRAFT_CC_PROFILE=1: per-round phase timings on stderr (diagnostic
-    // for the CC queries' fixed-cost-per-job profile; zero cost when off)
-    val prof = sys.env.get("GRAFT_CC_PROFILE").contains("1")
-    def timed[A](label: String, round: Int)(f: => A): A =
-      if (!prof) f else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(f"[cc] round=$round $label%-10s ${(System.nanoTime() - t0) / 1e9}%6.3fs")
-        r
-      }
     // Narrowing runs on an ISOLATED session clone, never a shared-conf
     // mutation (one mechanism engine-wide — loopWidthSession; VERDICT r13
     // #4): the two root inputs are rebound to the clone once, every
@@ -438,8 +428,8 @@ object Dedup {
         // on the checkpoint write replaces a separate count job (verified
         // to fire on eager checkpoints — MaterializeSpec).
         val obs = new org.apache.spark.sql.Observation(s"cc_changed_$i")
-        val newLabels = timed("round", i)(Materialize.truncate(
-          out.observe(obs, count(when(col("label") =!= col("_old"), 1)).as("changed"))))
+        val newLabels = Materialize.truncate(
+          out.observe(obs, count(when(col("label") =!= col("_old"), 1)).as("changed")))
         changed = observedChanged(obs, newLabels)
         // newLabels is materialized — the storage it was built from is dead
         Materialize.free(prevCkpt)

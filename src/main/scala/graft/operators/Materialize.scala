@@ -136,13 +136,8 @@ object Materialize {
     * so rebinding a loop's root inputs once covers every per-round plan. */
   def loopWidthSession(spark: SparkSession, rows: Long): SparkSession = {
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val w0 = math.max(1L, math.min(session.toLong, rows / LoopRowsPerPartition + 1)).toInt
-    // A/B hooks: GRAFT_LOOP_WIDTH forces the narrowed width (the sweep
-    // harness behind LoopRowsPerPartition); GRAFT_NO_NARROW=1 kills
-    // narrowing entirely — used by the ladder re-measurements to separate
-    // narrowing effects from machine drift
-    val w = sys.env.get("GRAFT_LOOP_WIDTH").map(_.toInt).getOrElse(w0)
-    if (w >= session || sys.env.get("GRAFT_NO_NARROW").contains("1")) spark
+    val w = math.max(1L, math.min(session.toLong, rows / LoopRowsPerPartition + 1)).toInt
+    if (w >= session) spark
     else {
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.shuffle.partitions", w.toString)
@@ -184,9 +179,9 @@ object Materialize {
     * 1) keeps per-doc CPU (tokenization ~0.3 ms/doc) parallel enough
     * that the serial tail never dominates. Same isolation contract as
     * [[loopWidthSession]]: a conf-isolated `newSession` clone, shared
-    * SparkContext/cache/catalog; honors GRAFT_NO_NARROW. */
+    * SparkContext/cache/catalog. */
   def inputSizedSession(spark: SparkSession, bytes: Long): SparkSession = {
-    if (bytes >= SmallQueryBytes || sys.env.get("GRAFT_NO_NARROW").contains("1")) spark
+    if (bytes >= SmallQueryBytes) spark
     else {
       val s2 = spark.newSession()
       s2.conf.set("spark.sql.shuffle.partitions", "4")
@@ -255,13 +250,7 @@ object Materialize {
           java.nio.file.Paths.get(sys.props("java.io.tmpdir")), "graft_ckpt_")
         .toFile
       sc.setCheckpointDir(dir.getAbsolutePath)
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(dir)
-      }
+      sys.addShutdownHook(Cdc.deleteRecursively(dir))
       ()
     }
   }

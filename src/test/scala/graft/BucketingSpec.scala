@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fact/fact joins. */
 class BucketingSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = TestSpark.tempDir("graft_wh").toString
     SparkSession.builder()
       .master("local[4]")
       .appName("graft-bucket-test")

@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 /** CDC semantics (SURVEY §5.4): strict-`>` watermark, empty-delta skip,
   * watermark advance to max(ts), idempotent re-run (the property the
   * reference LACKS — its UUID ids duplicate on retry, T3). */
@@ -68,7 +70,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("schema drift: a column added between cycles flows into the chunk JSON (dynamic SELECT *)") {
-    val scratch = Files.createTempDirectory("graft_cdc_evo").toString
+    val scratch = TestSpark.tempDir("graft_cdc_evo").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     // cycle 1: (event_id, ts, payload)
@@ -92,7 +94,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("scalable chunking in the sync path covers the same rows (the default mode)") {
-    val scratch = java.nio.file.Files.createTempDirectory("graft_cdc_sc").toString
+    val scratch = TestSpark.tempDir("graft_cdc_sc").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     (1 to 250).map(i => (i.toLong, ts(f"2024-01-01 00:${i % 60}%02d:${i % 60}%02d"), s"u$i"))
@@ -104,7 +106,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("watermark store: absent → None; upsert is last-writer-wins by max") {
-    val state = Files.createTempDirectory("graft_wm").toString
+    val state = TestSpark.tempDir("graft_wm").toString
     assert(Cdc.getWatermark(spark, state, "t1").isEmpty)
     Cdc.updateWatermark(spark, state, "t1", ts("2024-01-02 00:00:00"))
     assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-01-02 00:00:00")))
@@ -121,24 +123,15 @@ class CdcSpec extends AnyFunSuite {
     // cycle under the commit lock — O(jobs), not O(rows), at 1,000 CDC
     // tables the cycle's driver bottleneck. The RMW of a T-row store is
     // driver work; pin that NO job is scheduled by lookups or commits.
-    val state = Files.createTempDirectory("graft_wm_jobs").toString
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      CcProbe.drainListenerBus(spark)
-      jobs = 0
+    val state = TestSpark.tempDir("graft_wm_jobs").toString
+    val jobs = QueryProfile(spark) {
       (1 to 5).foreach { i =>
         Cdc.updateWatermark(spark, state, s"t$i", ts(f"2024-01-0$i%d 00:00:00"))
       }
       assert(Cdc.getWatermark(spark, state, "t3").contains(ts("2024-01-03 00:00:00")))
       assert(Cdc.readWatermarkMap(state).size == 5)
-      CcProbe.drainListenerBus(spark)
-      assert(jobs == 0, s"watermark lookups+commits must schedule no Spark job, saw $jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }.jobs.size
+    assert(jobs == 0, s"watermark lookups+commits must schedule no Spark job, saw $jobs")
     // the Spark read surface (readWatermarks) sees exactly what the
     // driver-side writer committed — same schema, same µs instants
     val rows = Cdc.readWatermarks(spark, state).collect()
@@ -152,7 +145,7 @@ class CdcSpec extends AnyFunSuite {
     // silently reset every watermark (forced full re-sync). The versioned
     // store commits by one atomic pointer rename — a crash at ANY point
     // before it must leave the previous value intact and readable.
-    val state = Files.createTempDirectory("graft_wm_crash").toString
+    val state = TestSpark.tempDir("graft_wm_crash").toString
     Cdc.updateWatermark(spark, state, "t1", ts("2024-01-02 00:00:00"))
     val boom = intercept[RuntimeException] {
       Cdc.updateWatermark(spark, state, "t1", ts("2024-03-01 00:00:00"),
@@ -196,8 +189,8 @@ class CdcSpec extends AnyFunSuite {
 
   // an unversioned Spark-written INT96 store, then a versioned INT64-ms one
   test("watermark store: old layouts are refused until initializeIndex republishes them") {
-    val state = Files.createTempDirectory("graft_wm_upgrade").toString
-    val scratch = Files.createTempDirectory("graft_wm_upgrade_sink").toString
+    val state = TestSpark.tempDir("graft_wm_upgrade").toString
+    val scratch = TestSpark.tempDir("graft_wm_upgrade_sink").toString
     val wm = Cdc.WatermarkTable
     val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
     // the pre-versioning layout: a bare Spark-written parquet dir at state/watermark
@@ -240,7 +233,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("sharded watermark store: migration preserves the map, commits touch only the owning shard") {
-    val state = Files.createTempDirectory("graft_wm_shard").toString
+    val state = TestSpark.tempDir("graft_wm_shard").toString
     (1 to 8).foreach(i => Cdc.updateWatermark(spark, state, s"t$i", ts(f"2024-01-0$i%d 00:00:00")))
     val before = Cdc.readWatermarkMap(state)
     Cdc.shardWatermarkStore(state, 4)
@@ -281,7 +274,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("sharded store: concurrent commits across shards all land (per-shard locks)") {
-    val state = Files.createTempDirectory("graft_wm_shard_conc").toString
+    val state = TestSpark.tempDir("graft_wm_shard_conc").toString
     Cdc.updateWatermark(spark, state, "seed", ts("2024-01-01 00:00:00"))
     Cdc.shardWatermarkStore(state, 4)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -298,7 +291,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("sharded store: crash before a shard's pointer publish leaves the pre-write value live") {
-    val state = Files.createTempDirectory("graft_wm_shard_crash").toString
+    val state = TestSpark.tempDir("graft_wm_shard_crash").toString
     Cdc.updateWatermark(spark, state, "t1", ts("2024-01-02 00:00:00"))
     Cdc.shardWatermarkStore(state, 4)
     intercept[RuntimeException] {
@@ -311,7 +304,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("concurrent double-migration cannot wipe the store (in-lock re-check, ADVICE r15)") {
-    val state = Files.createTempDirectory("graft_wm_toctou").toString
+    val state = TestSpark.tempDir("graft_wm_toctou").toString
     (1 to 6).foreach(i => Cdc.updateWatermark(spark, state, s"t$i", ts(f"2024-01-0$i%d 00:00:00")))
     val before = Cdc.readWatermarkMap(state)
     // thread A passes the outer unsharded check, then parks BEFORE taking
@@ -338,7 +331,7 @@ class CdcSpec extends AnyFunSuite {
 
   test("readers racing a live migration never observe an absent watermark (read fence, ADVICE r15)") {
     (1 to 10).foreach { _ =>
-      val state = Files.createTempDirectory("graft_wm_readrace").toString
+      val state = TestSpark.tempDir("graft_wm_readrace").toString
       (1 to 8).foreach(i => Cdc.updateWatermark(spark, state, s"t$i", ts(f"2024-01-0$i%d 00:00:00")))
       val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
       val bad = new java.util.concurrent.atomic.AtomicReference[String]()
@@ -361,7 +354,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("migration GCs orphan shard stores above the new B (crashed larger-B attempt, ADVICE r15)") {
-    val state = Files.createTempDirectory("graft_wm_orphan").toString
+    val state = TestSpark.tempDir("graft_wm_orphan").toString
     Cdc.updateWatermark(spark, state, "t1", ts("2024-01-01 00:00:00"))
     // simulate a crashed B=8 attempt that wrote shards b0006/b0007 (version
     // dir + pointer) before dying pre-marker
@@ -380,7 +373,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("sync cycle runs unchanged over a sharded watermark store (delta + advance via shards)") {
-    val scratch = Files.createTempDirectory("graft_cdc_shardcycle").toString
+    val scratch = TestSpark.tempDir("graft_cdc_shardcycle").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     Seq((1L, ts("2024-01-01 00:00:00"), "a"), (2L, ts("2024-01-02 00:00:00"), "b"))
@@ -399,7 +392,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("vector upsert: same id overwrites (Pinecone semantics, service.py:160-166)") {
-    val sink = Files.createTempDirectory("graft_sink").toString
+    val sink = TestSpark.tempDir("graft_sink").toString
     Cdc.initVectorSink(spark, sink)
     val b1 = Seq(("a#1", Array(1f), "t", "old"), ("a#2", Array(2f), "t", "x"))
       .toDF("id", "embedding", "source", "text")
@@ -411,8 +404,37 @@ class CdcSpec extends AnyFunSuite {
     assert(out == Map("a#1" -> "new", "a#2" -> "x"))
   }
 
+  test("a merge-path sink commit reads its staging without Spark's hidden-path warning") {
+    val sink = TestSpark.tempDir("graft_sink_stagewarn").toString
+    Cdc.initVectorSink(spark, sink)
+    Cdc.upsertVectors(spark, sink, Seq(("a#1", Array(1f), "t", "old"), ("a#2", Array(2f), "t", "x"))
+      .toDF("id", "embedding", "source", "text"))
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-datasource", null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit = {
+        warnings.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      // a#1 lands in a published bucket: the commit merges, not renames
+      Cdc.upsertVectors(spark, sink, Seq(("a#1", Array(9f), "t", "new"), ("a#3", Array(3f), "t", "y"))
+        .toDF("id", "embedding", "source", "text"))
+    } finally { logger.removeAppender(appender); appender.stop() }
+    val ignored = warnings.asScala.filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+    val out = Cdc.readVectorSink(spark, sink).collect()
+      .map(r => r.getAs[String]("id") -> r.getAs[String]("text")).toMap
+    assert(out == Map("a#1" -> "new", "a#2" -> "x", "a#3" -> "y"))
+  }
+
   test("namespaces isolate ids: same id upserted into two namespaces keeps both") {
-    val sink = Files.createTempDirectory("graft_sink_ns").toString
+    val sink = TestSpark.tempDir("graft_sink_ns").toString
     Cdc.initVectorSink(spark, sink)
     val b = Seq(("a#1", Array(1f), "t", "in-task1")).toDF("id", "embedding", "source", "text")
     Cdc.upsertVectors(spark, sink, b) // default namespace task1
@@ -430,7 +452,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("merge commit MOVES staged files into the new root — new rows are never rewritten (r14)") {
-    val sink = Files.createTempDirectory("graft_sink_mv").toString
+    val sink = TestSpark.tempDir("graft_sink_mv").toString
     Cdc.initVectorSink(spark, sink)
     // publish a first batch so the second batch's buckets OVERLAP →
     // commit takes the merge path, not the empty-overlap rename
@@ -460,7 +482,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("upsert rewrites only touched buckets: other bucket files stay byte-identical") {
-    val sink = Files.createTempDirectory("graft_sink_bk").toString
+    val sink = TestSpark.tempDir("graft_sink_bk").toString
     Cdc.initVectorSink(spark, sink)
     // spread ids over buckets, then find two ids in different buckets
     val ids = (1 to 40).map(i => s"t#$i")
@@ -497,7 +519,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("re-upsert that moves an id to a new simb sub-partition leaves no stale copy") {
-    val sink = Files.createTempDirectory("graft_sink_simb").toString
+    val sink = TestSpark.tempDir("graft_sink_simb").toString
     Cdc.initVectorSink(spark, sink)
     // all-positive leading signs → simb 15; all-negative → simb 0
     val b1 = Seq(("a#1", Array(1f, 1f, 1f, 1f), "t", "v1")).toDF("id", "embedding", "source", "text")
@@ -511,7 +533,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("crash before the manifest flip leaves the committed snapshot; retry converges; orphan swept") {
-    val sink = Files.createTempDirectory("graft_sink_crash").toString
+    val sink = TestSpark.tempDir("graft_sink_crash").toString
     Cdc.initVectorSink(spark, sink)
     // commit a first batch spread over several buckets
     val ids = (1 to 40).map(i => s"t#$i")
@@ -556,7 +578,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("crash during the staged write leaves the live sink untouched") {
-    val sink = Files.createTempDirectory("graft_sink_stagefail").toString
+    val sink = TestSpark.tempDir("graft_sink_stagefail").toString
     Cdc.initVectorSink(spark, sink)
     val b1 = Seq(("a#1", Array(1f), "t", "v1")).toDF("id", "embedding", "source", "text")
     Cdc.upsertVectors(spark, sink, b1)
@@ -570,7 +592,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("incremental compaction bounds live generation roots at MaxLiveRoots") {
-    val sink = Files.createTempDirectory("graft_sink_compact").toString
+    val sink = TestSpark.tempDir("graft_sink_compact").toString
     Cdc.initVectorSink(spark, sink)
     // 2×MaxLiveRoots single-id commits: every commit adds a root, so
     // without compaction the root count would grow without bound (and
@@ -598,7 +620,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("MVCC snapshot isolation: a read resolved mid-commit or pre-commit sees the old snapshot") {
-    val sink = Files.createTempDirectory("graft_sink_mvcc").toString
+    val sink = TestSpark.tempDir("graft_sink_mvcc").toString
     Cdc.initVectorSink(spark, sink)
     val ids = (1 to 30).map(i => s"t#$i")
     def gen(tag: String) =
@@ -623,7 +645,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("pre-simb sink layout fails fast with a reinitialize error") {
-    val sink = Files.createTempDirectory("graft_sink_oldlayout").toString
+    val sink = TestSpark.tempDir("graft_sink_oldlayout").toString
     // fabricate the round-2 layout: (namespace, bucket) with files directly
     // under bucket= (no simb= level)
     Seq(("a#1", Array(1f), "t", "old", "task1", 3))
@@ -641,7 +663,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("sink layout is chosen at creation, persisted, and honored by later upserts") {
-    val sink = Files.createTempDirectory("graft_sink_layout").toString
+    val sink = TestSpark.tempDir("graft_sink_layout").toString
     Cdc.initVectorSink(spark, sink, Cdc.SinkLayout(buckets = 4, simBits = 2))
     assert(Cdc.readLayout(sink) == Cdc.SinkLayout(4, 2))
     val b = (1 to 30).map(i => (s"t#$i", Array(1f, -1f, 1f), "t", s"v$i"))
@@ -654,17 +676,17 @@ class CdcSpec extends AnyFunSuite {
     Cdc.initVectorSink(spark, sink, Cdc.SinkLayout(buckets = 64, simBits = 4))
     assert(Cdc.readLayout(sink) == Cdc.SinkLayout(4, 2))
     // a sink an upsert creates without init gets the default layout's file
-    val fresh = Files.createTempDirectory("graft_sink_upsert_layout").toString
+    val fresh = TestSpark.tempDir("graft_sink_upsert_layout").toString
     Cdc.upsertVectors(spark, fresh, b)
     assert(new java.io.File(s"$fresh/vectors_layout.properties").isFile)
     assert(Cdc.readLayout(fresh) == Cdc.DefaultLayout)
     // a directory without the file is in an older layout: refused, naming the upgrade
-    val bare = Files.createTempDirectory("graft_sink_nolayout").toString
+    val bare = TestSpark.tempDir("graft_sink_nolayout").toString
     refused(Cdc.readLayout(bare))
   }
 
   test("upsertVectors drops null ids (non-nullable partition contract)") {
-    val sink = Files.createTempDirectory("graft_sink_nullid").toString
+    val sink = TestSpark.tempDir("graft_sink_nullid").toString
     Cdc.initVectorSink(spark, sink)
     val b = Seq((null.asInstanceOf[String], Array(1f), "t", "x"), ("a#1", Array(1f), "t", "y"))
       .toDF("id", "embedding", "source", "text")
@@ -674,7 +696,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("sinkStats summarizes per-namespace count and dim (describe_index_stats analog)") {
-    val sink = Files.createTempDirectory("graft_sink_st").toString
+    val sink = TestSpark.tempDir("graft_sink_st").toString
     Cdc.initVectorSink(spark, sink)
     val b = Seq(("a#1", Array(1f, 2f, 3f), "t", "x"), ("a#2", Array(4f, 5f, 6f), "t", "y"))
       .toDF("id", "embedding", "source", "text")
@@ -687,7 +709,7 @@ class CdcSpec extends AnyFunSuite {
 
   test("two-batch incremental sync: second batch picks up only ts > wm; " +
     "re-run is a no-op (idempotence via content-hash ids)") {
-    val scratch = Files.createTempDirectory("graft_cdc").toString
+    val scratch = TestSpark.tempDir("graft_cdc").toString
     val src = s"$scratch/src"; val state = s"$scratch/state"; val sink = s"$scratch/sink"
     new java.io.File(src).mkdirs()
     val batch1 = (1 to 150).map(i => (i.toLong, ts(f"2024-01-01 00:${i % 60}%02d:${i % 60}%02d"), s"u$i"))
@@ -716,7 +738,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("a failed table is isolated AND loud: outcomes name it, requireSynced throws (T6)") {
-    val scratch = Files.createTempDirectory("graft_cdc_fail").toString
+    val scratch = TestSpark.tempDir("graft_cdc_fail").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     Seq((1L, ts("2024-01-01 00:00:00"), "a"), (2L, ts("2024-01-02 00:00:00"), "b"))
@@ -744,7 +766,7 @@ class CdcSpec extends AnyFunSuite {
 
   test("crash between the sink commit and the watermark commit (polling path): " +
       "the table fails, the sink holds its rows, a re-run converges (T3)") {
-    val scratch = Files.createTempDirectory("graft_cdc_gap").toString
+    val scratch = TestSpark.tempDir("graft_cdc_gap").toString
     val (src, state, sink) = (s"$scratch/src", s"$scratch/state", s"$scratch/sink")
     new java.io.File(src).mkdirs()
     (1 to 120).map(i => (i.toLong, ts(f"2024-01-01 01:${i % 60}%02d:00"), s"p$i"))
@@ -780,7 +802,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("concurrent cycle matches the serial result (commit-lock correctness)") {
-    val scratch = Files.createTempDirectory("graft_cdc_par").toString
+    val scratch = TestSpark.tempDir("graft_cdc_par").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     // several independent CDC tables, all with deltas, synced in one cycle
@@ -808,7 +830,7 @@ class CdcSpec extends AnyFunSuite {
     // dropping the loser's table. The per-store lock makes the RMW
     // atomic; this drives 8 simultaneous commits (barrier-released, the
     // racing shape) and requires every one of them to survive.
-    val state = Files.createTempDirectory("graft_wm_race").toString
+    val state = TestSpark.tempDir("graft_wm_race").toString
     val barrier = new java.util.concurrent.CyclicBarrier(8)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (1 to 8).map { i =>
@@ -829,7 +851,7 @@ class CdcSpec extends AnyFunSuite {
 
   test("schema evolution converges: updated rows re-emit under the new schema, " +
       "repeat cycles are byte-stable no-ops (VERDICT r14 #5)") {
-    val scratch = Files.createTempDirectory("graft_cdc_evo2").toString
+    val scratch = TestSpark.tempDir("graft_cdc_evo2").toString
     val src = s"$scratch/src"
     val state = s"$scratch/state"
     val sink = s"$scratch/sink"
@@ -870,7 +892,7 @@ class CdcSpec extends AnyFunSuite {
 
   test("shard advisory fires once at the measured knee, only for unsharded stores (r16)") {
     Cdc.resetShardAdvisories()
-    val state = Files.createTempDirectory("graft_wm_advise").toString
+    val state = TestSpark.tempDir("graft_wm_advise").toString
     val abs = new java.io.File(state).getAbsolutePath
     val base = ts("2024-01-01 00:00:00")
     // seed to one under the knee: the commit that crosses it advises
@@ -886,7 +908,7 @@ class CdcSpec extends AnyFunSuite {
     assert(Cdc.shardAdvisedStores.count(_ == abs) == 1)
     // a SHARDED store at the same size never advises — sharding was the fix
     Cdc.resetShardAdvisories()
-    val state2 = Files.createTempDirectory("graft_wm_advise2").toString
+    val state2 = TestSpark.tempDir("graft_wm_advise2").toString
     Cdc.seedWatermarkStore(state2, Map("seed" -> base))
     Cdc.shardWatermarkStore(state2, 4)
     Cdc.seedWatermarkStore(state2, seed)
@@ -896,7 +918,7 @@ class CdcSpec extends AnyFunSuite {
 
   test("quiet-table fast path: footer-stats max is exact across encodings, " +
       "drift, and nulls — and unknown when stats can't be trusted (r16)") {
-    val dir = Files.createTempDirectory("graft_stats_max").toString
+    val dir = TestSpark.tempDir("graft_stats_max").toString
     import graft.sources.Tables
     // a modern lake writes INT64 timestamps (Delta/Iceberg, pyarrow; the
     // driver fixtures); Spark's own legacy default is INT96 — pinned
@@ -945,7 +967,7 @@ class CdcSpec extends AnyFunSuite {
 
   test("quiet-table fast path: a quiet sync schedules ZERO Spark jobs; an " +
       "active table is never skipped (r16)") {
-    val scratch = Files.createTempDirectory("graft_quiet_path").toString
+    val scratch = TestSpark.tempDir("graft_quiet_path").toString
     val (src, state, sink) = (s"$scratch/src", s"$scratch/state", s"$scratch/sink")
     new java.io.File(src).mkdirs()
     val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
@@ -955,24 +977,15 @@ class CdcSpec extends AnyFunSuite {
     sync(src, state, sink) // first sync: full path
     val wmAfter = Cdc.getWatermark(spark, state, "events")
     assert(wmAfter.contains(ts("2024-01-02 00:00:00")))
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      CcProbe.drainListenerBus(spark)
-      jobs = 0
-      // quiet table (footer max == watermark): syncTableOn must answer from
-      // driver-side footer stats — no relation, no aggregate, no job
+    // quiet table (footer max == watermark): syncTableOn must answer from
+    // driver-side footer stats — no relation, no aggregate, no job
+    val quiet = QueryProfile(spark) {
       val store = ParquetWatermarkStore(state)
-      val n = Cdc.syncTableOn(spark, DirSource(src), store, sink, "events",
+      Cdc.syncTableOn(spark, DirSource(src), store, sink, "events",
         store.get("events"), "ts", "event_id", chunkSize = 99)
-      CcProbe.drainListenerBus(spark)
-      assert(n == 0L)
-      assert(jobs == 0, s"quiet sync must schedule no Spark job, saw $jobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(quiet.result == 0L)
+    assert(quiet.jobs.isEmpty, s"quiet sync must schedule no Spark job, saw ${quiet.jobs.size}")
     // new rows past the watermark: the probe answers ACTIVE and the full
     // path syncs them — the fast path can never under-report
     try {
@@ -988,7 +1001,7 @@ class CdcSpec extends AnyFunSuite {
 
   test("schema drift, DROP direction: a parquet lake keeps the union schema — " +
       "post-drop rows serialize the field as null, sink converges (VERDICT r15 #4)") {
-    val scratch = Files.createTempDirectory("graft_cdc_drop").toString
+    val scratch = TestSpark.tempDir("graft_cdc_drop").toString
     val (src, state, sink) = (s"$scratch/src", s"$scratch/state", s"$scratch/sink")
     new java.io.File(src).mkdirs()
     Seq((1L, ts("2024-01-01 00:00:00"), "a", "eu"))
@@ -1019,7 +1032,7 @@ class CdcSpec extends AnyFunSuite {
 
   test("schema drift, WIDEN direction: int->bigint between polls — the merged " +
       "read widens instead of crashing, values serialize identically (VERDICT r15 #4)") {
-    val scratch = Files.createTempDirectory("graft_cdc_widen").toString
+    val scratch = TestSpark.tempDir("graft_cdc_widen").toString
     val (src, state, sink) = (s"$scratch/src", s"$scratch/state", s"$scratch/sink")
     new java.io.File(src).mkdirs()
     // cycle 1: qty is INT

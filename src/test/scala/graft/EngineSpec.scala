@@ -11,7 +11,7 @@ class EngineSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("engine lifecycle: initialize, poll, watermark advance, similarity query") {
-    val scratch = Files.createTempDirectory("graft_engine").toString
+    val scratch = TestSpark.tempDir("graft_engine").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     (1 to 150).map(i => (i.toLong, Timestamp.valueOf(f"2024-01-01 00:${i % 60}%02d:00"), s"payload-$i"))
@@ -36,7 +36,7 @@ class EngineSpec extends AnyFunSuite {
   test("searchSimilarBatch returns per-query ranked hits in one plan") {
     import graft.operators.Cdc
     import graft.functions.Embeddings
-    val scratch = Files.createTempDirectory("graft_engine_batch").toString
+    val scratch = TestSpark.tempDir("graft_engine_batch").toString
     val sink = s"$scratch/sink"
     Cdc.initVectorSink(spark, sink)
     val batch = (1 to 30).map(i => (s"d#$i", Embeddings.embed(s"alpha beta doc number $i"), "t", s"text $i"))
@@ -58,7 +58,7 @@ class EngineSpec extends AnyFunSuite {
   test("engine builds a persisted IVF index from its sink and answers text queries") {
     import graft.operators.Cdc
     import graft.functions.Embeddings
-    val scratch = Files.createTempDirectory("graft_engine_ivf").toString
+    val scratch = TestSpark.tempDir("graft_engine_ivf").toString
     val sink = s"$scratch/sink"
     Cdc.initVectorSink(spark, sink)
     val batch = (1 to 40).map(i => (s"d#$i", Embeddings.embed(s"alpha beta doc number $i"), "t", s"text $i"))
@@ -74,7 +74,7 @@ class EngineSpec extends AnyFunSuite {
   test("searchSimilar partition-prunes the scan to the probe's simb buckets") {
     import graft.operators.{Cdc, SimilaritySearch}
     import graft.functions.Embeddings
-    val scratch = Files.createTempDirectory("graft_engine_prune").toString
+    val scratch = TestSpark.tempDir("graft_engine_prune").toString
     val sink = s"$scratch/sink"
     Cdc.initVectorSink(spark, sink)
     // vectors spanning several simb partitions: real embeddings of distinct texts
@@ -148,7 +148,7 @@ class EngineSpec extends AnyFunSuite {
   test("store upgrade: a manifest-less vectors sink is refused, then adopted with " +
       "its rows unchanged, and takes upserts afterwards") {
     import graft.operators.Cdc
-    val scratch = Files.createTempDirectory("graft_upgrade_sink").toString
+    val scratch = TestSpark.tempDir("graft_upgrade_sink").toString
     val sink = s"$scratch/sink"
     writeManifestlessSink(sink, 1 to 30)
     val engine = new Engine(spark, s"$scratch/src", s"$scratch/state", sink)
@@ -177,7 +177,7 @@ class EngineSpec extends AnyFunSuite {
   test("store upgrade: a manifest sink without a layout file is refused, then given " +
       "the default layout with its rows unchanged") {
     import graft.operators.Cdc
-    val scratch = Files.createTempDirectory("graft_upgrade_layout").toString
+    val scratch = TestSpark.tempDir("graft_upgrade_layout").toString
     val sink = s"$scratch/sink"
     Cdc.upsertVectors(spark, sink, docs(1 to 20))
     val layoutFile = new java.io.File(s"$sink/vectors_layout.properties")
@@ -200,7 +200,7 @@ class EngineSpec extends AnyFunSuite {
   test("store upgrade: a pointer-less IVF container with root-level base_count and " +
       "base_counts files is refused, then retrained into a version") {
     import graft.operators.{Cdc, IvfIndex}
-    val scratch = Files.createTempDirectory("graft_upgrade_ivf_flat").toString
+    val scratch = TestSpark.tempDir("graft_upgrade_ivf_flat").toString
     val sink = s"$scratch/sink"
     Cdc.initVectorSink(spark, sink)
     Cdc.upsertVectors(spark, sink, docs(1 to 30))
@@ -239,7 +239,7 @@ class EngineSpec extends AnyFunSuite {
   test("store upgrade: an IVF version without count sidecars or roots= is refused, " +
       "then retrained with its build parameters, and appends afterwards") {
     import graft.operators.{Cdc, IvfIndex}
-    val scratch = Files.createTempDirectory("graft_upgrade_ivf_sidecars").toString
+    val scratch = TestSpark.tempDir("graft_upgrade_ivf_sidecars").toString
     val sink = s"$scratch/sink"
     Cdc.initVectorSink(spark, sink)
     Cdc.upsertVectors(spark, sink, docs(1 to 30))
@@ -280,7 +280,7 @@ class EngineSpec extends AnyFunSuite {
   test("store upgrade: a tree upgraded only halfway (sink adopted, watermark store " +
       "not) converges on the next run") {
     import graft.operators.Cdc
-    val scratch = Files.createTempDirectory("graft_upgrade_halfway").toString
+    val scratch = TestSpark.tempDir("graft_upgrade_halfway").toString
     val (sink, state) = (s"$scratch/sink", s"$scratch/state")
     writeManifestlessSink(sink, 1 to 10)
     val wmDir = s"$state/${Cdc.WatermarkTable}"

@@ -4,7 +4,6 @@ import graft.operators.{Cdc, ParquetWatermarkStore, WatermarkStore}
 import graft.sources.{CdcSource, JdbcSource}
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
 import java.sql.{DriverManager, Timestamp}
 
 /** The reference's LITERAL deployment topology, end-to-end against a live
@@ -53,7 +52,7 @@ class JdbcCdcSpec extends AnyFunSuite {
     insert((1 to 6).map(i =>
       (i.toLong, ts(f"2024-01-01 00:0$i%d:00"), s"alpha-$i")): _*)
 
-    val scratch = Files.createTempDirectory("graft_jdbc_cdc").toString
+    val scratch = TestSpark.tempDir("graft_jdbc_cdc").toString
     val state = s"$scratch/state"
     val sink = s"$scratch/sink"
     val source = JdbcSource(url, schemaPattern = Some("APP"))
@@ -113,7 +112,7 @@ class JdbcCdcSpec extends AnyFunSuite {
     exec(
       "CREATE TABLE dims_static (dim_id INT NOT NULL, label VARCHAR(32))",
       "CREATE TABLE watermark (table_name VARCHAR(64), last_updated TIMESTAMP)")
-    val scratch = Files.createTempDirectory("graft_jdbc_skip").toString
+    val scratch = TestSpark.tempDir("graft_jdbc_skip").toString
     val source = JdbcSource(url, schemaPattern = Some("APP"))
     // the catalog sees all three; WATERMARK is excluded (controller.py:23-24
     // — folded upper by Derby, hence the case-insensitive anti-filter)
@@ -150,7 +149,7 @@ class JdbcCdcSpec extends AnyFunSuite {
     insert2((1 to 4).map(i =>
       (i.toLong, ts(f"2024-01-01 00:0$i%d:00"), s"alpha-$i")): _*)
 
-    val sink = s"${Files.createTempDirectory("graft_jdbc_dbstate")}/sink"
+    val sink = s"${TestSpark.tempDir("graft_jdbc_dbstate")}/sink"
     val source = JdbcSource(u2, schemaPattern = Some("APP"))
     val store = graft.operators.JdbcWatermarkStore(u2)
 
@@ -195,7 +194,7 @@ class JdbcCdcSpec extends AnyFunSuite {
       }
       ()
     } finally c.close()
-    val sink = s"${Files.createTempDirectory("graft_jdbc_pool")}/sink"
+    val sink = s"${TestSpark.tempDir("graft_jdbc_pool")}/sink"
     val source = JdbcSource(u5, schemaPattern = Some("APP"))
     val store = graft.operators.JdbcWatermarkStore(u5)
     // park every watermark AT the table max: the tick is all-quiet, i.e.
@@ -248,7 +247,7 @@ class JdbcCdcSpec extends AnyFunSuite {
       }
       ()
     } finally c.close()
-    val sink = s"${Files.createTempDirectory("graft_jdbc_pool16")}/sink"
+    val sink = s"${TestSpark.tempDir("graft_jdbc_pool16")}/sink"
     // DEFAULT poolMaxIdle (8) — the r17 shape under-cached at par=16,
     // re-opening up to 8 connections per warm tick; the parallelism hint
     // must widen the warm set to the tick's real worker count
@@ -313,7 +312,7 @@ class JdbcCdcSpec extends AnyFunSuite {
       "CREATE TABLE events_src (event_id BIGINT NOT NULL PRIMARY KEY, " +
         "ts TIMESTAMP, payload VARCHAR(64), region VARCHAR(8))",
       "INSERT INTO events_src VALUES (1, TIMESTAMP('2024-01-01 00:01:00'), 'a', 'eu')")
-    val scratch = Files.createTempDirectory("graft_jdbc_drop").toString
+    val scratch = TestSpark.tempDir("graft_jdbc_drop").toString
     val (state, sink) = (s"$scratch/state", s"$scratch/sink")
     val source = JdbcSource(u3, schemaPattern = Some("APP"))
     poll(source, ParquetWatermarkStore(state), sink, chunkSize = 2)

@@ -164,7 +164,7 @@ class MaterializeSpec extends AnyFunSuite {
     // therefore refuse anything that is not a pure scan/project/filter
     // chain (returning it untouched), while still spreading a degenerate
     // narrow scan.
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread_").toString
+    val dir = TestSpark.tempDir("graft_spread_").toString
     spark.range(100).selectExpr("id", "id * 2 as v").coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/t.parquet")
     val scan = spark.read.parquet(s"$dir/t.parquet")

@@ -5,7 +5,6 @@ import graft.sources.{DirSource, Tables}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Timestamp-type robustness (VERDICT r8 §wrong-1): a parquet writer is one
@@ -35,7 +34,7 @@ class NtzSpec extends AnyFunSuite {
   }
 
   test("NTZ parquet normalizes to TimestampType at the Tables.table choke point") {
-    val scratch = Files.createTempDirectory("graft_ntz").toString
+    val scratch = TestSpark.tempDir("graft_ntz").toString
     writeNtzEvents(scratch)
     // prove the file really is NTZ on disk (raw read, no normalization)
     val raw = spark.read.parquet(s"$scratch/events.parquet")
@@ -49,7 +48,7 @@ class NtzSpec extends AnyFunSuite {
   }
 
   test("deltaScan + watermark collect survive NTZ fixtures end-to-end") {
-    val scratch = Files.createTempDirectory("graft_ntz_cdc").toString
+    val scratch = TestSpark.tempDir("graft_ntz_cdc").toString
     writeNtzEvents(scratch)
     val df = Tables.table(spark, scratch, "events")
     val delta = Cdc.deltaScan(df, "ts", Some(ts("2024-01-01 00:05:00")))
@@ -96,7 +95,7 @@ class NtzSpec extends AnyFunSuite {
   }
 
   test("full sync cycle over an NTZ source writes a non-empty sink and advances the watermark") {
-    val scratch = Files.createTempDirectory("graft_ntz_cycle").toString
+    val scratch = TestSpark.tempDir("graft_ntz_cycle").toString
     val src = s"$scratch/src"
     writeNtzEvents(src)
     val synced = Cdc.requireSynced(Cdc.syncCycleOutcomesOn(spark, DirSource(src),
@@ -108,7 +107,7 @@ class NtzSpec extends AnyFunSuite {
 
   test("footer-stats probe distrusts NTZ timestamps — a wall-clock stat must " +
       "never feed the quiet fast path (ADVICE r16 high)") {
-    val scratch = Files.createTempDirectory("graft_ntz_stats").toString
+    val scratch = TestSpark.tempDir("graft_ntz_stats").toString
     writeNtzEvents(scratch)
     // NTZ footer stats are wall-clock values, not instants: west of UTC
     // the raw stat UNDER-reports the normalized max by the zone offset,
@@ -122,8 +121,8 @@ class NtzSpec extends AnyFunSuite {
     val prior = spark.conf.get("spark.sql.session.timeZone")
     try {
       spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-      val state = Files.createTempDirectory("graft_ntz_stats_state").toString
-      val sink = Files.createTempDirectory("graft_ntz_stats_sink").toString
+      val state = TestSpark.tempDir("graft_ntz_stats_state").toString
+      val sink = TestSpark.tempDir("graft_ntz_stats_sink").toString
       Cdc.seedWatermarkStore(state, Map(
         "events" -> Timestamp.from(java.time.Instant.parse("2024-01-01T02:00:00Z"))))
       val synced = Cdc.requireSynced(Cdc.syncCycleOutcomesOn(spark, DirSource(scratch),
@@ -134,7 +133,7 @@ class NtzSpec extends AnyFunSuite {
   }
 
   test("sessionize (q44) runs over an NTZ events fixture") {
-    val scratch = Files.createTempDirectory("graft_ntz_q44").toString
+    val scratch = TestSpark.tempDir("graft_ntz_q44").toString
     writeNtzEvents(scratch)
     val out = SparkEntry.queries("q44_sessionize")(spark, scratch).collect()
     // user 10: events at 00:00/00:10 (one session), 02:00 (new session,

@@ -15,7 +15,7 @@ class PlanAuditSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val dir = {
-    val d = java.nio.file.Files.createTempDirectory("graft_audit").toString
+    val d = TestSpark.tempDir("graft_audit").toString
     (1 to 1000).map(i => (i.toLong, Timestamp.valueOf(f"2024-01-${i % 28 + 1}%02d 00:00:00"), s"p$i", i * 1.5))
       .toDF("event_id", "ts", "payload", "value")
       .write.parquet(s"$d/events.parquet")

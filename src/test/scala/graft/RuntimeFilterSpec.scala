@@ -18,7 +18,7 @@ class RuntimeFilterSpec extends AnyFunSuite {
   // hides the plan shape and is not the scan-side regime the operator
   // exists for.
   private lazy val big = {
-    val d = java.nio.file.Files.createTempDirectory("graft_bloom").toString
+    val d = TestSpark.tempDir("graft_bloom").toString
     (0 until 10000).map(i => (i.toLong, s"row$i")).toDF("k", "payload")
       .write.parquet(s"$d/big.parquet")
     spark.read.parquet(s"$d/big.parquet")

@@ -15,7 +15,7 @@ class SchemaCacheSpec extends AnyFunSuite {
   lazy val spark = TestSpark.session
 
   private def tmpdir(): java.io.File = {
-    val d = java.nio.file.Files.createTempDirectory("graft_schemacache_").toFile
+    val d = TestSpark.tempDir("graft_schemacache_").toFile
     d.deleteOnExit()
     d
   }

@@ -27,7 +27,7 @@ class ServeHttpSpec extends AnyFunSuite {
   }
 
   test("health, stats, watermarks, and query respond over TCP; missing param is a 400") {
-    val scratch = Files.createTempDirectory("graft_http").toString
+    val scratch = TestSpark.tempDir("graft_http").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     (1 to 120).map(i => (i.toLong, Timestamp.valueOf(f"2024-01-01 00:${i % 60}%02d:00"), s"payload-$i"))
@@ -70,7 +70,7 @@ class ServeHttpSpec extends AnyFunSuite {
   }
 
   test("/query IVF routing: served_by observable, staleness bounded by auto-refresh, mode pins paths") {
-    val scratch = Files.createTempDirectory("graft_http_ivf").toString
+    val scratch = TestSpark.tempDir("graft_http_ivf").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     (1 to 80).map(i => (i.toLong, Timestamp.valueOf(f"2024-01-01 00:${i % 60}%02d:00"), s"alpha-$i"))
@@ -133,7 +133,7 @@ class ServeHttpSpec extends AnyFunSuite {
 
   test("/ivf/status: no-index answers exists=false; a live index reports the " +
       "staleness clock and the stale-cluster list") {
-    val scratch = Files.createTempDirectory("graft_http_ivfstatus").toString
+    val scratch = TestSpark.tempDir("graft_http_ivfstatus").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     (1 to 60).map(i => (i.toLong, Timestamp.valueOf(f"2024-01-01 00:${i % 60}%02d:00"), s"gamma-$i"))
@@ -183,7 +183,7 @@ class ServeHttpSpec extends AnyFunSuite {
   test("auto-refresh cycles append to the live index: ids once, centroids unchanged, " +
       "/ivf/status reports the appended fraction") {
     import graft.operators.{Cdc, IvfIndex}
-    val scratch = Files.createTempDirectory("graft_http_ivfappend").toString
+    val scratch = TestSpark.tempDir("graft_http_ivfappend").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     def land(from: Int, to: Int, day: Int): Unit =
@@ -225,7 +225,7 @@ class ServeHttpSpec extends AnyFunSuite {
   }
 
   test("the HTTP server binds loopback unless another address is asked for") {
-    val scratch = Files.createTempDirectory("graft_http_bind").toString
+    val scratch = TestSpark.tempDir("graft_http_bind").toString
     val engine = new Engine(spark, s"$scratch/src", s"$scratch/state", s"$scratch/sink")
     val api = new ServeHttp(engine)
     val port = api.start(0)
@@ -242,7 +242,7 @@ class ServeHttpSpec extends AnyFunSuite {
   }
 
   test("store-reading routes take no lock: all respond while a commit holds Engine.commitLock") {
-    val scratch = Files.createTempDirectory("graft_http_lockfree").toString
+    val scratch = TestSpark.tempDir("graft_http_lockfree").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     (1 to 40).map(i => (i.toLong, Timestamp.valueOf(f"2024-01-01 00:${i % 60}%02d:00"), s"pay-$i"))
@@ -273,7 +273,7 @@ class ServeHttpSpec extends AnyFunSuite {
   }
 
   test("/health answers while a slow /query is pinned in flight (r14: no dispatcher serialization)") {
-    val scratch = Files.createTempDirectory("graft_http_health").toString
+    val scratch = TestSpark.tempDir("graft_http_health").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     (1 to 40).map(i => (i.toLong, Timestamp.valueOf(f"2024-01-01 00:${i % 60}%02d:00"), s"pay-$i"))
@@ -312,7 +312,7 @@ class ServeHttpSpec extends AnyFunSuite {
   }
 
   test("/query flood degrades with 503 backpressure within the bound; slot holders and /health unaffected (r15)") {
-    val scratch = Files.createTempDirectory("graft_http_flood").toString
+    val scratch = TestSpark.tempDir("graft_http_flood").toString
     val src = s"$scratch/src"
     new java.io.File(src).mkdirs()
     (1 to 40).map(i => (i.toLong, Timestamp.valueOf(f"2024-01-01 00:${i % 60}%02d:00"), s"pay-$i"))
@@ -364,7 +364,7 @@ class ServeHttpSpec extends AnyFunSuite {
   }
 
   test("/query rejects k < 1 with a 400") {
-    val scratch = Files.createTempDirectory("graft_http_k").toString
+    val scratch = TestSpark.tempDir("graft_http_k").toString
     val src = s"$scratch/src"
     land(src, 1 to 20, 1, i => s"pay-$i")
     val engine = new Engine(spark, src, s"$scratch/state", s"$scratch/sink")
@@ -381,7 +381,7 @@ class ServeHttpSpec extends AnyFunSuite {
   }
 
   test("/query sees each sink commit and each IVF pointer flip on the next request") {
-    val scratch = Files.createTempDirectory("graft_http_visible").toString
+    val scratch = TestSpark.tempDir("graft_http_visible").toString
     val (src, sink) = (s"$scratch/src", s"$scratch/sink")
     val engine = ivfEngine(scratch, 40, autoRefreshIvf = false)
     val api = new ServeHttp(engine)
@@ -408,7 +408,7 @@ class ServeHttpSpec extends AnyFunSuite {
 
   test("/query answers stay correct when the sink is deleted and copied back under the " +
       "same pointer names, then committed to again") {
-    val scratch = Files.createTempDirectory("graft_http_restore").toString
+    val scratch = TestSpark.tempDir("graft_http_restore").toString
     val (src, state, sink, snap) = (s"$scratch/src", s"$scratch/state", s"$scratch/sink", s"$scratch/snap")
     val engine = ivfEngine(scratch, 40)
     Seq(src, state, sink).foreach(d => copyTree(d, d.replace(scratch, snap)))
@@ -447,7 +447,7 @@ class ServeHttpSpec extends AnyFunSuite {
   }
 
   test("a query resolved before a commit answers from its snapshot after it") {
-    val scratch = Files.createTempDirectory("graft_http_inflight").toString
+    val scratch = TestSpark.tempDir("graft_http_inflight").toString
     val (src, sink) = (s"$scratch/src", s"$scratch/sink")
     val engine = ivfEngine(scratch, 40)
     def idSet(df: org.apache.spark.sql.DataFrame) = df.select("id").as[String].collect().toSet
@@ -469,7 +469,7 @@ class ServeHttpSpec extends AnyFunSuite {
   test("after one warm-up per route, exact, nprobe=2 and IVF /query requests each run one " +
       "Spark job over a root spanning more than 32 bucket directories") {
     import graft.operators.Cdc
-    val scratch = Files.createTempDirectory("graft_http_jobs").toString
+    val scratch = TestSpark.tempDir("graft_http_jobs").toString
     val sink = s"$scratch/sink"
     val engine = ivfEngine(scratch, 150, clusters = 4)
     val entries = Cdc.readManifest(sink).filter(_.namespace == Cdc.DefaultNamespace)
@@ -479,10 +479,9 @@ class ServeHttpSpec extends AnyFunSuite {
     val port = api.start(0)
     try {
       def jobs(route: String): Int = {
-        val ((code, body), n) = TestSpark.jobsDuring(
-          get(s"http://127.0.0.1:$port/query?q=alpha-7&k=10&$route"))
-        assert(code == 200, body)
-        n
+        val r = QueryProfile(spark)(get(s"http://127.0.0.1:$port/query?q=alpha-7&k=10&$route"))
+        assert(r.result._1 == 200, r.result._2)
+        r.jobs.size
       }
       // the first request lists the root, above Spark's 32-path threshold
       // a Spark job of its own

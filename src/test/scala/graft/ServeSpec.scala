@@ -33,7 +33,7 @@ class ServeSpec extends AnyFunSuite {
   }
 
   test("one poll cycle + one similarity query through the service wiring") {
-    val scratch = Files.createTempDirectory("graft_serve").toString
+    val scratch = TestSpark.tempDir("graft_serve").toString
     val src = fixtureSource(scratch)
     val cfg = ServeMain.Config(src, s"$scratch/state", s"$scratch/sink",
       intervalSeconds = 0, maxCycles = 1, query = Some("payload-42 payload-43"), k = 2)
@@ -51,7 +51,7 @@ class ServeSpec extends AnyFunSuite {
   }
 
   test("polling circuit-breaker: persistent cycle failure rethrows after N ticks") {
-    val scratch = Files.createTempDirectory("graft_serve_fail").toString
+    val scratch = TestSpark.tempDir("graft_serve_fail").toString
     val src = s"$scratch/src"
     new java.io.File(s"$src/events.parquet").mkdirs()
     // a corrupt parquet footer makes every cycle fail

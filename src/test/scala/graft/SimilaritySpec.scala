@@ -132,7 +132,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("Engine.searchSimilar ANN recall vs its own exact (nprobe=0) scan") {
     import graft.operators.Cdc
     import graft.functions.Embeddings
-    val scratch = java.nio.file.Files.createTempDirectory("graft_recall").toString
+    val scratch = TestSpark.tempDir("graft_recall").toString
     val sink = s"$scratch/sink"
     Cdc.initVectorSink(spark, sink)
     val batch = (1 to 60).map(i => (s"d#$i", Embeddings.embed(s"alpha beta doc number $i"), "t", s"text $i"))
@@ -151,7 +151,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("persisted IVF index: pruned search hits partition filters; nprobe=k is exact") {
     import graft.operators.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = TestSpark.tempDir("graft_ivf").toString
     IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
     val probe = vecs.where(col("vec_id") === 7).collect()(0).getSeq[Float](1).toArray
 
@@ -182,7 +182,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("IvfIndex.append: incremental maintenance touches only routed clusters, search stays exact") {
     import graft.operators.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    val dir = TestSpark.tempDir("graft_ivf_app").toString
     IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
 
     def filesByCluster: Map[String, Set[String]] = {
@@ -226,7 +226,7 @@ class SimilaritySpec extends AnyFunSuite {
     * directly (no source): each upsert lands in a new generation root. */
   private def docEngine(tag: String, ids: Range) = {
     import graft.operators.Cdc
-    val scratch = java.nio.file.Files.createTempDirectory(tag).toString
+    val scratch = TestSpark.tempDir(tag).toString
     val sink = s"$scratch/sink"
     Cdc.initVectorSink(spark, sink)
     upsertDocs(sink, ids)
@@ -343,7 +343,7 @@ class SimilaritySpec extends AnyFunSuite {
       "from sidecar counts, the rebuild trigger fires at the measured threshold, " +
       "rebuild resets it") {
     import graft.operators.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_stale").toString
+    val dir = TestSpark.tempDir("graft_ivf_stale").toString
     IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
     assert(IvfIndex.appendedFraction(dir) == 0.0)
 
@@ -366,7 +366,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(IvfIndex.appendedFraction(dir) == f2)
 
     // rebuild over the full current corpus resets the staleness clock
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ivf_stale2").toString
+    val dir2 = TestSpark.tempDir("graft_ivf_stale2").toString
     IvfIndex.build(spark.read.parquet(s"$dir/data")
       .select(col("id").as("vec_id"), col("embedding")),
       "vec_id", "embedding", dir2, k = 4, iters = 2)
@@ -390,7 +390,7 @@ class SimilaritySpec extends AnyFunSuite {
       "recount after concentrated appends and a rebuild over the same directory, " +
       "metadata commits as ONE directory with the matrix") {
     import graft.operators.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_sidecar").toString
+    val dir = TestSpark.tempDir("graft_ivf_sidecar").toString
     IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
 
     def sidecarEqualsRecount(tag: String): Unit = {
@@ -445,7 +445,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("centroid read: one Spark job, entries in cluster-id order after a repair " +
       "mints non-contiguous ids, whatever order the file holds them in") {
     import graft.operators.IvfIndex
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_centroids").toString
+    val dir = TestSpark.tempDir("graft_ivf_centroids").toString
     IvfIndex.build(vecs, "vec_id", "embedding", dir, k = 4, iters = 2)
     val built = IvfIndex.centroidEntries(spark, dir)
     assert(built.map(_._1) == built.indices)
@@ -475,8 +475,9 @@ class SimilaritySpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/centroids").collect().map(_.getInt(0)).toSeq == ids.reverse)
     assert(IvfIndex.sidecarClusterRows(dir) == IvfIndex.recountClusterRows(dir))
 
-    val (read, jobs) = TestSpark.jobsDuring(IvfIndex.centroidEntries(spark, dir))
-    assert(jobs == 1, s"a centroid read must run one Spark job, ran $jobs")
+    val profiled = QueryProfile(spark)(IvfIndex.centroidEntries(spark, dir))
+    val read = profiled.result
+    assert(profiled.jobs.size == 1, s"a centroid read must run one Spark job, ran ${profiled.jobs.size}")
     assert(read.map(_._1) == ids.sorted && ids == ids.sorted, s"ids out of order: ${read.map(_._1)}")
     assert(read.map(_._2.toSeq) == stored.map(_._2.toSeq))
 

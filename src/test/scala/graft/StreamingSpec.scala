@@ -22,7 +22,7 @@ class StreamingSpec extends AnyFunSuite {
     * `df.write.parquet(dir/x.parquet)` DIRECTORY is invisible to it. Write
     * to a scratch dir and move the part file in as one drop file. */
   private def writeDrop(df: org.apache.spark.sql.DataFrame, inDir: String, name: String): Unit = {
-    val tmp = Files.createTempDirectory("graft_drop").toString
+    val tmp = TestSpark.tempDir("graft_drop").toString
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles().find(_.getName.endsWith(".parquet")).get
     Files.move(part.toPath, new java.io.File(s"$inDir/$name.parquet").toPath)
@@ -30,7 +30,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming CDC pipeline: drops arrive, chunks are embedded and upserted, " +
     "watermark advances; second drain is incremental") {
-    val scratch = Files.createTempDirectory("graft_stream").toString
+    val scratch = TestSpark.tempDir("graft_stream").toString
     val in = s"$scratch/in"; val state = s"$scratch/state"; val sink = s"$scratch/sink"
     new java.io.File(in).mkdirs()
     Cdc.initVectorSink(spark, sink)
@@ -69,7 +69,7 @@ class StreamingSpec extends AnyFunSuite {
     // (and before the micro-batch commit): the restarted query must re-run
     // the whole batch, and content-hash ids must absorb the re-delivery —
     // same rows, same ids, overwrite not duplicate.
-    val scratch = Files.createTempDirectory("graft_stream_crash").toString
+    val scratch = TestSpark.tempDir("graft_stream_crash").toString
     val in = s"$scratch/in"; val state = s"$scratch/state"; val sink = s"$scratch/sink"
     new java.io.File(in).mkdirs()
     Cdc.initVectorSink(spark, sink)
@@ -100,7 +100,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("the stream and the polling cycle share one tail: one drop yields the same " +
     "(id, source, text) rows and the same watermark on both paths") {
-    val scratch = Files.createTempDirectory("graft_stream_parity").toString
+    val scratch = TestSpark.tempDir("graft_stream_parity").toString
     val in = s"$scratch/in"; val src = s"$scratch/src"
     new java.io.File(in).mkdirs()
     // rows arrive out of key order (97 permutes 1..250 mod 251), so chunks
@@ -135,7 +135,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("multi-batch ProcessingTime stream: live drops sequence through micro-batches " +
     "with strict-> lateness exclusion and watermark-after-sink commits") {
-    val scratch = Files.createTempDirectory("graft_stream_pt").toString
+    val scratch = TestSpark.tempDir("graft_stream_pt").toString
     val in = s"$scratch/in"; val state = s"$scratch/state"; val sink = s"$scratch/sink"
     new java.io.File(in).mkdirs()
     Cdc.initVectorSink(spark, sink)
@@ -181,7 +181,7 @@ class StreamingSpec extends AnyFunSuite {
   test("flatMapGroupsWithState sessionizer: closes sessions on gap, keeps state open") {
     import graft.streaming.Sessionizer
     import graft.streaming.Sessionizer.{Event, Session}
-    val scratch = Files.createTempDirectory("graft_sess").toString
+    val scratch = TestSpark.tempDir("graft_sess").toString
     val in = s"$scratch/in"
     new java.io.File(in).mkdirs()
     val events = Seq(
@@ -225,7 +225,7 @@ class StreamingSpec extends AnyFunSuite {
   test("event-time timeout closes an abandoned session once the watermark passes the gap") {
     import graft.streaming.Sessionizer
     import graft.streaming.Sessionizer.{Event, Session}
-    val scratch = Files.createTempDirectory("graft_sess_to").toString
+    val scratch = TestSpark.tempDir("graft_sess_to").toString
     val in = s"$scratch/in"
     new java.io.File(in).mkdirs()
     val schema = Seq(Event(0L, ts("2024-01-01 00:00:00"), 0.0)).toDF("user_id", "ts", "value").schema
@@ -272,7 +272,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("cross-batch streaming dedup: re-delivered keys within the horizon emit once") {
-    val scratch = Files.createTempDirectory("graft_sdedup").toString
+    val scratch = TestSpark.tempDir("graft_sdedup").toString
     val in = s"$scratch/in"
     new java.io.File(in).mkdirs()
     val d1 = Seq(
@@ -297,7 +297,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream join matches keys within the time bound and drops the rest") {
-    val scratch = Files.createTempDirectory("graft_ssjoin").toString
+    val scratch = TestSpark.tempDir("graft_ssjoin").toString
     val inL = s"$scratch/clicks"; val inR = s"$scratch/buys"
     new java.io.File(inL).mkdirs(); new java.io.File(inR).mkdirs()
     val clicks = Seq(
@@ -327,7 +327,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("windowed streaming aggregation with watermark produces per-window counts") {
-    val scratch = Files.createTempDirectory("graft_wstream").toString
+    val scratch = TestSpark.tempDir("graft_wstream").toString
     val in = s"$scratch/in"
     new java.io.File(in).mkdirs()
     val events = Seq(

@@ -21,22 +21,15 @@ object TestSpark {
     s
   }
 
-  /** Spark jobs started while `f` runs, with the listener bus drained
-    * before the count is reset and before it is read. */
-  def jobsDuring[A](f: => A): (A, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    session.sparkContext.addSparkListener(listener)
-    try {
-      CcProbe.drainListenerBus(session)
-      jobs.set(0)
-      val a = f
-      CcProbe.drainListenerBus(session)
-      (a, jobs.get)
-    } finally session.sparkContext.removeSparkListener(listener)
+  /** This JVM's scratch root: every spec's temp directory is created
+    * under it, and a shutdown hook deletes it when the test JVM exits. */
+  lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_test_")
+    sys.addShutdownHook(graft.operators.Cdc.deleteRecursively(root.toFile))
+    root
   }
+
+  /** A fresh temp directory under [[scratchRoot]]. */
+  def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix)
 }

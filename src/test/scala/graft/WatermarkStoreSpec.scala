@@ -3,7 +3,6 @@ package graft
 import graft.operators.{Cdc, JdbcWatermarkStore, ParquetWatermarkStore}
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.file.Files
 import java.sql.{DriverManager, Timestamp}
 
 /** [[graft.operators.WatermarkStore]] bindings (VERDICT r15 task 2): the
@@ -98,7 +97,7 @@ class WatermarkStoreSpec extends AnyFunSuite {
     // On-disk (memory: databases are per-JVM by construction — a second
     // process would silently get a DIFFERENT empty database, proving
     // nothing). The parent boots the database first and holds it.
-    val dbDir = s"${Files.createTempDirectory("graft_wms_xproc")}/db"
+    val dbDir = s"${TestSpark.tempDir("graft_wms_xproc")}/db"
     val url = s"jdbc:derby:$dbDir;create=true"
     val store = JdbcWatermarkStore(url)
     store.update("t1", ts("2024-01-02 00:00:00"))
@@ -135,7 +134,7 @@ class WatermarkStoreSpec extends AnyFunSuite {
   }
 
   test("parquet binding is behavior-identical (same contract, Cdc store underneath)") {
-    val state = Files.createTempDirectory("graft_wms_pq").toString
+    val state = TestSpark.tempDir("graft_wms_pq").toString
     val store = ParquetWatermarkStore(state)
     assert(store.get("t1").isEmpty)
     store.update("t1", ts("2024-01-02 00:00:00"))

@@ -4,7 +4,7 @@
 # the full add-opens set silently pushes Spark 4 off its Unsafe/unaligned
 # fast paths — measured 2-30x inflation on shuffle-heavy queries (a whole
 # sf0.1 bench read 99.5s vs 60s, r13) — so perf numbers from a bare JVM
-# are garbage. Usage: tools/jvmrun.sh graft.QTime q45_dedup_clusters ...
+# are garbage. Usage: tools/jvmrun.sh graft.Profile <fixture-dir> q45_dedup_clusters ...
 set -euo pipefail
 cd "$(dirname "$0")/.."
 ADD_OPENS=""
