@@ -33,32 +33,10 @@ object Bench {
   def materialize(df: org.apache.spark.sql.DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** The bench's timed session — the ONE builder both Bench and CalProbe
-    * use. The calibration floor (bench_calibration_floor.txt) is only
-    * comparable across runs when every probe runs under this exact conf:
-    * CalProbe's pre-r15 hard-coded local[32] builder could, under a
-    * mismatched (faster) config, permanently depress the shared
-    * never-rotated floor and make every subsequent Bench run read as
-    * loaded (ADVICE r14). */
-  private[graft] def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", GraftSession.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
-  }
-
   /** Untimed warmup of both calibration probe shapes (codegen + JIT paid
     * once), so a following [[calibrate]] measures the machine, not the
-    * compiler — shared by CalProbe and Bench's start-of-run probe. */
-  private[graft] def warmCalibration(spark: SparkSession): Unit = {
+    * compiler — shared by `--calibrate` and the start-of-run probe. */
+  private def warmCalibration(spark: SparkSession): Unit = {
     spark.range(0L, 1000000L, 1, 32)
       .selectExpr("sum((id * 2654435761) % 1000000007)").collect()
     spark.range(0L, 1000000L, 1, 32)
@@ -70,8 +48,23 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = buildSession()
+    // The served conf at the bench's default width. The calibration floor
+    // (bench_calibration_floor.txt) is only comparable across runs when
+    // every probe runs under one conf, so `--calibrate` uses this session
+    // too (ADVICE r14: a faster probe-only conf once depressed the shared,
+    // never-rotated floor and made every later run read as loaded).
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // `--calibrate`: the load probe alone (~30 s), one JSON line with the
+    // ratio to the all-time floor — the cheap check for a calm window
+    // (ratio ≤ ~1.2) before paying for a full run
+    if (args.headOption.contains("--calibrate")) {
+      warmCalibration(spark)
+      val (sec, floor) = calibrate(spark)
+      println(f"""{"cal_sec":$sec%.4f,"floor":$floor%.4f,"ratio":${sec / floor}%.3f}""")
+      spark.stop()
+      return
+    }
     // Warm the JVM, codegen cache, and JIT on the smallest scale factor:
     // the generated code for each query shape is identical across scale
     // factors, so steady-state (not first-compile) cost is measured.
@@ -200,7 +193,7 @@ object Bench {
     * when the box is genuinely loaded, which is the signal). The all-time
     * floor persists in bench_calibration_floor.txt; it is NEVER rotated
     * because the probe never changes. */
-  private[graft] def calibrate(spark: SparkSession): (Double, Double) = {
+  private def calibrate(spark: SparkSession): (Double, Double) = {
     val sec = (1 to 3).map { _ =>
       val t0 = System.nanoTime()
       // per-term modulus keeps the ANSI sum < 4e17 (no long overflow)

@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle.partitions defaults to the harness core count locally; on a
   *    real cluster this is overridden by AQE's coalescing anyway.
   *  - UTC session timezone: deterministic timestamp semantics vs the oracle.
+  *
+  * [[builder]] is the only session builder: the bench, the oracle dump,
+  * the scale ladder and the tests take it and add their own deltas with
+  * `.config`, so every harness checks the conf the engine serves.
   */
 object GraftSession {
   /** Scratch warehouse dir: no main/test ever creates managed tables, but
@@ -25,8 +29,7 @@ object GraftSession {
   def builder(
       cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
         Runtime.getRuntime.availableProcessors.toString)): SparkSession.Builder =
-    SparkSession
-      .builder()
+    SparkSession.builder()
       .withExtensions(new graft.plans.GraftExtensions)
       .master(s"local[$cpus]")
       .appName("graft")

@@ -45,13 +45,10 @@ object ScaleBench {
 
   /** The ladder session: identical confs for every decade measurement
     * (and for `graft.Profile --ladder`, so stage records explain ladder
-    * numbers, not some other configuration's). */
+    * numbers, not some other configuration's) — the served conf at a
+    * fixed 32-core width, plus the ladder's scale knobs. */
   def session(): SparkSession =
-    SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    GraftSession.builder("32")
       // shuffle.partitions is the small-data default; AQE starts wide and
       // coalesces DOWN per stage, so the big fixtures aren't pinned to 32
       // post-shuffle partitions. The initial width is the scale knob a
@@ -67,19 +64,10 @@ object ScaleBench {
       // per-task hash maps fit, so the decade pushes can too
       .config("spark.sql.files.maxPartitionBytes",
         sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "128m"))
-      // Ladder decades cross spark.shuffle.sort.bypassMergeThreshold's
-      // default (200) as the input-scaled distinct widths grow — the
-      // sort writer costs 5× the bypass writer's per-row CPU on these
-      // mid-width shuffles (q79 sx625 StageProbe A/B, BASELINE.md r13);
-      // with a fixed writer the per-row CPU is decade-flat. Same value
-      // and rationale as GraftSession; env-overridable for A/Bs.
+      // GraftSession's bypass-writer bar (512; q79 sx625 StageProbe A/B,
+      // BASELINE.md r13), env-overridable here for ladder A/Bs
       .config("spark.shuffle.sort.bypassMergeThreshold",
         sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESH", "512"))
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", GraftSession.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
 
   def main(args: Array[String]): Unit = {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.sources.Tables
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Scale-curve fixture generator: writes an R×-replicated copy of a
@@ -37,13 +37,7 @@ object ScaleGen {
     val Array(srcDir, outDir, repStr) = args
     val reps = repStr.toInt
     require(reps >= 1, s"replicas must be >= 1, got $reps")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", GraftSession.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val rcol = explode(array((0 until reps).map(i => lit(i)): _*))

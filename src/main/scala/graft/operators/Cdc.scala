@@ -337,7 +337,7 @@ object Cdc {
     shardAdvised.asScala.toSet
   }
 
-  /** Probe/test seeding surface (graft.WmProbe): publish `rows` as the
+  /** Test seeding surface: publish `rows` as the
     * whole store in ONE commit per shard — the same writer, sort, and
     * pointer protocol as [[updateWatermark]], without the O(T^2) rewrite
     * that T public single-key commits would pay. Not a production API:

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,23 +10,19 @@ import org.scalatest.funsuite.AnyFunSuite
   * storage, which is what a production deployment would use for the
   * fact/fact joins. */
 class BucketingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val wh = TestSpark.tempDir("graft_wh").toString
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bucket-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
-      .config("spark.sql.sources.bucketing.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  lazy val spark = TestSpark.session
   import spark.implicits._
 
-  /** getOrCreate may reuse an earlier suite's session (configs ignored),
-    * so never rely on the warehouse location: drop tables AND scrub their
-    * default-warehouse directories before creating. */
+  /** The sort-merge path: broadcast joins off around one test's plans,
+    * the shared session's own value restored after. */
+  private def withoutBroadcast[A](body: => A): A = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  /** The shared warehouse outlives this suite's runs: drop tables AND
+    * scrub their warehouse directories before creating. */
   private def resetTable(name: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $name")
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
@@ -39,7 +34,7 @@ class BucketingSpec extends AnyFunSuite {
     rm(loc)
   }
 
-  test("join of two bucketed tables plans no shuffle exchange") {
+  test("join of two bucketed tables plans no shuffle exchange") { withoutBroadcast {
     resetTable("b_orders"); resetTable("b_items")
     val orders = (1 to 1000).map(i => (i.toLong, s"o$i")).toDF("key", "o")
     val items = (1 to 3000).map(i => ((i % 1000 + 1).toLong, i.toDouble)).toDF("key", "v")
@@ -47,15 +42,14 @@ class BucketingSpec extends AnyFunSuite {
     items.write.mode("overwrite").bucketBy(4, "key").sortBy("key").saveAsTable("b_items")
 
     val joined = spark.table("b_orders").join(spark.table("b_items"), "key")
-      .hint("merge") // ensure SMJ even if a session without the no-broadcast conf was reused
     val plan = joined.queryExecution.executedPlan
     val shuffles = plan.collect { case e: ShuffleExchangeExec => e }
     assert(shuffles.isEmpty, s"expected shuffle-free bucketed join, got:\n$plan")
     assert(joined.count() == 3000)
     spark.sql("DROP TABLE IF EXISTS b_orders"); spark.sql("DROP TABLE IF EXISTS b_items")
-  }
+  }}
 
-  test("unbucketed control: the same join DOES shuffle") {
+  test("unbucketed control: the same join DOES shuffle") { withoutBroadcast {
     val a = (1 to 1000).map(i => (i.toLong, s"o$i")).toDF("key", "o")
     val b = (1 to 3000).map(i => ((i % 1000 + 1).toLong, i.toDouble)).toDF("key", "v")
     val plan = a.join(b, "key").queryExecution.executedPlan
@@ -64,5 +58,5 @@ class BucketingSpec extends AnyFunSuite {
     val shuffles = plan.toString.contains("Exchange") ||
       a.join(b, "key").queryExecution.executedPlan.toString.contains("Exchange")
     assert(shuffles)
-  }
+  }}
 }

@@ -1,30 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SQL surface of the custom expressions (GraftExtensions). Uses its own
-  * session: extensions bind at session construction, so the default session
-  * (created extension-less by whichever suite ran first) must be cleared or
-  * getOrCreate would return it and every SQL lookup here would fail. */
+/** SQL surface of the custom expressions (GraftExtensions), on the shared
+  * session: it comes from GraftSession, which binds the extensions. */
 class ExtensionsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.warehouse.dir", GraftSession.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // restore the shared session as default for suites that run after
-    prior.foreach(SparkSession.setDefaultSession)
-    SparkSession.clearActiveSession()
-    s
-  }
+  lazy val spark = TestSpark.session
 
   test("graft_cosine is callable from SQL and matches hand math") {
     val r = spark.sql(

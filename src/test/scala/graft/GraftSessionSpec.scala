@@ -2,11 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The served engine's session width: without `SPARK_GRAFT_CPUS` the
-  * session must size itself to the cores the JVM may use, not to a fixed
-  * width. The session is built in a child JVM started without the
-  * variable — the test JVM's own environment sets it, and one JVM holds
-  * one SparkContext. */
+/** The served engine's session. Without `SPARK_GRAFT_CPUS` it must size
+  * itself to the cores the JVM may use, not to a fixed width; that session
+  * is built in a child JVM started without the variable — the test JVM's
+  * own environment sets it, and one JVM holds one SparkContext. And every
+  * harness builds it through `GraftSession.builder`, so none checks a conf
+  * the engine does not serve. */
 class GraftSessionSpec extends AnyFunSuite {
 
   test("without SPARK_GRAFT_CPUS the session is as wide as the available cores") {
@@ -32,6 +33,21 @@ class GraftSessionSpec extends AnyFunSuite {
     val lines = out.linesIterator.toSeq
     assert(lines.contains(s"master=local[$cores]"), s"child output:\n$out")
     assert(lines.contains(s"shuffle.partitions=$cores"), s"child output:\n$out")
+  }
+
+  test("GraftSession is the only place a Spark session builder is made") {
+    val builderCall = """SparkSession\s*\.\s*builder\s*\(""".r
+    def scalaFiles(dir: java.io.File): Seq[java.io.File] =
+      Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+      }
+    val files = Seq("src/main", "src/test").flatMap(d => scalaFiles(new java.io.File(d)))
+    assert(files.exists(_.getName == "GraftSession.scala"), s"no sources under ${new java.io.File(".").getAbsolutePath}")
+    val offenders = files.filter { f =>
+      f.getName != "GraftSession.scala" &&
+        builderCall.findFirstIn(java.nio.file.Files.readString(f.toPath)).isDefined
+    }
+    assert(offenders.isEmpty, s"build sessions with GraftSession.builder: ${offenders.mkString(", ")}")
   }
 }
 

@@ -2,21 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites. */
+/** One shared local session for all suites. Specs that need a conf
+  * other than the served one set it around their own plans and restore
+  * the prior value after. */
 object TestSpark {
   lazy val session: SparkSession = {
     // keep Derby's log and the session warehouse out of the repo root
     System.setProperty("derby.stream.error.file",
       new java.io.File(sys.props("java.io.tmpdir"), "graft_derby.log").getAbsolutePath)
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", GraftSession.warehouseDir)
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-      .getOrCreate()
+    // the served conf (extensions included) at a fixed 4-core width
+    val s = GraftSession.builder("4").appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -111,7 +111,7 @@ class WatermarkStoreSpec extends AnyFunSuite {
     // path is that ready-made harness — on a server URL the parent
     // asserts max-merge across both processes' commits.)
     val javaBin = s"${System.getProperty("java.home")}/bin/java"
-    val cp = "target/scala-2.13/classes:/opt/spark/jars/*"
+    val cp = "target/scala-2.13/test-classes:target/scala-2.13/classes:/opt/spark/jars/*"
     val pb = new ProcessBuilder(javaBin, "-cp", cp, "graft.WmXProc",
       s"jdbc:derby:$dbDir", "t1",
       ts("2024-06-01 00:00:00").getTime.toString, "5")

@@ -27,8 +27,8 @@ import java.sql.Timestamp
   *    harness runs the real race; WatermarkStoreSpec pins the refusal so
   *    the gap is documented in code, not prose.
   *
-  * Usage: java -cp <classes:jars> graft.WmXProc <jdbcUrl> <tableName>
-  *          <startEpochMillis> <count>
+  * Usage: java -cp <test-classes:classes:jars> graft.WmXProc <jdbcUrl>
+  *          <tableName> <startEpochMillis> <count>
   * (No Spark involved — the store is pure JDBC driver-side code.) */
 object WmXProc {
   def main(args: Array[String]): Unit = {
