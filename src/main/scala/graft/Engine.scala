@@ -215,21 +215,6 @@ class Engine(
   def hasIvfIndex(namespace: String = Cdc.DefaultNamespace): Boolean =
     liveIvfDir(namespace).isDefined
 
-  /** Build a persisted IVF index over one namespace of the vector sink
-    * (see [[graft.operators.IvfIndex]]): centroids adapt to the corpus,
-    * unlike the sink's fixed sign-bucket locality — the better read path
-    * once the namespace is large and clustered. For the conventional
-    * serving location, use [[refreshIvfIndex]] — it versions the build
-    * and flips the `/query` default atomically. */
-  def buildIvfIndex(
-      indexDir: String,
-      k: Int = 16,
-      iters: Int = 3,
-      namespace: String = Cdc.DefaultNamespace,
-      sampleFraction: Double = 1.0): Unit =
-    graft.operators.IvfIndex.build(sinkVectors(namespaceEntries(namespace)), "id", "embedding",
-      indexDir, k, iters, sampleFraction)
-
   /** (id, embedding) of the non-null vectors under the given manifest entries. */
   private def sinkVectors(entries: Seq[Cdc.SinkEntry]): DataFrame = {
     import org.apache.spark.sql.functions.col
@@ -331,18 +316,13 @@ class Engine(
     try pw.write(s"k=$kEff\niters=$itersEff\nsampleFraction=$sampleEff\n" +
       s"roots=${entries.map(_.root).distinct.sorted.mkString(",")}\n") finally pw.close()
     val prevLive = live.map(p => new java.io.File(p).getName)
-    val pointer = new java.io.File(container, "current")
-    val tmp = java.nio.file.Paths.get(container.getPath, "current_tmp")
-    java.nio.file.Files.writeString(tmp, next.getName)
-    java.nio.file.Files.move(tmp, pointer.toPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    Cdc.fsync(pointer)
-    Cdc.fsync(container)
+    Cdc.publishPointer(new java.io.File(container, "current"), next.getName)
     val keep = Set(next.getName) ++ prevLive
     versions.filterNot(v => keep(v.getName)).foreach(Cdc.deleteRecursively)
   }
 
   /** Text query against a persisted IVF index: `indexDir` may be a direct
-    * build ([[buildIvfIndex]]) or a versioned container
+    * [[graft.operators.IvfIndex.build]] output or a versioned container
     * ([[refreshIvfIndex]]). A container's `current` pointer resolves to the
     * live version, whose centroids and data listing are loaded once per
     * pointer flip ([[ivfSnapshot]]); a call then reads the pointer and
@@ -401,13 +381,6 @@ class Engine(
   /** Current per-table watermarks (the reference's `watermark` table). */
   def watermarks(): DataFrame = Cdc.readWatermarks(spark, stateDir)
 
-  /** One-time split of the watermark store into `shards` hash shards —
-    * for fleets past ~10k hot CDC tables through one store, where the
-    * single file's O(T) rewrite-per-commit runs out of budget (measured
-    * knee: ~60 ms/commit at 10k tables, ~260 ms at 100k — BASELINE.md /
-    * graft.WmProbe). Commits drop to O(T/B) and stop serializing across
-    * shards; every read surface is unchanged. */
-  def shardWatermarkStore(shards: Int): Unit = Cdc.shardWatermarkStore(stateDir, shards)
 }
 
 object Engine {

@@ -95,7 +95,7 @@ final class ServeHttp(engine: Engine) {
   @volatile private[graft] var onQuerySlotAcquired: () => Unit = () => ()
 
   /** Test-only fault-injection hook, run at the top of every `/query`
-    * request (the [[graft.operators.Cdc.updateWatermark]] onBeforeCommit
+    * request (the [[graft.operators.WatermarkStore.update]] onBeforeCommit
     * precedent): ServeHttpSpec parks a query here to assert `/health`
     * still answers while it is in flight. */
   @volatile private[graft] var onQueryStart: () => Unit = () => ()

@@ -151,39 +151,19 @@ object Cdc {
 
   // --- watermark state store (S6/S7) --------------------------------------
   //
-  // The store's RMW is DRIVER-side since r14 — zero Spark jobs. The store
-  // is one row per CDC table (T rows total), but the previous commit was
-  // O(jobs), not O(rows): a Spark read job + union/groupBy + a parquet
-  // write job per table per cycle, serialized under the commit lock — at
-  // 1,000 CDC tables ~3 serialized ~85 ms jobs × 1,000 per cycle, making
-  // the watermark tail (not the data path) the cycle's driver bottleneck
-  // (VERDICT r13 #2). The reference's S7 is one O(1) UPSERT per table
-  // (`service_layer/service.py:38-42`); the analog here is a driver-local
-  // parquet RMW: read the live version's footers with parquet-mr (the
-  // same library Spark's scans use), merge max into a Map, write ONE
-  // parquet file into the next version dir, flip the pointer. The commit
-  // protocol ([[atomicOverwriteWith]]) and on-disk layout are unchanged —
-  // [[readWatermarks]] keeps serving the store to Spark consumers, and
-  // any engine (DuckDB included) still reads the files.
+  // One row per CDC table in ONE versioned parquet store, read and
+  // rewritten entirely on the driver — zero Spark jobs. The reference's S7
+  // is one O(1) UPSERT per table (`service_layer/service.py:38-42`); the
+  // analog here is a driver-local parquet RMW ([[ParquetWatermarkStore]]):
+  // read the live version's footers with parquet-mr (the same library
+  // Spark's scans use), merge max into a Map, write ONE parquet file into
+  // the next version dir, flip the pointer ([[atomicOverwriteWith]]).
+  // [[readWatermarks]] serves the store to Spark consumers, and any engine
+  // (DuckDB included) still reads the files.
 
-  /** S6: point lookup of a table's watermark; None if absent
-    * (`service_layer/service.py:21-33`). Driver-side — no Spark job.
-    * `spark` is unused since r14 (kept for API stability). On a sharded
-    * store only the owning shard is read — O(T/B), not O(T). */
-  def getWatermark(spark: SparkSession, stateDir: String, tableName: String): Option[Timestamp] =
-    withStableTopology(stateDir) { b =>
-      readStoreMap(shardPath(stateDir, b, tableName))
-    }.get(tableName)
-
-  /** The store as a DataFrame. Built from the driver-side map (T tiny
-    * rows) rather than a lazy parquet scan: a concurrent
-    * [[shardWatermarkStore]] migration deletes the drained single store's
-    * version dirs after publishing the marker, and a lazily-materialized
-    * scan that resolved the unsharded layout would hit FileNotFound (or an
-    * empty store) at action time. The eager read goes through the same
-    * topology fence as every other read surface, so the returned frame is
-    * always one consistent snapshot. Row values are byte-identical to the
-    * old parquet-scan surface (CdcSpec pins this). */
+  /** The store as a DataFrame, built from the driver-side map (T tiny
+    * rows) rather than a lazy parquet scan: the frame is one snapshot
+    * that a later commit's version GC cannot delete from under it. */
   def readWatermarks(spark: SparkSession, stateDir: String): DataFrame = {
     val rows = readWatermarkMap(stateDir).toSeq.sortBy(_._1)
       .map { case (t, ts) => org.apache.spark.sql.Row(t, ts) }
@@ -192,41 +172,20 @@ object Cdc {
       watermarkSchema)
   }
 
-  /** Driver-side read of the whole store (all shards): T rows via
-    * parquet-mr footers — no Spark job, no session needed. */
+  /** Driver-side read of the whole store: T rows via parquet-mr footers —
+    * no Spark job, no session needed. */
   def readWatermarkMap(stateDir: String): Map[String, Timestamp] =
-    withStableTopology(stateDir) { b =>
-      pathsFor(stateDir, b).foldLeft(Map.empty[String, Timestamp])(_ ++ readStoreMap(_))
-    }
+    readStoreMap(watermarkStorePath(stateDir))
 
-  /** Read fence against a concurrent [[shardWatermarkStore]] (ADVICE r15):
-    * the migration publishes the `watermark.shards` marker and THEN drains
-    * the single store, so a reader that resolved the unsharded topology before
-    * the flip can observe an empty/deleted single store and report every
-    * watermark absent — which in CdcStream's foreachBatch would silently
-    * re-process the full source as if it were the first sync. Mirror of the
-    * write-side resolve→act→re-check loop: run the read against the
-    * resolved topology, then re-read the marker; if it moved (or the read
-    * threw because a dir vanished mid-read), retry against the new layout.
-    * Terminates: migration is a one-time transition (1 → B), so at most one
-    * retry is ever needed. */
-  private def withStableTopology[A](stateDir: String)(body: Int => A): A = {
-    while (true) {
-      val b = watermarkShards(stateDir)
-      try {
-        val out = body(b)
-        if (watermarkShards(stateDir) == b) return out
-      } catch {
-        case e: Exception =>
-          if (watermarkShards(stateDir) == b) throw e
-        // else: topology flipped mid-read — fall through and retry
-      }
-    }
-    throw new IllegalStateException("unreachable")
+  /** The store's path under `stateDir`. A store in the older hash-sharded
+    * layout fails ([[StoreUpgrade.requireUnshardedWatermarks]]). */
+  private[operators] def watermarkStorePath(stateDir: String): String = {
+    StoreUpgrade.requireUnshardedWatermarks(stateDir)
+    s"$stateDir/$WatermarkTable"
   }
 
-  /** One shard's (or the single store's) live rows. */
-  private def readStoreMap(storePath: String): Map[String, Timestamp] =
+  /** The store's live rows. */
+  private[operators] def readStoreMap(storePath: String): Map[String, Timestamp] =
     liveVersionDir(storePath) match {
       case None => Map.empty
       case Some(dir) =>
@@ -271,191 +230,7 @@ object Cdc {
     schema.getType("last_updated") ==
       (watermarkMessageType: org.apache.parquet.schema.GroupType).getType("last_updated")
 
-  /** S7: `INSERT … ON DUPLICATE KEY UPDATE` analog
-    * (`service_layer/service.py:38-42`): read-modify-write keyed by
-    * table_name, last-writer-wins by max — entirely on the driver (see
-    * the store scaladoc above; `spark` is unused since r14, kept for API
-    * stability). Parquet has no MERGE, so: local read + max-merge +
-    * versioned-directory commit ([[atomicOverwriteWith]] — at every
-    * instant, including mid-crash, a complete store is readable).
-    * On a sharded store ([[shardWatermarkStore]]) the RMW touches only the
-    * owning shard: O(T/B) bytes, and commits to different shards run
-    * CONCURRENTLY (per-shard locks). `onBeforeCommit` is a test hook for
-    * crash injection between the data write and the pointer publish. */
-  def updateWatermark(
-      spark: SparkSession,
-      stateDir: String,
-      tableName: String,
-      ts: Timestamp,
-      onBeforeCommit: () => Unit = () => ()): Unit = {
-    // resolve → lock → re-check: a concurrent shardWatermarkStore can flip
-    // the topology between the marker read and the shard lock acquisition;
-    // re-resolving under the lock and retrying keeps the commit from
-    // landing in a store the migration already drained.
-    var committed = false
-    while (!committed) {
-      val b = watermarkShards(stateDir)
-      val path = shardPath(stateDir, b, tableName)
-      storeLock(path).synchronized {
-        if (shardPath(stateDir, watermarkShards(stateDir), tableName) == path) {
-          val current = readStoreMap(path)
-          val winner = current.get(tableName).filter(_.after(ts)).getOrElse(ts)
-          val next = current + (tableName -> winner)
-          atomicOverwriteWith(path,
-            vdir => writeWatermarkFile(vdir, next), onBeforeCommit)
-          committed = true
-          // auto-shard advisory (r15 verdict task 7): the commit just
-          // learned T for free — past the measured ~10k knee an unsharded
-          // store's O(T) rewrite starts eating the fleet's commit budget
-          // (BASELINE.md: 72 ms @ 10k, 284 ms @ 100k; B=16 → 46 ms).
-          // Advise ONCE per store per process, never throw.
-          if (b == 1 && next.size >= ShardAdvisoryTables &&
-              shardAdvised.add(new java.io.File(stateDir).getAbsolutePath))
-            System.err.println(
-              s"[cdc] watermark store at $stateDir holds ${next.size} tables " +
-                "UNSHARDED: each commit rewrites the whole O(T) store file " +
-                "(measured ~72 ms at 10k tables, ~284 ms at 100k — BASELINE.md). " +
-                "One-time migration: Cdc.shardWatermarkStore(stateDir, 16) drops " +
-                "the commit to O(T/B) and lets different shards commit " +
-                "concurrently (~350 commits/s sustained at 100k tables).")
-        }
-      }
-    }
-  }
-
-  /** Unsharded-store size at which [[updateWatermark]] prints its one-time
-    * shard advisory — the measured whole-file-rewrite knee (BASELINE.md:
-    * per-commit constant dominates to ~10k tables; the O(T) body term owns
-    * the cost past it). */
-  val ShardAdvisoryTables: Int = 10000
-  private val shardAdvised =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  /** Test hook: forget which stores were already advised. */
-  private[graft] def resetShardAdvisories(): Unit = shardAdvised.clear()
-  private[graft] def shardAdvisedStores: Set[String] = {
-    import scala.jdk.CollectionConverters._
-    shardAdvised.asScala.toSet
-  }
-
-  /** Test seeding surface: publish `rows` as the
-    * whole store in ONE commit per shard — the same writer, sort, and
-    * pointer protocol as [[updateWatermark]], without the O(T^2) rewrite
-    * that T public single-key commits would pay. Not a production API:
-    * real stores are built commit by commit. */
-  private[graft] def seedWatermarkStore(stateDir: String, rows: Map[String, Timestamp]): Unit = {
-    val b = watermarkShards(stateDir)
-    rows.groupBy { case (t, _) => shardPath(stateDir, b, t) }.foreach { case (path, shardRows) =>
-      storeLock(path).synchronized {
-        atomicOverwriteWith(path, vdir => writeWatermarkFile(vdir, shardRows))
-      }
-    }
-  }
-
-  // --- store sharding (the measured whole-file-rewrite bound, BASELINE.md) --
-  //
-  // The driver-local RMW rewrites its whole store file per commit — measured
-  // (graft.WmProbe): ~60 ms at T=1k and 10k (per-commit constant dominates),
-  // ~260 ms at T=100k (the O(T) body term owns it). A fleet past ~10k HOT
-  // tables through one store runs out of commit budget, so the store can be
-  // split into B independent files-behind-pointers: shard = portable
-  // hash32(table_name) mod B (the SAME md5-derived hash every engine can
-  // compute — `('0x' || substr(md5(name),1,8))::bigint % B`), each shard
-  // committed by the unchanged [[atomicOverwriteWith]] protocol under its
-  // own lock. Per-commit cost drops to O(T/B) and commits to different
-  // shards stop serializing. The default store stays unsharded (B=1,
-  // byte-identical layout to r14); sharding is an explicit one-time
-  // migration ([[shardWatermarkStore]]) recorded in a `watermark.shards`
-  // marker file next to the shard stores.
-
-  /** Shard count of the store at `stateDir` (1 = unsharded). */
-  def watermarkShards(stateDir: String): Int = {
-    val f = shardMarkerFile(stateDir)
-    if (f.exists()) java.nio.file.Files.readString(f.toPath).trim.toInt else 1
-  }
-
-  /** One-time migration: split an unsharded store into `shards` hash
-    * shards. Safe against crashes at any point: shard stores are fully
-    * written BEFORE the marker file is published (atomic rename), and
-    * readers switch from the old single store to the shards only on the
-    * marker — a crash before the flip leaves the old store live (orphaned
-    * shard stores are overwritten by a re-run), a crash after it leaves
-    * the migrated store live (the drained single store is GC'd here and
-    * harmless if it lingers). Concurrent [[updateWatermark]] commits are
-    * fenced by the single store's lock + their re-check loop. */
-  def shardWatermarkStore(
-      stateDir: String, shards: Int,
-      onBeforeLock: () => Unit = () => ()): Unit = {
-    require(shards >= 2, s"shards must be >= 2, got $shards")
-    require(watermarkShards(stateDir) == 1,
-      s"store at $stateDir is already sharded (${watermarkShards(stateDir)} shards)")
-    onBeforeLock() // test hook: widen the outer-check → lock window
-    val singlePath = s"$stateDir/$WatermarkTable"
-    storeLock(singlePath).synchronized {
-      // authoritative re-check UNDER the single store's lock (ADVICE r15
-      // TOCTOU): two concurrent migrations can both pass the outer require;
-      // without this the loser would re-read the now-drained single store
-      // and republish every shard as empty — silently wiping the store.
-      if (watermarkShards(stateDir) != 1)
-        throw new IllegalStateException(
-          s"store at $stateDir was sharded concurrently " +
-            s"(${watermarkShards(stateDir)} shards) — migration already done")
-      val rows = readStoreMap(singlePath)
-      (0 until shards).foreach { i =>
-        val path = f"$stateDir/${WatermarkTable}_b$i%04d"
-        val shardRows = rows.filter { case (t, _) => shardOf(t, shards) == i }
-        atomicOverwriteWith(path, vdir => writeWatermarkFile(vdir, shardRows))
-      }
-      val marker = shardMarkerFile(stateDir)
-      marker.getParentFile.mkdirs()
-      val tmp = java.nio.file.Paths.get(marker.getPath + "_tmp")
-      java.nio.file.Files.writeString(tmp, shards.toString)
-      java.nio.file.Files.move(tmp, marker.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      fsync(marker)
-      fsync(marker.getParentFile)
-      // drain the old single store: its pointer and version dirs are dead
-      // once the marker is live. Also GC any orphan shard stores with index
-      // >= this migration's B (ADVICE r15): a crashed earlier attempt with a
-      // LARGER shard count left watermark_bNNNN stores above the new B —
-      // invisible to pathsFor so reads stay correct, but their stale hash
-      // assignment could confuse an external engine locating shards from the
-      // layout alone.
-      val wm = java.util.regex.Pattern.quote(WatermarkTable)
-      def orphanShard(name: String): Boolean = {
-        val m = java.util.regex.Pattern
-          .compile(wm + "_b(\\d{4,})(?:_v\\d+|\\.current(?:_tmp)?)?").matcher(name)
-        m.matches() && m.group(1).toInt >= shards
-      }
-      Option(new java.io.File(stateDir).listFiles()).toSeq.flatten
-        .filter(f => f.getName == s"$WatermarkTable.current" ||
-          f.getName.matches(wm + "_v\\d+") ||
-          orphanShard(f.getName))
-        .foreach(deleteRecursively)
-    }
-  }
-
-  private def shardMarkerFile(stateDir: String) =
-    new java.io.File(s"$stateDir/$WatermarkTable.shards")
-
-  /** Driver-side twin of [[graft.functions.PortableHash.hash32]] (first 8
-    * md5 hex chars as an unsigned int) — value-identical, so any engine
-    * can locate a table's shard from the layout alone. */
-  private[graft] def shardOf(tableName: String, shards: Int): Int = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-      .digest(tableName.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val h = ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
-    (h % shards).toInt
-  }
-
-  private def shardPath(stateDir: String, shards: Int, tableName: String): String =
-    if (shards <= 1) s"$stateDir/$WatermarkTable"
-    else f"$stateDir/${WatermarkTable}_b${shardOf(tableName, shards)}%04d"
-
-  private[operators] def pathsFor(stateDir: String, b: Int): Seq[String] =
-    if (b <= 1) Seq(s"$stateDir/$WatermarkTable")
-    else (0 until b).map(i => f"$stateDir/${WatermarkTable}_b$i%04d")
-
-  /** Serializes the store's RMW per shard store (r15, ADVICE r14): the
+  /** Serializes the store's RMW per store (r15, ADVICE r14): the
     * batch cycle already serializes commits under its commitLock, but
     * STREAMING tables commit from each query's own foreachBatch thread
     * (CdcStream.pipeline) — two unlocked concurrent RMWs could both read
@@ -463,9 +238,9 @@ object Cdc {
     * silently dropped by the last pointer flip. The lock is driver-local
     * and cheap to hold: no Spark job runs under it since the r14
     * driver-side RMW (~35 ms/commit at a 1,000-table store). Keyed by the
-    * shard store's absolute path so unrelated stores — and different
-    * shards of one store — never serialize; single-JVM scope matches the
-    * store's standing single-writer(-process) contract. */
+    * store's absolute path so unrelated stores never serialize;
+    * single-JVM scope matches the store's standing single-writer(-process)
+    * contract. */
   private val storeLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private[operators] def storeLock(storePath: String): Object =
     storeLocks.computeIfAbsent(
@@ -666,12 +441,7 @@ object Cdc {
     } finally w.close()
     if (!tmp.renameTo(file))
       throw new java.io.IOException(s"cannot publish sink manifest $file")
-    val ptmp = java.nio.file.Paths.get(manifestPointer(sinkDir).getPath + "_tmp")
-    java.nio.file.Files.writeString(ptmp, file.getName)
-    java.nio.file.Files.move(ptmp, manifestPointer(sinkDir).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    fsync(manifestPointer(sinkDir))
-    fsync(new java.io.File(sinkDir))
+    publishPointer(manifestPointer(sinkDir), file.getName)
   }
 
   /** Create an absent sink (no-op once created): persist `layout` unless a
@@ -1006,14 +776,8 @@ object Cdc {
     * construction — including crashed commits' orphan roots. */
   private def gcSink(sinkDir: String): Unit = {
     val versions = manifestVersionFiles(sinkDir)
-    val keepFiles = versions.takeRight(2)
-    val keep: Set[(String, String, Int)] = keepFiles.flatMap { case (_, f) =>
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().filter(l => l.nonEmpty && !l.startsWith("#")).toVector.map { l =>
-        val Array(root, ns, b) = l.split("\t", 3)
-        (root, ns, b.toInt)
-      } finally src.close()
-    }.toSet
+    val keep: Set[SinkEntry] =
+      versions.takeRight(2).flatMap { case (_, f) => manifestEntries(sinkDir, f.getName) }.toSet
     val roots = Option(new java.io.File(sinkDir).listFiles()).toSeq.flatten
       .filter(f => f.isDirectory &&
         (f.getName == "vectors" || f.getName.startsWith("vectors_g")))
@@ -1022,7 +786,7 @@ object Cdc {
         .filter(ns => ns.isDirectory && ns.getName.startsWith("namespace=")).foreach { ns =>
           Option(ns.listFiles()).toSeq.flatten
             .filter(b => b.isDirectory && b.getName.startsWith("bucket=")).foreach { b =>
-              val key = (root.getName, ns.getName.stripPrefix("namespace="),
+              val key = SinkEntry(root.getName, ns.getName.stripPrefix("namespace="),
                 b.getName.stripPrefix("bucket=").toInt)
               if (!keep(key)) deleteRecursively(b)
             }
@@ -1405,14 +1169,21 @@ object Cdc {
     val prevLive = pointedVersion(path).map(p => new java.io.File(p).getName)
     writeData(vdir)
     onBeforeCommit() // crash-injection hook: pointer still names the old state
-    val tmp = java.nio.file.Paths.get(path + ".current_tmp")
-    java.nio.file.Files.writeString(tmp, vdir.getName)
-    java.nio.file.Files.move(tmp, new java.io.File(path + ".current").toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    fsync(new java.io.File(path + ".current"))
-    fsync(parent)
+    publishPointer(new java.io.File(parent, base + ".current"), vdir.getName)
     val keep = Set(vdir.getName) ++ prevLive
     versions().filterNot(d => keep(d.getName)).foreach(deleteRecursively)
+  }
+
+  /** Publish `target` as the content of the pointer file `ptr`: write
+    * `<ptr>_tmp`, atomically rename it over `ptr`, then fsync the pointer
+    * and its directory. A crash leaves the old pointer or the new one,
+    * never a torn one; the fsyncs make the new one survive power loss. */
+  private[graft] def publishPointer(ptr: java.io.File, target: String): Unit = {
+    val tmp = java.nio.file.Paths.get(ptr.getPath + "_tmp")
+    java.nio.file.Files.writeString(tmp, target)
+    java.nio.file.Files.move(tmp, ptr.toPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    fsync(ptr)
+    fsync(ptr.getAbsoluteFile.getParentFile)
   }
 
   /** Durability flush: force file (or directory-entry) state to stable

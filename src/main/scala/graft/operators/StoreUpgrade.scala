@@ -17,7 +17,12 @@ import org.apache.spark.sql.SparkSession
   *    layout's file: those sinks were written with exactly its constants.
   *  - watermark store: a bare directory without a pointer, or a live file
   *    whose timestamps are not INT64 µs (Spark-written INT96 or INT64 ms),
-  *    is read with Spark and republished by the store's own commit.
+  *    is read with Spark and republished by the store's own commit. A
+  *    hash-sharded store (a `watermark.shards` marker holding B beside the
+  *    stores `watermark_b0000` … `watermark_b{B-1}`, each behind its own
+  *    pointer, a table's row in shard md5-hash32(name) mod B) is merged
+  *    into the single store, max per table; then the marker is deleted,
+  *    then every shard store.
   *  - IVF: an `_ivf/<ns>` container without a `current` pointer, or whose
   *    live version lacks the count sidecars or the `roots=` line, is
   *    retrained into a new version; then the container's shadowed halves
@@ -48,6 +53,15 @@ object StoreUpgrade {
   private[operators] def requireManifest(sinkDir: String): Unit =
     if (new File(sinkDir, "vectors").exists())
       throw outdated(sinkDir, "a vectors root without a manifest")
+
+  /** One stat, for every watermark store read and commit: a sharded
+    * store has no single store, so without this check every watermark
+    * would read as absent and the next cycle would re-sync every table. */
+  private[operators] def requireUnshardedWatermarks(stateDir: String): Unit =
+    if (shardMarker(stateDir).exists())
+      throw outdated(stateDir, "a hash-sharded watermark store")
+
+  private def shardMarker(stateDir: String) = new File(stateDir, s"${Cdc.WatermarkTable}.shards")
 
   /** One stat, for a watermark store path without a pointer. */
   private[operators] def requireVersionedStore(path: String): Unit =
@@ -83,21 +97,44 @@ object StoreUpgrade {
           "(namespace, bucket, simb) layout — mixed partition depths are unreadable")
   }
 
-  private def upgradeWatermarks(spark: SparkSession, stateDir: String): Unit =
-    Cdc.pathsFor(stateDir, Cdc.watermarkShards(stateDir)).foreach { path =>
-      val bare = new File(path)
-      Cdc.pointedVersion(path) match {
-        case None if bare.isDirectory => republish(spark, path, bare)
-        case Some(dir) if !Cdc.watermarkFiles(dir).forall(Cdc.currentWatermarkFile) =>
-          republish(spark, path, new File(dir))
-        case _ =>
-      }
-      Cdc.deleteRecursively(bare) // shadowed by the pointer, or absent
+  private def upgradeWatermarks(spark: SparkSession, stateDir: String): Unit = {
+    val path = s"$stateDir/${Cdc.WatermarkTable}"
+    mergeShards(spark, stateDir, path)
+    val bare = new File(path)
+    Cdc.pointedVersion(path) match {
+      case None if bare.isDirectory => republish(spark, path, Seq(bare))
+      case Some(dir) if !Cdc.watermarkFiles(dir).forall(Cdc.currentWatermarkFile) =>
+        republish(spark, path, Seq(new File(dir)))
+      case _ =>
     }
+    Cdc.deleteRecursively(bare) // shadowed by the pointer, or absent
+  }
 
-  /** Republish an old store's rows through the driver writer, max per table. */
-  private def republish(spark: SparkSession, path: String, dir: File): Unit = {
-    val rows = spark.read.parquet(dir.getPath).select("table_name", "last_updated")
+  /** Fold a sharded store into the single store at `path`. Commits are
+    * refused while the marker exists, so a run cut after the pointer flip
+    * reruns the same merge. The marker's delete is made durable before any
+    * shard store goes, so a marker never outlives the shards it names;
+    * shard stores left by a run cut after the marker's delete are deleted
+    * on the next run. */
+  private def mergeShards(spark: SparkSession, stateDir: String, path: String): Unit = {
+    val wm = java.util.regex.Pattern.quote(Cdc.WatermarkTable)
+    def shardFiles() = Option(new File(stateDir).listFiles()).toSeq.flatten
+      .filter(_.getName.matches(wm + "(_b\\d+(\\.current(_tmp)?|_v\\d+)|\\.shards_tmp)"))
+    val marker = shardMarker(stateDir)
+    if (marker.exists()) {
+      val shards = shardFiles().map(_.getName).filter(_.matches(wm + "_b\\d+\\.current"))
+        .map(n => s"$stateDir/${n.stripSuffix(".current")}")
+      republish(spark, path, shards.flatMap(Cdc.pointedVersion).map(new File(_)))
+      marker.delete()
+      Cdc.fsync(new File(stateDir))
+    }
+    shardFiles().foreach(Cdc.deleteRecursively)
+  }
+
+  /** Republish the rows of old store directories through the driver
+    * writer, max per table. */
+  private def republish(spark: SparkSession, path: String, dirs: Seq[File]): Unit = {
+    val rows = spark.read.parquet(dirs.map(_.getPath): _*).select("table_name", "last_updated")
       .collect().filterNot(_.isNullAt(1)).toSeq
       .groupMapReduce(_.getString(0))(r => Cdc.asTimestamp(r.get(1)))(
         (a, b) => if (a.after(b)) a else b)

@@ -8,9 +8,9 @@ import java.sql.Timestamp
   * The reference keeps its watermark table IN the source database via
   * `INSERT … ON DUPLICATE KEY UPDATE` (`service_layer/service.py:35-46`);
   * the engine's default is the crash-safe versioned parquet store beside
-  * the sink ([[ParquetWatermarkStore]] → the [[Cdc]] store functions). A
-  * deployment that wants state where the reference keeps it binds
-  * [[JdbcWatermarkStore]] instead — same upsert semantics, transactional.
+  * the sink ([[ParquetWatermarkStore]]). A deployment that wants state
+  * where the reference keeps it binds [[JdbcWatermarkStore]] instead —
+  * same upsert semantics, transactional.
   *
   * Contract shared by every binding:
   *  - `get`/`readAll` are driver-side — never a Spark job.
@@ -40,18 +40,27 @@ trait WatermarkStore {
   def hintParallelism(n: Int): Unit = ()
 }
 
-/** The engine's default binding: the versioned, optionally hash-sharded
-  * parquet store beside the sink ([[Cdc.updateWatermark]] and friends —
-  * crash-safe pointer commits, O(T/B) sharded RMW, readable by any
-  * parquet engine). `spark` is unused by the driver-side store since r14
-  * but kept so [[Cdc.readWatermarks]] remains reachable from here. */
+/** The engine's default binding: one versioned parquet store beside the
+  * sink, read and rewritten on the driver (the store section of [[Cdc]]):
+  * crash-safe pointer commits, readable by any parquet engine. `update`
+  * is a read-modify-write under the store's lock — streaming tables
+  * commit from their own threads — keyed by table_name, last-writer-wins
+  * by max; parquet has no MERGE, so it writes the whole (tiny) store into
+  * the next version directory and flips the pointer
+  * ([[Cdc.atomicOverwriteWith]]). */
 final case class ParquetWatermarkStore(stateDir: String) extends WatermarkStore {
-  def get(tableName: String): Option[Timestamp] =
-    Cdc.getWatermark(null, stateDir, tableName)
+  def get(tableName: String): Option[Timestamp] = readAll().get(tableName)
   def readAll(): Map[String, Timestamp] = Cdc.readWatermarkMap(stateDir)
   def update(tableName: String, ts: Timestamp,
-      onBeforeCommit: () => Unit = () => ()): Unit =
-    Cdc.updateWatermark(null, stateDir, tableName, ts, onBeforeCommit)
+      onBeforeCommit: () => Unit = () => ()): Unit = {
+    val path = Cdc.watermarkStorePath(stateDir)
+    Cdc.storeLock(path).synchronized {
+      val current = Cdc.readStoreMap(path)
+      val winner = current.get(tableName).filter(_.after(ts)).getOrElse(ts)
+      Cdc.atomicOverwriteWith(path,
+        Cdc.writeWatermarkFile(_, current + (tableName -> winner)), onBeforeCommit)
+    }
+  }
 }
 
 /** Watermark state in a live database — the reference's literal shape

@@ -107,15 +107,16 @@ class CdcSpec extends AnyFunSuite {
 
   test("watermark store: absent → None; upsert is last-writer-wins by max") {
     val state = TestSpark.tempDir("graft_wm").toString
-    assert(Cdc.getWatermark(spark, state, "t1").isEmpty)
-    Cdc.updateWatermark(spark, state, "t1", ts("2024-01-02 00:00:00"))
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-01-02 00:00:00")))
+    val store = ParquetWatermarkStore(state)
+    assert(store.get("t1").isEmpty)
+    store.update("t1", ts("2024-01-02 00:00:00"))
+    assert(store.get("t1").contains(ts("2024-01-02 00:00:00")))
     // MERGE semantics: second upsert with later value advances
-    Cdc.updateWatermark(spark, state, "t1", ts("2024-01-05 00:00:00"))
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-01-05 00:00:00")))
+    store.update("t1", ts("2024-01-05 00:00:00"))
+    assert(store.get("t1").contains(ts("2024-01-05 00:00:00")))
     // independent keys don't interfere
-    Cdc.updateWatermark(spark, state, "t2", ts("2024-01-01 00:00:00"))
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-01-05 00:00:00")))
+    store.update("t2", ts("2024-01-01 00:00:00"))
+    assert(store.get("t1").contains(ts("2024-01-05 00:00:00")))
   }
 
   test("watermark RMW is driver-side: zero Spark jobs per commit, Spark read surface agrees (r14)") {
@@ -124,11 +125,12 @@ class CdcSpec extends AnyFunSuite {
     // tables the cycle's driver bottleneck. The RMW of a T-row store is
     // driver work; pin that NO job is scheduled by lookups or commits.
     val state = TestSpark.tempDir("graft_wm_jobs").toString
+    val store = ParquetWatermarkStore(state)
     val jobs = QueryProfile(spark) {
       (1 to 5).foreach { i =>
-        Cdc.updateWatermark(spark, state, s"t$i", ts(f"2024-01-0$i%d 00:00:00"))
+        store.update(s"t$i", ts(f"2024-01-0$i%d 00:00:00"))
       }
-      assert(Cdc.getWatermark(spark, state, "t3").contains(ts("2024-01-03 00:00:00")))
+      assert(store.get("t3").contains(ts("2024-01-03 00:00:00")))
       assert(Cdc.readWatermarkMap(state).size == 5)
     }.jobs.size
     assert(jobs == 0, s"watermark lookups+commits must schedule no Spark job, saw $jobs")
@@ -146,25 +148,26 @@ class CdcSpec extends AnyFunSuite {
     // store commits by one atomic pointer rename — a crash at ANY point
     // before it must leave the previous value intact and readable.
     val state = TestSpark.tempDir("graft_wm_crash").toString
-    Cdc.updateWatermark(spark, state, "t1", ts("2024-01-02 00:00:00"))
+    val store = ParquetWatermarkStore(state)
+    store.update("t1", ts("2024-01-02 00:00:00"))
     val boom = intercept[RuntimeException] {
-      Cdc.updateWatermark(spark, state, "t1", ts("2024-03-01 00:00:00"),
+      store.update("t1", ts("2024-03-01 00:00:00"),
         onBeforeCommit = () => throw new RuntimeException("injected crash before pointer publish"))
     }
     assert(boom.getMessage.contains("injected"))
     // pre-write value still live and readable — no reset, no missing dir
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-01-02 00:00:00")))
+    assert(store.get("t1").contains(ts("2024-01-02 00:00:00")))
     // the next successful write commits the new value, GCs the crashed
     // write's orphan dir, and keeps the previously-pointed version for one
     // extra write (reader-vs-GC grace) — so exactly 2 version dirs remain:
     // the published one and its predecessor, with the orphan gone
-    Cdc.updateWatermark(spark, state, "t1", ts("2024-03-01 00:00:00"))
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-03-01 00:00:00")))
+    store.update("t1", ts("2024-03-01 00:00:00"))
+    assert(store.get("t1").contains(ts("2024-03-01 00:00:00")))
     val vdirs = new java.io.File(state).listFiles().map(_.getName)
       .filter(_.startsWith(Cdc.WatermarkTable + "_v")).sorted
     assert(vdirs.length == 2, s"expected published + grace-kept predecessor: ${vdirs.mkString(",")}")
     // a further write retires the grace-kept dir: still exactly 2
-    Cdc.updateWatermark(spark, state, "t1", ts("2024-03-02 00:00:00"))
+    store.update("t1", ts("2024-03-02 00:00:00"))
     val vdirs2 = new java.io.File(state).listFiles().map(_.getName)
       .filter(_.startsWith(Cdc.WatermarkTable + "_v")).sorted
     assert(vdirs2.length == 2, s"grace must be ONE write long: ${vdirs2.mkString(",")}")
@@ -190,6 +193,7 @@ class CdcSpec extends AnyFunSuite {
   // an unversioned Spark-written INT96 store, then a versioned INT64-ms one
   test("watermark store: old layouts are refused until initializeIndex republishes them") {
     val state = TestSpark.tempDir("graft_wm_upgrade").toString
+    val store = ParquetWatermarkStore(state)
     val scratch = TestSpark.tempDir("graft_wm_upgrade_sink").toString
     val wm = Cdc.WatermarkTable
     val prevTsType = spark.conf.get("spark.sql.parquet.outputTimestampType")
@@ -198,10 +202,9 @@ class CdcSpec extends AnyFunSuite {
     try Seq(("t1", ts("2024-01-02 00:00:00.123456")), ("t0", null.asInstanceOf[Timestamp]))
       .toDF("table_name", "last_updated").write.parquet(s"$state/$wm")
     finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
-    refused(Cdc.getWatermark(spark, state, "t1"))
+    refused(store.get("t1"))
     refused(Cdc.readWatermarkMap(state))
-    refused(Cdc.updateWatermark(spark, state, "t2", ts("2024-02-01 00:00:00")))
-    refused(Cdc.shardWatermarkStore(state, 4))
+    refused(store.update("t2", ts("2024-02-01 00:00:00")))
     val engine = new Engine(spark, s"$scratch/src", state, s"$scratch/sink")
     engine.initializeIndex()
     assert(Cdc.readWatermarkMap(state) == Map("t1" -> ts("2024-01-02 00:00:00.123456")))
@@ -215,8 +218,8 @@ class CdcSpec extends AnyFunSuite {
     val before = new java.io.File(state).listFiles().map(_.getName).toSet
     engine.initializeIndex()
     assert(new java.io.File(state).listFiles().map(_.getName).toSet == before)
-    Cdc.updateWatermark(spark, state, "t2", ts("2024-02-01 00:00:00"))
-    assert(Cdc.getWatermark(spark, state, "t2").contains(ts("2024-02-01 00:00:00")))
+    store.update("t2", ts("2024-02-01 00:00:00"))
+    assert(store.get("t2").contains(ts("2024-02-01 00:00:00")))
 
     // a versioned store whose live file Spark wrote as INT64 ms
     val vdir = s"$state/${wm}_v000099"
@@ -226,169 +229,10 @@ class CdcSpec extends AnyFunSuite {
     finally spark.conf.set("spark.sql.parquet.outputTimestampType", prevTsType)
     Files.writeString(java.nio.file.Paths.get(s"$state/$wm.current"), s"${wm}_v000099")
     refused(Cdc.readWatermarkMap(state))
-    refused(Cdc.updateWatermark(spark, state, "t4", ts("2024-04-01 00:00:00")))
+    refused(store.update("t4", ts("2024-04-01 00:00:00")))
     engine.initializeIndex()
     assert(Cdc.readWatermarkMap(state) == Map("t3" -> ts("2024-03-01 00:00:00.250")))
     assert(Files.readString(java.nio.file.Paths.get(s"$state/$wm.current")).trim == s"${wm}_v000100")
-  }
-
-  test("sharded watermark store: migration preserves the map, commits touch only the owning shard") {
-    val state = TestSpark.tempDir("graft_wm_shard").toString
-    (1 to 8).foreach(i => Cdc.updateWatermark(spark, state, s"t$i", ts(f"2024-01-0$i%d 00:00:00")))
-    val before = Cdc.readWatermarkMap(state)
-    Cdc.shardWatermarkStore(state, 4)
-    assert(Cdc.watermarkShards(state) == 4)
-    // every read surface agrees with the pre-migration store
-    assert(Cdc.readWatermarkMap(state) == before)
-    assert(Cdc.getWatermark(spark, state, "t3").contains(ts("2024-01-03 00:00:00")))
-    val sparkRows = Cdc.readWatermarks(spark, state).collect()
-      .map(r => r.getString(0) -> Cdc.asTimestamp(r.get(1))).toMap
-    assert(sparkRows == before)
-    // the single store is drained (pointer + version dirs GC'd)
-    val leftovers = new java.io.File(state).listFiles().map(_.getName)
-      .filter(n => n == s"${Cdc.WatermarkTable}.current" || n.matches(Cdc.WatermarkTable + "_v\\d+"))
-    assert(leftovers.isEmpty, s"single store must be drained: ${leftovers.mkString(",")}")
-    // a commit lands in the OWNING shard's store only: other shards' live
-    // version dirs are untouched (O(T/B) rewrite, not O(T))
-    def liveVersions(): Map[String, Set[String]] =
-      new java.io.File(state).listFiles().map(_.getName)
-        .filter(_.matches(Cdc.WatermarkTable + "_b\\d{4}_v\\d+"))
-        .groupBy(_.take(Cdc.WatermarkTable.length + 6)).map { case (k, v) => k -> v.toSet }
-    val owner = f"${Cdc.WatermarkTable}_b${Cdc.shardOf("t1", 4)}%04d"
-    val pre = liveVersions()
-    Cdc.updateWatermark(spark, state, "t1", ts("2024-06-01 00:00:00"))
-    val post = liveVersions()
-    assert(post(owner) != pre(owner), "owning shard must publish a new version")
-    (pre.keySet - owner).foreach(k => assert(post(k) == pre(k), s"non-owning shard $k rewritten"))
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-06-01 00:00:00")))
-    // re-sharding an already-sharded store is refused (one-time migration)
-    intercept[IllegalArgumentException](Cdc.shardWatermarkStore(state, 8))
-  }
-
-  test("shard assignment matches PortableHash.hash32 % B (any engine can locate a shard)") {
-    val names = Seq("events", "orders", "EVENTS_SRC", "t1", "table_000042")
-    val viaSpark = names.toDF("n")
-      .select(col("n"), pmod(graft.functions.PortableHash.hash32(col("n")), lit(4)).cast("int"))
-      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    names.foreach(n => assert(Cdc.shardOf(n, 4) == viaSpark(n), s"shard mismatch for $n"))
-  }
-
-  test("sharded store: concurrent commits across shards all land (per-shard locks)") {
-    val state = TestSpark.tempDir("graft_wm_shard_conc").toString
-    Cdc.updateWatermark(spark, state, "seed", ts("2024-01-01 00:00:00"))
-    Cdc.shardWatermarkStore(state, 4)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    try {
-      (1 to 24).map { i =>
-        pool.submit(new Runnable {
-          def run(): Unit = Cdc.updateWatermark(spark, state, s"c$i", ts("2024-02-01 00:00:00"))
-        })
-      }.foreach(_.get())
-    } finally pool.shutdown()
-    val m = Cdc.readWatermarkMap(state)
-    (1 to 24).foreach(i => assert(m.contains(s"c$i"), s"concurrent commit c$i lost"))
-    assert(m("seed") == ts("2024-01-01 00:00:00"))
-  }
-
-  test("sharded store: crash before a shard's pointer publish leaves the pre-write value live") {
-    val state = TestSpark.tempDir("graft_wm_shard_crash").toString
-    Cdc.updateWatermark(spark, state, "t1", ts("2024-01-02 00:00:00"))
-    Cdc.shardWatermarkStore(state, 4)
-    intercept[RuntimeException] {
-      Cdc.updateWatermark(spark, state, "t1", ts("2024-03-01 00:00:00"),
-        onBeforeCommit = () => throw new RuntimeException("injected crash before pointer publish"))
-    }
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-01-02 00:00:00")))
-    Cdc.updateWatermark(spark, state, "t1", ts("2024-03-01 00:00:00"))
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-03-01 00:00:00")))
-  }
-
-  test("concurrent double-migration cannot wipe the store (in-lock re-check, ADVICE r15)") {
-    val state = TestSpark.tempDir("graft_wm_toctou").toString
-    (1 to 6).foreach(i => Cdc.updateWatermark(spark, state, s"t$i", ts(f"2024-01-0$i%d 00:00:00")))
-    val before = Cdc.readWatermarkMap(state)
-    // thread A passes the outer unsharded check, then parks BEFORE taking
-    // the lock; the main thread completes a full migration in that window —
-    // the exact TOCTOU interleaving. A must then refuse (in-lock re-check),
-    // not re-read the drained single store and republish empty shards.
-    val aPastCheck = new java.util.concurrent.CountDownLatch(1)
-    val mainDone = new java.util.concurrent.CountDownLatch(1)
-    val aOutcome = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val a = new Thread(() =>
-      try Cdc.shardWatermarkStore(state, 8, onBeforeLock = () => {
-        aPastCheck.countDown(); mainDone.await()
-      }) catch { case e: Throwable => aOutcome.set(e) })
-    a.start()
-    aPastCheck.await()
-    Cdc.shardWatermarkStore(state, 4)
-    mainDone.countDown()
-    a.join()
-    assert(aOutcome.get().isInstanceOf[IllegalStateException],
-      s"losing migration must refuse, got ${aOutcome.get()}")
-    assert(Cdc.watermarkShards(state) == 4)
-    assert(Cdc.readWatermarkMap(state) == before, "store wiped by losing migration")
-  }
-
-  test("readers racing a live migration never observe an absent watermark (read fence, ADVICE r15)") {
-    (1 to 10).foreach { _ =>
-      val state = TestSpark.tempDir("graft_wm_readrace").toString
-      (1 to 8).foreach(i => Cdc.updateWatermark(spark, state, s"t$i", ts(f"2024-01-0$i%d 00:00:00")))
-      val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-      val bad = new java.util.concurrent.atomic.AtomicReference[String]()
-      val readers = (1 to 4).map { k =>
-        new Thread(() =>
-          try while (!stop.get()) {
-            if (Cdc.getWatermark(spark, state, "t1").isEmpty)
-              bad.compareAndSet(null, "getWatermark returned None mid-migration")
-            val m = Cdc.readWatermarkMap(state)
-            if (m.size != 8)
-              bad.compareAndSet(null, s"readWatermarkMap saw ${m.size}/8 rows mid-migration")
-          } catch { case e: Throwable => bad.compareAndSet(null, s"reader threw: $e") })
-      }
-      readers.foreach(_.start())
-      Cdc.shardWatermarkStore(state, 4)
-      stop.set(true)
-      readers.foreach(_.join())
-      assert(bad.get() == null, String.valueOf(bad.get()))
-    }
-  }
-
-  test("migration GCs orphan shard stores above the new B (crashed larger-B attempt, ADVICE r15)") {
-    val state = TestSpark.tempDir("graft_wm_orphan").toString
-    Cdc.updateWatermark(spark, state, "t1", ts("2024-01-01 00:00:00"))
-    // simulate a crashed B=8 attempt that wrote shards b0006/b0007 (version
-    // dir + pointer) before dying pre-marker
-    Seq("_b0006", "_b0007", "_b10000").foreach { s =>
-      val v = new java.io.File(s"$state/${Cdc.WatermarkTable}${s}_v000001")
-      v.mkdirs()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$state/${Cdc.WatermarkTable}$s.current"), v.getName)
-    }
-    Cdc.shardWatermarkStore(state, 4)
-    val names = new java.io.File(state).listFiles().map(_.getName).toSet
-    assert(!names.exists(_.contains("_b0006")) && !names.exists(_.contains("_b0007")) &&
-      !names.exists(_.contains("_b10000")),
-      s"orphan shards above B=4 (incl. 5-digit indices) must be GC'd: ${names.mkString(",")}")
-    assert(Cdc.getWatermark(spark, state, "t1").contains(ts("2024-01-01 00:00:00")))
-  }
-
-  test("sync cycle runs unchanged over a sharded watermark store (delta + advance via shards)") {
-    val scratch = TestSpark.tempDir("graft_cdc_shardcycle").toString
-    val src = s"$scratch/src"
-    new java.io.File(src).mkdirs()
-    Seq((1L, ts("2024-01-01 00:00:00"), "a"), (2L, ts("2024-01-02 00:00:00"), "b"))
-      .toDF("event_id", "ts", "payload").write.parquet(s"$src/events.parquet")
-    sync(src, s"$scratch/state", s"$scratch/sink")
-    Cdc.shardWatermarkStore(s"$scratch/state", 4)
-    // watermark survives the migration and keeps gating the delta
-    Seq((3L, ts("2024-01-03 00:00:00"), "c"))
-      .toDF("event_id", "ts", "payload").write.mode("append").parquet(s"$src/events.parquet")
-    val n = sync(src, s"$scratch/state", s"$scratch/sink")
-    assert(n("events") == 1, s"post-migration cycle must sink exactly the delta: $n")
-    assert(Cdc.getWatermark(spark, s"$scratch/state", "events")
-      .contains(ts("2024-01-03 00:00:00")))
-    // idempotency unchanged: a third cycle is an empty-delta no-op
-    assert(sync(src, s"$scratch/state", s"$scratch/sink")("events") == 0)
   }
 
   test("vector upsert: same id overwrites (Pinecone semantics, service.py:160-166)") {
@@ -718,7 +562,7 @@ class CdcSpec extends AnyFunSuite {
     // deterministic mode: exact chunk counts are what this test asserts
     val r1 = sync(src, state, sink, deterministicChunks = true)
     assert(r1("events") == 150)
-    val wm1 = Cdc.getWatermark(spark, state, "events").get
+    val wm1 = ParquetWatermarkStore(state).get("events").get
     val n1 = Cdc.readVectorSink(spark, sink).count()
     assert(n1 == 2) // ceil(150/100) chunks
 
@@ -728,13 +572,13 @@ class CdcSpec extends AnyFunSuite {
     batch1.union(batch2).write.mode("overwrite").parquet(s"$src/events.parquet")
     val r2 = sync(src, state, sink, deterministicChunks = true)
     assert(r2("events") == 30) // only the delta
-    assert(Cdc.getWatermark(spark, state, "events").get.after(wm1))
+    assert(ParquetWatermarkStore(state).get("events").get.after(wm1))
 
     // third run: empty delta → skip, watermark unchanged (P6)
-    val wm2 = Cdc.getWatermark(spark, state, "events").get
+    val wm2 = ParquetWatermarkStore(state).get("events").get
     val r3 = sync(src, state, sink)
     assert(r3("events") == 0)
-    assert(Cdc.getWatermark(spark, state, "events").get == wm2)
+    assert(ParquetWatermarkStore(state).get("events").get == wm2)
   }
 
   test("a failed table is isolated AND loud: outcomes name it, requireSynced throws (T6)") {
@@ -753,7 +597,7 @@ class CdcSpec extends AnyFunSuite {
     assert(outcomes("events") == Cdc.TableSynced(2L))
     assert(outcomes("broken").isFailure)
     assert(Cdc.readVectorSink(spark, s"$scratch/sink").count() > 0)
-    assert(Cdc.getWatermark(spark, s"$scratch/state", "events").isDefined)
+    assert(ParquetWatermarkStore(s"$scratch/state").get("events").isDefined)
 
     // rows surface: a partial failure must raise, not masquerade as
     // "no new data" (VERDICT r8: empty sink read as fast success)
@@ -818,14 +662,14 @@ class CdcSpec extends AnyFunSuite {
     assert(sink.select("id").distinct().count() == sink.count())
     (0 until 4).foreach { k =>
       assert(sink.where(col("source") === s"tab$k").count() >= 2)
-      assert(Cdc.getWatermark(spark, s"$scratch/state", s"tab$k").isDefined)
+      assert(ParquetWatermarkStore(s"$scratch/state").get(s"tab$k").isDefined)
     }
   }
 
   test("concurrent watermark commits from streaming-style threads: no lost update (r15 lock)") {
     // ADVICE r14: the batch path serializes commits under the cycle's
     // commitLock, but CdcStream's foreachBatch threads call
-    // updateWatermark concurrently — two unlocked RMWs could both read
+    // update concurrently — two unlocked RMWs could both read
     // version N and race to publish v{N+1}, the last pointer flip
     // dropping the loser's table. The per-store lock makes the RMW
     // atomic; this drives 8 simultaneous commits (barrier-released, the
@@ -837,7 +681,7 @@ class CdcSpec extends AnyFunSuite {
       val t = new Thread(() => {
         try {
           barrier.await()
-          Cdc.updateWatermark(spark, state, s"stream$i", ts(f"2024-01-0$i%d 00:00:00"))
+          ParquetWatermarkStore(state).update(s"stream$i", ts(f"2024-01-0$i%d 00:00:00"))
         } catch { case e: Throwable => failures.add(e); () }
       })
       t.start(); t
@@ -882,38 +726,12 @@ class CdcSpec extends AnyFunSuite {
     assert(v1.keySet.subsetOf(v2.keySet), "pre-ALTER chunks are never rewritten")
     // convergence: with no further source changes the cycle is a no-op —
     // same ids, same text, watermark parked (idempotent thereafter)
-    val wm2 = Cdc.getWatermark(spark, state, "events")
+    val wm2 = ParquetWatermarkStore(state).get("events")
     sync(src, state, sink)
     val v3 = Cdc.readVectorSink(spark, sink).select("id", "text").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(v3 == v2, "a quiet cycle must be a no-op after evolution")
-    assert(Cdc.getWatermark(spark, state, "events") == wm2)
-  }
-
-  test("shard advisory fires once at the measured knee, only for unsharded stores (r16)") {
-    Cdc.resetShardAdvisories()
-    val state = TestSpark.tempDir("graft_wm_advise").toString
-    val abs = new java.io.File(state).getAbsolutePath
-    val base = ts("2024-01-01 00:00:00")
-    // seed to one under the knee: the commit that crosses it advises
-    val seed = (1 until Cdc.ShardAdvisoryTables)
-      .map(i => f"table_$i%06d" -> base).toMap
-    Cdc.seedWatermarkStore(state, seed)
-    Cdc.updateWatermark(spark, state, "under", base)
-    assert(Cdc.shardAdvisedStores.contains(abs),
-      "crossing the knee unsharded must advise shardWatermarkStore")
-    // once per store per process: a second commit does not re-advise
-    // (the set add is the once-guard; membership is stable)
-    Cdc.updateWatermark(spark, state, "under", ts("2024-01-02 00:00:00"))
-    assert(Cdc.shardAdvisedStores.count(_ == abs) == 1)
-    // a SHARDED store at the same size never advises — sharding was the fix
-    Cdc.resetShardAdvisories()
-    val state2 = TestSpark.tempDir("graft_wm_advise2").toString
-    Cdc.seedWatermarkStore(state2, Map("seed" -> base))
-    Cdc.shardWatermarkStore(state2, 4)
-    Cdc.seedWatermarkStore(state2, seed)
-    Cdc.updateWatermark(spark, state2, "over", base)
-    assert(Cdc.shardAdvisedStores.isEmpty, "sharded store must not advise")
+    assert(ParquetWatermarkStore(state).get("events") == wm2)
   }
 
   test("quiet-table fast path: footer-stats max is exact across encodings, " +
@@ -975,7 +793,7 @@ class CdcSpec extends AnyFunSuite {
     Seq((1L, ts("2024-01-01 00:00:00"), "a"), (2L, ts("2024-01-02 00:00:00"), "b"))
       .toDF("event_id", "ts", "payload").write.parquet(s"$src/events.parquet")
     sync(src, state, sink) // first sync: full path
-    val wmAfter = Cdc.getWatermark(spark, state, "events")
+    val wmAfter = ParquetWatermarkStore(state).get("events")
     assert(wmAfter.contains(ts("2024-01-02 00:00:00")))
     // quiet table (footer max == watermark): syncTableOn must answer from
     // driver-side footer stats — no relation, no aggregate, no job
@@ -996,7 +814,7 @@ class CdcSpec extends AnyFunSuite {
     val n2 = Cdc.syncTableOn(spark, DirSource(src), store, sink, "events",
       store.get("events"), "ts", "event_id", chunkSize = 99)
     assert(n2 == 1L, "active table must not be skipped by the fast path")
-    assert(Cdc.getWatermark(spark, state, "events").contains(ts("2024-01-03 00:00:00")))
+    assert(ParquetWatermarkStore(state).get("events").contains(ts("2024-01-03 00:00:00")))
   }
 
   test("schema drift, DROP direction: a parquet lake keeps the union schema — " +

@@ -65,8 +65,8 @@ class EngineSpec extends AnyFunSuite {
       .toDF("id", "embedding", "source", "text")
     Cdc.upsertVectors(spark, sink, batch)
     val engine = new Engine(spark, s"$scratch/src", s"$scratch/state", sink)
-    engine.buildIvfIndex(s"$scratch/ivf", k = 4, iters = 2)
-    val hits = engine.searchIvf(s"$scratch/ivf", "alpha beta doc number 17", k = 5, nprobe = 4)
+    engine.refreshIvfIndex(k = 4, iters = 2)
+    val hits = engine.searchIvf(engine.ivfIndexDir(), "alpha beta doc number 17", k = 5, nprobe = 4)
       .collect().map(_.getAs[String]("id"))
     assert(hits.nonEmpty && hits.head == "d#17", s"got: ${hits.mkString(",")}")
   }
@@ -275,6 +275,62 @@ class EngineSpec extends AnyFunSuite {
     Cdc.upsertVectors(spark, sink, docs(Seq(34)))
     engine.refreshIvfIndex()
     assert(IvfIndex.appendedFraction(engine.liveIvfDir().get) > 0.0, "the refresh appended")
+  }
+
+  test("store upgrade: a hash-sharded watermark store is refused, then merged into " +
+      "one store; a run cut before the marker's delete converges") {
+    import graft.operators.{Cdc, ParquetWatermarkStore}
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import java.nio.file.Paths
+    val scratch = TestSpark.tempDir("graft_upgrade_wm_shards").toString
+    val state = s"$scratch/state"
+    val wm = Cdc.WatermarkTable
+    val rows = (1 to 12).map(i => s"table_$i" -> Timestamp.valueOf(f"2024-01-$i%02d 00:00:00")).toMap
+    // the sharded layout: a table's row lives in shard md5-hash32(name) % 4,
+    // each shard a store behind its own pointer, named by a marker holding 4
+    val shardOf = rows.keys.toSeq.toDF("n")
+      .select(col("n"), pmod(graft.functions.PortableHash.hash32(col("n")), lit(4)).cast("int"))
+      .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+    val shards = rows.groupBy { case (t, _) => shardOf(t) }
+    assert(shards.keySet == Set(0, 1, 2, 3), "every shard must hold a row")
+    new java.io.File(state).mkdirs()
+    shards.foreach { case (i, shardRows) =>
+      val one = TestSpark.tempDir(s"graft_upgrade_wm_shard$i").toString
+      val store = ParquetWatermarkStore(one)
+      shardRows.foreach { case (t, ts) => store.update(t, ts) }
+      val shard = f"${wm}_b$i%04d"
+      val live = Files.readString(Paths.get(one, s"$wm.current")).trim
+      Files.move(Paths.get(one, live), Paths.get(state, s"${shard}_v000001"))
+      Files.writeString(Paths.get(state, s"$shard.current"), s"${shard}_v000001")
+    }
+    Files.writeString(Paths.get(state, s"$wm.shards"), "4")
+    val cut = s"$scratch/cut"
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(state), new java.io.File(cut))
+
+    val store = ParquetWatermarkStore(state)
+    refused(store.get("table_1"))
+    refused(store.readAll())
+    refused(store.update("table_1", Timestamp.valueOf("2024-06-01 00:00:00")))
+    refused(Cdc.readWatermarkMap(state))
+    val engine = new Engine(spark, s"$scratch/src", state, s"$scratch/sink")
+    engine.initializeIndex()
+    assert(store.readAll() == rows)
+    def shardFiles(dir: String) = new java.io.File(dir).list()
+      .filter(n => n.startsWith(s"${wm}_b") || n.startsWith(s"$wm.shards")).toSeq
+    assert(shardFiles(state).isEmpty, "the marker and every shard store must go")
+    val upgraded = tree(scratch)
+    engine.initializeIndex()
+    assert(tree(scratch) == upgraded, "a second upgrade must write nothing")
+
+    // a run cut after the merged store's pointer flip, before the marker's delete
+    Files.copy(Paths.get(state, s"$wm.current"), Paths.get(cut, s"$wm.current"))
+    val merged = Files.readString(Paths.get(state, s"$wm.current")).trim
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(state, merged), new java.io.File(cut, merged))
+    refused(ParquetWatermarkStore(cut).readAll())
+    new Engine(spark, s"$scratch/src", cut, s"$scratch/sink").initializeIndex()
+    assert(ParquetWatermarkStore(cut).readAll() == rows)
+    assert(shardFiles(cut).isEmpty)
   }
 
   test("store upgrade: a tree upgraded only halfway (sink adopted, watermark store " +

@@ -67,7 +67,7 @@ class JdbcCdcSpec extends AnyFunSuite {
     // --- poll 1: no watermark → full scan, sink written, watermark committed
     val n1 = poll(source, ParquetWatermarkStore(state), sink, chunkSize = 3)
     assert(n1 == Map("EVENTS_SRC" -> 6L))
-    assert(Cdc.getWatermark(spark, state, "EVENTS_SRC").contains(ts("2024-01-01 00:06:00")))
+    assert(ParquetWatermarkStore(state).get("EVENTS_SRC").contains(ts("2024-01-01 00:06:00")))
     val texts1 = Cdc.readVectorSink(spark, sink)
       .select("id", "text").collect().map(r => r.getString(0) -> r.getString(1))
     assert(texts1.nonEmpty && texts1.forall(_._1.startsWith("EVENTS_SRC#")))
@@ -84,14 +84,14 @@ class JdbcCdcSpec extends AnyFunSuite {
     // database (the reference's WHERE-in-SQL-string, service.py:52-54):
     // same construction syncTableOn uses, asserted on the executed plan
     val delta = Cdc.deltaScan(source.table(spark, "EVENTS_SRC"), "ts",
-      Cdc.getWatermark(spark, state, "EVENTS_SRC"))
+      ParquetWatermarkStore(state).get("EVENTS_SRC"))
     val plan = delta.queryExecution.executedPlan.toString.toLowerCase
     assert(plan.contains("pushedfilters"), s"no pushdown marker:\n$plan")
     assert(plan.contains("greaterthan(ts,"), s"strict-> not pushed to the database:\n$plan")
 
     val n2 = poll(source, ParquetWatermarkStore(state), sink, chunkSize = 3)
     assert(n2 == Map("EVENTS_SRC" -> 2L), "tie row must be excluded by strict->")
-    assert(Cdc.getWatermark(spark, state, "EVENTS_SRC").contains(ts("2024-01-01 00:08:00")))
+    assert(ParquetWatermarkStore(state).get("EVENTS_SRC").contains(ts("2024-01-01 00:08:00")))
     val texts2 = Cdc.readVectorSink(spark, sink).select("text")
       .collect().map(_.getString(0))
     assert(texts2.exists(t => t.contains("beta-8") || t.contains("beta-9")))
@@ -102,7 +102,7 @@ class JdbcCdcSpec extends AnyFunSuite {
     val sinkRowsBefore = texts2.sorted.toSeq
     val n3 = poll(source, ParquetWatermarkStore(state), sink, chunkSize = 3)
     assert(n3 == Map("EVENTS_SRC" -> 0L))
-    assert(Cdc.getWatermark(spark, state, "EVENTS_SRC").contains(ts("2024-01-01 00:08:00")))
+    assert(ParquetWatermarkStore(state).get("EVENTS_SRC").contains(ts("2024-01-01 00:08:00")))
     assert(Cdc.readVectorSink(spark, sink).select("text")
       .collect().map(_.getString(0)).sorted.toSeq == sinkRowsBefore)
   }

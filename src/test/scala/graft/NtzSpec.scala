@@ -102,7 +102,7 @@ class NtzSpec extends AnyFunSuite {
       ParquetWatermarkStore(s"$scratch/state"), s"$scratch/sink"))
     assert(synced == Map("events" -> 4L), s"cycle outcome: $synced")
     assert(Cdc.readVectorSink(spark, s"$scratch/sink").count() > 0)
-    assert(Cdc.getWatermark(spark, s"$scratch/state", "events").contains(ts("2024-01-01 02:00:00")))
+    assert(ParquetWatermarkStore(s"$scratch/state").get("events").contains(ts("2024-01-01 02:00:00")))
   }
 
   test("footer-stats probe distrusts NTZ timestamps — a wall-clock stat must " +
@@ -123,8 +123,8 @@ class NtzSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
       val state = TestSpark.tempDir("graft_ntz_stats_state").toString
       val sink = TestSpark.tempDir("graft_ntz_stats_sink").toString
-      Cdc.seedWatermarkStore(state, Map(
-        "events" -> Timestamp.from(java.time.Instant.parse("2024-01-01T02:00:00Z"))))
+      ParquetWatermarkStore(state).update(
+        "events", Timestamp.from(java.time.Instant.parse("2024-01-01T02:00:00Z")))
       val synced = Cdc.requireSynced(Cdc.syncCycleOutcomesOn(spark, DirSource(scratch),
         ParquetWatermarkStore(state), sink))
       assert(synced == Map("events" -> 4L),

@@ -45,7 +45,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val n1 = Cdc.readVectorSink(spark, sink).count()
     assert(n1 == 2) // ceil(120/100)
-    val wm1 = Cdc.getWatermark(spark, state, "events").get
+    val wm1 = ParquetWatermarkStore(state).get("events").get
     assert(wm1 == ts("2024-01-01 01:59:00"))
 
     // second drop: only newer rows contribute (strict > on the stored wm)
@@ -57,7 +57,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val sinkRows = Cdc.readVectorSink(spark, sink).collect()
     assert(sinkRows.length == 3) // one new chunk
-    assert(Cdc.getWatermark(spark, state, "events").get == ts("2024-01-02 00:00:00"))
+    assert(ParquetWatermarkStore(state).get("events").get == ts("2024-01-02 00:00:00"))
     val texts = sinkRows.map(_.getAs[String]("text")).mkString(" ")
     assert(texts.contains("new-row"))
     assert(!texts.contains("late-row-dropped")) // T2 data-loss window, by design
@@ -87,7 +87,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(err.getMessage.contains("injected crash"))
     // the crash window state: sink written, watermark NOT advanced
     assert(Cdc.readVectorSink(spark, sink).count() == 2) // ceil(120/100)
-    assert(Cdc.getWatermark(spark, state, "events").isEmpty)
+    assert(ParquetWatermarkStore(state).get("events").isEmpty)
 
     // restart clean: the uncommitted micro-batch re-runs end-to-end
     CdcStream.runOnce(CdcStream.pipeline(spark, in, schema, state, sink, "events"))
@@ -95,7 +95,7 @@ class StreamingSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), countDistinct(col("id")).as("d")).collect()(0)
     assert(rows.getLong(0) == 2, s"re-run duplicated chunks: ${rows.getLong(0)}")
     assert(rows.getLong(0) == rows.getLong(1), "duplicate ids in sink after reprocess")
-    assert(Cdc.getWatermark(spark, state, "events").contains(ts("2024-01-01 01:59:00")))
+    assert(ParquetWatermarkStore(state).get("events").contains(ts("2024-01-01 01:59:00")))
   }
 
   test("the stream and the polling cycle share one tail: one drop yields the same " +
@@ -128,9 +128,9 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = rows(s"$scratch/stream_sink")
     assert(streamed.size == 3) // ceil(250/100)
     assert(streamed == rows(s"$scratch/poll_sink"))
-    val wm = Cdc.getWatermark(spark, s"$scratch/stream_state", "events")
+    val wm = ParquetWatermarkStore(s"$scratch/stream_state").get("events")
     assert(wm.contains(ts("2024-01-01 02:59:00")))
-    assert(Cdc.getWatermark(spark, s"$scratch/poll_state", "events") == wm)
+    assert(ParquetWatermarkStore(s"$scratch/poll_state").get("events") == wm)
   }
 
   test("multi-batch ProcessingTime stream: live drops sequence through micro-batches " +
@@ -151,7 +151,7 @@ class StreamingSpec extends AnyFunSuite {
     try {
       q.processAllAvailable()
       assert(Cdc.readVectorSink(spark, sink).count() == 2) // ceil(120/100)
-      val wm1 = Cdc.getWatermark(spark, state, "events").get
+      val wm1 = ParquetWatermarkStore(state).get("events").get
       assert(wm1 == ts("2024-01-01 01:59:00"))
 
       // drop 2 lands while the query is live: late row excluded (T2),
@@ -165,7 +165,7 @@ class StreamingSpec extends AnyFunSuite {
       assert(rows2.length == 3)
       val texts = rows2.map(_.getAs[String]("text")).mkString(" ")
       assert(texts.contains("new-row") && !texts.contains("late-row-dropped"))
-      assert(Cdc.getWatermark(spark, state, "events").get == ts("2024-01-02 00:00:00"))
+      assert(ParquetWatermarkStore(state).get("events").get == ts("2024-01-02 00:00:00"))
 
       // drop 3 is ALL late: empty delta after the strict-> cut → no sink
       // write, no watermark movement (P6 under real micro-batching)
@@ -174,7 +174,7 @@ class StreamingSpec extends AnyFunSuite {
       writeDrop(batch3, in, "drop3")
       q.processAllAvailable()
       assert(Cdc.readVectorSink(spark, sink).count() == 3)
-      assert(Cdc.getWatermark(spark, state, "events").get == ts("2024-01-02 00:00:00"))
+      assert(ParquetWatermarkStore(state).get("events").get == ts("2024-01-02 00:00:00"))
     } finally q.stop()
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Cdc, JdbcWatermarkStore, ParquetWatermarkStore}
+import graft.operators.{Cdc, JdbcWatermarkStore, ParquetWatermarkStore, WatermarkStore}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.sql.{DriverManager, Timestamp}
@@ -10,8 +10,9 @@ import java.sql.{DriverManager, Timestamp}
   * reference does (`service_layer/service.py:35-46`, `INSERT … ON
   * DUPLICATE KEY UPDATE` into a `watermark` table in MySQL) — tested
   * against embedded Derby through the same portable transactional-upsert
-  * path a `jdbc:mysql` URL takes. The parquet binding must behave
-  * identically (it wraps the Cdc store functions CdcSpec already pins). */
+  * path a `jdbc:mysql` URL takes. Both bindings run one contract body;
+  * the parquet store's own pins (zero Spark jobs, version GC, old-layout
+  * refusal) are in CdcSpec and EngineSpec. */
 class WatermarkStoreSpec extends AnyFunSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
@@ -19,9 +20,9 @@ class WatermarkStoreSpec extends AnyFunSuite {
   private def freshStore(dbName: String): JdbcWatermarkStore =
     JdbcWatermarkStore(s"jdbc:derby:memory:$dbName;create=true")
 
-  test("jdbc store: absent -> None; upsert creates the table and the row; " +
-      "max-merge never moves a watermark backwards") {
-    val store = freshStore("graftwms1")
+  /** The contract every binding keeps (the [[WatermarkStore]] trait doc),
+    * run on a fresh store. */
+  private def contract(store: WatermarkStore): Unit = {
     assert(store.get("t1").isEmpty)
     assert(store.readAll().isEmpty)
     store.update("t1", ts("2024-01-02 00:00:00"))
@@ -35,9 +36,32 @@ class WatermarkStoreSpec extends AnyFunSuite {
     store.update("t2", ts("2024-02-01 00:00:00"))
     assert(store.readAll() == Map(
       "t1" -> ts("2024-03-01 00:00:00"), "t2" -> ts("2024-02-01 00:00:00")))
+    // a crash before the commit leaves the previous value readable
+    intercept[RuntimeException] {
+      store.update("t1", ts("2024-05-01 00:00:00"),
+        onBeforeCommit = () => throw new RuntimeException("injected crash pre-commit"))
+    }
+    assert(store.get("t1").contains(ts("2024-03-01 00:00:00")))
+    // 8 threads released together, each committing its own table: all land
+    val barrier = new java.util.concurrent.CyclicBarrier(8)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try (1 to 8).map { i =>
+      pool.submit(new Runnable {
+        def run(): Unit = { barrier.await(); store.update(s"c$i", ts(f"2024-04-0$i%d 00:00:00")) }
+      })
+    }.foreach(_.get())
+    finally pool.shutdown()
+    assert(store.readAll() == Map(
+      "t1" -> ts("2024-03-01 00:00:00"), "t2" -> ts("2024-02-01 00:00:00")) ++
+      (1 to 8).map(i => s"c$i" -> ts(f"2024-04-0$i%d 00:00:00")))
+  }
+
+  test("jdbc store: absent -> None; upsert creates the table and the row; " +
+      "max-merge never moves a watermark backwards") {
+    contract(freshStore("graftwms1"))
     // a second binding over the same database sees the committed state
     // (the state survives the store object — it lives in the database)
-    assert(JdbcWatermarkStore("jdbc:derby:memory:graftwms1").readAll().size == 2)
+    assert(JdbcWatermarkStore("jdbc:derby:memory:graftwms1").readAll().size == 10)
   }
 
   test("jdbc store: concurrent commits all land, same-key races resolve to max " +
@@ -136,11 +160,7 @@ class WatermarkStoreSpec extends AnyFunSuite {
   test("parquet binding is behavior-identical (same contract, Cdc store underneath)") {
     val state = TestSpark.tempDir("graft_wms_pq").toString
     val store = ParquetWatermarkStore(state)
-    assert(store.get("t1").isEmpty)
-    store.update("t1", ts("2024-01-02 00:00:00"))
-    store.update("t1", ts("2024-01-01 00:00:00")) // max-merge no-op
-    assert(store.get("t1").contains(ts("2024-01-02 00:00:00")))
-    assert(store.readAll() == Map("t1" -> ts("2024-01-02 00:00:00")))
+    contract(store)
     // and it IS the Cdc store: the raw functions agree
     assert(Cdc.readWatermarkMap(state) == store.readAll())
   }
